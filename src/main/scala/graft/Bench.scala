@@ -85,6 +85,9 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // failed entries (-1) drop out of the total and would read as FASTER:
+    // such a run refreshes no baseline and exits non-zero
+    val failed = results.collect { case (k, v) if v < 0 => k }
     val line =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(line)
@@ -111,7 +114,7 @@ object Bench {
     // baseline would poison every cross-round per-query diff with
     // numbers from a different core count (the note says local[32]).
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    if (only.isEmpty && sfDir.endsWith("sf0.1") && cpus == "32") {
+    if (failed.isEmpty && only.isEmpty && sfDir.endsWith("sf0.1") && cpus == "32") {
       try {
         val host = java.net.InetAddress.getLocalHost.getHostName
         val stamp = java.time.Instant.now.toString
@@ -132,5 +135,9 @@ object Bench {
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] failed, baseline not refreshed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
 import org.apache.spark.sql.graft.{SketchExpressions => SK}
 import graft.operators.IndexFiles.WriteRouting
+import org.apache.spark.sql.types.StructType
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -175,10 +176,7 @@ object Dedup {
       .select("id", "clean")
   }
 
-  /** Directory fan-out bound for the line-df index's hash buckets. */
-  private val LineDfBuckets = 64
-
-  /** Per-batch (h, df, src, hb) document-frequency INCREMENTS for the
+  /** Per-batch (h, df, src) document-frequency INCREMENTS for the
     * line-df index: df counts DISTINCT docs per line hash within this
     * batch; readers SUM across src segments. Increments — not
     * read-modify-write counters — are what make appends O(batch) blind
@@ -189,18 +187,17 @@ object Dedup {
       .select("id", "h").distinct()
       .groupBy("h").agg(count(lit(1)).as("df"))
       .withColumn("src", lit(src))
-      .withColumn("hb", pmod(col("h"), lit(LineDfBuckets.toLong)).cast("int"))
 
   /** Persist a corpus line document-frequency index — the daily-crawl
     * form of [[dedupLinesAcrossDocs]]: boilerplate is defined by how
     * often a line recurs across the WHOLE crawl history, not within
     * one batch, so the df counts must outlive any single run.
-    * `dir/lines` holds (h, df) increments partitioned by (src, hb):
+    * `dir/lines` holds (h, df) increments partitioned by src alone:
     * src tags the contributing batch (replay detection is a partition
     * listing, and a re-staged src REPLACES its own rows — idempotence
-    * by construction); hb spreads each segment across parallel
-    * writers, so a crawl-scale day (10⁹ distinct lines) lands as 64
-    * bounded files instead of one monolith. `dir/bloom`
+    * by construction); writes route on h, so a crawl-scale day (10⁹
+    * distinct lines) lands as at most `spark.sql.shuffle.partitions`
+    * parallel files in its `src=` dir instead of one monolith. `dir/bloom`
     * is the same membership sidecar as the exact index's: most lines
     * of a fresh batch are NOVEL (bloom-negative) and never touch
     * history at all — the probe's history scan is reserved for the
@@ -217,8 +214,8 @@ object Dedup {
     val n = inc.count()
     require(n > 0, "buildLineDfIndex: input corpus is empty")
     val bits = bloomBits(s, n, fpp)
-    inc.routeForWrite("hb")
-      .write.partitionBy("src", "hb").mode("overwrite").parquet(s"$dir/lines")
+    inc.routeForWrite("h")
+      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/lines")
     inc.agg(SK.bloomAgg(col("h"), n, bits).as("bloom"))
       .select(col("bloom"), lit(n).as("n_items"), lit(fpp).as("fpp"),
         lit(bits).as("num_bits"))
@@ -243,7 +240,7 @@ object Dedup {
     val replayed = !spark.read.parquet(s"$dir/lines")
       .filter(col("src") === src).isEmpty
     if (replayed) return
-    val meta = spark.read.parquet(s"$dir/bloom").head()
+    val meta = readBloom(spark, dir)
     val (bytes, items, bits) = (meta.getAs[Array[Byte]]("bloom"),
       meta.getAs[Long]("n_items"), meta.getAs[Long]("num_bits"))
     val inc = lineDfIncrements(batch, idCol, textCol, sep, src).persist()
@@ -258,7 +255,7 @@ object Dedup {
           .toDF("bloom", "n_items", "fpp", "num_bits"),
         Seq.empty)
       IndexFiles.appendStaged(spark, dir,
-        Seq(("lines", inc.routeForWrite("hb"), Seq("src", "hb"))), None)
+        Seq(("lines", inc.routeForWrite("h"), Seq("src"))), None)
     }
     inc.unpersist(); ()
   }
@@ -344,8 +341,7 @@ object Dedup {
       excludeSrc: Option[String] = None): DataFrame = {
     require(minDf >= 2, s"minDf < 2 would drop every line: $minDf")
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val bytes = spark.read.parquet(s"$dir/bloom").head()
-      .getAs[Array[Byte]]("bloom")
+    val bytes = readBloom(spark, dir).getAs[Array[Byte]]("bloom")
     val d = spread(batch)
     val l = lineRows(d, idCol, textCol, sep)
     val batchDf = l.select("id", "h").distinct()
@@ -680,10 +676,7 @@ object Dedup {
     (out, Seq(cand, shc))
   }
 
-  /** Directory fan-out bound for the containment index's hash buckets. */
-  private val ContainmentBuckets = 64
-
-  /** Per-batch (id, sh, src, hb) shingle rows + (id, sz, src) sizes for
+  /** Per-batch (id, sh, src) shingle rows + (id, sz, src) sizes for
     * the containment index. The maxDf hot-shingle cap is BATCH-LOCAL
     * (each slice caps by its own df), mirroring how build caps over its
     * own corpus — the documented cap semantics of the persisted form. */
@@ -692,7 +685,6 @@ object Dedup {
       src: String): (DataFrame, DataFrame) = {
     val sh = shingleSetHashed(batch, idCol, textCol, w, maxDf)
       .withColumn("src", lit(src))
-      .withColumn("hb", pmod(col("sh"), lit(ContainmentBuckets.toLong)).cast("int"))
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
       .withColumn("src", lit(src))
     (sh, sizes)
@@ -704,10 +696,11 @@ object Dedup {
     * of history's text.
     *
     * Layout under `dir`:
-    *  - `shingles/` — (id, sh) rows, hive-partitioned by (src, hb):
+    *  - `shingles/` — (id, sh) rows, hive-partitioned by src alone:
     *    src tags the contributing batch (replay exclusion for the
-    *    streaming driver; idempotent re-appends), hb = sh mod 64
-    *    spreads each segment across bounded files;
+    *    streaming driver; idempotent re-appends); writes route on sh,
+    *    so a segment lands as at most `spark.sql.shuffle.partitions`
+    *    parallel files;
     *  - `sizes/`   — (id, sz) per stored doc, partitioned by src — the
     *    container-side size the probe's candidate filter and tie rule
     *    read without re-aggregating history;
@@ -739,8 +732,8 @@ object Dedup {
     require(n > 0,
       "buildContainmentIndex: no shingles — corpus empty or every doc shorter than w")
     val bits = bloomBits(s, n, fpp)
-    shc.routeForWrite("hb")
-      .write.partitionBy("src", "hb").mode("overwrite").parquet(s"$dir/shingles")
+    shc.routeForWrite("sh")
+      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/shingles")
     sizes.write.partitionBy("src").mode("overwrite").parquet(s"$dir/sizes")
     // meta pins the shingle space: a probe/append re-deriving shingles
     // under a different (w, maxDf) would match NOTHING and silently
@@ -759,7 +752,7 @@ object Dedup {
   /** The stored (w, maxDf) shingle-space parameters. */
   private def containmentMeta(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Option[Int]) = {
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = IndexFiles.sidecarRow(spark, s"$dir/meta", ContainmentMetaSchema)
     (m.getAs[Int]("w"), Option(m.getAs[Int]("max_df")).filter(_ >= 0))
   }
 
@@ -812,9 +805,9 @@ object Dedup {
     val (sh, sizes) = containmentRows(fresh, "id", "text", w, maxDf, src)
     val shc = sh.persist()
     val batchSh = shc.select("sh").distinct().persist()
-    mergeContainmentBloom(spark, dir, batchSh)
+    mergeContainmentBloom(spark, dir, readBloom(spark, dir), batchSh)
     IndexFiles.appendStaged(spark, dir,
-      Seq(("shingles", shc.routeForWrite("hb"), Seq("src", "hb")),
+      Seq(("shingles", shc.routeForWrite("sh"), Seq("src")),
         ("sizes", sizes, Seq("src"))),
       Some(fresh.select("id").distinct()))
     batchSh.unpersist(); shc.unpersist(); fresh.unpersist(); ()
@@ -932,7 +925,7 @@ object Dedup {
       tau: Double, excludeSrc: Option[String]): (DataFrame, Seq[DataFrame]) = {
     val (d, _, best, _, pins) =
       containmentVerdictCore(spark, dir, batch, idCol, textCol, tau,
-        excludeSrc)
+        excludeSrc, readBloom(spark, dir))
     (d.select(col(idCol).as("id")).join(best, Seq("id"), "left")
       .select(col("id"), col("container_id").isNotNull.as("is_contained"),
         col("container_id")),
@@ -944,19 +937,18 @@ object Dedup {
     * set, best-container decision rows (id, container_id), the RAW
     * batch-vs-HISTORY drop pairs (id_a, id_b, sz_b) — every stored
     * container a rejected doc tau-matched, what the sighting touch
-    * records — and the cache pins). */
+    * records — and the cache pins). `bloom`: the sidecar row, read once. */
   private def containmentVerdictCore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
-      tau: Double, excludeSrc: Option[String],
+      tau: Double, excludeSrc: Option[String], bloom: org.apache.spark.sql.Row,
       pinDecision: Boolean = false): (DataFrame, DataFrame, DataFrame,
         DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.sql.expressions.Window
     require(tau > 0 && tau <= 1, s"containment tau must be in (0,1]: $tau")
     IndexFiles.requireNoPendingAppend(spark, dir)
     val (w, maxDf) = containmentMeta(spark, dir)
-    val bytes = spark.read.parquet(s"$dir/bloom").head()
-      .getAs[Array[Byte]]("bloom")
+    val bytes = bloom.getAs[Array[Byte]]("bloom")
     val d = spread(batch)
     val shB = shingleSetHashed(d, idCol, textCol, w, maxDf).persist()
     // within-batch decision — dropContained's rule over the batch alone
@@ -1069,7 +1061,7 @@ object Dedup {
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     IndexFiles.compact(spark, dir,
-      Map("shingles" -> Seq("src", "hb"), "sizes" -> Seq("src")))
+      Map("shingles" -> Seq("src"), "sizes" -> Seq("src")))
 
   /** Repair an interrupted containment-index append without appending
     * a new batch — idempotent no-op on a healthy index (probes refuse
@@ -1082,13 +1074,12 @@ object Dedup {
   // ---- sighting-window containment dedup ---------------------------------
 
   /** Merge a batch's distinct shingle hashes into the containment
-    * Bloom sidecar at the stored sizing — the append-time delta merge,
-    * shared by the plain and sighted appends (crash ordering: callers
-    * run this BEFORE the payload lands; extra bits are harmless, the
-    * reverse order could wrongly prune a stored shingle). */
+    * Bloom sidecar (current row `meta`) at the stored sizing — the
+    * append-time delta merge, shared by the plain and sighted appends
+    * (crash ordering: callers run this BEFORE the payload lands; extra
+    * bits are harmless, the reverse could wrongly prune a shingle). */
   private def mergeContainmentBloom(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batchSh: DataFrame): Unit = {
-    val meta = spark.read.parquet(s"$dir/bloom").head()
+      dir: String, meta: org.apache.spark.sql.Row, batchSh: DataFrame): Unit = {
     val (bytes, items, bits) = (meta.getAs[Array[Byte]]("bloom"),
       meta.getAs[Long]("n_items"), meta.getAs[Long]("num_bits"))
     // ONE action computes the emptiness check and the delta sketch —
@@ -1172,18 +1163,16 @@ object Dedup {
     // $dir between them, which invalidates every cached plan scanning
     // $dir. The checkpoint pins the pairs as an RDD no refresh touches
     // (r20 — each staged write was re-running the whole verdict).
+    val bloom = readBloom(spark, dir)
     val (d, shB, best, histDrops, pins) =
       containmentVerdictCore(spark, dir, batch, idCol, textCol, tau, None,
-        pinDecision = true)
+        bloom, pinDecision = true)
     val dupIds = best.select("id").persist()
     dupIds.count()
     val admittedIds = d.select(col(idCol).as("id")).distinct()
       .join(dupIds, Seq("id"), "left_anti").persist()
     val admittedSh = shB.join(dupIds, Seq("id"), "left_anti")
-      .withColumn("src", lit(day))
-      .withColumn("hb",
-        pmod(col("sh"), lit(ContainmentBuckets.toLong)).cast("int"))
-      .persist()
+      .withColumn("src", lit(day)).persist()
     val sizes = admittedSh.groupBy("id").agg(count(lit(1)).as("sz"))
       .withColumn("src", lit(day))
     // the emptiness probes below run on counts of the PERSISTED frames
@@ -1197,14 +1186,14 @@ object Dedup {
     // Index crash ordering); its aggregate doubles as admittedSh's
     // one-pass emptiness check
     val admShN = admittedSh.count()
-    mergeContainmentBloom(spark, dir, admittedSh.select("sh").distinct())
+    mergeContainmentBloom(spark, dir, bloom, admittedSh.select("sh").distinct())
     val seenRows = admittedIds
       .unionByName(histDrops.select(col("id_b").as("id")))
       .distinct().withColumn("src", lit(day))
     val payloadSlices =
       if (admShN == 0) Seq.empty
       else Seq(
-        ("shingles", admittedSh.routeForWrite("hb"), Seq("src", "hb")),
+        ("shingles", admittedSh.routeForWrite("sh"), Seq("src")),
         ("sizes", sizes, Seq("src")))
     val seenSlice =
       // seenRows = admitted ids ∪ touched stored ids — empty iff both are
@@ -2518,31 +2507,33 @@ object Dedup {
       srcs, requireSurvivor = false, strict = strict); ()
   }
 
-  private val MinhashBuckets = 64
+  /** One minhash segment's sig and shingle rows, tagged with its `src`
+    * and routed on their own hash key (sig, h), so a segment lands as a
+    * bounded set of parallel files regardless of batch size (the
+    * line-df/containment layout). */
+  private def minhashSlices(sigs: DataFrame, sh: DataFrame,
+      src: String): Seq[(String, DataFrame, Seq[String])] = Seq(
+    ("sigs", sigs.withColumn("src", lit(src)).routeForWrite("sig"), Seq("src")),
+    ("shingles", sh.withColumn("src", lit(src)).routeForWrite("h"), Seq("src")))
 
-  /** Tag one minhash segment's sig rows with its `src` and spread them
-    * across [[MinhashBuckets]] hash buckets so every segment lands as
-    * a bounded file set regardless of batch size (the line-df/
-    * containment layout). Signatures are strings — bucket their
-    * 64-bit hash; shingle rows bucket on the hash value itself. */
-  private def tagMinhashSigs(sigs: DataFrame, src: String): DataFrame =
-    sigs.withColumn("src", lit(src))
-      .withColumn("hb",
-        pmod(xxhash64(col("sig")), lit(MinhashBuckets.toLong)).cast("int"))
-
-  private def tagMinhashShingles(sh: DataFrame, src: String): DataFrame =
-    sh.withColumn("src", lit(src))
-      .withColumn("hb", pmod(col("h"), lit(MinhashBuckets.toLong)).cast("int"))
+  /** The stored (w, numHashes, bands, maxDf) minhash parameters. */
+  private[graft] def minhashMeta(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (Int, Int, Int, Option[Int]) = {
+    val m = IndexFiles.sidecarRow(spark, s"$dir/meta", MinhashMetaSchema)
+    (m.getAs[Int]("w"), m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
+      Option(m.getAs[Int]("max_df")).filter(_ >= 0))
+  }
 
   /** Persist a minhash dedup index: band signatures + shingle-hash sets
     * for an ingested corpus, so the NEXT batch dedups against history
     * without recomputing it — the production daily-ingest shape (new
     * docs vs stored index, no corpus self-join). `dir/sigs` holds
     * (id, band, sig), `dir/shingles` holds (id, h) for the exact
-    * verify — both hive-partitioned by (src, hb): src tags the
+    * verify — both hive-partitioned by src alone: src tags the
     * contributing batch (build = "base", each append its own tag), so
     * [[retireMinhashSrc]] can age a segment out as an O(segment)
-    * partition drop; hb spreads each segment across bounded files.
+    * partition drop; writes route on the row hash (sig, h): at most
+    * `spark.sql.shuffle.partitions` files a segment.
     * `dir/meta` records (w, numHashes, bands, maxDf) so
     * [[dedupAgainstIndex]] is self-describing. */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
@@ -2555,13 +2546,10 @@ object Dedup {
     // tombstones must not outlive it (the buildExactIndex rule)
     IndexFiles.clearTombstones(s, dir)
     val sh = shingleHashSet(df, idCol, textCol, w, maxDf).cache()
-    tagMinhashSigs(
+    minhashSlices(
         bandSignatures(minhashes(sh, numHashes), bands, numHashes / bands),
-        "base")
-      .routeForWrite("hb")
-      .write.partitionBy("src", "hb").mode("overwrite").parquet(s"$dir/sigs")
-    tagMinhashShingles(sh, "base").routeForWrite("hb")
-      .write.partitionBy("src", "hb").mode("overwrite").parquet(s"$dir/shingles")
+        sh, "base")
+      .foreach(IndexFiles.writeTable(dir, _))
     // compact id sidecar: the append-time replayed-id guard reads this
     // (O(docs) rows) instead of the doc-shingle table (many× docs rows)
     IndexFiles.writeIds(sh.select("id").distinct(), dir)
@@ -2573,9 +2561,8 @@ object Dedup {
 
   /** Append an ingested batch to a persisted minhash index under its
     * own `src` tag: the batch's band signatures and shingle sets extend
-    * `dir/sigs` and `dir/shingles` as one (src, hb)-partitioned
-    * segment, computed through the parameters stored in the index's
-    * own meta. Signatures are deterministic in (w, numHashes, bands),
+    * `dir/sigs` and `dir/shingles` as one `src=` segment, computed
+    * through the parameters stored in the index's own meta. Signatures are deterministic in (w, numHashes, bands),
     * so with maxDf = None a later [[dedupAgainstIndex]] over the
     * appended index is bit-equal to the same call against an index
     * rebuilt on the union corpus. With a df cap the batch caps against
@@ -2621,10 +2608,7 @@ object Dedup {
       s"$dir records sightings — append with appendToMinhashIndexSighted " +
         "(an unsighted append stores docs no sighting window could ever " +
         "retire)")
-    val m = spark.read.parquet(s"$dir/meta").head()
-    val (w, numHashes, bands) =
-      (m.getAs[Int]("w"), m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"))
-    val maxDf = Option(m.getAs[Int]("max_df")).filter(_ >= 0)
+    val (w, numHashes, bands, maxDf) = minhashMeta(spark, dir)
     val newSh = shingleHashSet(newDf, idCol, textCol, w, maxDf).cache()
     val batchIds = newSh.select("id").distinct()
     val replayed = IndexFiles
@@ -2634,13 +2618,9 @@ object Dedup {
     require(replayed.isEmpty,
       s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
         "in the index — replayed ids would corrupt the Jaccard verify")
-    IndexFiles.appendStaged(spark, dir, Seq(
-      ("sigs", tagMinhashSigs(
-          bandSignatures(minhashes(newSh, numHashes), bands, numHashes / bands),
-          src).routeForWrite("hb"),
-        Seq("src", "hb")),
-      ("shingles", tagMinhashShingles(newSh, src).routeForWrite("hb"),
-        Seq("src", "hb"))),
+    IndexFiles.appendStaged(spark, dir, minhashSlices(
+        bandSignatures(minhashes(newSh, numHashes), bands, numHashes / bands),
+        newSh, src),
       Some(batchIds))
     newSh.unpersist()
   }
@@ -2708,7 +2688,7 @@ object Dedup {
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     IndexFiles.compact(spark, dir,
-      Map("sigs" -> Seq("src", "hb"), "shingles" -> Seq("src", "hb")))
+      Map("sigs" -> Seq("src"), "shingles" -> Seq("src")))
 
   /** Repair an interrupted append without appending a new batch — see
     * [[graft.operators.Ann.healSparseIndex]] for the rationale
@@ -2767,10 +2747,7 @@ object Dedup {
     // the admitted append — computing them once and FILTERING for the
     // admitted subset saves a full shingle+minhash chain per day
     // (measured ~35% of the sighted append at bench scale)
-    val m = spark.read.parquet(s"$dir/meta").head()
-    val (w, numHashes, bands) =
-      (m.getAs[Int]("w"), m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"))
-    val maxDf = Option(m.getAs[Int]("max_df")).filter(_ >= 0)
+    val (w, numHashes, bands, maxDf) = minhashMeta(spark, dir)
     val newSh = shingleHashSet(newDf, idCol, textCol, w, maxDf).persist()
     import org.apache.spark.sql.types._
     val oldSh = IndexFiles.dropTombstones(spark, dir,
@@ -2822,11 +2799,7 @@ object Dedup {
       // admittedSh nonempty ⟺ some admitted id survives (batchIds is
       // its own id projection)
       if (batchIdsN == 0) Seq.empty
-      else Seq(
-        ("sigs", tagMinhashSigs(admittedSig, day).routeForWrite("hb"),
-          Seq("src", "hb")),
-        ("shingles", tagMinhashShingles(admittedSh, day)
-          .routeForWrite("hb"), Seq("src", "hb")))
+      else minhashSlices(admittedSig, admittedSh, day)
     val seenSlice =
       // seenRows = admitted ids ∪ matched stored ids — empty iff both are
       if (batchIdsN == 0 && pairsN == 0) Seq.empty
@@ -2964,15 +2937,12 @@ object Dedup {
       newDf: DataFrame, idCol: String, textCol: String,
       tau: Double = 0.5): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val m = spark.read.parquet(s"$dir/meta").head()
-    val (w, numHashes, bands) =
-      (m.getAs[Int]("w"), m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"))
-    val maxDf = Option(m.getAs[Int]("max_df")).filter(_ >= 0)
+    val (w, numHashes, bands, maxDf) = minhashMeta(spark, dir)
     val newSh = shingleHashSet(newDf, idCol, textCol, w, maxDf).cache()
-    // an all-short-doc build writes (src, hb)-partitioned tables with
+    // an all-short-doc build writes src-partitioned tables with
     // ZERO partition directories — [[IndexFiles.readOrEmpty]]
     // synthesizes the empty payloads with the batch's id type (probe
-    // returns empty). The (src, hb) partition columns project away:
+    // returns empty). The src partition column projects away:
     // the verify union pairs these rows with the batch's bare (id, h)
     import org.apache.spark.sql.types._
     val oldSh = IndexFiles.dropTombstones(spark, dir,
@@ -3006,6 +2976,15 @@ object Dedup {
   }
 
   // ---- exact-dedup history index (Bloom-pruned admission) ---------------
+
+  /** Pinned sidecar schemas ([[IndexFiles.sidecarRow]]: no inference job). */
+  private val BloomSchema =
+    StructType.fromDDL("bloom BINARY, n_items BIGINT, fpp DOUBLE, num_bits BIGINT")
+  private val ContainmentMetaSchema = StructType.fromDDL("w INT, max_df INT")
+  private val MinhashMetaSchema =
+    StructType.fromDDL("w INT, num_hashes INT, bands INT, max_df INT")
+  private[graft] def readBloom(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    IndexFiles.sidecarRow(spark, s"$dir/bloom", BloomSchema)
 
   /** Serialized-sketch round trip for the Bloom sidecar. */
   private def bloomBytes(bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
@@ -3146,7 +3125,7 @@ object Dedup {
           "(an unsighted append writes fps no sighting window could ever " +
           "retire)")
     }
-    val meta = spark.read.parquet(s"$dir/bloom").head()
+    val meta = readBloom(spark, dir)
     val (bytes, items, bits) = (meta.getAs[Array[Byte]]("bloom"),
       meta.getAs[Long]("n_items"), meta.getAs[Long]("num_bits"))
     val batchFps = newDf
@@ -3582,7 +3561,7 @@ object Dedup {
   def dedupExactAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val bytes = spark.read.parquet(s"$dir/bloom").head().getAs[Array[Byte]]("bloom")
+    val bytes = readBloom(spark, dir).getAs[Array[Byte]]("bloom")
     val probe = batch.select(col(idCol).cast("long").as("id"),
       T.fingerprintMd5(col(textCol)).as("fp"))
     val positives = probe

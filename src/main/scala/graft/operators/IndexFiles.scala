@@ -20,19 +20,21 @@ private[graft] object IndexFiles {
 
   /** Hash-route rows to writer tasks ahead of a hive partitionBy write
     * (guide §6: unrouted, every task writes a sliver into every
-    * partition dir it touches — tasks×buckets tiny files). Default:
-    * one writer task per partition tuple, the
+    * partition dir it touches — tasks×dirs tiny files), the
     * write.distribution-mode=hash shape with bounded file counts.
+    * Routed on a partition column (`pfx`, `cell`): one writer task per
+    * value. Routed on a row hash key (`h`, `sh`, `sig`, `key` — the
+    * src-partitioned dedup payloads): a segment is at most
+    * `spark.sql.shuffle.partitions` parallel files in its `src=` dir.
     * `graft.write.saltBuckets` (session conf, default 1) adds a
     * deterministic row-hash salt with N values so a HOT partition can
     * fan out across up to N writer tasks on a real cluster — a bare
     * repartition(cols) is a strict hash requirement AQE cannot split,
-    * so a skewed bucket otherwise funnels through one straggler task
+    * so a skewed value otherwise funnels through one straggler task
     * (ADVICE r19). The salt derives from xxhash64 of the row's
     * columns, never rand(): a re-run map task must reproduce the same
     * row-to-partition assignment or a fetch-failure retry duplicates/
-    * loses rows (SPARK-38388). Locally the default 1 keeps one file
-    * per partition dir and the layout identical to repartition(cols). */
+    * loses rows (SPARK-38388). */
   def routeForWrite(df: DataFrame, cols: String*): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val n = df.sparkSession.conf.get("graft.write.saltBuckets", "1").toInt
@@ -42,7 +44,7 @@ private[graft] object IndexFiles {
       cols.map(col) :+ pmod(xxhash64(df.columns.map(col): _*), lit(n)): _*)
   }
 
-  /** `df.routeForWrite("hb")` sugar for the 27 pre-write call sites. */
+  /** `df.routeForWrite("sh")` sugar for the pre-write call sites. */
   implicit class WriteRouting(private val df: DataFrame) extends AnyVal {
     def routeForWrite(cols: String*): DataFrame =
       IndexFiles.routeForWrite(df, cols: _*)
@@ -69,36 +71,41 @@ private[graft] object IndexFiles {
   private val JournalName = "_pending_append"
   private val JournalTmp = "_pending_append_tmp"
 
-  /** Move a completed staging dir's data files into the live table,
-    * preserving partition subpaths. Idempotent: files already moved by
-    * an interrupted earlier pass are skipped (part-file names carry
-    * fresh UUIDs, so an existing destination can only BE this batch's
-    * own file). */
-  private def moveStagedIn(fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: String): Unit = {
-    val staging = new Path(s"$tableDir/$StagingName")
-    if (!fs.exists(staging)) return
+  private def isDataFile(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /** Move the data files under `from` into `to`, preserving partition
+    * subpaths, then drop `from` — a staged table slice into its live
+    * table, or the committed journal's id files into `ids/`. No-op when
+    * `from` is absent. Idempotent: files already moved by an
+    * interrupted earlier pass are skipped (part-file names carry fresh
+    * UUIDs, so an existing destination can only BE this batch's own
+    * file). */
+  private def moveIn(fs: org.apache.hadoop.fs.FileSystem,
+      from: Path, to: Path): Unit = {
+    if (!fs.exists(from)) return
     // listStatus returns scheme-qualified paths — qualify the prefix the
     // same way or the relativization silently yields absolute paths
     // (dest == source, "already moved", batch deleted with the staging)
-    val prefix = fs.makeQualified(staging).toString + "/"
-    val liveDir = fs.makeQualified(new Path(tableDir))
+    val prefix = fs.makeQualified(from).toString + "/"
+    val liveDir = fs.makeQualified(to)
     def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
       if (st.isDirectory) walk(st.getPath)
-      else if (!st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")) {
+      else if (isDataFile(st.getPath.getName)) {
         val full = fs.makeQualified(st.getPath).toString
         require(full.startsWith(prefix), s"staged file $full outside $prefix")
-        val rel = full.stripPrefix(prefix)
-        val dest = new Path(liveDir, rel)
+        val dest = new Path(liveDir, full.stripPrefix(prefix))
         fs.mkdirs(dest.getParent)
         if (!fs.exists(dest))
           require(fs.rename(st.getPath, dest), s"move ${st.getPath} -> $dest failed")
       }
     }
-    walk(staging)
-    require(fs.delete(staging, true), s"delete staging $staging failed")
+    walk(from)
+    require(fs.delete(from, true), s"delete $from failed")
   }
+
+  private def staging(dir: String, table: String) =
+    new Path(s"$dir/$table/$StagingName")
 
   /** Repair an interrupted [[appendStaged]] under `dir` — called at the
     * head of every append (and by the streaming drivers before their
@@ -107,7 +114,9 @@ private[graft] object IndexFiles {
     * nothing is visible yet, so leftovers are discarded (roll BACK);
     * journal present → every staged table was completely written, so
     * the move is finished, the ids sidecar extended with whatever
-    * journal ids it is missing, and the journal dropped (roll FORWARD).
+    * journal ids it is missing — the journal files [[appendStaged]]
+    * had not yet renamed into `ids/`, anti-joined so no id lands
+    * twice — and the journal dropped (roll FORWARD).
     * Idempotent under repeated crashes at any point. Returns true iff a
     * batch was rolled forward — callers with derived artifacts beyond
     * the journaled tables (the sparse index's stats file) re-derive
@@ -118,9 +127,9 @@ private[graft] object IndexFiles {
     fs.delete(new Path(s"$dir/$JournalTmp"), true) // never valid, never visible
     val journal = new Path(s"$dir/$JournalName")
     if (fs.exists(journal)) {
-      tables.foreach(t => moveStagedIn(fs, s"$dir/$t"))
+      tables.foreach(t => moveIn(fs, staging(dir, t), new Path(s"$dir/$t")))
       val hasIds = fs.listStatus(journal).exists(f =>
-        f.isFile && !f.getPath.getName.startsWith("_"))
+        f.isFile && isDataFile(f.getPath.getName))
       if (hasIds && exists(spark, dir)) {
         spark.read.parquet(journal.toString)
           .join(org.apache.spark.sql.functions
@@ -132,7 +141,7 @@ private[graft] object IndexFiles {
       true
     } else {
       tables.foreach { t =>
-        val st = new Path(s"$dir/$t/$StagingName")
+        val st = staging(dir, t)
         if (fs.exists(st)) require(fs.delete(st, true),
           s"discard incomplete staging $st failed")
       }
@@ -143,8 +152,9 @@ private[graft] object IndexFiles {
   /** Crash-safe batch append: write every table's batch slice to its
     * in-table staging dir, commit the batch by renaming the id journal
     * into place (atomic — the one instant the append becomes
-    * roll-forward), move the staged files in, extend the ids sidecar
-    * from the journal, drop the journal. A job failure anywhere leaves
+    * roll-forward), move the staged files in, extend the ids sidecar by
+    * renaming the journal's id files into `ids/` (no Spark job), drop
+    * the journal. A job failure anywhere leaves
     * a state [[healAppend]] repairs completely on the next append: the
     * documented half-appended-index window of the bare
     * `write.mode("append")` form is gone. `batchIds` is None for
@@ -161,7 +171,7 @@ private[graft] object IndexFiles {
     tables.foreach { case (t, df, partCols) =>
       val w = df.write.mode("overwrite")
       (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
-        .parquet(s"$dir/$t/$StagingName")
+        .parquet(staging(dir, t).toString)
     }
     val tmp = new Path(s"$dir/$JournalTmp")
     batchIds match {
@@ -169,11 +179,9 @@ private[graft] object IndexFiles {
       case None => fs.mkdirs(tmp)
     }
     require(fs.rename(tmp, journal), s"commit journal $journal failed")
-    tables.foreach { case (t, _, _) => moveStagedIn(fs, s"$dir/$t") }
-    if (batchIds.isDefined)
-      spark.read.parquet(journal.toString)
-        .write.mode("append").parquet(s"$dir/ids")
-    require(fs.delete(journal, true), s"delete journal $journal failed")
+    tables.foreach { case (t, _, _) => moveIn(fs, staging(dir, t), new Path(s"$dir/$t")) }
+    // an LSH commit marker holds no files: nothing moves, it is dropped
+    moveIn(fs, journal, new Path(s"$dir/ids"))
     // refresh exactly the mutated table roots, not the whole dir:
     // recacheByPath invalidates every cached plan whose scan root
     // starts with the given path, so a dir-wide refresh used to
@@ -183,6 +191,16 @@ private[graft] object IndexFiles {
     tables.foreach { case (t, _, _) => refresh(spark, s"$dir/$t") }
     if (batchIds.isDefined) refresh(spark, s"$dir/ids")
   }
+
+  /** The one row of a fixed-schema sidecar (`meta`, `bloom`), read
+    * with its schema pinned — inferring it costs a footer-read job. */
+  def sidecarRow(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.Row =
+    spark.read.schema(schema).parquet(path).head()
+
+  /** Write one [[appendStaged]]-shaped slice as the whole table (builds). */
+  def writeTable(dir: String, slice: (String, DataFrame, Seq[String])): Unit =
+    slice._2.write.partitionBy(slice._3: _*).mode("overwrite").parquet(s"$dir/${slice._1}")
 
   /** Overwrite the sidecar at build time. `ids` must be one row per
     * distinct indexed id. */

@@ -163,25 +163,32 @@ object Multimodal {
       .filter(col("hamming") <= maxHam)
   }
 
+  /** One segment's banded rows tagged with its `src` and routed on
+    * their key, so a segment lands as at most
+    * `spark.sql.shuffle.partitions` parallel files and
+    * [[retirePhashSrc]] can drop it as a partition listing (the
+    * minhash/line-df segment layout). */
+  private def bandSlice(banded: DataFrame,
+      src: String): (String, DataFrame, Seq[String]) =
+    ("bands", banded.withColumn("src", lit(src)).routeForWrite("key"), Seq("src"))
+
+  /** The stored (dim, maxHam, thresh), schema pinned (no inference job). */
+  private def phashMeta(spark: SparkSession, dir: String): (Int, Int, Double) = {
+    val m = IndexFiles.sidecarRow(spark, s"$dir/meta",
+      StructType.fromDDL("dim INT, max_ham INT, thresh DOUBLE"))
+    (m.getAs[Int]("dim"), m.getAs[Int]("max_ham"), m.getAs[Double]("thresh"))
+  }
+
   /** Persist a perceptual-hash media-dedup HISTORY index — the LAION
     * lifecycle's missing half: a crawl's media signatures stored once
     * as the banded key table, so every later batch probes by band-key
     * join without recomputing (or re-shuffling) history. Layout under
     * `dir`: `bands/` (id, sig, band, key — bands× rows per asset, four
-    * scalars each), the compact `ids` sidecar (replay guard), and
+    * scalars each; partitioned by src alone, one `src=` segment per
+    * build or append), the compact `ids` sidecar (replay guard), and
     * `meta` (dim, max_ham, thresh — probes and appends derive their
     * banding from the stored parameters, never from caller arguments
     * that could drift). */
-  private val PhashBuckets = 64
-
-  /** Tag one segment's banded rows with its `src` and spread them
-    * across [[PhashBuckets]] key buckets, so every segment lands as a
-    * bounded file set and [[retirePhashSrc]] can drop it as a
-    * partition listing (the minhash/line-df segment layout). */
-  private def tagBands(banded: DataFrame, src: String): DataFrame =
-    banded.withColumn("src", lit(src))
-      .withColumn("hb", pmod(col("key"), lit(PhashBuckets.toLong)).cast("int"))
-
   def buildPhashIndex(df: DataFrame, idCol: String, featuresCol: String,
       dir: String, dim: Int, maxHam: Int = 2, thresh: Double = 0.5): Unit = {
     val s = df.sparkSession
@@ -191,9 +198,7 @@ object Multimodal {
     IndexFiles.clearTombstones(s, dir)
     val (bands, width) = bandParams(dim, maxHam)
     val sig = signatures(df, idCol, featuresCol, dim, thresh).cache()
-    tagBands(bandedSigs(sig, dim, bands, width), "base")
-      .routeForWrite("hb")
-      .write.partitionBy("src", "hb").mode("overwrite").parquet(s"$dir/bands")
+    IndexFiles.writeTable(dir, bandSlice(bandedSigs(sig, dim, bands, width), "base"))
     IndexFiles.writeIds(sig.select("id").distinct(), dir)
     sig.unpersist()
     Seq((dim, maxHam, thresh)).toDF("dim", "max_ham", "thresh")
@@ -232,9 +237,7 @@ object Multimodal {
       s"$dir records sightings — append with appendToPhashIndexSighted " +
         "(an unsighted append stores assets no sighting window could " +
         "ever retire)")
-    val m = spark.read.parquet(s"$dir/meta").head()
-    val (dim, maxHam, thresh) = (m.getAs[Int]("dim"),
-      m.getAs[Int]("max_ham"), m.getAs[Double]("thresh"))
+    val (dim, maxHam, thresh) = phashMeta(spark, dir)
     val (bands, width) = bandParams(dim, maxHam)
     val sig = signatures(newDf, idCol, featuresCol, dim, thresh).cache()
     val batchIds = sig.select("id").distinct()
@@ -245,9 +248,7 @@ object Multimodal {
       s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
         "exists in the index — a replayed id would self-pair at hamming 0")
     IndexFiles.appendStaged(spark, dir,
-      Seq(("bands", tagBands(bandedSigs(sig, dim, bands, width), src)
-        .routeForWrite("hb"), Seq("src", "hb"))),
-      Some(batchIds))
+      Seq(bandSlice(bandedSigs(sig, dim, bands, width), src)), Some(batchIds))
     sig.unpersist(); ()
   }
 
@@ -290,9 +291,7 @@ object Multimodal {
     // inlined probe (the appendToMinhashIndexSighted rule): the batch's
     // signatures feed BOTH the verdict join and the admitted append —
     // one signature pass, filtered for the admitted subset
-    val m = spark.read.parquet(s"$dir/meta").head()
-    val (dim, maxHam, thresh) = (m.getAs[Int]("dim"),
-      m.getAs[Int]("max_ham"), m.getAs[Double]("thresh"))
+    val (dim, maxHam, thresh) = phashMeta(spark, dir)
     val (bands, width) = bandParams(dim, maxHam)
     val sig = signatures(newDf, idCol, featuresCol, dim, thresh).cache()
     val batchAll = sig.select("id").distinct()
@@ -345,8 +344,7 @@ object Multimodal {
       // every batch id has band rows (bandedSigs emits `bands` rows per
       // sig), so admittedBands nonempty ⟺ some batch id survived
       if (batchIdsN == 0) Seq.empty
-      else Seq(("bands", tagBands(admittedBands, day)
-        .routeForWrite("hb"), Seq("src", "hb")))
+      else Seq(bandSlice(admittedBands, day))
     val seenSlice =
       if (batchIdsN == 0 && pairsN == 0) Seq.empty
       else Seq(("seen", seenRows, Seq("src")))
@@ -472,7 +470,7 @@ object Multimodal {
 
   def compactPhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
-    IndexFiles.compact(spark, dir, Map("bands" -> Seq("src", "hb")))
+    IndexFiles.compact(spark, dir, Map("bands" -> Seq("src")))
 
   /** Repair an interrupted append without appending a new batch —
     * idempotent no-op on a healthy index (probes refuse a pending
@@ -494,13 +492,11 @@ object Multimodal {
       dir: String, batch: DataFrame, idCol: String,
       featuresCol: String): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val m = spark.read.parquet(s"$dir/meta").head()
-    val (dim, maxHam, thresh) = (m.getAs[Int]("dim"),
-      m.getAs[Int]("max_ham"), m.getAs[Double]("thresh"))
+    val (dim, maxHam, thresh) = phashMeta(spark, dir)
     val (bands, width) = bandParams(dim, maxHam)
     val nb = bandedSigs(
       signatures(batch, idCol, featuresCol, dim, thresh), dim, bands, width)
-    // an empty-corpus build writes a (src, hb)-partitioned table with
+    // an empty-corpus build writes a src-partitioned table with
     // ZERO partition directories — [[IndexFiles.readOrEmpty]]
     // synthesizes the empty payload with the batch's own id type so
     // the probe returns empty instead of crashing

@@ -61,8 +61,8 @@ object StreamIngest {
       docsStream: DataFrame, textCol: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graft.{SketchExpressions => SK}
-    val bytes = spark.read.parquet(s"$indexDir/bloom")
-      .head().getAs[Array[Byte]]("bloom")
+    val bytes = graft.operators.Dedup.readBloom(spark, indexDir)
+      .getAs[Array[Byte]]("bloom")
     // live rows only: tombstoned texts ([[graft.operators.Dedup
     // .deleteFromExactIndex]]) read as never-stored, like the batch probe
     val fps = graft.operators.Dedup.liveExactFps(spark, indexDir)
@@ -125,11 +125,10 @@ object StreamIngest {
     // itself runs. Comparing payload tables against this count makes a
     // PARTIAL overlap (mixed re-delivery: some docs indexed, some new)
     // fail loudly instead of masquerading as a completed replay.
-    val m = spark.read.parquet(s"$indexDir/meta").head()
+    val (w, _, _, maxDf) = graft.operators.Dedup.minhashMeta(spark, indexDir)
     val eligible = graft.operators.Dedup
       .shingleHashSet(batch.select(col(idCol).as(idCol), col(textCol)),
-        idCol, textCol, m.getAs[Int]("w"),
-        Option(m.getAs[Int]("max_df")).filter(_ >= 0))
+        idCol, textCol, w, maxDf)
       .select("id").distinct().count()
     val inSigs = overlap(batchIds, spark.read.parquet(s"$indexDir/sigs"))
     val inShingles = overlap(batchIds, spark.read.parquet(s"$indexDir/shingles"))

@@ -563,10 +563,10 @@ class StreamingSpec extends SparkSpec {
     assert(mism.getMessage.contains("ledger mismatch"), mism.getMessage)
     // a GENUINE half-append (id present in sigs, absent from shingles
     // and the sidecar — a crash between the table writes) fails loudly
-    // the half-append lands in the payload's (src, hb) partition
-    // layout, as a real crashed append would
+    // the half-append lands in the payload's src partition layout, as
+    // a real crashed append would
     Seq((99L, 0, "fake-sig")).toDF("id", "band", "sig")
-      .write.mode("append").parquet(s"$dir/idx/sigs/src=ghost/hb=0")
+      .write.mode("append").parquet(s"$dir/idx/sigs/src=ghost")
     val half = intercept[IllegalStateException] {
       StreamIngest.applyDedupBatch(
         Seq((99L, "brand new doc " * 8)).toDF("doc_id", "text"),
@@ -962,9 +962,8 @@ class StreamingSpec extends SparkSpec {
             shiftright(col("sig"), b * width).bitwiseAND((1L << w) - 1).as("key"))
         }: _*)).as("bk"))
       .select(col("id"), col("sig"), col("bk.band"), col("bk.key"),
-        lit("b98").as("src"),
-        pmod(col("bk.key"), lit(64L)).cast("int").as("hb"))
-      .write.partitionBy("src", "hb").parquet(s"$dir/idx/bands/_append_tmp")
+        lit("b98").as("src"))
+      .write.partitionBy("src").parquet(s"$dir/idx/bands/_append_tmp")
     tail.select("id").distinct().write.parquet(s"$dir/idx/_pending_append")
     graft.streaming.StreamIngest.applyPhashBatch(
       (91L to 95L).map(i => (i, feat(i))).toDF("id", "features"),
