@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.{IndexFamily, IndexFiles}
 
 /** Opt-in scale-evidence run (SURVEY §5): synthesize a FACTOR× corpus
   * from the graded sf dir, run the heavy query family at 1× and at
@@ -375,21 +376,23 @@ object Scale {
     // sidecar rebuilds (one distinct scan of the SURVIVING index — the
     // honest O(index) cost, billed here as such; containment also
     // rewrites its ids sidecar)
-    val (lrtN, _) = timed(Dedup.retireLineDfSrc(spark, ldN, "s1"))
-    val (lrt1, _) = timed(Dedup.retireLineDfSrc(spark, ld1, "s1"))
+    val (lrtN, _) = timed(IndexFamily.linedf.retireSrcs(spark, ldN, Seq("s1")))
+    val (lrt1, _) = timed(IndexFamily.linedf.retireSrcs(spark, ld1, Seq("s1")))
     report("linedf", "retire_src", lrt1, lrtN)
-    val (crtN, _) = timed(Dedup.retireContainmentSrc(spark, cN, "s1"))
-    val (crt1, _) = timed(Dedup.retireContainmentSrc(spark, c1, "s1"))
+    val (crtN, _) =
+      timed(IndexFamily.containment.retireSrcs(spark, cN, Seq("s1")))
+    val (crt1, _) =
+      timed(IndexFamily.containment.retireSrcs(spark, c1, Seq("s1")))
     report("containment", "retire_src", crt1, crtN)
     // minhash/phash (r16): same protocol — drop the s1 segment appended
     // above at both scales; the partition delete is O(segment listing),
     // the wall is the ids-sidecar rebuild (one distinct scan of the
     // surviving payload — the honest O(index) cost, billed as such)
-    val (mrtN, _) = timed(Dedup.retireMinhashSrc(spark, mN, "s1"))
-    val (mrt1, _) = timed(Dedup.retireMinhashSrc(spark, m1, "s1"))
+    val (mrtN, _) = timed(IndexFamily.minhash.retireSrcs(spark, mN, Seq("s1")))
+    val (mrt1, _) = timed(IndexFamily.minhash.retireSrcs(spark, m1, Seq("s1")))
     report("minhash", "retire_src", mrt1, mrtN)
-    val (prtN, _) = timed(Multimodal.retirePhashSrc(spark, phN, "s1"))
-    val (prt1, _) = timed(Multimodal.retirePhashSrc(spark, ph1, "s1"))
+    val (prtN, _) = timed(IndexFamily.phash.retireSrcs(spark, phN, Seq("s1")))
+    val (prt1, _) = timed(IndexFamily.phash.retireSrcs(spark, ph1, Seq("s1")))
     report("phash", "retire_src", prt1, prtN)
     // retired survivors answer identically to the never-appended index.
     // minhash: the salted s1 replica matched nothing, so the hit-set is
@@ -408,14 +411,14 @@ object Scale {
     // at both scales — same O(segment listing) delete + O(survivors)
     // ids-sidecar rebuild protocol as the text families; the vector
     // store ages out a crawl day without touching surviving cells
-    val (irtN, _) = timed(Ann.retireIvfSrc(spark, dN, "ingest"))
-    val (irt1, _) = timed(Ann.retireIvfSrc(spark, d1, "ingest"))
+    val (irtN, _) = timed(IndexFamily.ivf.retireSrcs(spark, dN, Seq("ingest")))
+    val (irt1, _) = timed(IndexFamily.ivf.retireSrcs(spark, d1, Seq("ingest")))
     report("ivf", "retire_src", irt1, irtN)
     // sparse (r16): the salted s1 segment matched nothing, so the
     // weight-sum hit-set must be unchanged after retiring it; the wall
     // is the ids-sidecar rebuild + BM25 stats re-derivation
-    val (srtN, _) = timed(Ann.retireSparseSrc(spark, spN, "s1"))
-    val (srt1, _) = timed(Ann.retireSparseSrc(spark, sp1, "s1"))
+    val (srtN, _) = timed(IndexFamily.sparse.retireSrcs(spark, spN, Seq("s1")))
+    val (srt1, _) = timed(IndexFamily.sparse.retireSrcs(spark, sp1, Seq("s1")))
     report("sparse", "retire_src", srt1, srtN)
     val srq = Ann.searchSparseIndex(spark, spN, sqterms, k = 10).count()
     require(srq == shN,
@@ -483,8 +486,10 @@ object Scale {
     // rebuild from survivors (the unsaturation cost, billed here);
     // the probe only ever matches base fps, so its hit-set must be
     // unchanged by the retirement
-    val (ertN, _) = timed(Dedup.retireExactSrc(spark, eN, "ingest"))
-    val (ert1, _) = timed(Dedup.retireExactSrc(spark, e1, "ingest"))
+    val (ertN, _) =
+      timed(IndexFamily.exact.retireSrcs(spark, eN, Seq("ingest")))
+    val (ert1, _) =
+      timed(IndexFamily.exact.retireSrcs(spark, e1, Seq("ingest")))
     report("exact", "retire_src", ert1, ertN)
     val postRetire = Dedup.dedupExactAgainstIndex(spark, eN, probe,
       "doc_id", "text").filter(col("is_dup")).count()
@@ -529,8 +534,10 @@ object Scale {
     val (da1, _) = timed(Dedup.appendToDomainCapLedger(spark, g1,
       Dedup.capAgainstLedger(spark, g1, dcProbe, "id", "url", "q"), "probe"))
     report("domaincap", "append_verdicts", da1, daN)
-    val (drtN, _) = timed(Dedup.retireDomainCapSrc(spark, gN, "probe"))
-    val (drt1, _) = timed(Dedup.retireDomainCapSrc(spark, g1, "probe"))
+    val (drtN, _) =
+      timed(IndexFamily.domainCap.retireSrcs(spark, gN, Seq("probe")))
+    val (drt1, _) =
+      timed(IndexFamily.domainCap.retireSrcs(spark, g1, Seq("probe")))
     report("domaincap", "retire_src", drt1, drtN)
     val regrown = Dedup.capAgainstLedger(spark, gN, dcProbe,
       "id", "url", "q").filter(col("admitted")).count()
@@ -681,19 +688,21 @@ object Scale {
       }
     }
     val linedfSeq = timed {
-      doomed.foreach(t => Dedup.retireLineDfSrc(spark, s"$root/seq/lines", t))
+      doomed.foreach(t =>
+        IndexFamily.linedf.retireSrcs(spark, s"$root/seq/lines", Seq(t)))
     }
     val linedfBulk = timed {
-      require(Dedup.retireLineDfWindow(spark, s"$root/bulk/lines",
+      require(IndexFamily.linedf.retireWindow(spark, s"$root/bulk/lines",
         keep = 1) == doomed)
     }
     require(rows(s"$root/seq/lines/lines") == rows(s"$root/bulk/lines/lines"),
       "bulk line-df retirement diverged from sequential")
     val ivfSeq = timed {
-      doomed.foreach(t => Ann.retireIvfSrc(spark, s"$root/seq/ivf", t))
+      doomed.foreach(t =>
+        IndexFamily.ivf.retireSrcs(spark, s"$root/seq/ivf", Seq(t)))
     }
     val ivfBulk = timed {
-      require(Ann.retireIvfWindow(spark, s"$root/bulk/ivf", keep = 1)
+      require(IndexFamily.ivf.retireWindow(spark, s"$root/bulk/ivf", keep = 1)
         == doomed)
     }
     require(rows(s"$root/seq/ivf/cells") == rows(s"$root/bulk/ivf/cells") &&
@@ -733,8 +742,8 @@ object Scale {
       val before = search()
       val tSnap = timed(Maintenance.snapshotIndex(spark, s"$root/ivf",
         s"$root/bak"))
-      Ann.deleteFromIvfIndex(spark, s"$root/ivf",
-        pinned.filter(col("id") % 4 === 0).select("id"))
+      IndexFiles.writeTombstones(
+        pinned.filter(col("id") % 4 === 0).select("id"), s"$root/ivf")
       Ann.compactIvfIndex(spark, s"$root/ivf")
       require(search() != before, "mutation did not change the search")
       val tRestore = timed(Maintenance.restoreIndex(spark, s"$root/bak",
@@ -947,7 +956,7 @@ object Scale {
       (df, idx) => Dedup.buildExactIndexSighted(df, "id", "text", idx, "d0"),
       (df, idx) => Dedup.appendToExactIndexSighted(spark, idx, df,
         "id", "text", "d1"),
-      idx => Dedup.retireExactSeenWindow(spark, idx, keep = 1),
+      idx => IndexFamily.exact.retireSeenWindow(spark, idx, keep = 1),
       idx => Dedup.dedupExactAgainstIndex(spark, idx, exProbe, "id", "text")
         .collect().map(_.toString).sorted.toSeq,
       "deleted_fps")
@@ -960,7 +969,7 @@ object Scale {
       (df, idx) => Dedup.buildMinhashIndexSighted(df, "id", "text", idx, "d0"),
       (df, idx) => Dedup.appendToMinhashIndexSighted(spark, idx, df,
         "id", "text", "d1", tau = 0.5),
-      idx => Dedup.retireMinhashSeenWindow(spark, idx, keep = 1),
+      idx => IndexFamily.minhash.retireSeenWindow(spark, idx, keep = 1),
       idx => Dedup.dedupAgainstIndex(spark, idx, exProbe, "id", "text",
           tau = 0.5)
         .collect().map(_.toString).sorted.toSeq,
@@ -1003,7 +1012,7 @@ object Scale {
         dim = 60, day = "d0", maxHam = 2, thresh = 0.0),
       (df, idx) => Multimodal.appendToPhashIndexSighted(spark, idx, df,
         "id", "v", "d1"),
-      idx => Multimodal.retirePhashSeenWindow(spark, idx, keep = 1),
+      idx => IndexFamily.phash.retireSeenWindow(spark, idx, keep = 1),
       idx => Multimodal.dedupPhashAgainstIndex(spark, idx, phProbe,
           "id", "v")
         .collect().map(_.toString).sorted.toSeq,

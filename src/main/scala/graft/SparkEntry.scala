@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
-import graft.operators.{Aliases, Ann, Bpe, Chunker, Collections, Curate, Dedup, Ingest, Maintenance, MlEmbed, Multimodal, Stats, Tag}
+import graft.operators.{Aliases, Ann, Bpe, Chunker, Collections, Curate, Dedup,
+  IndexFamily, IndexFiles, Ingest, Maintenance, MlEmbed, Multimodal, Stats, Tag}
 import graft.sources.JsonlSource
 import graft.streaming.Events
 
@@ -511,7 +512,7 @@ object SparkEntry {
       Dedup.buildExactIndex(docs.filter(col("doc_id") % 4 === 0),
         "doc_id", "text", d)
       Dedup.appendToExactIndex(s, d, batch, "doc_id", "text", "d1")
-      Dedup.retireExactSrc(s, d, "d1")
+      IndexFamily.exact.retireSrcs(s, d, Seq("d1"))
     }
     Dedup.dedupExactAgainstIndex(s, idx, batch, "doc_id", "text")
   }
@@ -541,7 +542,7 @@ object SparkEntry {
         "doc_id", "text", "d1")
       Dedup.appendToExactIndexSighted(s, d,
         docs.filter(col("doc_id") % 16 === 2), "doc_id", "text", "d2")
-      Dedup.retireExactSeenWindow(s, d, keep = 2)
+      IndexFamily.exact.retireSeenWindow(s, d, keep = 2)
       ()
     }
     Dedup.dedupExactAgainstIndex(s, idx,
@@ -638,8 +639,8 @@ object SparkEntry {
       runBuilds(Seq(
         () => {
           Ann.buildIvfIndex(vecs, s"$r/ivf", nlist = 8)
-          Ann.deleteFromIvfIndex(s, s"$r/ivf",
-            vecs.filter(col("id") < 16).select("id"))
+          IndexFiles.writeTombstones(
+            vecs.filter(col("id") < 16).select("id"), s"$r/ivf")
         },
         () => {
           Dedup.buildExactIndex(docs, "doc_id", "text", s"$r/exact")
@@ -679,8 +680,8 @@ object SparkEntry {
       Ann.appendToIvfIndex(s, s"$r/ivf",
         vecs.filter(col("id") < 32)
           .select((col("id") + 1000000L).as("id"), col("v")), "d1")
-      Ann.deleteFromIvfIndex(s, s"$r/ivf",
-        vecs.filter(col("id") < 16).select("id"))
+      IndexFiles.writeTombstones(
+        vecs.filter(col("id") < 16).select("id"), s"$r/ivf")
       Ann.compactIvfIndex(s, s"$r/ivf")
       Maintenance.restoreIndex(s, s"$r/backup", s"$r/ivf")
     }
@@ -725,8 +726,8 @@ object SparkEntry {
             nlist = 16)
           Seq(1L, 3L).foreach(m => Ann.appendToIvfIndex(s, s"$r/ivf",
             vecs.filter(col("id") % 32 === m), s"d$m"))
-          Ann.deleteFromIvfIndex(s, s"$r/ivf",
-            vecs.filter(col("id") % 16 === 0 && col("id") < 128).select("id"))
+          IndexFiles.writeTombstones(vecs.filter(
+            col("id") % 16 === 0 && col("id") < 128).select("id"), s"$r/ivf")
         }))
       // the registry travels with the store: a restored index no alias
       // points at is not servable (the qAlias drop-stale-registry move)
@@ -798,8 +799,8 @@ object SparkEntry {
         },
         () => {
           Ann.buildIvfIndex(vecs, s"$r/ivf", nlist = 8)
-          Ann.deleteFromIvfIndex(s, s"$r/ivf",
-            vecs.filter(col("id") < 16).select("id"))
+          IndexFiles.writeTombstones(
+            vecs.filter(col("id") < 16).select("id"), s"$r/ivf")
         },
         () => {
           Dedup.buildLineDfIndex(docs.filter(col("doc_id") < 20),
@@ -898,7 +899,7 @@ object SparkEntry {
           .unionByName(docs.filter(col("doc_id") % 32 === 5)
             .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))),
         "doc_id", "text", day = "d1", tau = 0.8)
-      Dedup.retireContainmentSeenWindow(s, d, keep = 1)
+      IndexFamily.containment.retireSeenWindow(s, d, keep = 1)
       ()
     }
     Dedup.dropContainedAgainstIndex(s, idx,
@@ -1007,7 +1008,7 @@ object SparkEntry {
       Dedup.buildMinhashIndex(minhashIdxHistory(docs), "doc_id", "text", d)
       Dedup.appendToMinhashIndex(s, d, minhashIdxBatch(docs),
         "doc_id", "text", "s1")
-      Dedup.retireMinhashSrc(s, d, "s1")
+      IndexFamily.minhash.retireSrcs(s, d, Seq("s1"))
     }
     Dedup.dedupAgainstIndex(s, idx, minhashIdxBatch(docs),
       "doc_id", "text", tau = 0.5)
@@ -1041,7 +1042,7 @@ object SparkEntry {
           .unionByName(docs.filter(col("doc_id") % 32 === 1)
             .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))),
         "doc_id", "text", day = "d1", tau = 0.5)
-      Dedup.retireMinhashSeenWindow(s, d, keep = 1)
+      IndexFamily.minhash.retireSeenWindow(s, d, keep = 1)
       ()
     }
     Dedup.dedupAgainstIndex(s, idx,
@@ -1109,7 +1110,7 @@ object SparkEntry {
             .select((col("vec_id") + 1000000L).as("id"),
               col("embedding").as("v"))),
         day = "d1", tau = 0.4)
-      Ann.retireLshSeenWindow(s, d, keep = 1)
+      IndexFamily.lsh.retireSeenWindow(s, d, keep = 1)
       ()
     }
     Dedup.cosineDedupAgainstIndex(s, idx,
@@ -1298,7 +1299,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 4 === b), b, led, "doc_id", "url",
         "n_chars", out)
     }
-    Dedup.retireDomainCapSrc(s, led, "b0")
+    IndexFamily.domainCap.retireSrcs(s, led, Seq("b0"))
     Dedup.capAgainstLedger(s, led, docs.filter(col("doc_id") % 4 === 0),
         "doc_id", "url", "n_chars")
       .select(col("id"), col("domain"), col("admitted"),
@@ -1571,7 +1572,7 @@ object SparkEntry {
           .select((col("vec_id") + 2000000L).as("id"),
             col("embedding").as("features")),
         "id", "features", "s1")
-      Multimodal.retirePhashSrc(s, d, "s1")
+      IndexFamily.phash.retireSrcs(s, d, Seq("s1"))
     }
     val batch = media.filter(col("vec_id") < 5)
       .select((col("vec_id") + 1000000L).as("id"),
@@ -1601,7 +1602,7 @@ object SparkEntry {
         "id", "features", day = "d1")
       Multimodal.appendToPhashIndexSighted(s, d, slice(3),
         "id", "features", day = "d2")
-      Multimodal.retirePhashSeenWindow(s, d, keep = 2)
+      IndexFamily.phash.retireSeenWindow(s, d, keep = 2)
       ()
     }
     Multimodal.dedupPhashAgainstIndex(s, idx,
@@ -2328,7 +2329,7 @@ object SparkEntry {
         "doc_id", "text", d)
       Dedup.appendToLineDfIndex(s, d,
         pdocs.filter(col("doc_id") % 2 === 0), "doc_id", "text", "s1")
-      Dedup.retireLineDfSrc(s, d, "s1")
+      IndexFamily.linedf.retireSrcs(s, d, Seq("s1"))
     }
     Dedup.lineDfAgainstIndex(s, idx,
       pdocs.filter(col("doc_id") % 2 === 0), "doc_id", "text", minDf = 2)
@@ -2554,7 +2555,7 @@ object SparkEntry {
         buckets = 32)
       Ann.appendToSparseIndex(s, d,
         postsOf(docs.filter(col("doc_id") % 2 === 1)), "d1")
-      Ann.retireSparseSrc(s, d, "d1")
+      IndexFamily.sparse.retireSrcs(s, d, Seq("d1"))
     }
     val qterms = Ingest.sparseTerms(docs.filter(col("doc_id") < 5), Seq("doc_id"), "text")
       .select(col("doc_id").as("qid"), col("term"), col("weight").as("qw"))
@@ -2747,7 +2748,7 @@ object SparkEntry {
         nlist = 16)
       Ann.appendToIvfIndex(s, d,
         corpus(s, dir).filter(col("id") % 4 === 1), "d1")
-      Ann.retireIvfSrc(s, d, "d1")
+      IndexFamily.ivf.retireSrcs(s, d, Seq("d1"))
     }
     Ann.searchIvfIndex(s, idx, queriesSet(s, dir), k = 10, nprobe = 16)
       .select(col("qid"), col("id"), col("score"), col("rank").cast("long"))

@@ -384,7 +384,8 @@ object Ann {
 
   /** Recompute `dir/stats` from the doclens sidecar — O(docs) of two
     * columns, run after every doclens mutation. */
-  private def refreshSparseStats(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def refreshSparseStats(
+      spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     spark.read.parquet(s"$dir/doclens")
       .agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
@@ -407,7 +408,8 @@ object Ann {
       dir: String): Unit =
     if (!hasBm25Sidecars(spark, dir)) writeBm25Sidecars(spark, dir)
 
-  private def hasBm25Sidecars(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def hasBm25Sidecars(
+      spark: org.apache.spark.sql.SparkSession,
       dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/doclens")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -430,7 +432,7 @@ object Ann {
     // a rolled-forward batch extended doclens, so the derived stats file
     // must refresh NOW — the append below may legitimately throw (e.g.
     // a replayed id) and must not leave stats stale behind healed data
-    healSparseIndex(spark, dir)
+    IndexFamily.sparse.heal(spark, dir)
     val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
     val batchIds = batch.select("id").distinct()
     val replayed = IndexFiles
@@ -456,36 +458,6 @@ object Ann {
       Some(batchIds))
     refreshSparseStats(spark, dir)
   }
-
-  /** [[retireIvfSrc]] for the sparse inverted index — the segment's
-    * posting and doclen partitions drop in O(segment); the 1-row
-    * global stats re-derive from the surviving doclens (O(docs) of two
-    * columns), so BM25's N/avgdl forget the segment immediately; the
-    * ids sidecar rebuilds and departed ids' tombstones are pruned.
-    * Survivor scores are bit-equal to an index that never saw the
-    * segment: df/tf come only from stored posting rows and segments
-    * never mix partitions. */
-  def retireSparseSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireSparseSrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireSparseSrc]]: one heal, one drop pass, one stats
-    * refresh for the whole doomed set ([[IndexFiles.retireSegments]]). */
-  def retireSparseSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit = {
-    healSparseIndex(spark, dir) // stats-aware heal before the generic one
-    val bm25 = hasBm25Sidecars(spark, dir)
-    IndexFiles.retireSegments(spark, dir,
-      if (bm25) Seq("postings", "doclens") else Seq("postings"),
-      srcs, strict, idsFrom = Some("postings"),
-      after = () => if (bm25) refreshSparseStats(spark, dir))
-  }
-
-  /** [[retireIvfWindow]] for the sparse inverted index. */
-  def retireSparseWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "postings", keep,
-      srcs => retireSparseSrcs(spark, dir, srcs))
 
   /** Search a persisted sparse index; same results as [[sparseTopK]]
     * over the full postings (scores only involve terms both sides
@@ -651,30 +623,6 @@ object Ann {
         .withColumn("src", lit(src)), Seq("src"))),
       Some(batchIds))
   }
-
-  /** [[retireIvfSrc]] for the BIN_FLAT index — same O(segment) drop,
-    * sidecar rebuild, and tombstone prune over the bits table. */
-  def retireBinarySrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireBinarySrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireBinarySrc]] ([[IndexFiles.retireSegments]]). */
-  def retireBinarySrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit =
-    IndexFiles.retireSegments(spark, dir, Seq("bits"), srcs, strict,
-      idsFrom = Some("bits"))
-
-  /** [[retireIvfWindow]] for the BIN_FLAT index. */
-  def retireBinaryWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "bits", keep,
-      srcs => retireBinarySrcs(spark, dir, srcs))
-
-  /** Tombstone / purge for the BIN_FLAT index — same model as
-    * [[deleteFromIvfIndex]] / [[compactIvfIndex]] over the bits table. */
-  def deleteFromBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
 
   def compactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
@@ -1032,24 +980,13 @@ object Ann {
     * ranking), so no index scan is spent guarding ids here. The append
     * is not atomic under job failure — at production scale write
     * through a staging dir (or a table format) and move on success. */
-  /** The LSH family's heal list: buckets always, plus the sighted
-    * variant's `seen` table when this index records sightings (the
-    * exact/minhash/phash rule). */
-  private def lshHealTables(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Seq("buckets", "seen")
-    else Seq("buckets")
-  }
-
   def appendToLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame, src: String = "ingest"): Unit = {
     require(src.nonEmpty && src != "base",
       s"append src must be a non-empty tag other than 'base': '$src'")
     // crash-safe with a marker-only journal (no ids sidecar to extend):
     // a job failure anywhere leaves a state the next append repairs
-    IndexFiles.healAppend(spark, dir, lshHealTables(spark, dir))
+    IndexFamily.lsh.heal(spark, dir)
     // the sighted families' mirror guard: an unsighted append stores
     // vectors no sighting day contains — irretirable by the window
     val seenP = new org.apache.hadoop.fs.Path(s"$dir/seen")
@@ -1068,39 +1005,6 @@ object Ann {
         .routeForWrite("tbl", "sig"), Seq("src", "tbl", "sig"))),
       None)
   }
-
-  /** [[retireIvfSrc]] for the LSH index — O(segment) bucket-partition
-    * drop. LSH keeps no ids sidecar, so the tombstone prune filters
-    * `dir/deleted` against the surviving buckets' id column directly
-    * (one column of the history — retire is rare maintenance; a stale
-    * tombstone would otherwise silently hide a later re-append of the
-    * departed id). */
-  def retireLshSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireLshSrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireLshSrc]]: one heal, one drop pass, one tombstone
-    * prune over the surviving buckets. */
-  def retireLshSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit = {
-    IndexFiles.healAppend(spark, dir, lshHealTables(spark, dir))
-    if (IndexFiles.retireSrcsPartitions(spark, dir, Seq("buckets"), srcs,
-        strict = strict)) {
-      IndexFiles.tombstones(spark, dir).foreach { dead =>
-        IndexFiles.replaceTable(spark, dir, "deleted",
-          dead.join(
-            spark.read.parquet(s"$dir/buckets").select("id").distinct(),
-            Seq("id"), "left_semi"),
-          Seq.empty)
-      }
-    }
-  }
-
-  /** [[retireIvfWindow]] for the LSH index. */
-  def retireLshWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "buckets", keep,
-      srcs => retireLshSrcs(spark, dir, srcs))
 
   /** Search a persisted LSH index; same results as [[lshTopK]] with the
     * build's parameters (read from the index's own metadata). The
@@ -1138,16 +1042,6 @@ object Ann {
       raw.filter(cond).withColumn("sig", col("sig").cast("long")))
     lshRank(cb, queries, k, dim, planes, tables, metric)
   }
-
-  /** Tombstone / purge for the LSH index — same model as
-    * [[deleteFromIvfIndex]] / [[compactIvfIndex]] over the buckets
-    * table. LSH keeps no ids sidecar (appends are unguarded — lshRank
-    * collapses per-(qid,id)), so a tombstoned id CAN be re-appended
-    * before compaction: the tombstone then hides both rows, exactly
-    * the by-id semantics documented on the other indexes. */
-  def deleteFromLshIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
 
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
@@ -1195,8 +1089,8 @@ object Ann {
       dir: String, batch: DataFrame, day: String, tau: Double): Unit = {
     require(day.nonEmpty && day != "base",
       s"day must be a non-empty tag other than 'base': '$day'")
-    requireSightedLsh(spark, dir)
-    IndexFiles.healAppend(spark, dir, lshHealTables(spark, dir))
+    IndexFamily.lsh.requireSighted(spark, dir)
+    IndexFamily.lsh.heal(spark, dir)
     val m = spark.read.parquet(s"$dir/meta").head()
     val (dim, planes, tables) =
       (m.getAs[Int]("dim"), m.getAs[Int]("planes"), m.getAs[Int]("tables"))
@@ -1231,76 +1125,6 @@ object Ann {
     if ((payloadSlices ++ seenSlice).nonEmpty)
       IndexFiles.appendStaged(spark, dir, payloadSlices ++ seenSlice, None)
     hits.unpersist(); admitted.unpersist(); ()
-  }
-
-  private def requireSightedLsh(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"$dir has no sightings ledger — build it with " +
-        "buildLshIndexSighted (the admission index at this dir has no " +
-        "last-seen data to window on)")
-  }
-
-  /** Retire sighting days older than the newest `keep` — stored
-    * vectors whose LAST sighting aged out are TOMBSTONED through the
-    * family's one delete model ([[deleteFromLshIndex]] semantics;
-    * probes stop matching immediately, the ratio-scheduled
-    * [[compactLshIndex]] purges physically), then the doomed `seen`
-    * day-partitions drop in O(segment). The live-id resolve scans one
-    * column of the buckets table (LSH keeps no ids sidecar — retire
-    * is rare maintenance, the [[retireLshSrcs]] precedent). Crash-safe
-    * by re-run: tombstones commit BEFORE the seen drop. Returns the
-    * retired day tags, oldest first. */
-  def retireLshSeenWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] = {
-    require(keep >= 1,
-      s"keep must be >= 1: retiring every sighting day would empty the " +
-        s"history (got $keep)")
-    requireSightedLsh(spark, dir)
-    IndexFiles.healAppend(spark, dir, lshHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomed = days.dropRight(keep)
-    if (doomed.nonEmpty) {
-      val kept = days.takeRight(keep)
-      val seen = spark.read.parquet(s"$dir/seen")
-      val doomedIds = seen.filter(col("src").isin(doomed: _*))
-        .select("id").distinct()
-        .join(seen.filter(col("src").isin(kept: _*)).select("id").distinct(),
-          Seq("id"), "left_anti")
-      val live = IndexFiles.dropTombstones(spark, dir,
-        spark.read.parquet(s"$dir/buckets").select("id").distinct())
-      val dead = live.join(doomedIds, Seq("id"), "left_semi").persist()
-      // survivor guard by COUNT: dead ⊆ live by construction (a
-      // semi-join of live) and both row sets are unique, so "something
-      // survives" ⟺ live > dead — two cheap counts instead of
-      // materializing a live⟕dead anti-join just to probe emptiness,
-      // and the dead count doubles as the write-skip check (r19)
-      val deadN = dead.count()
-      require(live.count() > deadN,
-        s"retiring ${doomed.mkString(", ")} would forget every live " +
-          "vector (no kept day re-saw anything) — drop and rebuild the " +
-          "index instead")
-      if (deadN > 0) IndexFiles.writeTombstones(dead, dir)
-      dead.unpersist()
-      IndexFiles.retireSrcsPartitions(spark, dir, Seq("seen"), doomed,
-        strict = true)
-      IndexFiles.refresh(spark, dir)
-      ()
-    }
-    doomed
-  }
-
-  /** [[retireLshSeenWindow]] keyed by an explicit horizon — every
-    * sighting day strictly older than `day` (natural order) retires;
-    * the date-driven nightly's form. */
-  def retireLshSeenBefore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, day: String): Seq[String] = {
-    requireSightedLsh(spark, dir)
-    IndexFiles.healAppend(spark, dir, lshHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomedN = days.count(d => IndexFiles.naturalOrdering.lt(d, day))
-    retireLshSeenWindow(spark, dir, keep = days.size - doomedN)
   }
 
   /** Fail fast when an appended batch's vectors don't match the stored
@@ -1503,7 +1327,7 @@ object Ann {
     * (src, cell): `cell` is what a search's probe filter prunes on
     * (the scan opens ~nprobe/nlist of the files — src is a wildcard
     * level above it, pruning is unaffected), and `src` is the
-    * SEGMENT tag [[retireIvfSrc]] later drops in O(segment) — the
+    * SEGMENT tag [[IndexFamily.retireSrcs]] later drops in O(segment) — the
     * build lands as segment "base", each append as its own tag, so a
     * daily embedding crawl ages out of the vector store exactly like
     * the dedup histories (the rotating-segment design of the
@@ -1574,7 +1398,7 @@ object Ann {
     * leaves a state the next append repairs completely.
     *
     * `src` tags the batch as its own retireable segment
-    * ([[retireIvfSrc]]); a daily pipeline passes the crawl date. The
+    * ([[IndexFamily.retireSrcs]]); a daily pipeline passes the crawl date. The
     * default collects untagged appends into one "ingest" segment —
     * existing callers keep working, and that segment retires as a
     * unit (or never, matching the pre-segmented behavior). */
@@ -1605,52 +1429,6 @@ object Ann {
       Some(batchIds))
   }
 
-  /** Retire one appended segment from a persisted IVF index — the
-    * rolling-window form for the VECTOR store ("search the last N
-    * crawl days' embeddings"): the segment's cell partitions drop in
-    * O(segment) with no surviving row rewritten, the ids sidecar
-    * rebuilds from the survivors, and tombstones whose ids left with
-    * the segment are pruned (a stale tombstone would otherwise
-    * silently kill a later re-ingest of the same id). Survivor
-    * rankings are bit-equal to an index that never saw the segment:
-    * cell assignment is deterministic in the stored codebook and
-    * segments never mix partitions. The "base" build segment never
-    * retires ([[IndexFiles.retireSrcPartitions]] refuses to empty the
-    * table); re-training is its lifecycle. `strict = false` makes an
-    * absent segment a no-op (a zero-yield day appends no partitions;
-    * the scheduled window job must not crash on it). */
-  def retireIvfSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireIvfSrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireIvfSrc]] ([[IndexFiles.retireSegments]]). */
-  def retireIvfSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit =
-    IndexFiles.retireSegments(spark, dir, Seq("cells"), srcs, strict,
-      idsFrom = Some("cells"))
-
-  /** Retire every appended IVF segment but the newest `keep` — the
-    * scheduled rolling-window call ([[IndexFiles.retireWindow]]);
-    * returns the retired tags (the whole set retires in ONE bulk
-    * call: one heal, one sidecar rebuild). */
-  def retireIvfWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "cells", keep,
-      srcs => retireIvfSrcs(spark, dir, srcs))
-
-  /** Delete ids from a persisted IVF index by TOMBSTONE — the Milvus
-    * delete model (milvus_connector.py:190-198 delete-by-expr; Milvus
-    * itself materializes deletes as tombstones merged at compaction):
-    * the ids land in `dir/deleted`, [[searchIvfIndex]] anti-joins them
-    * out, and [[compactIvfIndex]] purges them physically. O(delete
-    * batch) per call — no cell file is rewritten. A tombstoned id
-    * cannot be re-appended until compaction (the tombstone is by id,
-    * so a re-inserted row would be invisible to search; Milvus
-    * distinguishes rows by PK+timestamp, out of scope here). */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
-
   /** Replace-or-insert into a persisted IVF index — the index-level
     * form of the reference's delete-then-insert re-ingest flow
     * (milvus_connector.py:190-198 delete + insert; changed docs are
@@ -1665,7 +1443,7 @@ object Ann {
     * the purge clears their tombstones, the append re-admits them. */
   def upsertIntoIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    healIvfIndex(spark, dir)
+    IndexFamily.ivf.heal(spark, dir)
     upsertVia(spark, dir, batch, indexedIds(spark, dir),
       () => compactIvfIndex(spark, dir),
       b => appendToIvfIndex(spark, dir, b, src))
@@ -1675,7 +1453,7 @@ object Ann {
     * purge-then-append contract over postings/doclens/stats. */
   def upsertIntoSparseIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    healSparseIndex(spark, dir)
+    IndexFamily.sparse.heal(spark, dir)
     upsertVia(spark, dir, batch,
       indexedIds(spark, dir, payload = "postings"),
       () => compactSparseIndex(spark, dir),
@@ -1685,7 +1463,7 @@ object Ann {
   /** [[upsertIntoIvfIndex]] for the BIN_FLAT index. */
   def upsertIntoBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    healBinaryIndex(spark, dir)
+    IndexFamily.binary.heal(spark, dir)
     upsertVia(spark, dir, batch,
       indexedIds(spark, dir, payload = "bits"),
       () => compactBinaryIndex(spark, dir),
@@ -1696,7 +1474,7 @@ object Ann {
     * re-encoded through the STORED codebooks like any append. */
   def upsertIntoIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    healIvfPqIndex(spark, dir)
+    IndexFamily.ivfPq.heal(spark, dir)
     upsertVia(spark, dir, batch,
       indexedIds(spark, dir, payload = "codes"),
       () => compactIvfPqIndex(spark, dir),
@@ -1855,24 +1633,6 @@ object Ann {
       Some(batchIds))
   }
 
-  /** [[retireIvfSrc]] for the IVF_SQ8 index — same O(segment) drop,
-    * sidecar rebuild, and tombstone prune over the code cells. */
-  def retireIvfSq8Src(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireIvfSq8Srcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireIvfSq8Src]] ([[IndexFiles.retireSegments]]). */
-  def retireIvfSq8Srcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit =
-    IndexFiles.retireSegments(spark, dir, Seq("cells"), srcs, strict,
-      idsFrom = Some("cells"))
-
-  /** [[retireIvfWindow]] for the IVF_SQ8 index. */
-  def retireIvfSq8Window(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "cells", keep,
-      srcs => retireIvfSq8Srcs(spark, dir, srcs))
-
   /** Search a persisted IVF_SQ8 index: probe the nprobe nearest cells
     * (same static literal partition pruning as [[searchIvfIndex]] —
     * only the probed cells' files are listed, ~nprobe/nlist of the
@@ -1930,30 +1690,18 @@ object Ann {
     exactRescore(corpus, queries, cand, k, metric)
   }
 
-  /** Tombstone delete for the IVF_SQ8 index — [[deleteFromIvfIndex]]
-    * semantics over the quantized cells. */
-  def deleteFromIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
-
   /** Physically purge tombstoned rows — [[compactIvfIndex]] over the
     * quantized cells. */
   def compactIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     IndexFiles.compact(spark, dir, Map("cells" -> Seq("src", "cell")))
 
-  /** See [[healSparseIndex]]. */
-  def healIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("cells")); ()
-  }
-
   /** [[upsertIntoIvfIndex]] for the IVF_SQ8 index — replacements are
     * re-quantized and re-assigned through the stored codebook like any
     * append. */
   def upsertIntoIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    healIvfSq8Index(spark, dir)
+    IndexFamily.ivfSq8.heal(spark, dir)
     upsertVia(spark, dir, batch, indexedIds(spark, dir),
       () => compactIvfSq8Index(spark, dir),
       b => appendToIvfSq8Index(spark, dir, b, src))
@@ -1971,7 +1719,7 @@ object Ann {
     * marker) repairs the state. */
   private val RetrainMarker = "_retrain_pending"
 
-  private def requireNoPendingRetrain(
+  private[operators] def requireNoPendingRetrain(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$RetrainMarker")
     require(!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
@@ -2061,62 +1809,10 @@ object Ann {
     require(fs.delete(marker, false), s"clear retrain marker $marker failed")
   }
 
-  /** Tombstone / purge for the IVF-PQ index — same model as
-    * [[deleteFromIvfIndex]] / [[compactIvfIndex]] over the codes
-    * table; both codebooks are untouched. */
-  def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
-
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
     requireNoPendingRetrain(spark, dir)
     IndexFiles.compact(spark, dir, Map("codes" -> Seq("src", "cell")))
-  }
-
-  /** Tombstone / purge for the sparse inverted index — a deleted doc's
-    * postings stop scoring immediately and are rewritten away at
-    * compaction. */
-  def deleteFromSparseIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
-
-  /** Repair an interrupted append on a persisted index WITHOUT
-    * appending a new batch — the operator's answer to a search that
-    * refused with "incomplete append": searches are read-only by
-    * contract, so after a crashed append job something must run the
-    * roll-forward/roll-back repair, and forcing the caller to craft a
-    * fresh batch (or wait for tomorrow's) just to unblock reads is
-    * wrong. One entry per index family because each knows its own
-    * journaled table list (and the sparse index its derived stats
-    * file); all are idempotent no-ops on a healthy index. */
-  def healSparseIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    if (IndexFiles.healAppend(spark, dir, Seq("postings", "doclens")))
-      refreshSparseStats(spark, dir)
-
-  /** See [[healSparseIndex]]. */
-  def healBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("bits")); ()
-  }
-
-  /** See [[healSparseIndex]]. */
-  def healIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("cells")); ()
-  }
-
-  /** See [[healSparseIndex]]. */
-  def healIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("codes")); ()
-  }
-
-  /** See [[healSparseIndex]]. */
-  def healLshIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("buckets")); ()
   }
 
   def compactSparseIndex(spark: org.apache.spark.sql.SparkSession,
@@ -2124,7 +1820,7 @@ object Ann {
     // heal with the sparse-specific stats refresh BEFORE the generic
     // compact (whose own heal knows nothing of the derived stats file);
     // its inner healAppend then finds nothing to do
-    healSparseIndex(spark, dir)
+    IndexFamily.sparse.heal(spark, dir)
     val hadTombstones = IndexFiles.tombstones(spark, dir).isDefined
     val dlPath = new org.apache.hadoop.fs.Path(s"$dir/doclens")
     val hasDoclens =
@@ -2200,8 +1896,8 @@ object Ann {
     val pruned = (if (probed.isEmpty) raw.filter(lit(false))
                   else raw.filter(col("cell").isin(typed: _*)))
       .withColumn("cell", col("cell").cast("int"))
-    // tombstoned ids ([[deleteFromIvfIndex]]) never reach the ranking —
-    // bit-equal to searching the physically compacted index
+    // tombstoned ids ([[IndexFiles.writeTombstones]]) never reach the
+    // ranking — bit-equal to searching the physically compacted index
     val live = IndexFiles.dropTombstones(spark, dir, pruned)
     // allowed-id restriction ([[searchIvfIndexFiltered]]) applies before
     // the rank for the same reason the tombstone filter does
@@ -2648,28 +2344,6 @@ object Ann {
         Seq("src", "cell"))),
       Some(batchIds))
   }
-
-  /** [[retireIvfSrc]] for the IVF-PQ index — same O(segment) drop,
-    * sidecar rebuild, and tombstone prune over the code cells; both
-    * codebooks are untouched (codes of surviving segments stay
-    * decodable — nothing is re-encoded). */
-  def retireIvfPqSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireIvfPqSrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireIvfPqSrc]] ([[IndexFiles.retireSegments]]). */
-  def retireIvfPqSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit = {
-    requireNoPendingRetrain(spark, dir)
-    IndexFiles.retireSegments(spark, dir, Seq("codes"), srcs, strict,
-      idsFrom = Some("codes"))
-  }
-
-  /** [[retireIvfWindow]] for the IVF-PQ index. */
-  def retireIvfPqWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "codes", keep,
-      srcs => retireIvfPqSrcs(spark, dir, srcs))
 
   // ---- index evaluation & contrastive mining -----------------------------
 

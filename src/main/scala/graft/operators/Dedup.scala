@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.StructType
   * pairs). The results are lazy, so the operator cannot release those
   * blocks itself — long-lived sessions composing many dedup calls
   * should `spark.catalog.clearCache()` between logical queries (as
-  * Bench/Verify/Probe do) or unpersist after consuming the result.
+  * Bench/Verify do) or unpersist after consuming the result.
   */
 object Dedup {
 
@@ -282,43 +282,6 @@ object Dedup {
         .select(col("bloom"), lit(n).as("n_items"), lit(fpp).as("fpp"),
           lit(bits).as("num_bits")),
       Seq.empty)
-  }
-
-  /** Retire one appended segment from the line-df history — the
-    * rolling-window form ("boilerplate df over the last N crawl days"):
-    * when day k lands, day k−N retires, so a line's history df is
-    * always the window sum and long-dead boilerplate stops suppressing
-    * fresh lines. Drops the segment's partition directories
-    * (O(segment), no surviving increment rewritten) and rebuilds the
-    * Bloom sidecar from the survivors — which also UNSATURATES it, so
-    * the window's steady state never degrades the prune the way an
-    * ever-growing history would. The retired src becomes appendable
-    * again (re-crawl semantics). A crash between the delete and the
-    * sidecar rebuild leaves a stale-superset bloom — extra false
-    * positives, never a wrong verdict; re-run [[rebuildLineDfSidecar]]
-    * to finish. */
-  /** Retire every appended line-df segment but the newest `keep` —
-    * the scheduled rolling-window call ([[IndexFiles.retireWindow]]);
-    * returns the retired tags. */
-  def retireLineDfWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int, fpp: Double = 0.01): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "lines", keep,
-      srcs => retireLineDfSrcs(spark, dir, srcs, fpp))
-
-  def retireLineDfSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, fpp: Double = 0.01,
-      strict: Boolean = true): Unit =
-    retireLineDfSrcs(spark, dir, Seq(src), fpp, strict)
-
-  /** Bulk [[retireLineDfSrc]]: one heal, one drop pass, ONE bloom
-    * sidecar rebuild for the whole doomed set. */
-  def retireLineDfSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], fpp: Double = 0.01,
-      strict: Boolean = true): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("lines"))
-    if (IndexFiles.retireSrcsPartitions(spark, dir, Seq("lines"), srcs,
-        strict = strict))
-      rebuildLineDfSidecar(spark, dir, fpp)
   }
 
   /** Filter a batch's boilerplate lines against the persisted history:
@@ -768,25 +731,12 @@ object Dedup {
     * shingles the bloom misses — prefixes wrongly pruned, duplicates
     * admitted); the payload itself rides [[IndexFiles.appendStaged]]'s
     * journal, which also extends the ids sidecar. */
-  /** The containment family's heal list: shingles + sizes always,
-    * plus the sighted variant's `seen` table when this index records
-    * sightings (the exact/minhash rule — a crashed SIGHTED append
-    * must roll its seen segment forward no matter which entry point
-    * heals next). */
-  private def containmentHealTables(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Seq("shingles", "sizes", "seen")
-    else Seq("shingles", "sizes")
-  }
-
   def appendToContainmentIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       src: String): Unit = {
     require(src.nonEmpty && src != "base",
       s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, containmentHealTables(spark, dir))
+    IndexFamily.containment.heal(spark, dir)
     // the sighted families' mirror guard: an unsighted append into a
     // SIGHTED index stores docs no sighting day contains — entries
     // retireContainmentSeenWindow could never retire
@@ -821,7 +771,7 @@ object Dedup {
     * One distinct-hash scan of `shingles/`; payload never rewritten. */
   def rebuildContainmentSidecar(spark: org.apache.spark.sql.SparkSession,
       dir: String, fpp: Double = 0.01): Unit = {
-    IndexFiles.healAppend(spark, dir, containmentHealTables(spark, dir))
+    IndexFamily.containment.heal(spark, dir)
     val hs = spark.read.parquet(s"$dir/shingles").select("sh").distinct()
     val n = hs.count()
     require(n > 0, "rebuildContainmentSidecar: stored shingle table is empty")
@@ -831,54 +781,6 @@ object Dedup {
         .select(col("bloom"), lit(n).as("n_items"), lit(fpp).as("fpp"),
           lit(bits).as("num_bits")),
       Seq.empty)
-  }
-
-  /** Rewrite the containment ids sidecar from the stored sizes table —
-    * the O(index) maintenance scan [[retireContainmentSrc]] uses after
-    * dropping a segment (and the recovery call for a crash that left
-    * the sidecar stale). Zero-shingle docs leave no sizes row, so the
-    * rebuilt sidecar may re-admit them — harmless by construction:
-    * they have no payload rows to double. */
-  def rebuildContainmentIds(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.replaceTable(spark, dir, "ids",
-      spark.read.parquet(s"$dir/sizes").select("id").distinct(), Seq.empty)
-
-  /** Retire one appended segment from the containment history — the
-    * rolling-window form: only the last N crawl days can claim to
-    * contain a new doc, and a doc retired with its day becomes
-    * re-admittable on a later crawl. Drops the segment's shingle and
-    * size partitions (O(segment)), rewrites the ids sidecar from the
-    * survivors, and rebuilds (and thereby unsaturates) the Bloom
-    * sidecar. Crash windows are all safe-stale, never wrong: after the
-    * partition delete, an orphaned sizes/ids/bloom entry can only
-    * suppress re-appends or admit extra bloom candidates (the probe
-    * exact-verifies against stored shingles, which are gone); finish
-    * with [[rebuildContainmentIds]] + [[rebuildContainmentSidecar]]. */
-  /** Retire every appended containment segment but the newest `keep` —
-    * the scheduled rolling-window call ([[IndexFiles.retireWindow]]);
-    * returns the retired tags. */
-  def retireContainmentWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int, fpp: Double = 0.01): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "shingles", keep,
-      srcs => retireContainmentSrcs(spark, dir, srcs, fpp))
-
-  def retireContainmentSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, fpp: Double = 0.01,
-      strict: Boolean = true): Unit =
-    retireContainmentSrcs(spark, dir, Seq(src), fpp, strict)
-
-  /** Bulk [[retireContainmentSrc]]: one heal, one drop pass, one
-    * ids + bloom sidecar rebuild for the whole doomed set. */
-  def retireContainmentSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], fpp: Double = 0.01,
-      strict: Boolean = true): Unit = {
-    IndexFiles.healAppend(spark, dir, containmentHealTables(spark, dir))
-    if (IndexFiles.retireSrcsPartitions(spark, dir, Seq("shingles", "sizes"),
-        srcs, strict = strict)) {
-      rebuildContainmentIds(spark, dir)
-      rebuildContainmentSidecar(spark, dir, fpp)
-    }
   }
 
   /** Containment-dedup a batch against the persisted history: one
@@ -979,7 +881,7 @@ object Dedup {
         col("sz") - ceil(lit(tauGen(tau)) * col("sz") - lit(1e-9)) + 1)
       .select("id", "sh", "sz")
       .filter(SK.mightContain(lit(bytes), col("sh")))
-    // tombstoned docs ([[deleteFromContainmentIndex]]) neither
+    // tombstoned docs ([[IndexFiles.writeTombstones]]) neither
     // candidate nor verify — bit-equal to the physically compacted index
     val histAll = IndexFiles.dropTombstones(spark, dir,
       spark.read.parquet(s"$dir/shingles"))
@@ -1046,30 +948,10 @@ object Dedup {
     (d, shB, best, histDrops, Seq(shB, cand) ++ pinsB)
   }
 
-  /** Tombstone docs out of the containment index — the shared delete
-    * model ([[IndexFiles.writeTombstones]], the takedown path of an
-    * admitted corpus): O(batch), no rewrite;
-    * [[dropContainedAgainstIndex]] stops matching them immediately;
-    * [[compactContainmentIndex]] purges them physically. Tombstoned
-    * ids stay in the ids sidecar until compaction, so re-appending a
-    * deleted doc is blocked until its rows are actually gone (the
-    * minhash-index contract). */
-  def deleteFromContainmentIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
-
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     IndexFiles.compact(spark, dir,
       Map("shingles" -> Seq("src"), "sizes" -> Seq("src")))
-
-  /** Repair an interrupted containment-index append without appending
-    * a new batch — idempotent no-op on a healthy index (probes refuse
-    * a pending journal; something read-write must run the repair). */
-  def healContainmentIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, containmentHealTables(spark, dir)); ()
-  }
 
   // ---- sighting-window containment dedup ---------------------------------
 
@@ -1141,8 +1023,8 @@ object Dedup {
       day: String, tau: Double = 0.8): Unit = {
     require(day.nonEmpty && day != "base",
       s"day must be a non-empty tag other than 'base': '$day'")
-    requireSightedContainment(spark, dir)
-    IndexFiles.healAppend(spark, dir, containmentHealTables(spark, dir))
+    IndexFamily.containment.requireSighted(spark, dir)
+    IndexFamily.containment.heal(spark, dir)
     // replayed-id guard (the minhash-sighted convention): re-crawls of
     // a KNOWN doc arrive under fresh ids and reject as contained; a
     // replayed id would double its shingle rows and corrupt every
@@ -1211,79 +1093,11 @@ object Dedup {
     dupIds.unpersist(); admittedIds.unpersist(); admittedSh.unpersist(); ()
   }
 
-  private def requireSightedContainment(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"$dir has no sightings ledger — build it with " +
-        "buildContainmentIndexSighted (the admission index at this dir " +
-        "has no last-seen data to window on)")
-  }
-
-  /** Retire sighting days older than the newest `keep` — the
-    * containment family's [[retireMinhashSeenWindow]]: stored docs
-    * whose LAST sighting aged out are TOMBSTONED through the family's
-    * one delete model ([[deleteFromContainmentIndex]] semantics —
-    * probes stop matching them as containers immediately, the
-    * ratio-scheduled [[compactContainmentIndex]] purges them
-    * physically), then the doomed `seen` day-partitions drop in
-    * O(segment). A container re-seen in a kept day — because a later
-    * crawl batch was rejected as its sub-doc — survives untouched
-    * under its original id. Crash-safe by re-run: tombstones commit
-    * BEFORE the seen drop, and a re-run re-resolves the delta against
-    * live ids. Takedown-sized id joins; never an O(index) rewrite.
-    * Returns the retired day tags, oldest first. */
+  /** [[IndexFamily.retireSeenWindow]] for the containment family,
+    * kept by name: the perfbench lifecycle workload times this call. */
   def retireContainmentSeenWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] = {
-    require(keep >= 1,
-      s"keep must be >= 1: retiring every sighting day would empty the " +
-        s"history (got $keep)")
-    requireSightedContainment(spark, dir)
-    IndexFiles.healAppend(spark, dir, containmentHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomed = days.dropRight(keep)
-    if (doomed.nonEmpty) {
-      val kept = days.takeRight(keep)
-      val seen = spark.read.parquet(s"$dir/seen")
-      val doomedIds = seen.filter(col("src").isin(doomed: _*))
-        .select("id").distinct()
-        .join(seen.filter(col("src").isin(kept: _*)).select("id").distinct(),
-          Seq("id"), "left_anti")
-      val live = IndexFiles.dropTombstones(spark, dir,
-        IndexFiles.ensureIds(spark, dir,
-          spark.read.parquet(s"$dir/shingles").select("id").distinct()))
-      val dead = live.join(doomedIds, Seq("id"), "left_semi").persist()
-      // survivor guard by COUNT: dead ⊆ live by construction (a
-      // semi-join of live) and both row sets are unique, so "something
-      // survives" ⟺ live > dead — two cheap counts instead of
-      // materializing a live⟕dead anti-join just to probe emptiness,
-      // and the dead count doubles as the write-skip check (r19)
-      val deadN = dead.count()
-      require(live.count() > deadN,
-        s"retiring ${doomed.mkString(", ")} would forget every live " +
-          "doc (no kept day re-saw anything) — drop and rebuild the " +
-          "index instead")
-      if (deadN > 0) IndexFiles.writeTombstones(dead, dir)
-      dead.unpersist()
-      IndexFiles.retireSrcsPartitions(spark, dir, Seq("seen"), doomed,
-        strict = true)
-      IndexFiles.refresh(spark, dir)
-      ()
-    }
-    doomed
-  }
-
-  /** [[retireContainmentSeenWindow]] keyed by an explicit horizon —
-    * every sighting day strictly older than `day` (natural order)
-    * retires; the date-driven nightly's form. */
-  def retireContainmentSeenBefore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, day: String): Seq[String] = {
-    requireSightedContainment(spark, dir)
-    IndexFiles.healAppend(spark, dir, containmentHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomedN = days.count(d => IndexFiles.naturalOrdering.lt(d, day))
-    retireContainmentSeenWindow(spark, dir, keep = days.size - doomedN)
-  }
+      dir: String, keep: Int): Seq[String] =
+    IndexFamily.containment.retireSeenWindow(spark, dir, keep)
 
   /** PPJoin prefix-filtered candidate pairs over (id, sh) shingle
     * hashes — [[ngramJaccard]]'s generation stage, exposed so specs can
@@ -2476,37 +2290,6 @@ object Dedup {
     adm.unpersist(); ()
   }
 
-  /** Retire one appended segment from the domain-cap ledger — the
-    * rolling-window form: a domain's budget regenerates as its oldest
-    * crawl day ages out (per-domain caps over the last N days, not
-    * forever), and the day's rows leave the admitted registry. Drops
-    * the segment's counts and admitted partitions wherever present
-    * (a zero-admission day has no directories in either — still loud
-    * on a tag never appended). No survivor requirement: ledger readers
-    * pass explicit schemas, so an emptied ledger reads as zero counts
-    * — the init state. The retired src becomes appendable again. */
-  /** Retire every appended ledger segment but the newest `keep` —
-    * the scheduled rolling-window call ([[IndexFiles.retireWindow]]);
-    * returns the retired tags. Ledger segments are all appends (init
-    * writes no src partitions), so `keep` counts crawl days. */
-  def retireDomainCapWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "counts", keep,
-      srcs => retireDomainCapSrcs(spark, dir, srcs))
-
-  def retireDomainCapSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireDomainCapSrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireDomainCapSrc]]: one heal, one drop pass (no
-    * sidecars to rebuild — the ledger reads sum what remains). */
-  def retireDomainCapSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("counts", "admitted"))
-    IndexFiles.retireSrcsPartitions(spark, dir, Seq("counts", "admitted"),
-      srcs, requireSurvivor = false, strict = strict); ()
-  }
-
   /** One minhash segment's sig and shingle rows, tagged with its `src`
     * and routed on their own hash key (sig, h), so a segment lands as a
     * bounded set of parallel files regardless of batch size (the
@@ -2531,7 +2314,7 @@ object Dedup {
     * (id, band, sig), `dir/shingles` holds (id, h) for the exact
     * verify — both hive-partitioned by src alone: src tags the
     * contributing batch (build = "base", each append its own tag), so
-    * [[retireMinhashSrc]] can age a segment out as an O(segment)
+    * [[IndexFamily.retireSrcs]] can age a segment out as an O(segment)
     * partition drop; writes route on the row hash (sig, h): at most
     * `spark.sql.shuffle.partitions` files a segment.
     * `dir/meta` records (w, numHashes, bands, maxDf) so
@@ -2570,7 +2353,7 @@ object Dedup {
     * price of not revisiting history) as [[dedupAgainstIndex]]. Per
     * batch the work is O(batch); stored signatures are never read
     * back, re-shuffled, or rewritten, and the src tag is what
-    * [[retireMinhashSrc]] later drops in O(segment).
+    * [[IndexFamily.retireSrcs]] later drops in O(segment).
     * Batch ids must be disjoint from stored ids (checked — a replayed
     * id would double-count its shingles in the Jaccard verify). The
     * guard reads the compact `dir/ids` sidecar ([[IndexFiles]]) —
@@ -2580,25 +2363,12 @@ object Dedup {
     * [[IndexFiles.appendStaged]] transaction, so the crash-between-
     * table-writes window the streaming witnesses used to flag is now
     * repaired by the next append instead of needing manual repair. */
-  /** The minhash family's heal list: sigs + shingles always, plus the
-    * sighted variant's `seen` table when this index records sightings
-    * (the [[exactHealTables]] rule — a crashed SIGHTED append must
-    * roll its seen segment forward no matter which entry point heals
-    * next). */
-  private def minhashHealTables(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Seq("sigs", "shingles", "seen")
-    else Seq("sigs", "shingles")
-  }
-
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
       src: String): Unit = {
     require(src.nonEmpty && src != "base",
       s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, minhashHealTables(spark, dir))
+    IndexFamily.minhash.heal(spark, dir)
     // the exact family's mirror guard: an unsighted append into a
     // SIGHTED index stores docs no sighting day contains — entries
     // retireMinhashSeenWindow could never retire
@@ -2625,48 +2395,6 @@ object Dedup {
     newSh.unpersist()
   }
 
-  /** Rewrite the minhash ids sidecar from the stored shingle table —
-    * the O(index) maintenance scan [[retireMinhashSrc]] uses after
-    * dropping a segment (and the recovery call for a crash that left
-    * the sidecar stale). Reads only the id column off the partitioned
-    * payload. */
-  def rebuildMinhashIds(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.replaceTable(spark, dir, "ids",
-      spark.read.parquet(s"$dir/shingles").select("id").distinct(), Seq.empty)
-
-  /** Retire one appended segment from the minhash history — the
-    * rolling-window form ("near-dup dedup against the last N crawl
-    * days"): when day k lands, day k−N retires, its signature and
-    * shingle partitions drop in O(segment) with no surviving row
-    * rewritten, and its docs become re-admittable on a later crawl.
-    * The ids sidecar rebuilds from the survivors; tombstones whose ids
-    * left with the segment are pruned (a stale tombstone would
-    * otherwise silently kill a later re-ingest of the same id — the
-    * rebuild-generation hazard). Survivor verdicts are bit-equal to an
-    * index that never saw the segment: signatures are deterministic
-    * and segments never mix partitions. `strict = false` makes an
-    * absent segment a no-op (a zero-yield day appends no partitions —
-    * every doc shorter than w — and the scheduled window job must not
-    * crash on it). */
-  /** Retire every appended minhash segment but the newest `keep` —
-    * the scheduled rolling-window call ([[IndexFiles.retireWindow]]);
-    * returns the retired tags. */
-  def retireMinhashWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "sigs", keep,
-      srcs => retireMinhashSrcs(spark, dir, srcs))
-
-  def retireMinhashSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retireMinhashSrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retireMinhashSrc]] ([[IndexFiles.retireSegments]]). */
-  def retireMinhashSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit =
-    IndexFiles.retireSegments(spark, dir, Seq("sigs", "shingles"), srcs,
-      strict, idsFrom = Some("shingles"))
-
   /** The distinct doc ids a persisted minhash index currently covers —
     * the compact sidecar when present, else the shingle table's id
     * column. Public face of the id set for callers (e.g. streaming
@@ -2676,28 +2404,10 @@ object Dedup {
     IndexFiles.storedIds(spark, dir,
       spark.read.parquet(s"$dir/shingles").select("id").distinct())
 
-  /** Tombstone docs out of a persisted minhash index — the shared
-    * delete model ([[IndexFiles.writeTombstones]]): O(batch), no
-    * rewrite; [[dedupAgainstIndex]] stops matching them immediately;
-    * [[compactMinhashIndex]] purges them from both payload tables and
-    * re-opens the ids for append (blocked before compaction). */
-  def deleteFromMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
-
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     IndexFiles.compact(spark, dir,
       Map("sigs" -> Seq("src"), "shingles" -> Seq("src")))
-
-  /** Repair an interrupted append without appending a new batch — see
-    * [[graft.operators.Ann.healSparseIndex]] for the rationale
-    * (searches refuse a pending journal; something read-write must run
-    * the repair). Idempotent no-op on a healthy index. */
-  def healMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, minhashHealTables(spark, dir)); ()
-  }
 
   // ---- sighting-window minhash dedup -------------------------------------
 
@@ -2740,8 +2450,8 @@ object Dedup {
       day: String, tau: Double = 0.5): Unit = {
     require(day.nonEmpty && day != "base",
       s"day must be a non-empty tag other than 'base': '$day'")
-    requireSightedMinhash(spark, dir)
-    IndexFiles.healAppend(spark, dir, minhashHealTables(spark, dir))
+    IndexFamily.minhash.requireSighted(spark, dir)
+    IndexFamily.minhash.heal(spark, dir)
     // inlined [[dedupAgainstIndex]] rather than called: the batch's
     // shingle sets and band signatures feed BOTH the verdict probe and
     // the admitted append — computing them once and FILTERING for the
@@ -2811,78 +2521,11 @@ object Dedup {
     batchIds.unpersist(); ()
   }
 
-  private def requireSightedMinhash(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"$dir has no sightings ledger — build it with " +
-        "buildMinhashIndexSighted (the admission index at this dir has " +
-        "no last-seen data to window on)")
-  }
-
-  /** Retire sighting days older than the newest `keep` — the near-dup
-    * family's [[retireExactSeenWindow]]: index docs whose LAST sighting
-    * aged out (distinct ids of the doomed days minus the kept days')
-    * are TOMBSTONED through the family's one delete model
-    * ([[deleteFromMinhashIndex]] semantics — probes stop matching them
-    * immediately, the ratio-scheduled [[compactMinhashIndex]] purges
-    * them physically), then the doomed `seen` day-partitions drop in
-    * O(segment). A doc re-seen in a kept day — because a later crawl
-    * batch was rejected as its near-dup — survives untouched under its
-    * original id. Crash-safe by re-run: tombstones commit BEFORE the
-    * seen drop, and a re-run re-resolves the delta against live ids.
-    * Takedown-sized joins on bare ids; never an O(index) rewrite.
-    * Returns the retired day tags, oldest first. */
+  /** [[IndexFamily.retireSeenWindow]] for the minhash family, kept by
+    * name: the perfbench lifecycle workload times this call. */
   def retireMinhashSeenWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] = {
-    require(keep >= 1,
-      s"keep must be >= 1: retiring every sighting day would empty the " +
-        s"history (got $keep)")
-    requireSightedMinhash(spark, dir)
-    IndexFiles.healAppend(spark, dir, minhashHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomed = days.dropRight(keep)
-    if (doomed.nonEmpty) {
-      val kept = days.takeRight(keep)
-      val seen = spark.read.parquet(s"$dir/seen")
-      val doomedIds = seen.filter(col("src").isin(doomed: _*))
-        .select("id").distinct()
-        .join(seen.filter(col("src").isin(kept: _*)).select("id").distinct(),
-          Seq("id"), "left_anti")
-      val live = IndexFiles.dropTombstones(spark, dir,
-        indexedIds(spark, dir))
-      val dead = live.join(doomedIds, Seq("id"), "left_semi").persist()
-      // survivor guard by COUNT: dead ⊆ live by construction (a
-      // semi-join of live) and both row sets are unique, so "something
-      // survives" ⟺ live > dead — two cheap counts instead of
-      // materializing a live⟕dead anti-join just to probe emptiness,
-      // and the dead count doubles as the write-skip check (r19)
-      val deadN = dead.count()
-      require(live.count() > deadN,
-        s"retiring ${doomed.mkString(", ")} would forget every live " +
-          "doc (no kept day re-saw anything) — drop and rebuild the " +
-          "index instead")
-      if (deadN > 0) IndexFiles.writeTombstones(dead, dir)
-      dead.unpersist()
-      IndexFiles.retireSrcsPartitions(spark, dir, Seq("seen"), doomed,
-        strict = true)
-      IndexFiles.refresh(spark, dir)
-      ()
-    }
-    doomed
-  }
-
-  /** [[retireMinhashSeenWindow]] keyed by an explicit horizon — every
-    * sighting day strictly older than `day` (natural order) retires;
-    * the date-driven nightly's form. */
-  def retireMinhashSeenBefore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, day: String): Seq[String] = {
-    requireSightedMinhash(spark, dir)
-    IndexFiles.healAppend(spark, dir, minhashHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomedN = days.count(d => IndexFiles.naturalOrdering.lt(d, day))
-    retireMinhashSeenWindow(spark, dir, keep = days.size - doomedN)
-  }
+      dir: String, keep: Int): Seq[String] =
+    IndexFamily.minhash.retireSeenWindow(spark, dir, keep)
 
   /** Embedding near-dup ADMISSION against the persisted LSH index —
     * the vector family's [[dedupExactAgainstIndex]], closing the
@@ -2956,7 +2599,7 @@ object Dedup {
       s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
         "in the index — replayed ids would corrupt the Jaccard verify")
     val newSig = bandSignatures(minhashes(newSh, numHashes), bands, numHashes / bands)
-    // tombstoned docs ([[deleteFromMinhashIndex]]) neither candidate
+    // tombstoned docs ([[IndexFiles.writeTombstones]]) neither candidate
     // nor verify — bit-equal to the physically compacted index
     val oldSig = IndexFiles.dropTombstones(spark, dir,
       IndexFiles.readOrEmpty(spark, s"$dir/sigs", StructType(Seq(
@@ -3034,13 +2677,13 @@ object Dedup {
     * past the sizing capacity the filter saturates and merely prunes
     * less. One shuffle on the 128-bit fp at any scale.
     *
-    * Rolling-window note: [[retireExactSrc]] windows this store under
+    * Rolling-window note: [[IndexFamily.retireSrcs]] windows this store under
     * ADMISSION-LEDGER semantics — each fp lives in the segment of its
     * first sighting, so retiring a day re-admits exactly the texts
     * whose one admitted copy aged out. For the OTHER contract real
     * crawls want — "seen in the last N days", where a re-seen text's
     * clock resets — build with [[buildExactIndexSighted]] and window
-    * with [[retireExactSeenWindow]]: the sightings ledger replaces the
+    * with [[IndexFamily.retireSeenWindow]]: the sightings ledger replaces the
     * rebuild-from-windowed-corpus this note used to prescribe. */
   def buildExactIndex(df: DataFrame, idCol: String, textCol: String,
       dir: String, fpp: Double = 0.01): Unit = {
@@ -3088,18 +2731,6 @@ object Dedup {
     * The batch sketch is aggregated with the STORED (n_items, num_bits)
     * — the sketch derives its hash count from that pair and refuses to
     * merge mismatches. */
-  /** The exact family's heal list: `fps` always, plus the sighted
-    * variant's `seen` table when this index records sightings — a
-    * crashed SIGHTED append must roll its seen segment forward no
-    * matter which entry point heals next. */
-  private def exactHealTables(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Seq("fps", "seen")
-    else Seq("fps")
-  }
-
   def appendToExactIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
       src: String = "ingest"): Unit =
@@ -3111,10 +2742,10 @@ object Dedup {
       src: String, sighted: Boolean): Unit = {
     require(src.nonEmpty && src != "base",
       s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, exactHealTables(spark, dir))
+    IndexFamily.exact.heal(spark, dir)
     // the mirror of requireSighted: an unsighted append into a SIGHTED
     // index would store fps with a src tag but no `seen` row — no
-    // sighting day ever contains them, so retireExactSeenWindow could
+    // sighting day ever contains them, so the sighting window could
     // never retire them (immortal entries that silently break the
     // "seen in the last N days" contract). Refuse loudly instead.
     if (!sighted) {
@@ -3199,7 +2830,7 @@ object Dedup {
 
   /** [[buildExactIndex]] plus a SIGHTINGS ledger — the second
     * bounded-history contract real crawls want. The admission-ledger
-    * window ([[retireExactSrc]]: each fp lives in the segment of its
+    * window ([[IndexFamily.retireSrcs]]: each fp lives in the segment of its
     * FIRST sighting, retiring a day re-admits the texts whose one
     * admitted copy aged out) answers "was this text ADMITTED in the
     * window"; this family answers "was this text SEEN in the last N
@@ -3225,162 +2856,13 @@ object Dedup {
     * the store exactly as there, and EVERY batch fp — including
     * rejected replays — lands one row in this day's `seen` segment
     * (same journaled commit). Dedup verdicts are unchanged; only what
-    * [[retireExactSeenWindow]] later keeps differs. */
+    * [[IndexFamily.retireSeenWindow]] later keeps differs. */
   def appendToExactIndexSighted(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
       day: String): Unit = {
-    requireSighted(spark, dir)
+    IndexFamily.exact.requireSighted(spark, dir)
     appendExactCore(spark, dir, newDf, idCol, textCol, day, sighted = true)
   }
-
-  private def requireSighted(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"$dir has no sightings ledger — build it with buildExactIndexSighted" +
-        " (the admission-ledger index at this dir has no last-seen data to" +
-        " window on)")
-  }
-
-  /** Retire sighting days older than the newest `keep` — the "seen in
-    * the last N days" rolling window, in DELTA form: the fps whose
-    * LAST sighting aged out (= distinct fps of the doomed days minus
-    * the kept days') are resolved to their live (fp, keep_id) pairs
-    * and TOMBSTONED — takedown-sized on a steady crawl, never an
-    * O(index) rewrite — then the doomed `seen` day-partitions drop in
-    * O(segment). The family's one delete model does the rest: probes
-    * and appends treat the pairs as absent immediately, the
-    * ratio-triggered [[compactExactIndex]] (via Maintenance's "exact"
-    * compactor) purges the rows physically when enough have
-    * accumulated, and [[rebuildExactSidecar]] unsaturates the bloom on
-    * the same schedule — exactly the cost amortization every sibling
-    * family uses. A text seen in BOTH a doomed and a kept day survives
-    * untouched under its ORIGINAL keep_id ("remembered because
-    * re-seen"); a forgotten text re-seen later re-admits under a fresh
-    * id (the tombstone is pair-keyed). Unlike the append-segment
-    * windows, the build day itself ages out (`keep` counts sighting
-    * DAYS, so keep >= 1 always leaves the newest day's survivors). NOT
-    * registered in [[graft.operators.Maintenance.families]]: that
-    * driver's contract retires appended segments only and never the
-    * build's, which is exactly the semantics this family exists to
-    * replace — a nightly calls this directly. Crash-safe by re-run:
-    * tombstones commit BEFORE the seen drop, and a re-run re-resolves
-    * the delta against LIVE rows (already-tombstoned pairs resolve to
-    * nothing — no duplicates, no double-kill). Sizing note: this path
-    * makes the tombstone table DAY-sized rather than takedown-sized —
-    * the probe and append anti-joins dispatch on its on-disk size
-    * ([[hintTombstones]]: broadcast under the cap, shuffled above), so
-    * a day-sized table degrades to one extra shuffle, never a forced
-    * GB broadcast; the "exact" compactor's ratio schedule bounds how
-    * long even that lasts. Returns the retired day tags, oldest
-    * first. */
-  def retireExactSeenWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] = {
-    require(keep >= 1,
-      s"keep must be >= 1: retiring every sighting day would empty the " +
-        s"history (got $keep)")
-    requireSighted(spark, dir)
-    IndexFiles.healAppend(spark, dir, exactHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomed = days.dropRight(keep)
-    if (doomed.nonEmpty) {
-      val kept = days.takeRight(keep)
-      val seen = spark.read.parquet(s"$dir/seen")
-      val doomedFps = seen.filter(col("src").isin(doomed: _*))
-        .select("fp").distinct()
-        .join(seen.filter(col("src").isin(kept: _*)).select("fp").distinct(),
-          Seq("fp"), "left_anti")
-      // resolved against LIVE rows (the deleteFromExactIndex shape):
-      // pair-keyed, so an already-tombstoned fp contributes nothing
-      val dead = liveExactFps(spark, dir)
-        .join(doomedFps, Seq("fp"), "left_semi")
-        .select("fp", "keep_id").persist()
-      // atomic refusal BEFORE anything mutates — a window no kept day
-      // re-saw anything of would tombstone every live fp, and the
-      // compaction that follows would brick on the empty rewrite
-      // survivor guard by COUNT: dead ⊆ live by construction (a
-      // semi-join of live) and both row sets are unique, so "something
-      // survives" ⟺ live > dead — two cheap counts instead of
-      // materializing a live⟕dead anti-join just to probe emptiness,
-      // and the dead count doubles as the write-skip check (r19)
-      val deadN = dead.count()
-      require(liveExactFps(spark, dir).count() > deadN,
-        s"retiring ${doomed.mkString(", ")} would forget every live " +
-          s"fingerprint (no kept day re-saw anything) — drop and " +
-          "rebuild the index instead")
-      if (deadN > 0)
-        dead.write.mode("append").parquet(s"$dir/deleted_fps")
-      dead.unpersist()
-      // tombstones first, ledger drop last: a crash between them
-      // re-runs to the same end state (the delta re-resolves empty)
-      IndexFiles.retireSrcsPartitions(spark, dir, Seq("seen"), doomed,
-        strict = true)
-      IndexFiles.refresh(spark, dir)
-      ()
-    }
-    doomed
-  }
-
-  /** [[retireExactSeenWindow]] keyed by an explicit horizon instead of
-    * a count: every sighting day strictly OLDER than `day` (natural
-    * order — dates, zero-padded or b<batchId> tags all compare
-    * correctly) retires. The form a date-driven nightly calls:
-    * `retireExactSeenBefore(spark, dir, "2026-08-09")` keeps exactly
-    * the last week regardless of how many zero-yield days wrote no
-    * segment. */
-  def retireExactSeenBefore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, day: String): Seq[String] = {
-    requireSighted(spark, dir)
-    IndexFiles.healAppend(spark, dir, exactHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomedN = days.count(d => IndexFiles.naturalOrdering.lt(d, day))
-    retireExactSeenWindow(spark, dir, keep = days.size - doomedN)
-  }
-
-  /** Retire one appended segment from the exact-dedup history — the
-    * rolling-window form for the fingerprint store: the segment's
-    * (src, pfx) partitions drop in O(segment), the Bloom sidecar
-    * REBUILDS from the survivors (it UNSATURATES — retired bits leave
-    * the filter, the [[rebuildLineDfSidecar]] property), and
-    * tombstones whose (fp, keep_id) left with the segment are pruned
-    * (a stale pair would silently re-kill a later re-ingest of the
-    * same text — the rebuild-generation hazard). An fp first stored
-    * in an OLDER segment is untouched: appends store only fps history
-    * lacked, so each fingerprint lives in exactly the segment of its
-    * first occurrence, and retiring day k−N re-admits precisely the
-    * texts whose first sighting aged out. `strict = false` makes an
-    * absent segment a no-op (zero-yield days append no partitions). */
-  def retireExactSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, fpp: Double = 0.01,
-      strict: Boolean = true): Unit =
-    retireExactSrcs(spark, dir, Seq(src), fpp, strict)
-
-  /** Bulk [[retireExactSrc]]: one heal, one drop pass, one pair-keyed
-    * tombstone prune, ONE bloom rebuild for the whole doomed set. */
-  def retireExactSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], fpp: Double = 0.01,
-      strict: Boolean = true): Unit = {
-    IndexFiles.healAppend(spark, dir, exactHealTables(spark, dir))
-    if (IndexFiles.retireSrcsPartitions(spark, dir, Seq("fps"), srcs,
-        strict = strict)) {
-      exactTombstones(spark, dir).foreach { dead =>
-        IndexFiles.replaceTable(spark, dir, "deleted_fps",
-          dead.join(readFps(spark, dir)
-              .select("fp", "keep_id"),
-            Seq("fp", "keep_id"), "left_semi"),
-          Seq.empty)
-      }
-      rebuildExactSidecar(spark, dir, fpp)
-    }
-  }
-
-  /** Retire every appended exact-history segment but the newest `keep`
-    * — the scheduled rolling-window call ([[IndexFiles.retireWindow]]);
-    * returns the retired tags (one bulk retire: one bloom rebuild). */
-  def retireExactWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int, fpp: Double = 0.01): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "fps", keep,
-      srcs => retireExactSrcs(spark, dir, srcs, fpp))
 
   /** Set-bit fraction and estimated false-positive rate of a
     * serialized Bloom sidecar — the saturation telemetry
@@ -3408,7 +2890,7 @@ object Dedup {
     * stored design fpp. */
   def rebuildExactSidecar(spark: org.apache.spark.sql.SparkSession,
       dir: String, fpp: Double = 0.01): Unit = {
-    IndexFiles.healAppend(spark, dir, exactHealTables(spark, dir))
+    IndexFamily.exact.heal(spark, dir)
     val fps = liveExactFps(spark, dir)
     val n = fps.count()
     require(n > 0, "rebuildExactSidecar: stored fps table is empty")
@@ -3427,7 +2909,7 @@ object Dedup {
     * prefixes scale), and the probe's string-typed substring join
     * would then coerce through BIGINT and crash on the first alpha
     * prefix. The schema pins what the layout means. */
-  private def readFps(spark: org.apache.spark.sql.SparkSession,
+  private[operators] def readFps(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     spark.read
       .schema("fp STRING, keep_id BIGINT, src STRING, pfx STRING")
@@ -3458,7 +2940,7 @@ object Dedup {
 
   /** Size-dispatched broadcast of a tombstone frame: under the
     * admission-ledger takedown model `deleted_fps` is takedown-sized
-    * and broadcasting is right; under [[retireExactSeenWindow]] it is
+    * and broadcasting is right; under [[IndexFamily.retireSeenWindow]] it is
     * DAY-sized by design between compactions — at a 100 TB crawl's
     * daily churn that is GBs, and a forced broadcast hint would ship
     * it to every executor on every probe (and override Spark's own
@@ -3502,7 +2984,7 @@ object Dedup {
     * confirm join removes — until [[rebuildExactSidecar]]. */
   def deleteFromExactIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, texts: DataFrame, textCol: String): Unit = {
-    IndexFiles.healAppend(spark, dir, exactHealTables(spark, dir))
+    IndexFamily.exact.heal(spark, dir)
     val target = texts
       .select(T.fingerprintMd5(col(textCol)).as("fp")).distinct()
       .withColumn("pfx", substring(col("fp"), 1, 2))
@@ -3526,7 +3008,7 @@ object Dedup {
     * [[rebuildExactSidecar]] on schedule. */
   def compactExactIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, exactHealTables(spark, dir))
+    IndexFamily.exact.heal(spark, dir)
     exactTombstones(spark, dir).foreach { _ =>
       // a takedown covering EVERY stored fingerprint would swap in an
       // empty table no reader can schema-infer — the requireSurvivor

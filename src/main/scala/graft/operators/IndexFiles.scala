@@ -207,36 +207,25 @@ private[graft] object IndexFiles {
   def writeIds(ids: DataFrame, dir: String): Unit =
     ids.write.mode("overwrite").parquet(s"$dir/ids")
 
-  /** Delete one src segment's hive partitions from src-partitioned
+  /** Delete the `srcs` segments' hive partitions from src-partitioned
     * payload tables — the rolling-window retirement primitive (a
     * bounded-history crawl pipeline retires day k−N when day k lands;
     * also the takedown path for a whole contributed batch). O(segment
     * listing): partition directories are removed, no surviving row is
-    * rewritten. Callers heal their family first and rebuild their
-    * sidecars after (the family wrappers in [[graft.operators.Dedup]]
-    * do both). With `strict` (the default), a src present in no named
-    * table is loud — the typo guard; pass strict = false from a
-    * scheduled rolling-window job, where an absent segment is the
-    * normal footprint of a ZERO-YIELD day (every family's append
-    * writes no partitions for an empty batch) and must retire as a
-    * no-op, not a crash. With `requireSurvivor` (families whose
-    * readers infer schema from the stored files), refuses to delete
-    * the last remaining segment of any table — retiring everything is
-    * [[dropIndex]]-and-rebuild's job. */
-  def retireSrcPartitions(spark: SparkSession, dir: String,
-      tables: Seq[String], src: String,
-      requireSurvivor: Boolean = true,
-      strict: Boolean = true): Boolean =
-    retireSrcsPartitions(spark, dir, tables, Seq(src),
-      requireSurvivor = requireSurvivor, strict = strict)
-
-  /** The BULK form of [[retireSrcPartitions]]: the whole doomed set is
-    * validated BEFORE anything is deleted — every src's presence under
-    * `strict`, and the survivor condition against the set as a whole
-    * (a table must keep at least one partition NOT in `srcs`; the
-    * sequential loop's weaker per-segment check could retire half a
-    * catch-up backlog and then refuse, leaving a partial window). One
-    * cache flush for the lot. Returns true when anything dropped. */
+    * rewritten. [[IndexFamily.retireSrcs]] heals first and rebuilds
+    * the family's sidecars after. The whole doomed set is validated
+    * BEFORE anything is deleted. With `strict` (the default), a src
+    * present in no named table is loud — the typo guard; pass
+    * strict = false from a scheduled rolling-window job, where an
+    * absent segment is the normal footprint of a ZERO-YIELD day (every
+    * family's append writes no partitions for an empty batch) and must
+    * retire as a no-op, not a crash. With `requireSurvivor` (families
+    * whose readers infer schema from the stored files), refuses when a
+    * table would keep no partition outside `srcs` — checked against
+    * the set as a whole, so a catch-up backlog never retires half and
+    * then refuses; retiring everything is [[dropIndex]]-and-rebuild's
+    * job. One cache flush for the lot. Returns true when anything
+    * dropped. */
   def retireSrcsPartitions(spark: SparkSession, dir: String,
       tables: Seq[String], srcs: Seq[String],
       requireSurvivor: Boolean = true,
@@ -326,40 +315,6 @@ private[graft] object IndexFiles {
       .sorted(naturalOrdering)
   }
 
-  /** The shared segment-retire protocol the id-guarded families run:
-    * heal → drop the src partitions → rebuild the ids sidecar from
-    * `idsFrom`'s surviving id column → prune tombstones of departed
-    * ids → family hook (stats refresh etc.). A protocol fix lands
-    * here ONCE; the per-family wrappers keep their own docstrings and
-    * any family-specific pre/post steps (exact's bloom rebuild and
-    * pair-keyed tombstones, LSH's sidecar-less prune, the dedup
-    * families' bloom/df sidecar rebuilds stay custom). */
-  def retireSegment(spark: SparkSession, dir: String,
-      tables: Seq[String], src: String, strict: Boolean,
-      idsFrom: Option[String], after: () => Unit = () => ()): Unit =
-    retireSegments(spark, dir, tables, Seq(src), strict, idsFrom, after)
-
-  /** The BULK form of [[retireSegment]] — the whole doomed set drops
-    * under one heal / one sidecar rebuild / one tombstone prune / one
-    * family hook. A rolling window catching up on N backlogged
-    * segments pays the per-retire Spark jobs ONCE instead of N times
-    * (the per-segment loop's rebuild cost is quadratic in backlog:
-    * each rebuild rescans the surviving history). */
-  def retireSegments(spark: SparkSession, dir: String,
-      tables: Seq[String], srcs: Seq[String], strict: Boolean,
-      idsFrom: Option[String], after: () => Unit = () => ()): Unit = {
-    if (srcs.isEmpty) return
-    healAppend(spark, dir, tables)
-    if (retireSrcsPartitions(spark, dir, tables, srcs, strict = strict)) {
-      idsFrom.foreach { t =>
-        replaceTable(spark, dir, "ids",
-          spark.read.parquet(s"$dir/$t").select("id").distinct(), Seq.empty)
-      }
-      pruneTombstones(spark, dir)
-      after()
-    }
-  }
-
   /** Read a payload table projected to `schema`'s columns, or
     * synthesize an EMPTY frame with that schema when the table has
     * ZERO partition directories (an all-filtered build legitimately
@@ -412,37 +367,6 @@ private[graft] object IndexFiles {
         ca.length - cb.length
       }
     }
-
-  /** Retire every APPENDED segment except the newest `keep` — the
-    * scheduled rolling-window maintenance call ("near-dup/boilerplate
-    * history = the last N crawl days") expressed over the family's own
-    * single-segment retire. Tags sort in [[listSrcs]]'s NATURAL order
-    * (digit runs numeric), so date-named tags AND the streaming
-    * drivers' unpadded b<batchId> tags age out oldest-first; the
-    * build segment ("base") is never
-    * retired — drop-and-rebuild is its lifecycle. Returns the retired
-    * tags (empty when the window already fits — the idempotent
-    * steady-state of a daily job). While a STREAMING driver feeds the
-    * index, keep >= 1 is the floor: the latest per-batch segment must
-    * stay inside the window until its checkpoint commits — a crash
-    * replay of a batch whose segment was retired fails LOUDLY (the
-    * replay marker survives but the payload is gone, the
-    * checkpoint-reset signature) instead of silently resurrecting the
-    * retired segment. The doomed segments retire through `retire`
-    * (the family's BULK wrapper) in ONE call: a catch-up backlog of N
-    * segments pays one heal, one partition-drop validation pass, and
-    * one sidecar rebuild — not N rebuilds each rescanning the
-    * survivors. The whole set is survivor-validated before anything
-    * deletes, so a window that would empty a table refuses up front
-    * (atomic) instead of retiring half the backlog first. */
-  def retireWindow(spark: SparkSession, dir: String, table: String,
-      keep: Int, retire: Seq[String] => Unit): Seq[String] = {
-    require(keep >= 0, s"keep must be non-negative: $keep")
-    val doomed = listSrcs(spark, dir, table).filterNot(_ == "base")
-      .dropRight(keep)
-    if (doomed.nonEmpty) retire(doomed)
-    doomed
-  }
 
   /** Fail fast when an interrupted append's journal is pending. The
     * journal's existence means the move phase may have landed only part
@@ -510,25 +434,12 @@ private[graft] object IndexFiles {
     fsOf(spark, dir).delete(new Path(s"$dir/deleted"), true); ()
   }
 
-  /** Shrink the tombstone table to ids still present in the ids
-    * sidecar — the retirement companion of [[clearTombstones]]: a
-    * segment drop takes its docs' payload rows AND sidecar entries
-    * away, so a tombstone left behind would outlive the rows it
-    * killed and silently anti-join a later re-ingest of the same id.
-    * Call AFTER the sidecar rebuild. No-op when nothing was ever
-    * deleted. */
-  def pruneTombstones(spark: SparkSession, dir: String): Unit =
-    tombstones(spark, dir).foreach { dead =>
-      replaceTable(spark, dir, "deleted",
-        dead.join(spark.read.parquet(s"$dir/ids"), Seq("id"), "left_semi"),
-        Seq.empty)
-    }
-
   /** The tombstone set, None when none were ever written. */
-  def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new Path(s"$dir/deleted")
+  def tombstones(spark: SparkSession, dir: String,
+      table: String = "deleted"): Option[DataFrame] = {
+    val p = new Path(s"$dir/$table")
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(s"$dir/deleted"))
+      Some(spark.read.parquet(s"$dir/$table"))
     else None
   }
 
@@ -745,4 +656,309 @@ private[graft] object IndexFiles {
     require(fs.delete(new Path(dir), true) || !fs.exists(new Path(dir)),
       s"failed to delete index dir $dir")
   }
+}
+
+/** One persisted index family's on-disk lifecycle — retire, heal, ids
+  * rebuild, the sighting window — written once over what the family
+  * keeps on disk. The 12 families are the values of the companion
+  * object; [[Maintenance]] and every caller reach a family's lifecycle
+  * through them. Build, the append verdicts, search and compaction
+  * stay family code.
+  *
+  * @param name        the family name [[Maintenance]] specs use
+  * @param payload     the `src=`-segmented payload tables; the head is
+  *                    the one segment listings walk and, for a family
+  *                    with a delete model, the live table
+  * @param idsFrom     the table the `ids` sidecar is rebuilt from (None
+  *                    for families that keep no sidecar)
+  * @param deletes     the tombstone model (None: the history mutates
+  *                    only by segment retirement)
+  * @param requireSurvivor refuse a retire that would empty a payload
+  *                    table (false only where readers pin schemas)
+  * @param afterRetire derived state to rebuild after segments drop
+  * @param afterHeal   runs after every heal, before any other mutation
+  *                    (the flag: a journal was rolled forward) — a
+  *                    derived-state refresh, or a guard
+  * @param sighting    the `seen` ledger's key column and the noun its
+  *                    refusal names (None: no sighted variant)
+  */
+final case class IndexFamily(
+    name: String,
+    payload: Seq[String],
+    idsFrom: Option[String] = None,
+    deletes: Option[IndexFamily.Deletes] = None,
+    requireSurvivor: Boolean = true,
+    afterRetire: (SparkSession, String) => Unit = (_, _) => (),
+    afterHeal: (SparkSession, String, Boolean) => Unit = (_, _, _) => (),
+    sighting: Option[IndexFamily.Sighting] = None) {
+  import org.apache.spark.sql.functions.col
+
+  def sighted: Boolean = sighting.isDefined
+
+  private def hasSeen(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(s"$dir/seen")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** What a heal rolls forward or back: the payload tables, plus the
+    * sighted variant's `seen` table when this dir records sightings —
+    * a crashed SIGHTED append must roll its seen segment forward no
+    * matter which entry point heals next. */
+  def healTables(spark: SparkSession, dir: String): Seq[String] =
+    if (hasSeen(spark, dir)) payload :+ "seen" else payload
+
+  /** Repair an interrupted append without appending a new batch —
+    * searches are read-only by contract and refuse a pending journal,
+    * so something read-write must run the roll-forward/roll-back
+    * repair ([[IndexFiles.healAppend]]). Idempotent no-op on a healthy
+    * index. */
+  def heal(spark: SparkSession, dir: String): Unit =
+    afterHeal(spark, dir,
+      IndexFiles.healAppend(spark, dir, healTables(spark, dir)))
+
+  /** Rewrite the ids sidecar from the surviving payload — the O(index)
+    * scan a retire runs after dropping segments, and the recovery call
+    * for a crash that left the sidecar stale. No-op for families that
+    * keep no sidecar. */
+  def rebuildIds(spark: SparkSession, dir: String): Unit =
+    idsFrom.foreach { t =>
+      IndexFiles.replaceTable(spark, dir, "ids",
+        spark.read.parquet(s"$dir/$t").select("id").distinct(), Seq.empty)
+    }
+
+  private def delModel: IndexFamily.Deletes = deletes.getOrElse(
+    throw new IllegalArgumentException(s"family $name has no tombstone model"))
+
+  /** The stored identity rows, tombstoned ones included: the family's
+    * own reader when it has one (exact's (fp, keep_id) rows), else the
+    * ids sidecar when present, else the live table's distinct key. */
+  def liveKeys(spark: SparkSession, dir: String): DataFrame = {
+    val d = delModel
+    d.live.map(_(spark, dir)).getOrElse(IndexFiles.storedIds(spark, dir,
+      spark.read.parquet(s"$dir/${payload.head}")
+        .select(d.key.map(col): _*).distinct()))
+  }
+
+  /** [[liveKeys]] minus the tombstones; the anti-join side is
+    * size-dispatched ([[IndexFiles.sizeCappedBroadcast]]). */
+  private def liveRows(spark: SparkSession, dir: String): DataFrame = {
+    val d = delModel
+    IndexFiles.tombstones(spark, dir, d.table).map(dead =>
+      liveKeys(spark, dir).join(
+        IndexFiles.sizeCappedBroadcast(spark, s"$dir/${d.table}", dead),
+        d.key, "left_anti")).getOrElse(liveKeys(spark, dir))
+  }
+
+  /** Retire appended segments — the rolling-window form of every
+    * family ("dedup/search against the last N crawl days"): one heal,
+    * one validated partition drop ([[IndexFiles.retireSrcsPartitions]]:
+    * O(segment), no surviving row rewritten), then ONE ids-sidecar
+    * rebuild, one prune of the tombstones whose keys left with the
+    * segments (a stale tombstone would silently kill a later re-ingest
+    * of the same key) and the family's [[afterRetire]] for the whole
+    * doomed set — a catch-up backlog of N segments pays the per-retire
+    * Spark jobs once, not N times. Survivor verdicts are bit-equal to
+    * an index that never saw the segments: payload rows are
+    * deterministic per doc and segments never mix partitions. The
+    * retired tags become appendable again (re-crawl semantics). Crash
+    * windows are all safe-stale: after the partition delete, an
+    * orphaned sidecar or Bloom entry can only suppress re-appends or
+    * admit extra candidates; re-run the retire (or [[rebuildIds]]) to
+    * finish. `strict = false` makes an absent segment a no-op (a
+    * zero-yield day appends no partitions, and the scheduled window
+    * job must not crash on it). */
+  def retireSrcs(spark: SparkSession, dir: String, srcs: Seq[String],
+      strict: Boolean = true): Unit = {
+    heal(spark, dir)
+    if (IndexFiles.retireSrcsPartitions(spark, dir, payload, srcs,
+        requireSurvivor = requireSurvivor, strict = strict)) {
+      rebuildIds(spark, dir)
+      deletes.foreach { d =>
+        IndexFiles.tombstones(spark, dir, d.table).foreach { dead =>
+          IndexFiles.replaceTable(spark, dir, d.table,
+            dead.join(liveKeys(spark, dir), d.key, "left_semi"), Seq.empty)
+        }
+      }
+      afterRetire(spark, dir)
+    }
+  }
+
+  /** Retire every APPENDED segment except the newest `keep` — the
+    * scheduled rolling-window call. Tags sort in
+    * [[IndexFiles.listSrcs]]'s NATURAL order (digit runs numeric), so
+    * date-named tags AND the streaming drivers' unpadded b<batchId>
+    * tags age out oldest-first; the build segment ("base") is never
+    * retired — drop-and-rebuild is its lifecycle. Returns the retired
+    * tags (empty when the window already fits — the idempotent steady
+    * state of a daily job). While a STREAMING driver feeds the index,
+    * keep >= 1 is the floor: the latest per-batch segment must stay
+    * inside the window until its checkpoint commits — a crash replay
+    * of a batch whose segment was retired fails LOUDLY instead of
+    * silently resurrecting it. The doomed set retires in ONE
+    * [[retireSrcs]] call, survivor-validated as a whole before
+    * anything deletes. */
+  def retireWindow(spark: SparkSession, dir: String,
+      keep: Int): Seq[String] = {
+    require(keep >= 0, s"keep must be non-negative: $keep")
+    val doomed = IndexFiles.listSrcs(spark, dir, payload.head)
+      .filterNot(_ == "base").dropRight(keep)
+    if (doomed.nonEmpty) retireSrcs(spark, dir, doomed)
+    doomed
+  }
+
+  /** Fail unless `dir` records sightings — the guard of every
+    * sighting-window entry point. */
+  def requireSighted(spark: SparkSession, dir: String): IndexFamily.Sighting = {
+    val s = sighting.getOrElse(throw new IllegalArgumentException(
+      s"family $name keeps no sightings ledger"))
+    require(hasSeen(spark, dir),
+      s"$dir has no sightings ledger — build it with the $name family's " +
+        "sighted build (the admission index at this dir has no last-seen " +
+        "data to window on)")
+    s
+  }
+
+  /** Retire sighting days older than the newest `keep` — the "seen in
+    * the last N days" window, in DELTA form: the keys whose LAST
+    * sighting aged out (distinct keys of the doomed days minus the kept
+    * days') are resolved against the live rows and TOMBSTONED through
+    * the family's one delete model — probes stop matching them
+    * immediately, the ratio-scheduled compactor purges them — then the
+    * doomed `seen` day-partitions drop in O(segment). A key re-seen in
+    * a kept day survives untouched under its original id. Unlike the
+    * append-segment windows the build day ages out too (`keep` counts
+    * sighting DAYS, so keep >= 1 always leaves the newest day's
+    * survivors). Refuses atomically, before anything mutates, when no
+    * kept day re-saw any live key. Crash-safe by re-run: tombstones
+    * commit BEFORE the seen drop, and a re-run re-resolves the delta
+    * against live rows (already-tombstoned keys resolve to nothing).
+    * Takedown-sized joins; never an O(index) rewrite. Returns the
+    * retired day tags, oldest first. */
+  def retireSeenWindow(spark: SparkSession, dir: String,
+      keep: Int): Seq[String] = {
+    require(keep >= 1,
+      s"keep must be >= 1: retiring every sighting day would empty the " +
+        s"history (got $keep)")
+    val s = requireSighted(spark, dir)
+    heal(spark, dir)
+    val days = IndexFiles.listSrcs(spark, dir, "seen")
+    val doomed = days.dropRight(keep)
+    if (doomed.nonEmpty) {
+      val seen = spark.read.parquet(s"$dir/seen")
+      def keysOf(tags: Seq[String]) =
+        seen.filter(col("src").isin(tags: _*)).select(s.key).distinct()
+      val forgotten = keysOf(doomed)
+        .join(keysOf(days.takeRight(keep)), Seq(s.key), "left_anti")
+      val live = liveRows(spark, dir)
+      val dead = live.join(forgotten, Seq(s.key), "left_semi").persist()
+      // survivor guard by COUNT: dead ⊆ live by construction (a
+      // semi-join of live) and both row sets are unique, so "something
+      // survives" ⟺ live > dead — two cheap counts instead of
+      // materializing a live⟕dead anti-join just to probe emptiness,
+      // and the dead count doubles as the write-skip check (r19)
+      val deadN = dead.count()
+      require(live.count() > deadN,
+        s"retiring ${doomed.mkString(", ")} would forget every live " +
+          s"${s.noun} (no kept day re-saw anything) — drop and rebuild " +
+          "the index instead")
+      if (deadN > 0)
+        dead.write.mode("append").parquet(s"$dir/${delModel.table}")
+      dead.unpersist()
+      IndexFiles.retireSrcsPartitions(spark, dir, Seq("seen"), doomed,
+        strict = true)
+      IndexFiles.refresh(spark, dir)
+    }
+    doomed
+  }
+
+  /** [[retireSeenWindow]] keyed by an explicit horizon: every sighting
+    * day strictly OLDER than `day` (natural order — dates, zero-padded
+    * or b<batchId> tags all compare correctly) retires. The form a
+    * date-driven nightly calls: `retireSeenBefore(spark, dir,
+    * "2026-08-09")` keeps exactly the last week regardless of how many
+    * zero-yield days wrote no segment. */
+  def retireSeenBefore(spark: SparkSession, dir: String,
+      day: String): Seq[String] = {
+    requireSighted(spark, dir)
+    heal(spark, dir)
+    val days = IndexFiles.listSrcs(spark, dir, "seen")
+    val doomedN = days.count(d => IndexFiles.naturalOrdering.lt(d, day))
+    retireSeenWindow(spark, dir, keep = days.size - doomedN)
+  }
+}
+
+object IndexFamily {
+
+  /** A family's tombstone model: the tombstone table, the compactor
+    * that purges it, the key a tombstone row carries, and — when the
+    * live identity rows are not the distinct key of the live table —
+    * their reader. */
+  final case class Deletes(table: String,
+      compact: (SparkSession, String) => Unit,
+      key: Seq[String] = Seq("id"),
+      live: Option[(SparkSession, String) => DataFrame] = None)
+
+  /** The `seen` ledger's key column and the noun its refusal names. */
+  final case class Sighting(key: String, noun: String)
+
+  private def idDeletes(compact: (SparkSession, String) => Unit) =
+    Some(Deletes("deleted", compact))
+
+  /** A Bloom sidecar rebuild at the design fpp stored in its own row —
+    * a retire must not re-size the filter away from its build's fpp. */
+  private def atStoredFpp(rebuild: (SparkSession, String, Double) => Unit) =
+    (s: SparkSession, d: String) =>
+      rebuild(s, d, Dedup.readBloom(s, d).getAs[Double]("fpp"))
+
+  val exact = IndexFamily("exact", Seq("fps"),
+    // pair-keyed: a text re-admitted after its takedown gets a fresh
+    // live row under a new keep_id that the old tombstone must not touch
+    deletes = Some(Deletes("deleted_fps", Dedup.compactExactIndex(_, _),
+      Seq("fp", "keep_id"),
+      Some((s, d) => Dedup.readFps(s, d).select("fp", "keep_id")))),
+    afterRetire = atStoredFpp(Dedup.rebuildExactSidecar(_, _, _)),
+    sighting = Some(Sighting("fp", "fingerprint")))
+  val linedf = IndexFamily("linedf", Seq("lines"),
+    afterRetire = atStoredFpp(Dedup.rebuildLineDfSidecar(_, _, _)))
+  val containment = IndexFamily("containment", Seq("shingles", "sizes"),
+    idsFrom = Some("sizes"),
+    deletes = idDeletes(Dedup.compactContainmentIndex(_, _)),
+    afterRetire = atStoredFpp(Dedup.rebuildContainmentSidecar(_, _, _)),
+    sighting = Some(Sighting("id", "doc")))
+  val minhash = IndexFamily("minhash", Seq("shingles", "sigs"),
+    idsFrom = Some("shingles"),
+    deletes = idDeletes(Dedup.compactMinhashIndex(_, _)),
+    sighting = Some(Sighting("id", "doc")))
+  // ledger readers pass explicit schemas: an emptied ledger reads as
+  // zero counts, the init state
+  val domainCap = IndexFamily("domain_cap", Seq("counts", "admitted"),
+    requireSurvivor = false)
+  val phash = IndexFamily("phash", Seq("bands"), idsFrom = Some("bands"),
+    deletes = idDeletes(Multimodal.compactPhashIndex(_, _)),
+    sighting = Some(Sighting("id", "asset")))
+  val ivf = IndexFamily("ivf", Seq("cells"), idsFrom = Some("cells"),
+    deletes = idDeletes(Ann.compactIvfIndex(_, _)))
+  val ivfSq8 = IndexFamily("ivf_sq8", Seq("cells"), idsFrom = Some("cells"),
+    deletes = idDeletes(Ann.compactIvfSq8Index(_, _)))
+  // codes are meaningless without the codebooks that produced them:
+  // every mutation refuses while a retrain is pending
+  val ivfPq = IndexFamily("ivf_pq", Seq("codes"), idsFrom = Some("codes"),
+    deletes = idDeletes(Ann.compactIvfPqIndex(_, _)),
+    afterHeal = (s, d, _) => Ann.requireNoPendingRetrain(s, d))
+  // BM25's N/avgdl derive from doclens: re-derived whenever doclens moves
+  val sparse = IndexFamily("sparse", Seq("postings", "doclens"),
+    idsFrom = Some("postings"),
+    deletes = idDeletes(Ann.compactSparseIndex(_, _)),
+    afterRetire = (s, d) =>
+      if (Ann.hasBm25Sidecars(s, d)) Ann.refreshSparseStats(s, d),
+    afterHeal = (s, d, rolled) => if (rolled) Ann.refreshSparseStats(s, d))
+  val binary = IndexFamily("binary", Seq("bits"), idsFrom = Some("bits"),
+    deletes = idDeletes(Ann.compactBinaryIndex(_, _)))
+  // unguarded appends keep no ids sidecar: live ids are the buckets' own
+  val lsh = IndexFamily("lsh", Seq("buckets"),
+    deletes = idDeletes(Ann.compactLshIndex(_, _)),
+    sighting = Some(Sighting("id", "vector")))
+
+  val all: Seq[IndexFamily] = Seq(exact, linedf, containment, minhash,
+    domainCap, phash, ivf, ivfSq8, ivfPq, sparse, binary, lsh)
 }

@@ -11,12 +11,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * segment design, applied store-wide).
   *
   * Declarative: the caller lists (dir, family, keep) specs; the
-  * driver dispatches each to that family's `retire*Window` and
-  * returns the audit trail a scheduled job logs — one row per
-  * RETIRED segment, (dir, family, keep, tag), tags in the retirement
-  * (oldest-first) order. Idempotent by composition: each window call
-  * retires only segments beyond its window, so the steady state of a
-  * daily run is one retired tag per spec (or none). Failures are
+  * driver dispatches each to that family's
+  * [[IndexFamily.retireWindow]] and returns the audit trail a
+  * scheduled job logs — one row per RETIRED segment, (dir, family,
+  * keep, tag), tags in the retirement (oldest-first) order.
+  * Idempotent by composition: each window call retires only segments
+  * beyond its window, so the steady state of a daily run is one
+  * retired tag per spec (or none). Failures are
   * loud and ordered: specs run in the given order and a failing
   * family aborts the run BEFORE later specs touch their indexes —
   * each family's own retire leaves its index consistent (heal-first,
@@ -24,158 +25,86 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Maintenance {
 
-  /** Every family with a rolling-window retirement driver, by the
-    * name a maintenance spec uses. */
-  val families: Map[String, (SparkSession, String, Int) => Seq[String]] =
-    Map(
-      "exact" -> ((s, d, k) => Dedup.retireExactWindow(s, d, k)),
-      "linedf" -> ((s, d, k) => Dedup.retireLineDfWindow(s, d, k)),
-      "containment" -> ((s, d, k) => Dedup.retireContainmentWindow(s, d, k)),
-      "minhash" -> ((s, d, k) => Dedup.retireMinhashWindow(s, d, k)),
-      "domain_cap" -> ((s, d, k) => Dedup.retireDomainCapWindow(s, d, k)),
-      "phash" -> ((s, d, k) => Multimodal.retirePhashWindow(s, d, k)),
-      "ivf" -> ((s, d, k) => Ann.retireIvfWindow(s, d, k)),
-      "ivf_sq8" -> ((s, d, k) => Ann.retireIvfSq8Window(s, d, k)),
-      "ivf_pq" -> ((s, d, k) => Ann.retireIvfPqWindow(s, d, k)),
-      "sparse" -> ((s, d, k) => Ann.retireSparseWindow(s, d, k)),
-      "binary" -> ((s, d, k) => Ann.retireBinaryWindow(s, d, k)),
-      "lsh" -> ((s, d, k) => Ann.retireLshWindow(s, d, k)))
+  /** The [[IndexFamily]] each spec names, among `accepted` (spec name
+    * → family); unknown names are loud BEFORE anything runs (a typo'd
+    * nightly must not half-age the store). */
+  private def resolve(specNames: Seq[String],
+      accepted: Seq[(String, IndexFamily)], what: String): Seq[IndexFamily] = {
+    val byName = accepted.toMap
+    val unknown = specNames.filterNot(byName.contains).distinct
+    require(unknown.isEmpty,
+      s"unknown $what families ${unknown.mkString(", ")} — " +
+        s"expected one of ${accepted.map(_._1).sorted.mkString(", ")}")
+    specNames.map(byName)
+  }
+
+  private def named(p: IndexFamily => Boolean) =
+    IndexFamily.all.filter(p).map(f => f.name -> f)
 
   /** Run the windows. `specs` = (indexDir, family, keep) — family one
-    * of [[families]]; unknown names are loud BEFORE any retirement
-    * runs (a typo'd nightly must not half-age the store). The report
-    * is driver-sized by construction (one row per retired segment). */
+    * of [[IndexFamily.all]]'s names, each retired through its
+    * [[IndexFamily.retireWindow]]; unknown names are loud BEFORE any
+    * retirement runs. The report is driver-sized by construction (one
+    * row per retired segment). */
   def nightly(spark: SparkSession,
       specs: Seq[(String, String, Int)]): DataFrame = {
     import spark.implicits._
-    val unknown = specs.map(_._2).filterNot(families.contains).distinct
-    require(unknown.isEmpty,
-      s"unknown maintenance families ${unknown.mkString(", ")} — " +
-        s"expected one of ${families.keys.toSeq.sorted.mkString(", ")}")
-    specs.flatMap { case (dir, family, keep) =>
-      families(family)(spark, dir, keep)
+    val fams = resolve(specs.map(_._2), named(_ => true), "maintenance")
+    specs.zip(fams).flatMap { case ((dir, family, keep), fam) =>
+      fam.retireWindow(spark, dir, keep)
         .map(tag => (dir, family, keep, tag))
     }.toDF("dir", "family", "keep", "tag")
   }
 
-  /** The OTHER retention contract, by family name: "seen in the last
-    * N days" sighting windows ([[Dedup.retireExactSeenWindow]] and
-    * siblings — a re-seen document's clock resets), deliberately NOT
-    * in [[families]]: those windows retire appended segments only and
-    * never the build's, which is exactly the semantics the sighted
-    * ledgers exist to replace (the build day ages out like any
-    * other). `keep` counts sighting DAYS here, not appended
-    * segments. */
-  val sightedFamilies: Map[String, (SparkSession, String, Int) => Seq[String]] =
-    Map(
-      "exact_seen" -> ((s, d, k) => Dedup.retireExactSeenWindow(s, d, k)),
-      "minhash_seen" -> ((s, d, k) => Dedup.retireMinhashSeenWindow(s, d, k)),
-      "phash_seen" -> ((s, d, k) => Multimodal.retirePhashSeenWindow(s, d, k)),
-      "containment_seen" ->
-        ((s, d, k) => Dedup.retireContainmentSeenWindow(s, d, k)),
-      "lsh_seen" -> ((s, d, k) => Ann.retireLshSeenWindow(s, d, k)))
-
-  /** Run the sighting windows — the scheduled nightly for the
-    * sighted-admission indexes, which [[nightly]] cannot drive (its
-    * contract never retires the build segment). `specs` = (indexDir,
-    * family ∈ [[sightedFamilies]], keep sighting-days). EVERY spec
-    * validates BEFORE any retirement runs (the [[nightly]]
-    * convention, plus this driver's own pre-flights): unknown family
-    * names, keep < 1 (retiring every sighting day empties a history),
-    * and dirs with NO sightings ledger are all loud up front — a
-    * typo'd or mis-pointed nightly must not half-age the store.
-    * Returns the same audit shape as [[nightly]]: one row per retired
-    * sighting day, (dir, family, keep, tag), oldest first per spec.
-    * Composes with [[nightlyCompact]]: the sighted retires express
-    * forgetting through each family's ONE tombstone model, so the
-    * ratio triggers below see (and eventually purge) exactly what
-    * these windows wrote. */
+  /** Run the sighting windows — the OTHER retention contract, for the
+    * sighted-admission indexes: "seen in the last N days"
+    * ([[IndexFamily.retireSeenWindow]] — a re-seen document's clock
+    * resets), which [[nightly]] cannot drive (its contract never
+    * retires the build segment, exactly the semantics the sighted
+    * ledgers exist to replace). `specs` = (indexDir, `<family>_seen`
+    * for a sighted family, keep sighting-DAYS). EVERY spec validates
+    * BEFORE any retirement runs (the [[nightly]] convention, plus this
+    * driver's own pre-flights): unknown family names, keep < 1
+    * (retiring every sighting day empties a history), and dirs with NO
+    * sightings ledger are all loud up front — a typo'd or mis-pointed
+    * nightly must not half-age the store. Returns the same audit shape
+    * as [[nightly]]: one row per retired sighting day, (dir, family,
+    * keep, tag), oldest first per spec. Composes with
+    * [[nightlyCompact]]: the sighted retires express forgetting
+    * through each family's ONE tombstone model, so the ratio triggers
+    * below see (and eventually purge) exactly what these windows
+    * wrote. */
   def nightlySighted(spark: SparkSession,
       specs: Seq[(String, String, Int)]): DataFrame = {
     import spark.implicits._
-    val unknown = specs.map(_._2).filterNot(sightedFamilies.contains).distinct
-    require(unknown.isEmpty,
-      s"unknown sighted maintenance families ${unknown.mkString(", ")} — " +
-        s"expected one of ${sightedFamilies.keys.toSeq.sorted.mkString(", ")}")
+    val fams = resolve(specs.map(_._2),
+      IndexFamily.all.filter(_.sighted).map(f => s"${f.name}_seen" -> f),
+      "sighted maintenance")
     specs.foreach { case (dir, _, keep) =>
       require(keep >= 1,
         s"keep must be >= 1 for $dir: retiring every sighting day would " +
           s"empty the history (got $keep)")
     }
-    val unsighted = specs.map(_._1).distinct.filterNot { d =>
-      val p = new Path(s"$d/seen")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    }
+    val unsighted = specs.map(_._1).distinct.filterNot(d =>
+      fsOf(spark, d).exists(new Path(s"$d/seen")))
     require(unsighted.isEmpty,
       s"no sightings ledger at ${unsighted.mkString(", ")} — these are " +
         "admission-ledger indexes (or typos); window them with nightly(), " +
         "or rebuild with the family's buildSighted entry point")
-    specs.flatMap { case (dir, family, keep) =>
-      sightedFamilies(family)(spark, dir, keep)
+    specs.zip(fams).flatMap { case ((dir, family, keep), fam) =>
+      fam.retireSeenWindow(spark, dir, keep)
         .map(tag => (dir, family, keep, tag))
     }.toDF("dir", "family", "keep", "tag")
   }
 
-  /** Every family with a tombstone model: its physical-compaction
-    * entry plus (tombstoneTable, liveTable, livePayload) — what
-    * [[tombstoneFraction]] reads. line-df and domain-cap are absent by
-    * design (no delete model: their histories mutate only by segment
-    * retirement). */
-  val compactors: Map[String,
-      ((SparkSession, String) => Unit, String, String)] =
-    Map(
-      "exact" -> (((s, d) => Dedup.compactExactIndex(s, d),
-        "deleted_fps", "fps")),
-      "containment" -> (((s, d) => Dedup.compactContainmentIndex(s, d),
-        "deleted", "shingles")),
-      "minhash" -> (((s, d) => Dedup.compactMinhashIndex(s, d),
-        "deleted", "shingles")),
-      "phash" -> (((s, d) => Multimodal.compactPhashIndex(s, d),
-        "deleted", "bands")),
-      "ivf" -> (((s, d) => Ann.compactIvfIndex(s, d), "deleted", "cells")),
-      "ivf_sq8" -> (((s, d) => Ann.compactIvfSq8Index(s, d),
-        "deleted", "cells")),
-      "ivf_pq" -> (((s, d) => Ann.compactIvfPqIndex(s, d),
-        "deleted", "codes")),
-      "sparse" -> (((s, d) => Ann.compactSparseIndex(s, d),
-        "deleted", "postings")),
-      "binary" -> (((s, d) => Ann.compactBinaryIndex(s, d),
-        "deleted", "bits")),
-      "lsh" -> (((s, d) => Ann.compactLshIndex(s, d),
-        "deleted", "buckets")))
-
-  /** Fraction of an index's live identity set currently tombstoned —
-    * the compaction trigger a scheduled job thresholds on (Milvus's
-    * own compaction heuristic shape: deletes accumulate as tombstone
-    * segments until a ratio trips a rewrite). Exact counts both sides
-    * of the fp table; the id families count the tombstone set against
-    * the ids sidecar (falling back to the payload's distinct ids for
-    * pre-sidecar indexes). 0.0 when nothing is tombstoned — including
-    * when the tombstone table does not exist. */
   /** DISTINCT tombstone rows (0 when never deleted): delete entries
     * append per-batch-distinct rows, so a re-issued takedown list
     * duplicates tombstones — raw row counts would inflate the fraction
     * (past 1.0, even) and trigger rewrites that are not due. */
   private def deadCount(spark: SparkSession, dir: String,
-      family: String): Long = {
-    val deadTable = compactors(family)._2
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$deadTable"))) 0L
-    else spark.read.parquet(s"$dir/$deadTable").distinct().count()
-  }
-
-  /** The live identity-set size: the fp table for exact, the bare ids
-    * sidecar elsewhere (falling back to the payload's distinct ids for
-    * pre-sidecar indexes). */
-  private def liveCount(spark: SparkSession, dir: String,
-      family: String): Long = {
-    val liveTable = compactors(family)._3
-    if (family == "exact") spark.read.parquet(s"$dir/$liveTable").count()
-    else IndexFiles.storedIds(spark, dir,
-      spark.read.parquet(s"$dir/$liveTable").select("id").distinct())
-      .count()
-  }
+      fam: IndexFamily): Long =
+    fam.deletes.flatMap(d => IndexFiles.tombstones(spark, dir, d.table))
+      .map(_.distinct().count()).getOrElse(0L)
 
   /** dead/live with the degenerate ends pinned: nothing tombstoned →
     * 0.0 (live never counted), everything gone → 1.0. The ONE fraction
@@ -185,13 +114,23 @@ object Maintenance {
     if (dead == 0L) 0.0
     else { val l = live; if (l == 0L) 1.0 else dead.toDouble / l }
 
+  private def compactable =
+    named(_.deletes.isDefined)
+
+  /** Fraction of an index's live identity set currently tombstoned —
+    * the compaction trigger a scheduled job thresholds on (Milvus's
+    * own compaction heuristic shape: deletes accumulate as tombstone
+    * segments until a ratio trips a rewrite). The distinct tombstone
+    * rows count against the family's [[IndexFamily.liveKeys]] (the ids
+    * sidecar, the payload's distinct ids for pre-sidecar indexes, the
+    * fp rows for exact). 0.0 when nothing is tombstoned — including
+    * when the tombstone table does not exist. line-df and domain-cap
+    * have no tombstone model (their histories mutate only by segment
+    * retirement) and are loud here. */
   def tombstoneFraction(spark: SparkSession, dir: String,
       family: String): Double = {
-    require(compactors.contains(family),
-      s"family $family has no tombstone model — " +
-        s"expected one of ${compactors.keys.toSeq.sorted.mkString(", ")}")
-    fractionOf(deadCount(spark, dir, family),
-      liveCount(spark, dir, family))
+    val fam = resolve(Seq(family), compactable, "tombstone-model").head
+    fractionOf(deadCount(spark, dir, fam), fam.liveKeys(spark, dir).count())
   }
 
   /** The compaction half of the scheduled nightly: `specs` = (indexDir,
@@ -207,17 +146,14 @@ object Maintenance {
   def nightlyCompact(spark: SparkSession,
       specs: Seq[(String, String, Double)]): DataFrame = {
     import spark.implicits._
-    val unknown = specs.map(_._2).filterNot(compactors.contains).distinct
-    require(unknown.isEmpty,
-      s"unknown compaction families ${unknown.mkString(", ")} — " +
-        s"expected one of ${compactors.keys.toSeq.sorted.mkString(", ")}")
+    val fams = resolve(specs.map(_._2), compactable, "compaction")
     // every spec validated BEFORE anything compacts — a bad threshold
     // mid-list must not leave the store half-compacted with the audit
     // of the applied half never returned (the nightly() contract)
     specs.foreach { case (dir, _, threshold) =>
       require(threshold >= 0.0, s"negative threshold $threshold for $dir")
     }
-    specs.map { case (dir, family, threshold) =>
+    specs.zip(fams).map { case ((dir, family, threshold), fam) =>
       val frac = tombstoneFraction(spark, dir, family)
       // HALF_UP like Spark's and DuckDB's round(), NOT math.rint's
       // half-even — the audited fraction must hash-match the oracle.
@@ -226,18 +162,10 @@ object Maintenance {
       val frac4 = BigDecimal(frac)
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       val due = frac4 > 0.0 && frac4 >= threshold
-      if (due) compactors(family)._1(spark, dir)
+      if (due) fam.deletes.get.compact(spark, dir)
       (dir, family, frac4, due)
     }.toDF("dir", "family", "fraction", "compacted")
   }
-
-  /** family → its src-segmented payload table (what segment listings
-    * and the health report walk). */
-  val segmentTables: Map[String, String] = Map(
-    "exact" -> "fps", "linedf" -> "lines", "containment" -> "shingles",
-    "minhash" -> "shingles", "domain_cap" -> "counts", "phash" -> "bands",
-    "ivf" -> "cells", "ivf_sq8" -> "cells", "ivf_pq" -> "codes",
-    "sparse" -> "postings", "binary" -> "bits", "lsh" -> "buckets")
 
   /** The store health report — the dashboard row a scheduled driver
     * logs per index so retention ([[nightly]]), compaction
@@ -256,20 +184,17 @@ object Maintenance {
   def storeReport(spark: SparkSession,
       specs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    val unknown = specs.map(_._2).filterNot(segmentTables.contains).distinct
-    require(unknown.isEmpty,
-      s"unknown report families ${unknown.mkString(", ")} — " +
-        s"expected one of ${segmentTables.keys.toSeq.sorted.mkString(", ")}")
+    val fams = resolve(specs.map(_._2), named(_ => true), "report")
     val missing = specs.map(_._1).filterNot(d =>
       fsOf(spark, d).exists(new Path(d)))
     require(missing.isEmpty,
       s"no index at ${missing.mkString(", ")} — fix the spec list first")
-    specs.map { case (dir, family) =>
+    specs.zip(fams).map { case ((dir, family), fam) =>
       // the report's numbers drive compaction/retention/backup
       // decisions — a torn mid-append index must refuse loudly (the
       // search contract), not report half-landed segments as live
       IndexFiles.requireNoPendingAppend(spark, dir)
-      val srcs = IndexFiles.listSrcs(spark, dir, segmentTables(family))
+      val srcs = IndexFiles.listSrcs(spark, dir, fam.payload.head)
       // `oldest`/`newest` are SEGMENT-TAG order, not file age: 'base'
       // (the build segment) precedes every append by construction but
       // sorts AFTER the streaming drivers' b<batchId> tags, so it is
@@ -281,11 +206,9 @@ object Maintenance {
         if (srcs.contains("base")) "base" else appended.headOption.orNull
       val newest = appended.lastOption
         .getOrElse(if (srcs.contains("base")) "base" else null)
-      val isCompactable = compactors.contains(family)
       val live: Option[Long] =
-        if (isCompactable) Some(liveCount(spark, dir, family)) else None
-      val tomb: Long =
-        if (isCompactable) deadCount(spark, dir, family) else 0L
+        fam.deletes.map(_ => fam.liveKeys(spark, dir).count())
+      val tomb: Long = deadCount(spark, dir, fam)
       val frac: Option[Double] = live.map(l =>
         BigDecimal(fractionOf(tomb, l))
           .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
@@ -317,6 +240,7 @@ object Maintenance {
       "tombstones", "fraction", "seen_days", "oldest_seen", "newest_seen",
       "files", "bytes")
   }
+
 
   // ---- point-in-time snapshot / restore ----------------------------------
 

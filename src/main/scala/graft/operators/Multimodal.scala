@@ -166,7 +166,7 @@ object Multimodal {
   /** One segment's banded rows tagged with its `src` and routed on
     * their key, so a segment lands as at most
     * `spark.sql.shuffle.partitions` parallel files and
-    * [[retirePhashSrc]] can drop it as a partition listing (the
+    * [[IndexFamily.retireSrcs]] can drop it as a partition listing (the
     * minhash/line-df segment layout). */
   private def bandSlice(banded: DataFrame,
       src: String): (String, DataFrame, Seq[String]) =
@@ -213,22 +213,12 @@ object Multimodal {
     * a replayed id would pair an asset with itself at hamming 0).
     * Rides the shared [[IndexFiles.appendStaged]] journal, so a crash
     * anywhere is repaired by the next append. */
-  /** The phash family's heal list: bands always, plus the sighted
-    * variant's `seen` table when present (the exact/minhash rule). */
-  private def phashHealTables(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Seq("bands", "seen")
-    else Seq("bands")
-  }
-
   def appendToPhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String,
       featuresCol: String, src: String): Unit = {
     require(src.nonEmpty && src != "base",
       s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, phashHealTables(spark, dir))
+    IndexFamily.phash.heal(spark, dir)
     // the sighted families' mirror guard: an unsighted append stores
     // assets no sighting day contains — irretirable by the window
     val seenP = new org.apache.hadoop.fs.Path(s"$dir/seen")
@@ -286,8 +276,8 @@ object Multimodal {
       day: String): Unit = {
     require(day.nonEmpty && day != "base",
       s"day must be a non-empty tag other than 'base': '$day'")
-    requireSightedPhash(spark, dir)
-    IndexFiles.healAppend(spark, dir, phashHealTables(spark, dir))
+    IndexFamily.phash.requireSighted(spark, dir)
+    IndexFamily.phash.heal(spark, dir)
     // inlined probe (the appendToMinhashIndexSighted rule): the batch's
     // signatures feed BOTH the verdict join and the admitted append —
     // one signature pass, filtered for the admitted subset
@@ -354,131 +344,9 @@ object Multimodal {
     sig.unpersist(); pairs.unpersist(); batchIds.unpersist(); ()
   }
 
-  private def requireSightedPhash(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p),
-      s"$dir has no sightings ledger — build it with " +
-        "buildPhashIndexSighted (the admission index at this dir has no " +
-        "last-seen data to window on)")
-  }
-
-  /** Retire sighting days older than the newest `keep` — assets whose
-    * LAST sighting aged out are TOMBSTONED through the family's one
-    * delete model ([[deleteFromPhashIndex]] semantics; the
-    * ratio-scheduled [[compactPhashIndex]] purges physically), then
-    * the doomed `seen` day-partitions drop in O(segment). Same
-    * crash-safety and cost shape as the exact/minhash windows
-    * (tombstones commit before the seen drop; takedown-sized id
-    * joins). Returns the retired day tags, oldest first. */
-  def retirePhashSeenWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] = {
-    require(keep >= 1,
-      s"keep must be >= 1: retiring every sighting day would empty the " +
-        s"history (got $keep)")
-    requireSightedPhash(spark, dir)
-    IndexFiles.healAppend(spark, dir, phashHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomed = days.dropRight(keep)
-    if (doomed.nonEmpty) {
-      val kept = days.takeRight(keep)
-      val seen = spark.read.parquet(s"$dir/seen")
-      val doomedIds = seen.filter(col("src").isin(doomed: _*))
-        .select("id").distinct()
-        .join(seen.filter(col("src").isin(kept: _*)).select("id").distinct(),
-          Seq("id"), "left_anti")
-      val live = IndexFiles.dropTombstones(spark, dir,
-        IndexFiles.storedIds(spark, dir,
-          spark.read.parquet(s"$dir/bands").select("id").distinct()))
-      val dead = live.join(doomedIds, Seq("id"), "left_semi").persist()
-      // survivor guard by COUNT: dead ⊆ live by construction (a
-      // semi-join of live) and both row sets are unique, so "something
-      // survives" ⟺ live > dead — two cheap counts instead of
-      // materializing a live⟕dead anti-join just to probe emptiness,
-      // and the dead count doubles as the write-skip check (r19)
-      val deadN = dead.count()
-      require(live.count() > deadN,
-        s"retiring ${doomed.mkString(", ")} would forget every live " +
-          "asset (no kept day re-saw anything) — drop and rebuild the " +
-          "index instead")
-      if (deadN > 0) IndexFiles.writeTombstones(dead, dir)
-      dead.unpersist()
-      IndexFiles.retireSrcsPartitions(spark, dir, Seq("seen"), doomed,
-        strict = true)
-      IndexFiles.refresh(spark, dir)
-      ()
-    }
-    doomed
-  }
-
-  /** [[retirePhashSeenWindow]] keyed by an explicit horizon — every
-    * sighting day strictly older than `day` (natural order) retires. */
-  def retirePhashSeenBefore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, day: String): Seq[String] = {
-    requireSightedPhash(spark, dir)
-    IndexFiles.healAppend(spark, dir, phashHealTables(spark, dir))
-    val days = IndexFiles.listSrcs(spark, dir, "seen")
-    val doomedN = days.count(d => IndexFiles.naturalOrdering.lt(d, day))
-    retirePhashSeenWindow(spark, dir, keep = days.size - doomedN)
-  }
-
-  /** Rewrite the phash ids sidecar from the stored band table — the
-    * O(index) maintenance scan [[retirePhashSrc]] uses after dropping
-    * a segment (and the recovery call for a stale-sidecar crash). */
-  def rebuildPhashIds(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.replaceTable(spark, dir, "ids",
-      spark.read.parquet(s"$dir/bands").select("id").distinct(), Seq.empty)
-
-  /** Retire one appended segment from the phash media history — the
-    * rolling-window form ("media near-dup against the last N crawl
-    * days"): the segment's band partitions drop in O(segment) with no
-    * surviving row rewritten, the ids sidecar rebuilds from the
-    * survivors, tombstones whose ids left with the segment are pruned
-    * (a stale tombstone would silently kill a later re-ingest of the
-    * same id), and the retired assets become re-appendable. Survivor
-    * verdicts are bit-equal to an index that never saw the segment —
-    * signatures are deterministic in (dim, thresh) and segments never
-    * mix partitions. `strict = false` makes an absent segment a no-op
-    * (the scheduled window job must not crash on a zero-yield day). */
-  /** Retire every appended phash segment but the newest `keep` — the
-    * scheduled rolling-window call ([[IndexFiles.retireWindow]]);
-    * returns the retired tags. */
-  def retirePhashWindow(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keep: Int): Seq[String] =
-    IndexFiles.retireWindow(spark, dir, "bands", keep,
-      srcs => retirePhashSrcs(spark, dir, srcs))
-
-  def retirePhashSrc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, src: String, strict: Boolean = true): Unit =
-    retirePhashSrcs(spark, dir, Seq(src), strict)
-
-  /** Bulk [[retirePhashSrc]] ([[IndexFiles.retireSegments]]). */
-  def retirePhashSrcs(spark: org.apache.spark.sql.SparkSession,
-      dir: String, srcs: Seq[String], strict: Boolean = true): Unit =
-    IndexFiles.retireSegments(spark, dir, Seq("bands"), srcs, strict,
-      idsFrom = Some("bands"))
-
-  /** Tombstone assets out of the phash index — the shared delete model
-    * ([[IndexFiles.writeTombstones]], the takedown path for media): 
-    * O(batch), no rewrite; [[dedupPhashAgainstIndex]] stops matching
-    * them immediately; [[compactPhashIndex]] purges them physically
-    * and re-opens the ids for append (blocked before compaction). */
-  def deleteFromPhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame): Unit =
-    IndexFiles.writeTombstones(ids, dir)
-
   def compactPhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
     IndexFiles.compact(spark, dir, Map("bands" -> Seq("src")))
-
-  /** Repair an interrupted append without appending a new batch —
-    * idempotent no-op on a healthy index (probes refuse a pending
-    * journal; something read-write must run the repair). */
-  def healPhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    IndexFiles.healAppend(spark, dir, phashHealTables(spark, dir)); ()
-  }
 
   /** Near-dup media pairs between a NEW batch and the stored history —
     * [[phashPairs]] with the join flipped batch-vs-index: the batch's

@@ -230,7 +230,7 @@ object StreamIngest {
     val spark = batch.sparkSession
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     // per-batch src segment — a streamed day retires through
-    // [[graft.operators.Dedup.retireExactSrc]]; a replayed batch's
+    // [[graft.operators.IndexFamily.retireSrcs]]; a replayed batch's
     // re-append stores nothing, so no duplicate segment appears
     graft.operators.Dedup.appendToExactIndex(spark, indexDir, batch,
       idCol, textCol, s"b$batchId")
@@ -516,8 +516,8 @@ object StreamIngest {
     }
     if (inCells == 0 && inSidecar == 0)
       // per-batch src segment, like [[applyPhashBatch]]: a streamed day
-      // retires in O(segment) through [[graft.operators.Ann
-      // .retireIvfSrc]] exactly like a batch-appended one
+      // retires in O(segment) through [[graft.operators.IndexFamily
+      // .retireSrcs]] exactly like a batch-appended one
       graft.operators.Ann.appendToIvfIndex(spark, indexDir, batch,
         s"b$batchId")
     else if (inCells != eligible || inSidecar != eligible)
@@ -565,7 +565,7 @@ object StreamIngest {
     // stats file too), plus the one-off doclens backfill so the
     // witness below can read it on a pre-BM25 index — this driver is a
     // writer, so the mutation-path-only backfill rule holds
-    graft.operators.Ann.healSparseIndex(spark, indexDir)
+    graft.operators.IndexFamily.sparse.heal(spark, indexDir)
     graft.operators.Ann.backfillBm25Sidecars(spark, indexDir)
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -590,7 +590,7 @@ object StreamIngest {
     }
     if (inPostings == 0 && inDoclens == 0 && inSidecar == 0)
       // per-batch src segment, like [[applyPhashBatch]] — streamed days
-      // retire through [[graft.operators.Ann.retireSparseSrc]]
+      // retire through [[graft.operators.IndexFamily.retireSrcs]]
       graft.operators.Ann.appendToSparseIndex(spark, indexDir, batch,
         s"b$batchId")
     else if (inPostings != eligible || inDoclens != eligible
@@ -632,7 +632,7 @@ object StreamIngest {
       indexDir: String): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    graft.operators.Ann.healIvfPqIndex(spark, indexDir)
+    graft.operators.IndexFamily.ivfPq.heal(spark, indexDir)
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import org.apache.spark.sql.functions.col
@@ -653,7 +653,7 @@ object StreamIngest {
           s"wipe $indexDir/applied together with the checkpoint")
     }
     if (inCodes == 0 && inSidecar == 0)
-      // per-batch src segment — retires via retireIvfPqSrc
+      // per-batch src segment — retires via IndexFamily.ivfPq.retireSrcs
       graft.operators.Ann.appendToIvfPqIndex(spark, indexDir, batch,
         s"b$batchId")
     else if (inCodes != eligible || inSidecar != eligible)
@@ -695,7 +695,7 @@ object StreamIngest {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     // same pre-witness repair as [[applyAnnBatch]]
-    graft.operators.Ann.healBinaryIndex(spark, indexDir)
+    graft.operators.IndexFamily.binary.heal(spark, indexDir)
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import org.apache.spark.sql.functions.col
@@ -716,7 +716,7 @@ object StreamIngest {
           s"wipe $indexDir/applied together with the checkpoint")
     }
     if (inBits == 0 && inSidecar == 0)
-      // per-batch src segment — retires via retireBinarySrc
+      // per-batch src segment — retires via IndexFamily.binary.retireSrcs
       graft.operators.Ann.appendToBinaryIndex(spark, indexDir, batch,
         s"b$batchId")
     else if (inBits != eligible || inSidecar != eligible)
@@ -828,7 +828,7 @@ object StreamIngest {
     val spark = batch.sparkSession
     // same pre-witness repair as [[applyAnnBatch]]: a journaled
     // crash-window rolls forward/back before the witness reads
-    graft.operators.Ann.healLshIndex(spark, indexDir)
+    graft.operators.IndexFamily.lsh.heal(spark, indexDir)
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import org.apache.spark.sql.functions.col
@@ -848,7 +848,7 @@ object StreamIngest {
           s"wipe $indexDir/applied together with the checkpoint")
     }
     if (inBuckets == 0)
-      // per-batch src segment — retires via retireLshSrc
+      // per-batch src segment — retires via IndexFamily.lsh.retireSrcs
       graft.operators.Ann.appendToLshIndex(spark, indexDir, batch,
         s"b$batchId")
     else if (inBuckets != eligible)
@@ -887,7 +887,7 @@ object StreamIngest {
     try {
       if (pinned.isEmpty) return
       val spark = pinned.sparkSession
-      graft.operators.Ann.healLshIndex(spark, indexDir)
+      graft.operators.IndexFamily.lsh.heal(spark, indexDir)
       val src = s"b$batchId"
       if (graft.operators.IndexFiles.listSrcs(spark, indexDir, "buckets")
           .contains(src)) return

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Ann
+import graft.operators.{Ann, IndexFamily, IndexFiles}
 
 class AnnSpec extends SparkSpec {
   import spark.implicits._
@@ -558,7 +558,7 @@ class AnnSpec extends SparkSpec {
     assert(!spark.read.parquet(s"$idx/buckets").select("id").distinct()
       .as[Long].collect().contains(11L))
     // keep the last two days: d0 out; A survives (touched), B forgotten
-    assert(Ann.retireLshSeenWindow(spark, idx, keep = 2) == Seq("d0"))
+    assert(IndexFamily.lsh.retireSeenWindow(spark, idx, keep = 2) == Seq("d0"))
     def verdicts() = Dedup.cosineDedupAgainstIndex(spark, idx,
         Seq((31L, vec(0)), (32L, vec(1)), (33L, vec(3)))
           .toDF("vid", "v"), "vid", "v", tau = 0.9)
@@ -583,19 +583,19 @@ class AnnSpec extends SparkSpec {
     assert(err.getMessage.contains("appendToLshIndexSighted"),
       err.getMessage)
     intercept[IllegalArgumentException] {
-      Ann.retireLshSeenWindow(spark, idx, keep = 0)
+      IndexFamily.lsh.retireSeenWindow(spark, idx, keep = 0)
     }
     val plain = java.nio.file.Files.createTempDirectory("lshplain")
       .toString + "/idx"
     Ann.buildLshIndex(Seq((1L, vec(0))).toDF("id", "v"), plain,
       dim = d8, planes = 4, tables = 2)
     val err2 = intercept[IllegalArgumentException] {
-      Ann.retireLshSeenWindow(spark, plain, keep = 1)
+      IndexFamily.lsh.retireSeenWindow(spark, plain, keep = 1)
     }
     assert(err2.getMessage.contains("sightings ledger"), err2.getMessage)
     // horizon form: retiring before d2 forgets the d1-last-seen
     // vectors (A and C), keeps d2's
-    assert(Ann.retireLshSeenBefore(spark, idx, "d2") == Seq("d1"))
+    assert(IndexFamily.lsh.retireSeenBefore(spark, idx, "d2") == Seq("d1"))
     val end = verdicts()
     assert(end(31L) == None && end(33L) == Some(21L), s"got $end")
   }
@@ -655,8 +655,8 @@ class AnnSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/cells/src=base").isDirectory &&
       new java.io.File(s"$dir/cells/src=d1").isDirectory)
     // tombstone one base id and one d1 id before the segment ages out
-    Ann.deleteFromIvfIndex(spark, dir, Seq(10L, 120L).toDF("id"))
-    Ann.retireIvfSrc(spark, dir, "d1")
+    IndexFiles.writeTombstones(Seq(10L, 120L).toDF("id"), dir)
+    IndexFamily.ivf.retireSrcs(spark, dir, Seq("d1"))
     // survivor ranking = brute force over (base ∪ d2) minus the LIVE
     // tombstone (10); the retired segment's rows are simply gone
     assert(fullSearch() ==
@@ -670,16 +670,16 @@ class AnnSpec extends SparkSpec {
         col("id") =!= 10L),
       "re-ingested retired id did not surface")
     // zero-yield day: strict = false retires an absent segment as a no-op
-    Ann.retireIvfSrc(spark, dir, "nothing-here", strict = false)
+    IndexFamily.ivf.retireSrcs(spark, dir, Seq("nothing-here"), strict = false)
     // strict retire of an absent segment is loud (the typo guard)
     val gone = intercept[IllegalArgumentException] {
-      Ann.retireIvfSrc(spark, dir, "d1")
+      IndexFamily.ivf.retireSrcs(spark, dir, Seq("d1"))
     }
     assert(gone.getMessage.contains("nothing to retire"), gone.getMessage)
     // rolling window: keep the newest appended segment — d2 ages out,
     // base never does; the steady state is a no-op
-    assert(Ann.retireIvfWindow(spark, dir, keep = 1) == Seq("d2"))
-    assert(Ann.retireIvfWindow(spark, dir, keep = 1).isEmpty)
+    assert(IndexFamily.ivf.retireWindow(spark, dir, keep = 1) == Seq("d2"))
+    assert(IndexFamily.ivf.retireWindow(spark, dir, keep = 1).isEmpty)
     assert(fullSearch() == brute(
       (col("id") <= 100 || col("id") === 120L) && col("id") =!= 10L))
     // a retrain re-assigns cells but keeps segments intact (the window
@@ -704,11 +704,11 @@ class AnnSpec extends SparkSpec {
     Ann.buildIvfSq8Index(half, sq8, nlist = 8)
     Ann.appendToIvfSq8Index(spark, sq8, d1, "d1")
     Ann.appendToIvfSq8Index(spark, sq8, d2, "d2")
-    Ann.retireIvfSq8Src(spark, sq8, "d1")
+    IndexFamily.ivfSq8.retireSrcs(spark, sq8, Seq("d1"))
     assert(rows(Ann.searchIvfSq8Index(spark, sq8, qs, k = 10, nprobe = 8))
       == rows(Ann.sq8TopK(half.union(d2), qs, k = 10)),
       "SQ8 post-retire ranking != never-appended survivors")
-    assert(Ann.retireIvfSq8Window(spark, sq8, keep = 0) == Seq("d2"))
+    assert(IndexFamily.ivfSq8.retireWindow(spark, sq8, keep = 0) == Seq("d2"))
     assert(rows(Ann.searchIvfSq8Index(spark, sq8, qs, k = 10, nprobe = 8))
       == rows(Ann.sq8TopK(half, qs, k = 10)))
     // IVF-PQ: the sibling index built on the SAME seeded half trains
@@ -721,7 +721,7 @@ class AnnSpec extends SparkSpec {
     Ann.appendToIvfPqIndex(spark, pqA, d1, "d1")
     Ann.appendToIvfPqIndex(spark, pqA, d2, "d2")
     Ann.appendToIvfPqIndex(spark, pqB, d2, "d2")
-    Ann.retireIvfPqSrc(spark, pqA, "d1")
+    IndexFamily.ivfPq.retireSrcs(spark, pqA, Seq("d1"))
     assert(rows(Ann.searchIvfPqIndex(spark, pqA, qs, k = 10, nprobe = 8))
       == rows(Ann.searchIvfPqIndex(spark, pqB, qs, k = 10, nprobe = 8)),
       "PQ post-retire ranking != never-appended sibling")
@@ -731,13 +731,13 @@ class AnnSpec extends SparkSpec {
       .union(corpus.filter(col("id") === 120L)))
     assert(graft.operators.IndexFiles.listSrcs(spark, pqA, "codes")
       == Seq("base", "d2", "d3"), "PQ retrain lost segment tags")
-    assert(Ann.retireIvfPqWindow(spark, pqA, keep = 1) == Seq("d2"))
+    assert(IndexFamily.ivfPq.retireWindow(spark, pqA, keep = 1) == Seq("d2"))
     // BIN_FLAT: post-retire search == binaryTopK over the survivors
     val bin = java.nio.file.Files.createTempDirectory("binret").toString + "/idx"
     Ann.buildBinaryIndex(half, bin, dim = 16)
     Ann.appendToBinaryIndex(spark, bin, d1, "d1")
     Ann.appendToBinaryIndex(spark, bin, d2, "d2")
-    Ann.retireBinarySrc(spark, bin, "d1")
+    IndexFamily.binary.retireSrcs(spark, bin, Seq("d1"))
     val gotB = Ann.searchBinaryIndex(spark, bin, qs, k = 10)
       .select("qid", "id", "hamming", "rank")
       .as[(Long, Long, Long, Int)].collect().toSet
@@ -745,8 +745,8 @@ class AnnSpec extends SparkSpec {
       .select("qid", "id", "hamming", "rank")
       .as[(Long, Long, Long, Int)].collect().toSet
     assert(gotB == expB, "binary post-retire ranking != never-appended survivors")
-    assert(Ann.retireBinaryWindow(spark, bin, keep = 1).isEmpty &&
-      Ann.retireBinaryWindow(spark, bin, keep = 0) == Seq("d2"))
+    assert(IndexFamily.binary.retireWindow(spark, bin, keep = 1).isEmpty &&
+      IndexFamily.binary.retireWindow(spark, bin, keep = 0) == Seq("d2"))
   }
 
   test("retireSparseSrc / retireLshSrc: segments age out; BM25 stats forget the segment; LSH tombstones prune") {
@@ -765,7 +765,7 @@ class AnnSpec extends SparkSpec {
     Ann.buildSparseIndex(half, dir, buckets = 8)
     Ann.appendToSparseIndex(spark, dir, d1, "d1")
     Ann.appendToSparseIndex(spark, dir, d2, "d2")
-    Ann.retireSparseSrc(spark, dir, "d1")
+    IndexFamily.sparse.retireSrcs(spark, dir, Seq("d1"))
     // weight-sum AND BM25 searches equal the never-appended survivors —
     // BM25's df/N/avgdl must all have forgotten the retired segment
     val surv = half.union(d2)
@@ -777,7 +777,7 @@ class AnnSpec extends SparkSpec {
       "BM25 post-retire ranking != never-appended survivors (stale stats?)")
     // retired ids re-admit; the window driver ages out the oldest
     Ann.appendToSparseIndex(spark, dir, d1, "d3")
-    assert(Ann.retireSparseWindow(spark, dir, keep = 1) == Seq("d2"))
+    assert(IndexFamily.sparse.retireWindow(spark, dir, keep = 1) == Seq("d2"))
     assert(rows(Ann.searchSparseIndexBm25(spark, dir, qterms, k = 5))
       == rows(Ann.bm25TopK(half.union(d1).withColumnRenamed("w", "tf"),
         qterms, k = 5)))
@@ -788,8 +788,8 @@ class AnnSpec extends SparkSpec {
     val d1V = corpus.filter(col("id") > 100 && col("id") <= 150)
     Ann.buildLshIndex(halfV, lsh, dim = 16, planes = 4, tables = 2)
     Ann.appendToLshIndex(spark, lsh, d1V, "d1")
-    Ann.deleteFromLshIndex(spark, lsh, Seq(10L, 120L).toDF("id"))
-    Ann.retireLshSrc(spark, lsh, "d1")
+    IndexFiles.writeTombstones(Seq(10L, 120L).toDF("id"), lsh)
+    IndexFamily.lsh.retireSrcs(spark, lsh, Seq("d1"))
     assert(rows(Ann.searchLshIndex(spark, lsh, qs, k = 10))
       == rows(Ann.lshTopK(halfV.filter(col("id") =!= 10L), qs, k = 10,
         dim = 16, planes = 4, tables = 2)),
@@ -799,7 +799,7 @@ class AnnSpec extends SparkSpec {
     val deleted = spark.read.parquet(s"$lsh/deleted").as[Long].collect().toSet
     assert(deleted == Set(10L), s"tombstones after retire: $deleted")
     // only base remains — the window driver's steady state is a no-op
-    assert(Ann.retireLshWindow(spark, lsh, keep = 0).isEmpty)
+    assert(IndexFamily.lsh.retireWindow(spark, lsh, keep = 0).isEmpty)
   }
 
   test("deleteFromIvfIndex + compactIvfIndex: tombstones hide rows; compaction purges and re-opens ids") {
@@ -810,7 +810,7 @@ class AnnSpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSet
     // delete the top-1 hits (the self-matches 1..5) — searches must
     // re-rank without them, bit-equal to ranking the surviving rows
-    Ann.deleteFromIvfIndex(spark, dir, (1L to 5L).toDF("id"))
+    IndexFiles.writeTombstones((1L to 5L).toDF("id"), dir)
     val tombstoned = Ann.searchIvfIndex(spark, dir, qs, k = 10, nprobe = 8)
       .select("qid", "id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -843,7 +843,7 @@ class AnnSpec extends SparkSpec {
     // IVF-PQ
     val dir = java.nio.file.Files.createTempDirectory("ivfpqdel").toString + "/idx"
     Ann.buildIvfPqIndex(corpus, dir, nlist = 8, m = 4, ksub = 16)
-    Ann.deleteFromIvfPqIndex(spark, dir, Seq(1L, 2L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(1L, 2L).toDF("id"), dir)
     def pq() = Ann.searchIvfPqIndex(spark, dir, qs, k = 10, nprobe = 8)
       .select("qid", "id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -860,7 +860,7 @@ class AnnSpec extends SparkSpec {
       .toDF("qid", "term", "qw")
     val sdir = java.nio.file.Files.createTempDirectory("spdel").toString + "/idx"
     Ann.buildSparseIndex(postings, sdir, buckets = 8)
-    Ann.deleteFromSparseIndex(spark, sdir, Seq(1L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(1L).toDF("id"), sdir)
     def sp() = Ann.searchSparseIndex(spark, sdir, qterms, k = 3)
       .select("qid", "id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -882,7 +882,7 @@ class AnnSpec extends SparkSpec {
   test("LSH index delete: tombstoned rankings equal survivors; compaction purges buckets") {
     val dir = java.nio.file.Files.createTempDirectory("lshdel").toString + "/idx"
     Ann.buildLshIndex(corpus, dir, dim = dim, planes = 4, tables = 2)
-    Ann.deleteFromLshIndex(spark, dir, (1L to 5L).toDF("id"))
+    IndexFiles.writeTombstones((1L to 5L).toDF("id"), dir)
     def res() = Ann.searchLshIndex(spark, dir, qs, k = 10)
       .select("qid", "id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -1047,7 +1047,7 @@ class AnnSpec extends SparkSpec {
     Ann.appendToIvfSq8Index(spark, dirApp, corpus.filter(lit(false)))
     assert(res(dirApp) == appended)
     // tombstones hide rows: ranking equals the survivors' scan
-    Ann.deleteFromIvfSq8Index(spark, dirApp, (1L to 5L).toDF("id"))
+    IndexFiles.writeTombstones((1L to 5L).toDF("id"), dirApp)
     val tombstoned = res(dirApp)
     assert(!tombstoned.exists(_._2 <= 5L), "deleted id surfaced")
     val survivors = Ann.sq8TopK(corpus.filter(col("id") > 5), qs, k = 10)
@@ -1191,7 +1191,7 @@ class AnnSpec extends SparkSpec {
   test("sparse BM25 delete: tombstoned doc excluded from df/N/avgdl; compaction bit-equal") {
     val dir = java.nio.file.Files.createTempDirectory("bm25del").toString + "/idx"
     Ann.buildSparseIndex(bm25Postings, dir, buckets = 4)
-    Ann.deleteFromSparseIndex(spark, dir, Seq(5L, 6L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(5L, 6L).toDF("id"), dir)
     def search() = Ann.searchSparseIndexBm25(spark, dir, bm25Qterms, k = 5)
       .select("qid", "id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -1278,7 +1278,7 @@ class AnnSpec extends SparkSpec {
     }
     assert(replay.getMessage.contains("already exists"), replay.getMessage)
     // tombstones survive the retrain: deleted before, still hidden after
-    Ann.deleteFromIvfIndex(spark, dir, Seq(151L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(151L).toDF("id"), dir)
     Ann.retrainIvfIndex(spark, dir)
     val hits = Ann.searchIvfIndex(spark, dir, qsDrift, k = 10, nprobe = 8)
       .select("id").as[Long].collect().toSet
@@ -1490,7 +1490,7 @@ class AnnSpec extends SparkSpec {
     // the public heal entry repairs WITHOUT appending a batch (the
     // operator's unblock path when no new data is due) and searches
     // resume immediately
-    Ann.healSparseIndex(spark, dir)
+    IndexFamily.sparse.heal(spark, dir)
     assert(Ann.searchSparseIndex(spark, dir, qterms, k = 3).count() > 0)
     // appends still work after the out-of-band heal
     Ann.appendToSparseIndex(spark, dir,
@@ -1518,7 +1518,7 @@ class AnnSpec extends SparkSpec {
     // a compact that swapped tables without healing would delete the
     // staged batch with the old table dir, then the next heal would
     // extend the sidecar with ids that have NO payload behind them
-    Ann.deleteFromSparseIndex(spark, dir, Seq(5L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(5L).toDF("id"), dir)
     Ann.compactSparseIndex(spark, dir)
     val want = Ann.sparseTopK(
         postings.filter(col("id") =!= 5L), qterms, k = 3)
@@ -1697,7 +1697,7 @@ class AnnSpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(got == want, "upserted index diverged from brute force over old∪new")
     // a deleted-but-not-compacted id upserts cleanly
-    Ann.deleteFromIvfIndex(spark, dir, Seq(10L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(10L).toDF("id"), dir)
     Ann.upsertIntoIvfIndex(spark, dir, Seq((10L, vec(10L, 1.0))).toDF("id", "v"))
     val q10 = Seq((10L, vec(10L, 1.0))).toDF("qid", "qv")
     val top = Ann.searchIvfIndex(spark, dir, q10, k = 1, nprobe = 4)
@@ -1858,7 +1858,7 @@ class AnnSpec extends SparkSpec {
     assert(desc("ids") == (200L, "sidecar"))
     assert(desc.get("_pending_append").isEmpty)
     // tombstoned ids surface as their own row
-    Ann.deleteFromIvfIndex(spark, dir, Seq(1L, 2L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(1L, 2L).toDF("id"), dir)
     val desc2 = IndexFiles.describeIndex(spark, dir)
       .select("table", "rows", "kind").as[(String, Long, String)]
       .collect().map(r => r._1 -> (r._2, r._3)).toMap
@@ -2026,7 +2026,7 @@ class AnnSpec extends SparkSpec {
     // tombstoned search equals binaryTopK over the survivors; compaction
     // is bit-equal and physically purges
     val dead = direct.map(_._2).take(2).toSeq
-    Ann.deleteFromBinaryIndex(spark, dir, dead.toDF("id"))
+    IndexFiles.writeTombstones(dead.toDF("id"), dir)
     val survivors = asSet(Ann.binaryTopK(
       corpus.filter(!col("id").isin(dead: _*)), qs, k = 10, dim = dim))
     assert(asSet(Ann.searchBinaryIndex(spark, dir, qs, k = 10)) == survivors,
@@ -2071,7 +2071,7 @@ class AnnSpec extends SparkSpec {
     val postings = Seq((1L, 10L, 1.0), (2L, 11L, 1.0)).toDF("id", "term", "w")
     val dir = java.nio.file.Files.createTempDirectory("crashedswap").toString + "/idx"
     Ann.buildSparseIndex(postings, dir, buckets = 4)
-    Ann.deleteFromSparseIndex(spark, dir, Seq(1L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(1L).toDF("id"), dir)
     // simulate the crash-between-renames window: live table renamed
     // aside, staged copy never made it in
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -2315,8 +2315,7 @@ class AnnSpec extends SparkSpec {
     assert(sample(5).as[(Long, Int, Long)].collect().toSeq.sorted
       == rows.sorted)
     // tombstoned ids free their slots: survivors refill the ranks
-    Ann.deleteFromIvfIndex(spark, dir,
-      vecs.filter(col("id") <= 30).select("id"))
+    IndexFiles.writeTombstones(vecs.filter(col("id") <= 30).select("id"), dir)
     val after = sample(5).as[(Long, Int, Long)].collect().toSeq
     assert(after.forall(_._1 > 30L), s"tombstoned id surfaced: $after")
     after.groupBy(_._2).foreach { case (c, rs) =>

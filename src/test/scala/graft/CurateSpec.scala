@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import graft.operators.Curate
+import graft.operators.{Curate, IndexFiles}
 
 class CurateSpec extends SparkSpec {
   import spark.implicits._
@@ -728,7 +728,7 @@ class CurateSpec extends SparkSpec {
     val deletes = plan.filter(col("action") === "delete").select("id")
     val upserts = plan.filter(col("action") === "upsert")
       .join(newDocs, Seq("id"))
-    Ann.deleteFromIvfIndex(spark, dir, deletes)
+    IndexFiles.writeTombstones(deletes, dir)
     Ann.upsertIntoIvfIndex(spark, dir, embedded(upserts))
 
     // expected corpus after the actions: old entries minus deletes,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, IndexFamily, IndexFiles}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -157,7 +157,7 @@ class DedupSpec extends SparkSpec {
     Dedup.buildExactIndex(d0, "doc_id", "text", s"$rootA/idx")
     Dedup.appendToExactIndex(spark, s"$rootA/idx", d1, "doc_id", "text", "d1")
     Dedup.appendToExactIndex(spark, s"$rootA/idx", d5, "doc_id", "text", "d5")
-    Dedup.retireExactSrc(spark, s"$rootA/idx", "d1")
+    IndexFamily.exact.retireSrcs(spark, s"$rootA/idx", Seq("d1"))
     val ledger = verdicts(s"$rootA/idx")
     // A's ONE admitted copy lived in d1 — retiring d1 forgets A even
     // though day 5 re-saw it (the d5 append stored nothing for a replay)
@@ -177,7 +177,7 @@ class DedupSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/seen")
       .filter(col("src") === "d5").count() == 2) // A (replay touch) + C
     // keep only day 5's sightings
-    assert(Dedup.retireExactSeenWindow(spark, idx, keep = 1)
+    assert(IndexFamily.exact.retireSeenWindow(spark, idx, keep = 1)
       == Seq("d0", "d1"))
     val sighted = verdicts(idx)
     // A was RE-SEEN in the kept window: it survives under its ORIGINAL
@@ -192,13 +192,13 @@ class DedupSpec extends SparkSpec {
     assert(graft.operators.IndexFiles.listSrcs(spark, idx, "seen")
       == Seq("d5"))
     // idempotent steady state; keep >= 1 enforced; unsighted dirs loud
-    assert(Dedup.retireExactSeenWindow(spark, idx, keep = 1).isEmpty)
+    assert(IndexFamily.exact.retireSeenWindow(spark, idx, keep = 1).isEmpty)
     assert(verdicts(idx) == sighted)
     intercept[IllegalArgumentException] {
-      Dedup.retireExactSeenWindow(spark, idx, keep = 0)
+      IndexFamily.exact.retireSeenWindow(spark, idx, keep = 0)
     }
     val err = intercept[IllegalArgumentException] {
-      Dedup.retireExactSeenWindow(spark, s"$rootA/idx", keep = 1)
+      IndexFamily.exact.retireSeenWindow(spark, s"$rootA/idx", keep = 1)
     }
     assert(err.getMessage.contains("sightings ledger"), err.getMessage)
     // an all-replay day still writes its sighting segment (the touch is
@@ -208,7 +208,7 @@ class DedupSpec extends SparkSpec {
     Dedup.appendToExactIndexSighted(spark, idx,
       Seq((71L, "epsilon fresh day seven text")).toDF("doc_id", "text"),
       "doc_id", "text", "d7")
-    assert(Dedup.retireExactSeenWindow(spark, idx, keep = 2)
+    assert(IndexFamily.exact.retireSeenWindow(spark, idx, keep = 2)
       == Seq("d5"))
     val touched = verdicts(idx)
     assert(touched(101L) == ((Some(11L), true)),
@@ -216,7 +216,7 @@ class DedupSpec extends SparkSpec {
     assert(touched(103L) == ((None, false)), // C: last seen d5, aged out
       s"got $touched")
     // the horizon form: retiring before d7 leaves only d7's sightings
-    assert(Dedup.retireExactSeenBefore(spark, idx, "d7") == Seq("d6"))
+    assert(IndexFamily.exact.retireSeenBefore(spark, idx, "d7") == Seq("d6"))
     assert(verdicts(idx)(101L) == ((None, false)))
     val allNovel = Map[Long, (Option[Long], Boolean)](
       101L -> ((None, false)), 102L -> ((None, false)),
@@ -260,7 +260,7 @@ class DedupSpec extends SparkSpec {
     assert(!Dedup.indexedIds(spark, idx).as[Long].collect().contains(11L))
     // keep the last two days: d0 ages out; A survives (re-seen via the
     // d1 rejection), B is forgotten
-    assert(Dedup.retireMinhashSeenWindow(spark, idx, keep = 2) == Seq("d0"))
+    assert(IndexFamily.minhash.retireSeenWindow(spark, idx, keep = 2) == Seq("d0"))
     def verdicts() = Dedup.dedupAgainstIndex(spark, idx,
         Seq((31L, A + " twice"), (32L, B + " too"), (33L, D + " now"))
           .toDF("doc_id", "text"), "doc_id", "text", tau = 0.5)
@@ -287,19 +287,19 @@ class DedupSpec extends SparkSpec {
     assert(err.getMessage.contains("appendToMinhashIndexSighted"),
       err.getMessage)
     intercept[IllegalArgumentException] {
-      Dedup.retireMinhashSeenWindow(spark, idx, keep = 0)
+      IndexFamily.minhash.retireSeenWindow(spark, idx, keep = 0)
     }
     val plain = java.nio.file.Files.createTempDirectory("mhplain")
       .toString + "/idx"
     Dedup.buildMinhashIndex(Seq((1L, A)).toDF("doc_id", "text"),
       "doc_id", "text", plain)
     val err2 = intercept[IllegalArgumentException] {
-      Dedup.retireMinhashSeenWindow(spark, plain, keep = 1)
+      IndexFamily.minhash.retireSeenWindow(spark, plain, keep = 1)
     }
     assert(err2.getMessage.contains("sightings ledger"), err2.getMessage)
     // the horizon form: retiring before d2 leaves only d2's sightings —
     // A ages out this time (nothing re-saw it after d1)
-    assert(Dedup.retireMinhashSeenBefore(spark, idx, "d2") == Seq("d1"))
+    assert(IndexFamily.minhash.retireSeenBefore(spark, idx, "d2") == Seq("d1"))
     val end = verdicts()
     assert(!end.exists(_._2 == 1L) && end.contains((33L, 21L)),
       s"horizon retire must forget the d1-last-seen docs: $end")
@@ -342,7 +342,7 @@ class DedupSpec extends SparkSpec {
       s"rejected docs must not be stored: $storedIds")
     // keep the last two days: d0 ages out; A survives (re-sighted by
     // the d1 rejection), B is forgotten
-    assert(Dedup.retireContainmentSeenWindow(spark, idx, keep = 2)
+    assert(IndexFamily.containment.retireSeenWindow(spark, idx, keep = 2)
       == Seq("d0"))
     def verdicts() = Dedup.dropContainedAgainstIndex(spark, idx,
         Seq((31L, subA), (32L, B.substring(8, 64)), (33L, subD))
@@ -376,19 +376,19 @@ class DedupSpec extends SparkSpec {
     }
     assert(errReplay.getMessage.contains("already"), errReplay.getMessage)
     intercept[IllegalArgumentException] {
-      Dedup.retireContainmentSeenWindow(spark, idx, keep = 0)
+      IndexFamily.containment.retireSeenWindow(spark, idx, keep = 0)
     }
     val plain = java.nio.file.Files.createTempDirectory("ctplain")
       .toString + "/idx"
     Dedup.buildContainmentIndex(Seq((1L, A)).toDF("doc_id", "text"),
       "doc_id", "text", plain)
     val err2 = intercept[IllegalArgumentException] {
-      Dedup.retireContainmentSeenWindow(spark, plain, keep = 1)
+      IndexFamily.containment.retireSeenWindow(spark, plain, keep = 1)
     }
     assert(err2.getMessage.contains("sightings ledger"), err2.getMessage)
     // horizon form: retiring before d2 forgets the d1-last-seen docs
     // (A and C), keeps d2's
-    assert(Dedup.retireContainmentSeenBefore(spark, idx, "d2")
+    assert(IndexFamily.containment.retireSeenBefore(spark, idx, "d2")
       == Seq("d1"))
     val end = verdicts()
     assert(end(31L) == None && end(33L) == Some(21L), s"got $end")
@@ -764,7 +764,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     val before = pairs()
     assert(before.exists(_._2 == 1L) && before.exists(_._2 == 2L))
-    Dedup.deleteFromMinhashIndex(spark, dir, Seq(2L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(2L).toDF("id"), dir)
     val tombstoned = pairs()
     assert(!tombstoned.exists(_._2 == 2L), "deleted doc still matches")
     assert(tombstoned == before.filterNot(_._2 == 2L),
@@ -1350,7 +1350,7 @@ class DedupSpec extends SparkSpec {
     // same verdicts (extra bloom bits only cost verified-away candidates)
     val probe401 = Seq((401L, "beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text")
-    Dedup.deleteFromContainmentIndex(spark, dir, Seq(100L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(100L).toDF("id"), dir)
     val afterDel = m(Dedup.dropContainedAgainstIndex(spark, dir, probe401,
       "doc_id", "text", tau = 0.8))
     assert(afterDel == Map(401L -> ((false, None))), s"got $afterDel")
@@ -1363,7 +1363,7 @@ class DedupSpec extends SparkSpec {
     // an in-place REBUILD starts a fresh history: a prior generation's
     // tombstone must not survive to anti-join a rebuilt doc (with a
     // recycled id) out of the container set — the buildExactIndex rule
-    Dedup.deleteFromContainmentIndex(spark, dir, Seq(100L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(100L).toDF("id"), dir)
     Dedup.buildContainmentIndex(history, "doc_id", "text", dir)
     assert(!new java.io.File(s"$dir/deleted").exists(),
       "rebuild left the previous generation's tombstones")
@@ -1413,7 +1413,7 @@ class DedupSpec extends SparkSpec {
     // tombstone one base text and the d1 first-sighting before retiring
     Dedup.deleteFromExactIndex(spark, dir,
       Seq("beta text", "gamma text").toDF("text"), "text")
-    Dedup.retireExactSrc(spark, dir, "d1")
+    IndexFamily.exact.retireSrcs(spark, dir, Seq("d1"))
     // gamma's FIRST sighting lived in d1 → re-admittable (and its
     // tombstone left with it); alpha's first sighting is base — the d1
     // re-ingest stored nothing, so alpha still matches; beta's
@@ -1433,9 +1433,9 @@ class DedupSpec extends SparkSpec {
     assert(probe((40L, "gamma text")) == Map(40L -> Some(50L)))
     // window: keep the newest appended segment — d2 ages out; steady
     // state is a no-op; zero-yield strict=false no-op
-    assert(Dedup.retireExactWindow(spark, dir, keep = 1) == Seq("d2"))
-    assert(Dedup.retireExactWindow(spark, dir, keep = 1).isEmpty)
-    Dedup.retireExactSrc(spark, dir, "never-there", strict = false)
+    assert(IndexFamily.exact.retireWindow(spark, dir, keep = 1) == Seq("d2"))
+    assert(IndexFamily.exact.retireWindow(spark, dir, keep = 1).isEmpty)
+    IndexFamily.exact.retireSrcs(spark, dir, Seq("never-there"), strict = false)
     assert(probe((43L, "delta text"), (40L, "gamma text"))
       == Map(43L -> None, 40L -> Some(50L)))
   }
@@ -1525,11 +1525,11 @@ class DedupSpec extends SparkSpec {
     Seq(1, 2, 3).foreach(i =>
       Dedup.appendToLineDfIndex(spark, dir, day(i), "doc_id", "text", s"d$i"))
     // keep the newest 2 appended days: only d1 ages out
-    assert(Dedup.retireLineDfWindow(spark, dir, keep = 2) == Seq("d1"))
+    assert(IndexFamily.linedf.retireWindow(spark, dir, keep = 2) == Seq("d1"))
     // steady state: the window already fits — scheduled job no-ops
-    assert(Dedup.retireLineDfWindow(spark, dir, keep = 2).isEmpty)
+    assert(IndexFamily.linedf.retireWindow(spark, dir, keep = 2).isEmpty)
     // keep = 0 empties the appended history; base is never touched
-    assert(Dedup.retireLineDfWindow(spark, dir, keep = 0) == Seq("d2", "d3"))
+    assert(IndexFamily.linedf.retireWindow(spark, dir, keep = 0) == Seq("d2", "d3"))
     val probe = Seq((30L, "alpha\nnovel")).toDF("doc_id", "text")
     assert(Dedup.lineDfAgainstIndex(spark, dir, probe, "doc_id", "text")
       .as[(Long, String)].collect().toMap == Map(30L -> "novel"),
@@ -1544,7 +1544,7 @@ class DedupSpec extends SparkSpec {
       Seq((10L + i, base.replace("quick", s"rapid$i")))
         .toDF("doc_id", "text"),
       "doc_id", "text", s"d$i"))
-    assert(Dedup.retireMinhashWindow(spark, mdir, keep = 1) == Seq("d1"))
+    assert(IndexFamily.minhash.retireWindow(spark, mdir, keep = 1) == Seq("d1"))
     assert(spark.read.parquet(s"$mdir/ids").as[Long].collect().toSet
       == Set(1L, 12L), "window retire did not rebuild the ids sidecar")
   }
@@ -1563,7 +1563,7 @@ class DedupSpec extends SparkSpec {
     def mL() = Dedup.lineDfAgainstIndex(spark, dirL, probeL,
       "doc_id", "text").as[(Long, String)].collect().toMap
     assert(mL() == Map(30L -> "novel"), "gamma should be boilerplate with s1 live")
-    Dedup.retireLineDfSrc(spark, dirL, "s1")
+    IndexFamily.linedf.retireSrcs(spark, dirL, Seq("s1"))
     assert(mL() == Map(30L -> "gamma\nnovel"),
       "retired segment still contributed to the history df")
     // sidecar re-sized to the survivors (unsaturation is part of retire)
@@ -1574,10 +1574,10 @@ class DedupSpec extends SparkSpec {
     assert(mL() == Map(30L -> "novel"), "re-appended segment not counted")
     // typo'd tag and emptying the table are loud
     intercept[IllegalArgumentException] {
-      Dedup.retireLineDfSrc(spark, dirL, "never-appended") }
-    Dedup.retireLineDfSrc(spark, dirL, "s1")
+      IndexFamily.linedf.retireSrcs(spark, dirL, Seq("never-appended")) }
+    IndexFamily.linedf.retireSrcs(spark, dirL, Seq("s1"))
     intercept[IllegalArgumentException] {
-      Dedup.retireLineDfSrc(spark, dirL, "base") }
+      IndexFamily.linedf.retireSrcs(spark, dirL, Seq("base")) }
 
     // containment: the only container of the probe lives in segment s1
     val histC = Seq(
@@ -1597,7 +1597,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Boolean, Option[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(mC() == Map(301L -> ((true, Some(203L)))))
-    Dedup.retireContainmentSrc(spark, dirC, "s1")
+    IndexFamily.containment.retireSrcs(spark, dirC, Seq("s1"))
     assert(mC() == Map(301L -> ((false, None))),
       "retired container still claimed the probe")
     // ids sidecar rebuilt from survivors: 203 is re-admittable
@@ -1630,8 +1630,8 @@ class DedupSpec extends SparkSpec {
         .select("id_new", "id_old", "jaccard")
         .as[(Long, Long, Double)].collect().toSet
     assert(pairsM(dirM).exists(_._2 == 20L), "appended segment not matched")
-    Dedup.deleteFromMinhashIndex(spark, dirM, Seq(20L).toDF("id"))
-    Dedup.retireMinhashSrc(spark, dirM, "s1")
+    IndexFiles.writeTombstones(Seq(20L).toDF("id"), dirM)
+    IndexFamily.minhash.retireSrcs(spark, dirM, Seq("s1"))
     Dedup.buildMinhashIndex(histM, "doc_id", "text", dirMBase)
     assert(pairsM(dirM) == pairsM(dirMBase),
       "retired minhash index != never-appended index")
@@ -1644,11 +1644,11 @@ class DedupSpec extends SparkSpec {
     assert(pairsM(dirM).exists(_._2 == 20L),
       "re-appended doc unmatched — a stale tombstone outlived the retire")
     intercept[IllegalArgumentException] {
-      Dedup.retireMinhashSrc(spark, dirM, "never-appended") }
-    Dedup.retireMinhashSrc(spark, dirM, "never-appended", strict = false)
-    Dedup.retireMinhashSrc(spark, dirM, "s1")
+      IndexFamily.minhash.retireSrcs(spark, dirM, Seq("never-appended")) }
+    IndexFamily.minhash.retireSrcs(spark, dirM, Seq("never-appended"), strict = false)
+    IndexFamily.minhash.retireSrcs(spark, dirM, Seq("s1"))
     intercept[IllegalArgumentException] {
-      Dedup.retireMinhashSrc(spark, dirM, "base") }
+      IndexFamily.minhash.retireSrcs(spark, dirM, Seq("base")) }
 
     // domain-cap ledger: a.com's budget regenerates when s0 ages out
     val dirD = java.nio.file.Files.createTempDirectory("dcret").toString
@@ -1661,15 +1661,15 @@ class DedupSpec extends SparkSpec {
     def admitted() = Dedup.capAgainstLedger(spark, dirD, b1,
       "id", "url", "q").select("admitted").as[Boolean].head()
     assert(!admitted(), "a.com should be saturated before retirement")
-    Dedup.retireDomainCapSrc(spark, dirD, "s0")
+    IndexFamily.domainCap.retireSrcs(spark, dirD, Seq("s0"))
     assert(admitted(), "retired segment still spent the domain budget")
     intercept[IllegalArgumentException] {
-      Dedup.retireDomainCapSrc(spark, dirD, "s0") } // already gone: loud
+      IndexFamily.domainCap.retireSrcs(spark, dirD, Seq("s0")) } // already gone: loud
     // strict = false: a zero-yield day's absent segment retires as a
     // no-op — the scheduled rolling-window job never crashes on it
-    Dedup.retireDomainCapSrc(spark, dirD, "s0", strict = false)
-    Dedup.retireLineDfSrc(spark, dirL, "zero-yield-day", strict = false)
-    Dedup.retireContainmentSrc(spark, dirC, "zero-yield-day",
+    IndexFamily.domainCap.retireSrcs(spark, dirD, Seq("s0"), strict = false)
+    IndexFamily.linedf.retireSrcs(spark, dirL, Seq("zero-yield-day"), strict = false)
+    IndexFamily.containment.retireSrcs(spark, dirC, Seq("zero-yield-day"),
       strict = false)
     assert(admitted(), "strict=false no-op changed ledger state")
   }
@@ -1695,7 +1695,7 @@ class DedupSpec extends SparkSpec {
     val after = probe(Seq((13L, e(2))))
     assert(after(13L) == ((13L, Some(3L), Some(1.0), true)), s"got $after")
     // ...and a tombstoned id leaves it
-    Ann.deleteFromLshIndex(spark, dir, Seq(1L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(1L).toDF("id"), dir)
     val gone = probe(Seq((10L, e(0))))
     assert(gone(10L)._4 == false && gone(10L)._2.isEmpty, s"got $gone")
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Ann, Dedup, Maintenance}
+import graft.operators.{Ann, Dedup, IndexFamily, IndexFiles, Maintenance}
 
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +38,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(graft.operators.IndexFiles.listSrcs(spark, s"$root/lines", "lines")
       == Seq("base", "d3"), "the typo'd nightly must not half-age the store")
     // every advertised family name resolves (the registry stays total)
-    assert(Maintenance.families.keySet == Set("exact", "linedf",
+    assert(IndexFamily.all.map(_.name).toSet == Set("exact", "linedf",
       "containment", "minhash", "domain_cap", "phash", "ivf", "ivf_sq8",
       "ivf_pq", "sparse", "binary", "lsh"))
   }
@@ -109,7 +109,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(comp == Seq(true))
     assert(Maintenance.tombstoneFraction(spark, ex, "exact") == 0.0)
     // the sighted registry stays total (the families assert's twin)
-    assert(Maintenance.sightedFamilies.keySet
+    assert(IndexFamily.all.filter(_.sighted).map(_.name + "_seen").toSet
       == Set("exact_seen", "minhash_seen", "phash_seen",
         "containment_seen", "lsh_seen"))
   }
@@ -134,7 +134,7 @@ class MaintenanceSpec extends SparkSpec {
     Ann.buildIvfIndex(vecs.filter(col("id") <= 18), dir, nlist = 4)
     (0 to 10).foreach(b => Ann.appendToIvfIndex(spark, dir,
       vecs.filter(col("id") === (19 + b).toLong), s"b$b"))
-    assert(Ann.retireIvfWindow(spark, dir, keep = 2)
+    assert(IndexFamily.ivf.retireWindow(spark, dir, keep = 2)
       == (0 to 8).map(b => s"b$b"),
       "window must retire b0..b8 and keep b9, b10 — the newest two")
     assert(graft.operators.IndexFiles.listSrcs(spark, dir, "cells")
@@ -168,15 +168,15 @@ class MaintenanceSpec extends SparkSpec {
     // A: the per-segment path, one retire at a time (the pre-bulk
     // protocol); B: the window's single bulk call
     Seq("d1", "d2").foreach { tag =>
-      Dedup.retireLineDfSrc(spark, s"$rootA/lines", tag)
-      Dedup.retireExactSrc(spark, s"$rootA/exact", tag)
-      Ann.retireIvfSrc(spark, s"$rootA/ivf", tag)
+      IndexFamily.linedf.retireSrcs(spark, s"$rootA/lines", Seq(tag))
+      IndexFamily.exact.retireSrcs(spark, s"$rootA/exact", Seq(tag))
+      IndexFamily.ivf.retireSrcs(spark, s"$rootA/ivf", Seq(tag))
     }
-    assert(Dedup.retireLineDfWindow(spark, s"$rootB/lines", keep = 1)
+    assert(IndexFamily.linedf.retireWindow(spark, s"$rootB/lines", keep = 1)
       == Seq("d1", "d2"))
-    assert(Dedup.retireExactWindow(spark, s"$rootB/exact", keep = 1)
+    assert(IndexFamily.exact.retireWindow(spark, s"$rootB/exact", keep = 1)
       == Seq("d1", "d2"))
-    assert(Ann.retireIvfWindow(spark, s"$rootB/ivf", keep = 1)
+    assert(IndexFamily.ivf.retireWindow(spark, s"$rootB/ivf", keep = 1)
       == Seq("d1", "d2"))
     // stored payloads identical...
     def rows(p: String) = spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
@@ -198,7 +198,7 @@ class MaintenanceSpec extends SparkSpec {
     // refuses BEFORE deleting anything (the sequential loop would have
     // dropped the first segment and then crashed mid-window)
     intercept[IllegalArgumentException] {
-      Dedup.retireLineDfSrcs(spark, s"$rootB/lines", Seq("d3", "base"))
+      IndexFamily.linedf.retireSrcs(spark, s"$rootB/lines", Seq("d3", "base"))
     }
     assert(graft.operators.IndexFiles.listSrcs(spark, s"$rootB/lines",
       "lines") == Seq("base", "d3"),
@@ -220,8 +220,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(clean == Seq((s"$root/ivf", "ivf", 0.0, false),
       (s"$root/exact", "exact", 0.0, false)), s"got $clean")
     // tombstone 10 of 30 ids (1/3) and 3 of 12 fps (1/4)
-    Ann.deleteFromIvfIndex(spark, s"$root/ivf",
-      vecs.filter(col("id") <= 10).select("id"))
+    IndexFiles.writeTombstones(vecs.filter(col("id") <= 10).select("id"), s"$root/ivf")
     Dedup.deleteFromExactIndex(spark, s"$root/exact",
       docs.filter(col("doc_id") <= 3), "text")
     val searchPre = Ann.searchIvfIndex(spark, s"$root/ivf",
@@ -263,8 +262,8 @@ class MaintenanceSpec extends SparkSpec {
     }
     // every tombstone-model family is registered (linedf/domain_cap
     // excluded by design)
-    assert(Maintenance.compactors.keySet ==
-      Maintenance.families.keySet -- Set("linedf", "domain_cap"))
+    assert(IndexFamily.all.filter(_.deletes.isDefined).map(_.name).toSet ==
+      IndexFamily.all.map(_.name).toSet -- Set("linedf", "domain_cap"))
   }
 
   test("whole-store nightly: every registered family builds, appends two segments, and ages the older one out") {
@@ -324,7 +323,7 @@ class MaintenanceSpec extends SparkSpec {
         vslice(41 + 40 * k, 20), tag)
       Ann.appendToLshIndex(spark, s"$root/lsh", vslice(41 + 40 * k, 20), tag)
     }
-    val specs = Maintenance.families.keys.toSeq.sorted
+    val specs = IndexFamily.all.map(_.name).sorted
       .map(f => (s"$root/$f", f, 1))
     val got = Maintenance.nightly(spark, specs)
       .as[(String, String, Int, String)].collect().toSeq
@@ -359,8 +358,7 @@ class MaintenanceSpec extends SparkSpec {
     // mutate the live index in BOTH directions, then physically rewrite
     Ann.appendToIvfIndex(spark, s"$root/ivf", vecs.filter(col("id") <= 10)
       .select((col("id") + 100L).as("id"), col("v")), "d1")
-    Ann.deleteFromIvfIndex(spark, s"$root/ivf",
-      vecs.filter(col("id") <= 5).select("id"))
+    IndexFiles.writeTombstones(vecs.filter(col("id") <= 5).select("id"), s"$root/ivf")
     Ann.compactIvfIndex(spark, s"$root/ivf")
     assert(search() != before, "mutations must actually change the search")
     // a stale crash leftover from an earlier restore is discarded
@@ -442,7 +440,7 @@ class MaintenanceSpec extends SparkSpec {
     Dedup.deleteFromExactIndex(spark, s"$root/exact",
       docs.filter(col("doc_id") < 5), "text")
     Dedup.compactExactIndex(spark, s"$root/exact")
-    Dedup.retireExactSrc(spark, s"$root/exact", "d1")
+    IndexFamily.exact.retireSrcs(spark, s"$root/exact", Seq("d1"))
     assert(probe() != before, "mutations must change the probe verdicts")
     // family-agnostic restore: the verbatim copy carries the fp table,
     // the src segments, AND the bloom sidecar back
@@ -550,8 +548,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/bak"),
       new org.apache.hadoop.fs.Path(s"$root/bak__snap_old")))
     // restore heals the swap and restores from the recovered backup
-    Ann.deleteFromIvfIndex(spark, s"$root/ivf",
-      vecs.filter(col("id") <= 5).select("id"))
+    IndexFiles.writeTombstones(vecs.filter(col("id") <= 5).select("id"), s"$root/ivf")
     Ann.compactIvfIndex(spark, s"$root/ivf")
     assert(search() != before)
     Maintenance.restoreIndex(spark, s"$root/bak", s"$root/ivf")
@@ -610,8 +607,7 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.snapshotStore(spark, specs)
     // mutate everything the restore must undo: index contents AND the
     // pointer that makes the store servable
-    Ann.deleteFromIvfIndex(spark, s"$root/blue",
-      vecs.filter(col("id") <= 8).select("id"))
+    IndexFiles.writeTombstones(vecs.filter(col("id") <= 8).select("id"), s"$root/blue")
     Ann.compactIvfIndex(spark, s"$root/blue")
     Dedup.deleteFromExactIndex(spark, s"$root/exact",
       docs.filter(col("doc_id") <= 5), "text")
@@ -756,7 +752,7 @@ class MaintenanceSpec extends SparkSpec {
       r.toString)
     // the sighted retire is visible on the dashboard: one day drops
     // from the coverage, its forgotten fps surface as tombstones
-    assert(Dedup.retireExactSeenWindow(spark, idx, keep = 2) == Seq("d0"))
+    assert(IndexFamily.exact.retireSeenWindow(spark, idx, keep = 2) == Seq("d0"))
     val r2 = row()
     assert(r2.getAs[Long]("seen_days") == 2 &&
       r2.getAs[String]("oldest_seen") == "d1" &&

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Multimodal, Tag}
+import graft.operators.{IndexFamily, IndexFiles, Multimodal, Tag}
 
 class MultimodalTagSpec extends SparkSpec {
   import spark.implicits._
@@ -149,8 +149,8 @@ class MultimodalTagSpec extends SparkSpec {
     // tombstone an asset INSIDE the doomed segment (201 is family
     // asset-0, matched by probe 100/102): the tombstone must leave
     // with it, or a later re-append of the same id is silently dead
-    Multimodal.deleteFromPhashIndex(spark, dir, Seq(201L).toDF("id"))
-    Multimodal.retirePhashSrc(spark, dir, "d2")
+    IndexFiles.writeTombstones(Seq(201L).toDF("id"), dir)
+    IndexFamily.phash.retireSrcs(spark, dir, Seq("d2"))
     Multimodal.buildPhashIndex(hist, "media_id", "features", dirBase,
       dim = 12, maxHam = 2)
     assert(probe(dir) == probe(dirBase),
@@ -164,7 +164,7 @@ class MultimodalTagSpec extends SparkSpec {
     // plain takedown: tombstoned asset stops matching instantly; the id
     // re-opens only after physical compaction (202 is family asset-1,
     // matched by probe 101/103)
-    Multimodal.deleteFromPhashIndex(spark, dir, Seq(202L).toDF("id"))
+    IndexFiles.writeTombstones(Seq(202L).toDF("id"), dir)
     assert(!probe(dir).exists(_._2 == 202L), "deleted asset still matches")
     intercept[IllegalArgumentException] {
       Multimodal.appendToPhashIndex(spark, dir,
@@ -178,12 +178,12 @@ class MultimodalTagSpec extends SparkSpec {
       "re-ingest after compaction did not restore matches")
     // typo'd tag loud; zero-yield day a no-op; emptying blocked
     intercept[IllegalArgumentException] {
-      Multimodal.retirePhashSrc(spark, dir, "never-appended") }
-    Multimodal.retirePhashSrc(spark, dir, "never-appended", strict = false)
-    Multimodal.retirePhashSrc(spark, dir, "d2")
-    Multimodal.retirePhashSrc(spark, dir, "d5")
+      IndexFamily.phash.retireSrcs(spark, dir, Seq("never-appended")) }
+    IndexFamily.phash.retireSrcs(spark, dir, Seq("never-appended"), strict = false)
+    IndexFamily.phash.retireSrcs(spark, dir, Seq("d2"))
+    IndexFamily.phash.retireSrcs(spark, dir, Seq("d5"))
     intercept[IllegalArgumentException] {
-      Multimodal.retirePhashSrc(spark, dir, "base") }
+      IndexFamily.phash.retireSrcs(spark, dir, Seq("base")) }
   }
 
   test("sampleFrames: one frame per everyMs of stub duration") {
@@ -293,7 +293,7 @@ class MultimodalTagSpec extends SparkSpec {
     assert(seenIds("d2") == Set(21L))
     // keep the last two days: d0 ages out; A survives (re-seen via the
     // d1 rejection), B is forgotten; the rejected copy was never stored
-    assert(Multimodal.retirePhashSeenWindow(spark, idx, keep = 2)
+    assert(IndexFamily.phash.retireSeenWindow(spark, idx, keep = 2)
       == Seq("d0"))
     def verdicts() = Multimodal.dedupPhashAgainstIndex(spark, idx,
         feats(Seq(31L, 32L, 33L), i =>
@@ -320,17 +320,17 @@ class MultimodalTagSpec extends SparkSpec {
     assert(err.getMessage.contains("appendToPhashIndexSighted"),
       err.getMessage)
     intercept[IllegalArgumentException] {
-      Multimodal.retirePhashSeenWindow(spark, idx, keep = 0)
+      IndexFamily.phash.retireSeenWindow(spark, idx, keep = 0)
     }
     val plain = java.nio.file.Files.createTempDirectory("phplain")
       .toString + "/idx"
     Multimodal.buildPhashIndex(feats(Seq(1L), _ => "fam-A"),
       "media_id", "features", plain, dim = 16)
     val err2 = intercept[IllegalArgumentException] {
-      Multimodal.retirePhashSeenWindow(spark, plain, keep = 1)
+      IndexFamily.phash.retireSeenWindow(spark, plain, keep = 1)
     }
     assert(err2.getMessage.contains("sightings ledger"), err2.getMessage)
-    assert(Multimodal.retirePhashSeenBefore(spark, idx, "d2") == Seq("d1"))
+    assert(IndexFamily.phash.retireSeenBefore(spark, idx, "d2") == Seq("d1"))
     val end = verdicts()
     assert(!end.exists(_._2 == 1L) && end.contains((33L, 21L)),
       s"horizon retire must forget the d1-last-seen assets: $end")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.{Events, SessionEvent, StreamIngest}
+import graft.operators.{IndexFamily, IndexFiles}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -635,7 +636,7 @@ class StreamingSpec extends SparkSpec {
     // replay of that batch fails LOUDLY instead of silently
     // resurrecting the retired segment — the retireWindow scaladoc's
     // keep >= 1 floor for live streams
-    Ann.retireIvfSrc(spark, s"$dir/ann", "b0")
+    IndexFamily.ivf.retireSrcs(spark, s"$dir/ann", Seq("b0"))
     val exRet = intercept[IllegalStateException] {
       StreamIngest.applyAnnBatch(
         (61L to 70L).map(i => (i, vec(i))).toDF("id", "v"), 0L, s"$dir/ann")
