@@ -744,7 +744,7 @@ object Scale {
         s"$root/bak"))
       IndexFiles.writeTombstones(
         pinned.filter(col("id") % 4 === 0).select("id"), s"$root/ivf")
-      Ann.compactIvfIndex(spark, s"$root/ivf")
+      IndexFamily.ivf.compact(spark, s"$root/ivf")
       require(search() != before, "mutation did not change the search")
       val tRestore = timed(Maintenance.restoreIndex(spark, s"$root/bak",
         s"$root/ivf"))

@@ -682,7 +682,7 @@ object SparkEntry {
           .select((col("id") + 1000000L).as("id"), col("v")), "d1")
       IndexFiles.writeTombstones(
         vecs.filter(col("id") < 16).select("id"), s"$r/ivf")
-      Ann.compactIvfIndex(s, s"$r/ivf")
+      IndexFamily.ivf.compact(s, s"$r/ivf")
       Maintenance.restoreIndex(s, s"$r/backup", s"$r/ivf")
     }
     Ann.searchIvfIndex(s, s"$root/ivf", queriesSet(s, dir), k = 10,

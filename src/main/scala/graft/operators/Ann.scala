@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => V}
-import graft.operators.IndexFiles.WriteRouting
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -355,7 +354,7 @@ object Ann {
       // every task writes a sliver into every bucket dir: tasks×buckets
       // tiny files per build, and the same count of file-open waits on
       // every later scan
-      .routeForWrite("tbucket")
+      .repartition(col("tbucket"))
       .write.mode("overwrite").partitionBy("src", "tbucket")
       .parquet(s"$dir/postings")
     Seq(buckets).toDF("buckets").write.mode("overwrite").parquet(s"$dir/meta")
@@ -427,21 +426,14 @@ object Ann {
     * path, which ignores the stats file). */
   def appendToSparseIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    // a rolled-forward batch extended doclens, so the derived stats file
-    // must refresh NOW — the append below may legitimately throw (e.g.
-    // a replayed id) and must not leave stats stale behind healed data
-    IndexFamily.sparse.heal(spark, dir)
+    // the heal re-derives stats after a roll-forward (doclens moved)
+    // NOW — the append below may legitimately throw (e.g. a replayed
+    // id) and must not leave stats stale behind healed data
+    IndexFamily.sparse.beginAppend(spark, dir, src, sighted = false)
     val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
     val batchIds = batch.select("id").distinct()
-    val replayed = IndexFiles
-      .ensureIds(spark, dir,
-        spark.read.parquet(s"$dir/postings").select("id").distinct())
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would double-count in scores")
+    IndexFamily.sparse.requireNew(spark, dir, batchIds,
+      "replayed ids would double-count in scores")
     // backfill BEFORE the batch lands (the backfill aggregates stored
     // postings; afterwards it would double-count the batch)
     ensureBm25Sidecars(spark, dir)
@@ -451,7 +443,7 @@ object Ann {
       ("postings", Dedup.spread(batch)
         .withColumn("tbucket", pmod(col("term"), lit(buckets)).cast("int"))
         .withColumn("src", lit(src))
-        .routeForWrite("tbucket"),
+        .repartition(col("tbucket")),
         Seq("src", "tbucket")),
       ("doclens", batch.groupBy("id").agg(sum(col("w")).as("dl"))
         .withColumn("src", lit(src)), Seq("src"))),
@@ -604,19 +596,11 @@ object Ann {
     * replayed id would surface twice in any ranking it reaches). */
   def appendToBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, Seq("bits"))
+    IndexFamily.binary.beginAppend(spark, dir, src, sighted = false)
     val dim = spark.read.parquet(s"$dir/meta").head().getInt(0)
     requireBatchDim(batch, "v", dim)
     val batchIds = batch.select("id").distinct()
-    val replayed = IndexFiles
-      .ensureIds(spark, dir,
-        spark.read.parquet(s"$dir/bits").select("id").distinct())
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would duplicate search hits")
+    IndexFamily.binary.requireNew(spark, dir, batchIds, DuplicateHits)
     IndexFiles.appendStaged(spark, dir, Seq(
       ("bits", Dedup.spread(batch)
         .select(col("id"), V.binarizeSign(col("v"), dim).as("cb"))
@@ -624,9 +608,7 @@ object Ann {
       Some(batchIds))
   }
 
-  def compactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.compact(spark, dir, Map("bits" -> Seq("src")))
+  private val DuplicateHits = "replayed ids would duplicate search hits"
 
   /** Hybrid dense+sparse search with reciprocal-rank fusion — the
     * "Hybrid" in the reference's Knowledge1024Hybrid collection
@@ -959,7 +941,7 @@ object Ann {
       // (tables·2^planes dirs — unrouted, every task writes a sliver
       // into every bucket dir it touches; measured 47 s of task wall on
       // 7 s of CPU at sf0.1, pure file-create wait)
-      .routeForWrite("tbl", "sig")
+      .repartition(col("tbl"), col("sig"))
       .write.mode("overwrite").partitionBy("src", "tbl", "sig")
       .parquet(s"$dir/buckets")
     Seq((dim, planes, tables)).toDF("dim", "planes", "tables")
@@ -982,19 +964,9 @@ object Ann {
     * through a staging dir (or a table format) and move on success. */
   def appendToLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame, src: String = "ingest"): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
     // crash-safe with a marker-only journal (no ids sidecar to extend):
     // a job failure anywhere leaves a state the next append repairs
-    IndexFamily.lsh.heal(spark, dir)
-    // the sighted families' mirror guard: an unsighted append stores
-    // vectors no sighting day contains — irretirable by the window
-    val seenP = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(!seenP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(seenP),
-      s"$dir records sightings — append with appendToLshIndexSighted " +
-        "(an unsighted append stores vectors no sighting window could " +
-        "ever retire)")
+    IndexFamily.lsh.beginAppend(spark, dir, src, sighted = false)
     val m = spark.read.parquet(s"$dir/meta").head()
     val (dim, planes, tables) =
       (m.getAs[Int]("dim"), m.getAs[Int]("planes"), m.getAs[Int]("tables"))
@@ -1002,7 +974,7 @@ object Ann {
     IndexFiles.appendStaged(spark, dir, Seq(
       ("buckets", lshBuckets(batch, dim, planes, tables)
         .withColumn("src", lit(src))
-        .routeForWrite("tbl", "sig"), Seq("src", "tbl", "sig"))),
+        .repartition(col("tbl"), col("sig")), Seq("src", "tbl", "sig"))),
       None)
   }
 
@@ -1043,10 +1015,6 @@ object Ann {
     lshRank(cb, queries, k, dim, planes, tables, metric)
   }
 
-  def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.compact(spark, dir, Map("buckets" -> Seq("src", "tbl", "sig")))
-
   // ---- sighting-window cosine admission (LSH) ----------------------------
 
   /** [[buildLshIndex]] plus a SIGHTINGS ledger — the embedding form of
@@ -1062,12 +1030,9 @@ object Ann {
     * the window like any other. */
   def buildLshIndexSighted(corpus: DataFrame, dir: String, dim: Int,
       day: String, planes: Int = 8, tables: Int = 1): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
+    IndexFamily.requireTag(day)
     buildLshIndex(corpus, dir, dim, planes, tables)
-    corpus.select(col("id")).distinct()
-      .withColumn("src", lit(day))
-      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/seen")
+    IndexFamily.lsh.writeSeen(corpus.select(col("id")), dir, day)
   }
 
   /** Admission append with the sighting touch — the cosine form of
@@ -1087,10 +1052,7 @@ object Ann {
     * batch's buckets, never shuffled) + O(admitted) append. */
   def appendToLshIndexSighted(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, day: String, tau: Double): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
-    IndexFamily.lsh.requireSighted(spark, dir)
-    IndexFamily.lsh.heal(spark, dir)
+    IndexFamily.lsh.beginAppend(spark, dir, day, sighted = true)
     val m = spark.read.parquet(s"$dir/meta").head()
     val (dim, planes, tables) =
       (m.getAs[Int]("dim"), m.getAs[Int]("planes"), m.getAs[Int]("tables"))
@@ -1111,19 +1073,13 @@ object Ann {
     // counts on the persisted frames gate the slices — isEmpty probes
     // would each pay a driver planning round over the composed plan (r19)
     val admittedN = admitted.count()
-    val seenRows = admitted.select("id").distinct()
-      .unionByName(hits.select(col("dup_of").as("id")))
-      .distinct().withColumn("src", lit(day))
-    val payloadSlices =
+    IndexFamily.lsh.commitSighted(spark, dir, day,
       if (admittedN == 0) Seq.empty
       else Seq(("buckets", lshBuckets(admitted, dim, planes, tables)
         .withColumn("src", lit(day))
-        .routeForWrite("tbl", "sig"), Seq("src", "tbl", "sig")))
-    val seenSlice =
-      if (admittedN == 0 && hitsN == 0) Seq.empty
-      else Seq(("seen", seenRows, Seq("src")))
-    if ((payloadSlices ++ seenSlice).nonEmpty)
-      IndexFiles.appendStaged(spark, dir, payloadSlices ++ seenSlice, None)
+        .repartition(col("tbl"), col("sig")), Seq("src", "tbl", "sig"))),
+      admitted.select("id").distinct(), admittedN > 0,
+      Some(hits.select(col("dup_of").as("id"))), hitsN > 0)
     hits.unpersist(); admitted.unpersist(); ()
   }
 
@@ -1342,7 +1298,7 @@ object Ann {
     cells.withColumn("src", lit("base"))
       // one task per cell before the partitioned write (guide §6) —
       // unrouted, every task writes a sliver into every cell dir
-      .routeForWrite("cell")
+      .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("src", "cell")
       .parquet(s"$dir/cells")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
@@ -1404,9 +1360,7 @@ object Ann {
     * unit (or never, matching the pre-segmented behavior). */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       batch: DataFrame, src: String = "ingest"): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, Seq("cells"))
+    IndexFamily.ivf.beginAppend(spark, dir, src, sighted = false)
     val cb = spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
     require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF index")
@@ -1415,16 +1369,11 @@ object Ann {
       .withColumn("v", col("v").cast("array<double>"))
       .filter(V.norm2(col("v")) > 0)
     val batchIds = b.select("id").distinct()
-    val replayed = IndexFiles
-      .ensureIds(spark, dir, spark.read.parquet(s"$dir/cells").select("id"))
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would duplicate search hits")
+    IndexFamily.ivf.requireNew(spark, dir, batchIds, DuplicateHits)
     IndexFiles.appendStaged(spark, dir, Seq(
       ("cells", b.select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
         .withColumn("src", lit(src))
-        .routeForWrite("cell"),
+        .repartition(col("cell")),
         Seq("src", "cell"))),
       Some(batchIds))
   }
@@ -1433,7 +1382,7 @@ object Ann {
     * form of the reference's delete-then-insert re-ingest flow
     * (milvus_connector.py:190-198 delete + insert; changed docs are
     * re-uploaded under their old ids). Batch ids already stored are
-    * tombstoned and physically purged FIRST (one [[compactIvfIndex]] —
+    * tombstoned and physically purged FIRST (one [[IndexFamily.compact]] —
     * an O(index) rewrite, the honest cost Milvus amortizes in
     * background compaction; without the purge the appended replacement
     * would share its id with a tombstone and be filtered out of every
@@ -1442,69 +1391,47 @@ object Ann {
     * stored. Previously deleted-but-not-compacted ids upsert cleanly:
     * the purge clears their tombstones, the append re-admits them. */
   def upsertIntoIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    IndexFamily.ivf.heal(spark, dir)
-    upsertVia(spark, dir, batch, indexedIds(spark, dir),
-      () => compactIvfIndex(spark, dir),
-      b => appendToIvfIndex(spark, dir, b, src))
-  }
+      dir: String, batch: DataFrame, src: String = "ingest"): Unit =
+    upsertVia(spark, dir, batch, IndexFamily.ivf,
+      appendToIvfIndex(spark, dir, _, src))
 
   /** [[upsertIntoIvfIndex]] for the sparse inverted index — same
     * purge-then-append contract over postings/doclens/stats. */
   def upsertIntoSparseIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    IndexFamily.sparse.heal(spark, dir)
-    upsertVia(spark, dir, batch,
-      indexedIds(spark, dir, payload = "postings"),
-      () => compactSparseIndex(spark, dir),
-      b => appendToSparseIndex(spark, dir, b, src))
-  }
+      dir: String, batch: DataFrame, src: String = "ingest"): Unit =
+    upsertVia(spark, dir, batch, IndexFamily.sparse,
+      appendToSparseIndex(spark, dir, _, src))
 
   /** [[upsertIntoIvfIndex]] for the BIN_FLAT index. */
   def upsertIntoBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    IndexFamily.binary.heal(spark, dir)
-    upsertVia(spark, dir, batch,
-      indexedIds(spark, dir, payload = "bits"),
-      () => compactBinaryIndex(spark, dir),
-      b => appendToBinaryIndex(spark, dir, b, src))
-  }
+      dir: String, batch: DataFrame, src: String = "ingest"): Unit =
+    upsertVia(spark, dir, batch, IndexFamily.binary,
+      appendToBinaryIndex(spark, dir, _, src))
 
   /** [[upsertIntoIvfIndex]] for the IVF-PQ index — replacements are
     * re-encoded through the STORED codebooks like any append. */
   def upsertIntoIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    IndexFamily.ivfPq.heal(spark, dir)
-    upsertVia(spark, dir, batch,
-      indexedIds(spark, dir, payload = "codes"),
-      () => compactIvfPqIndex(spark, dir),
-      b => appendToIvfPqIndex(spark, dir, b, src))
-  }
+      dir: String, batch: DataFrame, src: String = "ingest"): Unit =
+    upsertVia(spark, dir, batch, IndexFamily.ivfPq,
+      appendToIvfPqIndex(spark, dir, _, src))
 
-  /** The shared upsert body: tombstone + purge the batch's stored ids,
-    * then append the whole batch. Caller heals its family first (the
-    * stored-id read must not see a half-appended batch). */
+  /** The shared upsert body: heal (the stored-id read must not see a
+    * half-appended batch), tombstone + purge the batch's stored ids,
+    * then append the whole batch. */
   private def upsertVia(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, stored: => DataFrame,
-      compactFn: () => Unit, append: DataFrame => Unit): Unit = {
+      dir: String, batch: DataFrame, fam: IndexFamily,
+      append: DataFrame => Unit): Unit = {
+    fam.heal(spark, dir)
     if (batch.isEmpty) return
     val batchIds = batch.select(col("id")).distinct()
-    val replaced = stored.join(broadcast(batchIds), Seq("id"), "left_semi")
+    val replaced = fam.storedIds(spark, dir)
+      .join(broadcast(batchIds), Seq("id"), "left_semi")
     if (!replaced.isEmpty) {
       IndexFiles.writeTombstones(replaced, dir)
-      compactFn()
+      fam.compact(spark, dir)
     }
     append(batch)
   }
-
-  /** Physically purge tombstoned rows ([[IndexFiles.compact]] over the
-    * cells table): search results are bit-equal before and after (the
-    * search filter and the rewrite drop exactly the same rows), purged
-    * ids become appendable again, and the codebook is untouched —
-    * re-train on schedule if the surviving distribution drifts. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.compact(spark, dir, Map("cells" -> Seq("src", "cell")))
 
   /** Re-train a persisted IVF index in place — the missing half of the
     * documented append-between-retrains lifecycle ([[appendToIvfIndex]]:
@@ -1527,7 +1454,7 @@ object Ann {
     * `nlist <= 0` keeps the stored cell count. */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       nlist: Int = -1, seed: Long = 42L, trainCap: Long = -1L): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("cells"))
+    IndexFamily.ivf.heal(spark, dir)
     IndexFiles.requireLiveTable(spark, dir, "cells")
     IndexFiles.requireLiveTable(spark, dir, "centroids")
     // keep each row's src: a retrain re-assigns cells but must not
@@ -1588,7 +1515,7 @@ object Ann {
         s"corpus must exceed nlist=$nlist vectors to index"))
     cells.select(col("id"), V.quantizeSq8(col("v")).as("cz"), col("cell"))
       .withColumn("src", lit("base"))
-      .routeForWrite("cell")
+      .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("src", "cell")
       .parquet(s"$dir/cells")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
@@ -1608,9 +1535,7 @@ object Ann {
     * rebuild-then-search — spec-pinned). */
   def appendToIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, Seq("cells"))
+    IndexFamily.ivfSq8.beginAppend(spark, dir, src, sighted = false)
     val cb = spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
     require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF_SQ8 index")
@@ -1619,16 +1544,11 @@ object Ann {
       .withColumn("v", col("v").cast("array<double>"))
       .filter(V.norm2(col("v")) > 0)
     val batchIds = b.select("id").distinct()
-    val replayed = IndexFiles
-      .ensureIds(spark, dir, spark.read.parquet(s"$dir/cells").select("id"))
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would duplicate search hits")
+    IndexFamily.ivfSq8.requireNew(spark, dir, batchIds, DuplicateHits)
     IndexFiles.appendStaged(spark, dir, Seq(
       ("cells", b.select(col("id"), V.quantizeSq8(col("v")).as("cz"),
         cellOf(col("v"), cb).as("cell")).withColumn("src", lit(src))
-        .routeForWrite("cell"),
+        .repartition(col("cell")),
         Seq("src", "cell"))),
       Some(batchIds))
   }
@@ -1690,22 +1610,13 @@ object Ann {
     exactRescore(corpus, queries, cand, k, metric)
   }
 
-  /** Physically purge tombstoned rows — [[compactIvfIndex]] over the
-    * quantized cells. */
-  def compactIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.compact(spark, dir, Map("cells" -> Seq("src", "cell")))
-
   /** [[upsertIntoIvfIndex]] for the IVF_SQ8 index — replacements are
     * re-quantized and re-assigned through the stored codebook like any
     * append. */
   def upsertIntoIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    IndexFamily.ivfSq8.heal(spark, dir)
-    upsertVia(spark, dir, batch, indexedIds(spark, dir),
-      () => compactIvfSq8Index(spark, dir),
-      b => appendToIvfSq8Index(spark, dir, b, src))
-  }
+      dir: String, batch: DataFrame, src: String = "ingest"): Unit =
+    upsertVia(spark, dir, batch, IndexFamily.ivfSq8,
+      appendToIvfSq8Index(spark, dir, _, src))
 
   /** `_retrain_pending` marks an IVF-PQ retrain in flight. Unlike the
     * IVF index (raw vectors — a half-swapped retrain only dips recall),
@@ -1743,6 +1654,8 @@ object Ann {
   def retrainIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, corpus: DataFrame, nlist: Int = -1, seed: Long = 42L,
       trainCap: Long = -1L): Unit = {
+    // the bare heal, not IndexFamily.ivfPq.heal: the family heal refuses
+    // a pending retrain, and re-running the retrain is its one repair
     IndexFiles.healAppend(spark, dir, Seq("codes"))
     IndexFiles.requireLiveTable(spark, dir, "codes")
     IndexFiles.requireLiveTable(spark, dir, "centroids")
@@ -1750,7 +1663,7 @@ object Ann {
     val c = Dedup.spread(corpus)
       .withColumn("v", col("v").cast("array<double>"))
       .filter(V.norm2(col("v")) > 0)
-    val indexed = Ann.indexedIds(spark, dir, payload = "codes")
+    val indexed = IndexFamily.ivfPq.storedIds(spark, dir)
     val corpusIds = c.select("id").distinct()
     val missing = indexed.join(broadcast(corpusIds), Seq("id"), "left_anti")
       .limit(1).collect()
@@ -1809,17 +1722,10 @@ object Ann {
     require(fs.delete(marker, false), s"clear retrain marker $marker failed")
   }
 
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    requireNoPendingRetrain(spark, dir)
-    IndexFiles.compact(spark, dir, Map("codes" -> Seq("src", "cell")))
-  }
-
   def compactSparseIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    // heal with the sparse-specific stats refresh BEFORE the generic
-    // compact (whose own heal knows nothing of the derived stats file);
-    // its inner healAppend then finds nothing to do
+    // heal (with the stats refresh after a roll-forward) before any
+    // table moves — the generic compact's contract
     IndexFamily.sparse.heal(spark, dir)
     val hadTombstones = IndexFiles.tombstones(spark, dir).isDefined
     val dlPath = new org.apache.hadoop.fs.Path(s"$dir/doclens")
@@ -1832,15 +1738,6 @@ object Ann {
     // the purge shrank doclens — re-derive the 1-row global stats
     if (hadTombstones && hasDoclens) refreshSparseStats(spark, dir)
   }
-
-  /** The distinct ids a persisted guarded index (IVF / IVF-PQ / sparse)
-    * currently covers — public face of the id sidecar for callers
-    * (e.g. streaming replay checks) outside this package. `payload`
-    * names the table whose id column backs a pre-sidecar index. */
-  def indexedIds(spark: org.apache.spark.sql.SparkSession, dir: String,
-      payload: String = "cells"): DataFrame =
-    IndexFiles.storedIds(spark, dir,
-      spark.read.parquet(s"$dir/$payload").select("id").distinct())
 
   /** Search a persisted IVF index. Same results as [[ivfTopK]] with the
     * build's parameters; only the probed cells' partitions are read.
@@ -2241,7 +2138,7 @@ object Ann {
         s"corpus must exceed ksub=$ksub vectors to index"))
     res.select(col("id"), col("cell"), pqCodes(col("res"), cbs).as("codes"))
       .withColumn("src", lit("base"))
-      .routeForWrite("cell")
+      .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("src", "cell")
       .parquet(s"$dir/codes")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
@@ -2315,10 +2212,8 @@ object Ann {
     * [[IndexFiles.appendStaged]]. */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    requireNoPendingRetrain(spark, dir)
-    IndexFiles.healAppend(spark, dir, Seq("codes"))
+    // the family heal refuses while a retrain is pending
+    IndexFamily.ivfPq.beginAppend(spark, dir, src, sighted = false)
     val centroids = spark.read.parquet(s"$dir/centroids")
     val cb = centroids.orderBy("cell").collect()
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
@@ -2329,18 +2224,13 @@ object Ann {
       .withColumn("v", col("v").cast("array<double>"))
       .filter(V.norm2(col("v")) > 0)
     val batchIds = b.select("id").distinct()
-    val replayed = IndexFiles
-      .ensureIds(spark, dir, spark.read.parquet(s"$dir/codes").select("id"))
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would duplicate search hits")
+    IndexFamily.ivfPq.requireNew(spark, dir, batchIds, DuplicateHits)
     val cells = b.select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
     IndexFiles.appendStaged(spark, dir, Seq(
       ("codes", pqResiduals(cells, centroids)
         .select(col("id"), col("cell"), pqCodes(col("res"), cbs).as("codes"))
         .withColumn("src", lit(src))
-        .routeForWrite("cell"),
+        .repartition(col("cell")),
         Seq("src", "cell"))),
       Some(batchIds))
   }

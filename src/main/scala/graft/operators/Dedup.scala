@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{HashFunctions => H, TextFunctions => T, VectorFunctions => V}
 import org.apache.spark.sql.graft.{SketchExpressions => SK}
-import graft.operators.IndexFiles.WriteRouting
 import org.apache.spark.sql.types.StructType
 
 /** Deduplication operators for training-data pipelines.
@@ -214,7 +213,7 @@ object Dedup {
     val n = inc.count()
     require(n > 0, "buildLineDfIndex: input corpus is empty")
     val bits = bloomBits(s, n, fpp)
-    inc.routeForWrite("h")
+    inc.repartition(col("h"))
       .write.partitionBy("src").mode("overwrite").parquet(s"$dir/lines")
     inc.agg(SK.bloomAgg(col("h"), n, bits).as("bloom"))
       .select(col("bloom"), lit(n).as("n_items"), lit(fpp).as("fpp"),
@@ -234,9 +233,7 @@ object Dedup {
   def appendToLineDfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       src: String, sep: String = "\n"): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFiles.healAppend(spark, dir, Seq("lines"))
+    IndexFamily.linedf.beginAppend(spark, dir, src, sighted = false)
     val replayed = !spark.read.parquet(s"$dir/lines")
       .filter(col("src") === src).isEmpty
     if (replayed) return
@@ -255,7 +252,7 @@ object Dedup {
           .toDF("bloom", "n_items", "fpp", "num_bits"),
         Seq.empty)
       IndexFiles.appendStaged(spark, dir,
-        Seq(("lines", inc.routeForWrite("h"), Seq("src"))), None)
+        Seq(("lines", inc.repartition(col("h")), Seq("src"))), None)
     }
     inc.unpersist(); ()
   }
@@ -272,7 +269,7 @@ object Dedup {
     * stored design fpp. */
   def rebuildLineDfSidecar(spark: org.apache.spark.sql.SparkSession,
       dir: String, fpp: Double = 0.01): Unit = {
-    IndexFiles.healAppend(spark, dir, Seq("lines"))
+    IndexFamily.linedf.heal(spark, dir)
     val hs = spark.read.parquet(s"$dir/lines").select("h").distinct()
     val n = hs.count()
     require(n > 0, "rebuildLineDfSidecar: stored lines table is empty")
@@ -695,7 +692,7 @@ object Dedup {
     require(n > 0,
       "buildContainmentIndex: no shingles — corpus empty or every doc shorter than w")
     val bits = bloomBits(s, n, fpp)
-    shc.routeForWrite("sh")
+    shc.repartition(col("sh"))
       .write.partitionBy("src").mode("overwrite").parquet(s"$dir/shingles")
     sizes.write.partitionBy("src").mode("overwrite").parquet(s"$dir/sizes")
     // meta pins the shingle space: a probe/append re-deriving shingles
@@ -734,18 +731,7 @@ object Dedup {
   def appendToContainmentIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       src: String): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFamily.containment.heal(spark, dir)
-    // the sighted families' mirror guard: an unsighted append into a
-    // SIGHTED index stores docs no sighting day contains — entries
-    // retireContainmentSeenWindow could never retire
-    val seenP = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(!seenP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(seenP),
-      s"$dir records sightings — append with " +
-        "appendToContainmentIndexSighted (an unsighted append stores " +
-        "docs no sighting window could ever retire)")
+    IndexFamily.containment.beginAppend(spark, dir, src, sighted = false)
     val (w, maxDf) = containmentMeta(spark, dir)
     val stored = IndexFiles.ensureIds(spark, dir,
       spark.read.parquet(s"$dir/shingles").select("id").distinct())
@@ -757,7 +743,7 @@ object Dedup {
     val batchSh = shc.select("sh").distinct().persist()
     mergeContainmentBloom(spark, dir, readBloom(spark, dir), batchSh)
     IndexFiles.appendStaged(spark, dir,
-      Seq(("shingles", shc.routeForWrite("sh"), Seq("src")),
+      Seq(("shingles", shc.repartition(col("sh")), Seq("src")),
         ("sizes", sizes, Seq("src"))),
       Some(fresh.select("id").distinct()))
     batchSh.unpersist(); shc.unpersist(); fresh.unpersist(); ()
@@ -948,11 +934,6 @@ object Dedup {
     (d, shB, best, histDrops, Seq(shB, cand) ++ pinsB)
   }
 
-  def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.compact(spark, dir,
-      Map("shingles" -> Seq("src"), "sizes" -> Seq("src")))
-
   // ---- sighting-window containment dedup ---------------------------------
 
   /** Merge a batch's distinct shingle hashes into the containment
@@ -994,12 +975,9 @@ object Dedup {
   def buildContainmentIndexSighted(df: DataFrame, idCol: String,
       textCol: String, dir: String, day: String, w: Int = 8,
       maxDf: Option[Int] = None, fpp: Double = 0.01): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
+    IndexFamily.requireTag(day)
     buildContainmentIndex(df, idCol, textCol, dir, w, maxDf, fpp)
-    df.select(col(idCol).as("id")).distinct()
-      .withColumn("src", lit(day))
-      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/seen")
+    IndexFamily.containment.writeSeen(df.select(col(idCol).as("id")), dir, day)
   }
 
   /** Admission append with the sighting touch — the containment form
@@ -1021,22 +999,13 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       day: String, tau: Double = 0.8): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
-    IndexFamily.containment.requireSighted(spark, dir)
-    IndexFamily.containment.heal(spark, dir)
-    // replayed-id guard (the minhash-sighted convention): re-crawls of
-    // a KNOWN doc arrive under fresh ids and reject as contained; a
-    // replayed id would double its shingle rows and corrupt every
-    // future intersection count
-    val stored = IndexFiles.ensureIds(spark, dir,
-      spark.read.parquet(s"$dir/shingles").select("id").distinct())
-    val batchAll = spread(batch).select(col(idCol).as("id")).distinct()
-    val replayed = stored.join(broadcast(batchAll), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
-        "exists in the index — replayed ids would corrupt the " +
-        "intersection counts")
+    IndexFamily.containment.beginAppend(spark, dir, day, sighted = true)
+    // replayed-id guard: re-crawls of a KNOWN doc arrive under fresh ids
+    // and reject as contained; a replayed id would double its shingle
+    // rows and corrupt every future intersection count
+    IndexFamily.containment.requireNew(spark, dir,
+      spread(batch).select(col(idCol).as("id")).distinct(),
+      "replayed ids would corrupt the intersection counts")
     // pinDecision: the verdict's batch-vs-history drop pairs come back
     // eagerly localCheckpoint'ed — the expensive frame here (history-
     // candidate join + exact intersection verify) has THREE readers in
@@ -1069,24 +1038,16 @@ object Dedup {
     // one-pass emptiness check
     val admShN = admittedSh.count()
     mergeContainmentBloom(spark, dir, bloom, admittedSh.select("sh").distinct())
-    val seenRows = admittedIds
-      .unionByName(histDrops.select(col("id_b").as("id")))
-      .distinct().withColumn("src", lit(day))
-    val payloadSlices =
+    // zero-SHINGLE admitted docs still enter the ids sidecar (the
+    // buildContainmentIndex rule): the journal is admittedIds, not the
+    // payload's ids
+    IndexFamily.containment.commitSighted(spark, dir, day,
       if (admShN == 0) Seq.empty
       else Seq(
-        ("shingles", admittedSh.routeForWrite("sh"), Seq("src")),
-        ("sizes", sizes, Seq("src")))
-    val seenSlice =
-      // seenRows = admitted ids ∪ touched stored ids — empty iff both are
-      if (admIdsN == 0 && histDropsN == 0) Seq.empty
-      else Seq(("seen", seenRows, Seq("src")))
-    if ((payloadSlices ++ seenSlice).nonEmpty)
-      IndexFiles.appendStaged(spark, dir, payloadSlices ++ seenSlice,
-        // zero-SHINGLE admitted docs still enter the ids sidecar (the
-        // buildContainmentIndex rule), so the guard is admittedIds,
-        // not the payload's ids
-        if (admIdsN == 0) None else Some(admittedIds))
+        ("shingles", admittedSh.repartition(col("sh")), Seq("src")),
+        ("sizes", sizes, Seq("src"))),
+      admittedIds, admIdsN > 0,
+      Some(histDrops.select(col("id_b").as("id"))), histDropsN > 0)
     pins.foreach(_.unpersist())
     // histDrops is checkpoint-backed (no cache entry to drop); its RDD
     // blocks are reclaimed by the ContextCleaner once unreferenced
@@ -2272,8 +2233,7 @@ object Dedup {
     * mode, same guard as [[appendToLineDfIndex]]). */
   def appendToDomainCapLedger(spark: org.apache.spark.sql.SparkSession,
       dir: String, verdicts: DataFrame, src: String): Unit = {
-    require(src.nonEmpty, "append src must be a non-empty tag")
-    IndexFiles.healAppend(spark, dir, Seq("counts", "admitted"))
+    IndexFamily.domainCap.beginAppend(spark, dir, src, sighted = false)
     val replayed = !domainCapCounts(spark, dir)
       .filter(col("src") === src).isEmpty
     if (replayed) return
@@ -2296,8 +2256,8 @@ object Dedup {
     * line-df/containment layout). */
   private def minhashSlices(sigs: DataFrame, sh: DataFrame,
       src: String): Seq[(String, DataFrame, Seq[String])] = Seq(
-    ("sigs", sigs.withColumn("src", lit(src)).routeForWrite("sig"), Seq("src")),
-    ("shingles", sh.withColumn("src", lit(src)).routeForWrite("h"), Seq("src")))
+    ("sigs", sigs.withColumn("src", lit(src)).repartition(col("sig")), Seq("src")),
+    ("shingles", sh.withColumn("src", lit(src)).repartition(col("h")), Seq("src")))
 
   /** The stored (w, numHashes, bands, maxDf) minhash parameters. */
   private[graft] def minhashMeta(spark: org.apache.spark.sql.SparkSession,
@@ -2366,28 +2326,11 @@ object Dedup {
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
       src: String): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFamily.minhash.heal(spark, dir)
-    // the exact family's mirror guard: an unsighted append into a
-    // SIGHTED index stores docs no sighting day contains — entries
-    // retireMinhashSeenWindow could never retire
-    val seenP = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(!seenP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(seenP),
-      s"$dir records sightings — append with appendToMinhashIndexSighted " +
-        "(an unsighted append stores docs no sighting window could ever " +
-        "retire)")
+    IndexFamily.minhash.beginAppend(spark, dir, src, sighted = false)
     val (w, numHashes, bands, maxDf) = minhashMeta(spark, dir)
     val newSh = shingleHashSet(newDf, idCol, textCol, w, maxDf).cache()
     val batchIds = newSh.select("id").distinct()
-    val replayed = IndexFiles
-      .ensureIds(spark, dir,
-        spark.read.parquet(s"$dir/shingles").select("id").distinct())
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would corrupt the Jaccard verify")
+    IndexFamily.minhash.requireNew(spark, dir, batchIds, JaccardReplay)
     IndexFiles.appendStaged(spark, dir, minhashSlices(
         bandSignatures(minhashes(newSh, numHashes), bands, numHashes / bands),
         newSh, src),
@@ -2395,19 +2338,7 @@ object Dedup {
     newSh.unpersist()
   }
 
-  /** The distinct doc ids a persisted minhash index currently covers —
-    * the compact sidecar when present, else the shingle table's id
-    * column. Public face of the id set for callers (e.g. streaming
-    * replay checks) that can't reach the package-private sidecar. */
-  def indexedIds(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    IndexFiles.storedIds(spark, dir,
-      spark.read.parquet(s"$dir/shingles").select("id").distinct())
-
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.compact(spark, dir,
-      Map("sigs" -> Seq("src"), "shingles" -> Seq("src")))
+  private val JaccardReplay = "replayed ids would corrupt the Jaccard verify"
 
   // ---- sighting-window minhash dedup -------------------------------------
 
@@ -2425,12 +2356,9 @@ object Dedup {
       textCol: String, dir: String, day: String, w: Int = 8,
       numHashes: Int = 12, bands: Int = 4,
       maxDf: Option[Int] = None): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
+    IndexFamily.requireTag(day)
     buildMinhashIndex(df, idCol, textCol, dir, w, numHashes, bands, maxDf)
-    df.select(col(idCol).as("id")).distinct()
-      .withColumn("src", lit(day))
-      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/seen")
+    IndexFamily.minhash.writeSeen(df.select(col(idCol).as("id")), dir, day)
   }
 
   /** Admission append with the sighting touch: the batch dedups
@@ -2448,10 +2376,7 @@ object Dedup {
   def appendToMinhashIndexSighted(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
       day: String, tau: Double = 0.5): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
-    IndexFamily.minhash.requireSighted(spark, dir)
-    IndexFamily.minhash.heal(spark, dir)
+    IndexFamily.minhash.beginAppend(spark, dir, day, sighted = true)
     // inlined [[dedupAgainstIndex]] rather than called: the batch's
     // shingle sets and band signatures feed BOTH the verdict probe and
     // the admitted append — computing them once and FILTERING for the
@@ -2464,12 +2389,8 @@ object Dedup {
       IndexFiles.readOrEmpty(spark, s"$dir/shingles", StructType(Seq(
         StructField("id", newDf.schema(idCol).dataType),
         StructField("h", LongType)))))
-    val replayed = newSh.select("id").distinct()
-      .join(IndexFiles.storedIds(spark, dir, oldSh.select("id").distinct()),
-        "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would corrupt the Jaccard verify")
+    IndexFamily.minhash.requireNew(spark, dir, newSh.select("id").distinct(),
+      JaccardReplay)
     val newSig = bandSignatures(minhashes(newSh, numHashes),
       bands, numHashes / bands).persist()
     val oldSig = IndexFiles.dropTombstones(spark, dir,
@@ -2502,21 +2423,13 @@ object Dedup {
     // pay a driver planning round over the composed plan (r19)
     val batchIds = admittedSh.select("id").distinct().persist()
     val batchIdsN = batchIds.count()
-    val seenRows = batchIds
-      .unionByName(pairs.select(col("id_old").as("id")))
-      .distinct().withColumn("src", lit(day))
-    val payloadSlices =
+    IndexFamily.minhash.commitSighted(spark, dir, day,
       // admittedSh nonempty ⟺ some admitted id survives (batchIds is
       // its own id projection)
       if (batchIdsN == 0) Seq.empty
-      else minhashSlices(admittedSig, admittedSh, day)
-    val seenSlice =
-      // seenRows = admitted ids ∪ matched stored ids — empty iff both are
-      if (batchIdsN == 0 && pairsN == 0) Seq.empty
-      else Seq(("seen", seenRows, Seq("src")))
-    if ((payloadSlices ++ seenSlice).nonEmpty)
-      IndexFiles.appendStaged(spark, dir, payloadSlices ++ seenSlice,
-        if (payloadSlices.isEmpty) None else Some(batchIds))
+      else minhashSlices(admittedSig, admittedSh, day),
+      batchIds, batchIdsN > 0,
+      Some(pairs.select(col("id_old").as("id"))), pairsN > 0)
     newSh.unpersist(); newSig.unpersist(); pairs.unpersist()
     batchIds.unpersist(); ()
   }
@@ -2593,11 +2506,10 @@ object Dedup {
         StructField("id", newDf.schema(idCol).dataType),
         StructField("h", LongType)))))
     val replayed = newSh.select("id").distinct()
-      .join(IndexFiles.storedIds(spark, dir, oldSh.select("id").distinct()),
-        "id").limit(1).collect()
+      .join(IndexFamily.minhash.storedIds(spark, dir), "id").limit(1).collect()
     require(replayed.isEmpty,
       s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        "in the index — replayed ids would corrupt the Jaccard verify")
+        s"in the index — $JaccardReplay")
     val newSig = bandSignatures(minhashes(newSh, numHashes), bands, numHashes / bands)
     // tombstoned docs ([[IndexFiles.writeTombstones]]) neither candidate
     // nor verify — bit-equal to the physically compacted index
@@ -2705,7 +2617,7 @@ object Dedup {
     delp.getFileSystem(s.sparkContext.hadoopConfiguration)
       .delete(delp, true)
     val bits = bloomBits(s, n, fpp)
-    fps.routeForWrite("pfx").withColumn("src", lit("base"))
+    fps.repartition(col("pfx")).withColumn("src", lit("base"))
       .write.partitionBy("src", "pfx").mode("overwrite").parquet(s"$dir/fps")
     fps.agg(SK.bloomAgg(xxhash64(col("fp")), n, bits).as("bloom"))
       .select(col("bloom"), lit(n).as("n_items"), lit(fpp).as("fpp"),
@@ -2740,22 +2652,7 @@ object Dedup {
   private def appendExactCore(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
       src: String, sighted: Boolean): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFamily.exact.heal(spark, dir)
-    // the mirror of requireSighted: an unsighted append into a SIGHTED
-    // index would store fps with a src tag but no `seen` row — no
-    // sighting day ever contains them, so the sighting window could
-    // never retire them (immortal entries that silently break the
-    // "seen in the last N days" contract). Refuse loudly instead.
-    if (!sighted) {
-      val seenP = new org.apache.hadoop.fs.Path(s"$dir/seen")
-      require(!seenP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(seenP),
-        s"$dir records sightings — append with appendToExactIndexSighted " +
-          "(an unsighted append writes fps no sighting window could ever " +
-          "retire)")
-    }
+    IndexFamily.exact.beginAppend(spark, dir, src, sighted)
     val meta = readBloom(spark, dir)
     val (bytes, items, bits) = (meta.getAs[Array[Byte]]("bloom"),
       meta.getAs[Long]("n_items"), meta.getAs[Long]("num_bits"))
@@ -2806,23 +2703,20 @@ object Dedup {
           .toDF("bloom", "n_items", "fpp", "num_bits"),
         Seq.empty)
     }
+    val fpsSlice =
+      if (added > 0)
+        Seq(("fps", newFps.repartition(col("pfx"))
+          .withColumn("src", lit(src)), Seq("src", "pfx")))
+      else Seq.empty
     // the sighted variant records EVERY batch fp — novel and replayed
     // alike (touch-on-reject is the whole point: a re-seen text's clock
     // resets even though its stored row is untouched) — as this day's
-    // `seen` segment, journaled in the SAME appendStaged commit as the
-    // novel fps so a crash can never land one without the other
-    val fpsSlice =
-      if (added > 0)
-        Seq(("fps", newFps.routeForWrite("pfx")
-          .withColumn("src", lit(src)), Seq("src", "pfx")))
-      else Seq.empty
-    val seenSlice =
-      if (sighted)
-        Seq(("seen", batchFps.select(col("fp"))
-          .withColumn("src", lit(src)), Seq("src")))
-      else Seq.empty
-    if ((fpsSlice ++ seenSlice).nonEmpty)
-      IndexFiles.appendStaged(spark, dir, fpsSlice ++ seenSlice, None)
+    // `seen` segment, in the SAME commit as the novel fps
+    if (sighted)
+      IndexFamily.exact.commitSighted(spark, dir, src, fpsSlice,
+        batchFps.select(col("fp")), admittedAny = true)
+    else if (fpsSlice.nonEmpty)
+      IndexFiles.appendStaged(spark, dir, fpsSlice, None)
     batchFps.unpersist(); newFps.unpersist(); ()
   }
 
@@ -2844,12 +2738,10 @@ object Dedup {
     * seen only at build time are not immortal). */
   def buildExactIndexSighted(df: DataFrame, idCol: String, textCol: String,
       dir: String, day: String, fpp: Double = 0.01): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
+    IndexFamily.requireTag(day)
     buildExactIndex(df, idCol, textCol, dir, fpp)
-    df.select(T.fingerprintMd5(col(textCol)).as("fp")).distinct()
-      .withColumn("src", lit(day))
-      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/seen")
+    IndexFamily.exact.writeSeen(
+      df.select(T.fingerprintMd5(col(textCol)).as("fp")), dir, day)
   }
 
   /** [[appendToExactIndex]] with the sighting touch: novel fps extend
@@ -2859,10 +2751,8 @@ object Dedup {
     * [[IndexFamily.retireSeenWindow]] later keeps differs. */
   def appendToExactIndexSighted(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
-      day: String): Unit = {
-    IndexFamily.exact.requireSighted(spark, dir)
+      day: String): Unit =
     appendExactCore(spark, dir, newDf, idCol, textCol, day, sighted = true)
-  }
 
   /** Set-bit fraction and estimated false-positive rate of a
     * serialized Bloom sidecar — the saturation telemetry

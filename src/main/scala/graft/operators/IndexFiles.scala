@@ -15,40 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Indexes built before the sidecar existed are backfilled lazily:
   * [[ensureIds]] materializes the fallback projection once on the first
   * append, then every later guard reads the sidecar.
+  *
+  * Payload writes `repartition` on their partition column (`pfx`,
+  * `cell`: one writer task per value) or on the row hash key (`h`,
+  * `sh`, `sig`, `key`: a src-partitioned segment lands as at most
+  * `spark.sql.shuffle.partitions` parallel files) before the hive
+  * partitionBy write — unrouted, every task writes a sliver into every
+  * partition dir it touches: tasks×dirs tiny files.
   */
 private[graft] object IndexFiles {
-
-  /** Hash-route rows to writer tasks ahead of a hive partitionBy write
-    * (guide §6: unrouted, every task writes a sliver into every
-    * partition dir it touches — tasks×dirs tiny files), the
-    * write.distribution-mode=hash shape with bounded file counts.
-    * Routed on a partition column (`pfx`, `cell`): one writer task per
-    * value. Routed on a row hash key (`h`, `sh`, `sig`, `key` — the
-    * src-partitioned dedup payloads): a segment is at most
-    * `spark.sql.shuffle.partitions` parallel files in its `src=` dir.
-    * `graft.write.saltBuckets` (session conf, default 1) adds a
-    * deterministic row-hash salt with N values so a HOT partition can
-    * fan out across up to N writer tasks on a real cluster — a bare
-    * repartition(cols) is a strict hash requirement AQE cannot split,
-    * so a skewed value otherwise funnels through one straggler task
-    * (ADVICE r19). The salt derives from xxhash64 of the row's
-    * columns, never rand(): a re-run map task must reproduce the same
-    * row-to-partition assignment or a fetch-failure retry duplicates/
-    * loses rows (SPARK-38388). */
-  def routeForWrite(df: DataFrame, cols: String*): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val n = df.sparkSession.conf.get("graft.write.saltBuckets", "1").toInt
-    require(n >= 1, s"graft.write.saltBuckets must be >= 1: $n")
-    if (n == 1) df.repartition(cols.map(col): _*)
-    else df.repartition(
-      cols.map(col) :+ pmod(xxhash64(df.columns.map(col): _*), lit(n)): _*)
-  }
-
-  /** `df.routeForWrite("sh")` sugar for the pre-write call sites. */
-  implicit class WriteRouting(private val df: DataFrame) extends AnyVal {
-    def routeForWrite(cols: String*): DataFrame =
-      IndexFiles.routeForWrite(df, cols: _*)
-  }
 
   private def exists(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(s"$dir/ids")
@@ -107,9 +82,10 @@ private[graft] object IndexFiles {
   private def staging(dir: String, table: String) =
     new Path(s"$dir/$table/$StagingName")
 
-  /** Repair an interrupted [[appendStaged]] under `dir` — called at the
-    * head of every append (and by the streaming drivers before their
-    * witnesses). The journal's existence partitions every crash window
+  /** Repair an interrupted [[appendStaged]] under `dir` — run through
+    * [[IndexFamily.heal]] at the head of every append, compaction and
+    * retire (and by the streaming drivers before their witnesses). The
+    * journal's existence partitions every crash window
     * into exactly two cases: no journal → staging may be incomplete and
     * nothing is visible yet, so leftovers are discarded (roll BACK);
     * journal present → every staged table was completely written, so
@@ -159,8 +135,9 @@ private[graft] object IndexFiles {
     * documented half-appended-index window of the bare
     * `write.mode("append")` form is gone. `batchIds` is None for
     * unguarded indexes (LSH) — the journal is then an empty commit
-    * marker and no sidecar is touched. Callers run [[healAppend]] and
-    * their replayed-id guard BEFORE building the staged frames. */
+    * marker and no sidecar is touched. Callers run
+    * [[IndexFamily.beginAppend]] and their replayed-id guard
+    * ([[IndexFamily.requireNew]]) BEFORE building the staged frames. */
   def appendStaged(spark: SparkSession, dir: String,
       tables: Seq[(String, org.apache.spark.sql.DataFrame, Seq[String])],
       batchIds: Option[DataFrame]): Unit = {
@@ -540,17 +517,14 @@ private[graft] object IndexFiles {
     * no crash window loses data), shrink the ids sidecar when the
     * index keeps one, drop `dir/deleted`. `payloads` maps table name →
     * partition columns (empty for unpartitioned). No-op when nothing
-    * was deleted. */
+    * was deleted. Callers heal the whole family first
+    * ([[IndexFamily.compact]]): an interrupted append's staged batch
+    * lives INSIDE the payload tables, and replaceTable's rename-aside
+    * would silently destroy it while its journal survives — the next
+    * heal would then roll the journal's ids forward with no payload
+    * behind them (a lying sidecar). */
   def compact(spark: SparkSession, dir: String,
       payloads: Map[String, Seq[String]]): Unit = {
-    // an interrupted append's staged batch lives INSIDE the payload
-    // tables, and its journal holds ids not yet in the sidecar.
-    // replaceTable's rename-aside would silently destroy the staged
-    // files while the journal survives — the next healAppend would
-    // then roll the journal's ids forward with no payload behind them
-    // (a lying sidecar: ids that reject re-appends but never match a
-    // search). Heal first, unconditionally, before any table moves.
-    healAppend(spark, dir, payloads.keys.toSeq)
     tombstones(spark, dir).foreach { dead =>
       val fs = fsOf(spark, dir)
       payloads.keys.foreach(requireLiveTable(spark, dir, _))
@@ -658,17 +632,18 @@ private[graft] object IndexFiles {
   }
 }
 
-/** One persisted index family's on-disk lifecycle — retire, heal, ids
-  * rebuild, the sighting window — written once over what the family
-  * keeps on disk. The 12 families are the values of the companion
-  * object; [[Maintenance]] and every caller reach a family's lifecycle
-  * through them. Build, the append verdicts, search and compaction
-  * stay family code.
+/** One persisted index family's on-disk lifecycle — the append gate,
+  * the sighted commit, heal, compaction, retire, ids rebuild, the
+  * sighting window — written once over what the family keeps on disk.
+  * The 12 families are the values of the companion object;
+  * [[Maintenance]] and every caller reach a family's lifecycle through
+  * them. Build bodies, the append verdicts and search stay family code.
   *
   * @param name        the family name [[Maintenance]] specs use
-  * @param payload     the `src=`-segmented payload tables; the head is
-  *                    the one segment listings walk and, for a family
-  *                    with a delete model, the live table
+  * @param payload     the `src=`-segmented payload tables with their
+  *                    partition columns; the head is the one segment
+  *                    listings walk and, for a family with a delete
+  *                    model, the live table
   * @param idsFrom     the table the `ids` sidecar is rebuilt from (None
   *                    for families that keep no sidecar)
   * @param deletes     the tombstone model (None: the history mutates
@@ -684,16 +659,18 @@ private[graft] object IndexFiles {
   */
 final case class IndexFamily(
     name: String,
-    payload: Seq[String],
+    payload: Seq[(String, Seq[String])],
     idsFrom: Option[String] = None,
     deletes: Option[IndexFamily.Deletes] = None,
     requireSurvivor: Boolean = true,
     afterRetire: (SparkSession, String) => Unit = (_, _) => (),
     afterHeal: (SparkSession, String, Boolean) => Unit = (_, _, _) => (),
     sighting: Option[IndexFamily.Sighting] = None) {
-  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.functions.{broadcast, col, lit}
 
   def sighted: Boolean = sighting.isDefined
+
+  private def tables: Seq[String] = payload.map(_._1)
 
   private def hasSeen(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(s"$dir/seen")
@@ -705,7 +682,7 @@ final case class IndexFamily(
     * a crashed SIGHTED append must roll its seen segment forward no
     * matter which entry point heals next. */
   def healTables(spark: SparkSession, dir: String): Seq[String] =
-    if (hasSeen(spark, dir)) payload :+ "seen" else payload
+    if (hasSeen(spark, dir)) tables :+ "seen" else tables
 
   /** Repair an interrupted append without appending a new batch —
     * searches are read-only by contract and refuse a pending journal,
@@ -716,15 +693,96 @@ final case class IndexFamily(
     afterHeal(spark, dir,
       IndexFiles.healAppend(spark, dir, healTables(spark, dir)))
 
+  /** The gate every append into this family passes before it reads
+    * anything: the segment tag must be an append tag
+    * ([[IndexFamily.requireTag]]); a sighted append needs the ledger
+    * ([[requireSighted]]), and an unsighted append into a dir that
+    * records sightings is refused — it would store entries no sighting
+    * day contains, which the window could never retire. Then [[heal]]. */
+  def beginAppend(spark: SparkSession, dir: String, tag: String,
+      sighted: Boolean): Unit = {
+    IndexFamily.requireTag(tag)
+    if (sighted) requireSighted(spark, dir)
+    else require(!hasSeen(spark, dir),
+      s"$dir records sightings — append with appendTo${name.capitalize}" +
+        "IndexSighted (an unsighted append stores entries no sighting " +
+        "window could ever retire)")
+    heal(spark, dir)
+  }
+
+  /** The distinct ids of the [[idsFrom]] table. */
+  private def idsOf(spark: SparkSession, dir: String): DataFrame = {
+    val t = idsFrom.getOrElse(throw new IllegalArgumentException(
+      s"family $name keeps no ids sidecar"))
+    spark.read.parquet(s"$dir/$t").select("id").distinct()
+  }
+
+  /** The stored id set, tombstoned ids included: the sidecar, or the
+    * [[idsFrom]] table's ids for a pre-sidecar index. Read-only. */
+  def storedIds(spark: SparkSession, dir: String): DataFrame =
+    IndexFiles.storedIds(spark, dir, idsOf(spark, dir))
+
+  /** The replayed-id guard: fail when any of `batchIds` is already
+    * stored; `why` names what the replay would corrupt. The sidecar is
+    * backfilled first on a pre-sidecar index ([[IndexFiles.ensureIds]]),
+    * so the journal's sidecar extension leaves it complete. Runs after
+    * [[beginAppend]], before the batch lands. */
+  def requireNew(spark: SparkSession, dir: String, batchIds: DataFrame,
+      why: String): Unit = {
+    val replayed = IndexFiles.ensureIds(spark, dir, idsOf(spark, dir))
+      .join(broadcast(batchIds), "id").limit(1).collect()
+    require(replayed.isEmpty,
+      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
+        s"exists in the index — $why")
+  }
+
+  /** A sighted build's `seen` ledger: the distinct `keys`, all sighted
+    * on the build `day` (which ages out of the window like any other). */
+  def writeSeen(keys: DataFrame, dir: String, day: String): Unit =
+    keys.distinct().withColumn("src", lit(day))
+      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/seen")
+
+  /** Commit a sighted append in ONE [[IndexFiles.appendStaged]]: the
+    * payload `slices` plus the day's `seen` slice — the `admitted` keys
+    * and the stored keys the rejections `touched` (their clocks reset)
+    * — so a crash can never land entries without their sightings. The
+    * `*Any` flags come from the caller's counts of persisted frames:
+    * they skip an empty seen slice, and a commit with nothing to write,
+    * without an emptiness probe. The ids journal is `admitted` when the
+    * family keeps a sidecar and anything was admitted. */
+  def commitSighted(spark: SparkSession, dir: String, day: String,
+      slices: Seq[(String, DataFrame, Seq[String])],
+      admitted: DataFrame, admittedAny: Boolean,
+      touched: Option[DataFrame] = None, touchedAny: Boolean = false): Unit = {
+    val keys = touched.fold(admitted)(admitted.unionByName(_).distinct())
+    val seen =
+      if (admittedAny || touchedAny)
+        Seq(("seen", keys.withColumn("src", lit(day)), Seq("src")))
+      else Nil
+    if ((slices ++ seen).nonEmpty)
+      IndexFiles.appendStaged(spark, dir, slices ++ seen,
+        if (admittedAny && idsFrom.isDefined) Some(admitted) else None)
+  }
+
+  /** Physically purge tombstones: the family's own compactor when its
+    * delete model has one, else one [[heal]] — payload AND `seen`, so a
+    * crashed sighted batch keeps its sightings — then
+    * [[IndexFiles.compact]] over the payload tables. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    delModel.compact match {
+      case Some(own) => own(spark, dir)
+      case None =>
+        heal(spark, dir)
+        IndexFiles.compact(spark, dir, payload.toMap)
+    }
+
   /** Rewrite the ids sidecar from the surviving payload — the O(index)
     * scan a retire runs after dropping segments, and the recovery call
     * for a crash that left the sidecar stale. No-op for families that
     * keep no sidecar. */
   def rebuildIds(spark: SparkSession, dir: String): Unit =
-    idsFrom.foreach { t =>
-      IndexFiles.replaceTable(spark, dir, "ids",
-        spark.read.parquet(s"$dir/$t").select("id").distinct(), Seq.empty)
-    }
+    if (idsFrom.isDefined)
+      IndexFiles.replaceTable(spark, dir, "ids", idsOf(spark, dir), Seq.empty)
 
   private def delModel: IndexFamily.Deletes = deletes.getOrElse(
     throw new IllegalArgumentException(s"family $name has no tombstone model"))
@@ -735,7 +793,7 @@ final case class IndexFamily(
   def liveKeys(spark: SparkSession, dir: String): DataFrame = {
     val d = delModel
     d.live.map(_(spark, dir)).getOrElse(IndexFiles.storedIds(spark, dir,
-      spark.read.parquet(s"$dir/${payload.head}")
+      spark.read.parquet(s"$dir/${tables.head}")
         .select(d.key.map(col): _*).distinct()))
   }
 
@@ -770,7 +828,7 @@ final case class IndexFamily(
   def retireSrcs(spark: SparkSession, dir: String, srcs: Seq[String],
       strict: Boolean = true): Unit = {
     heal(spark, dir)
-    if (IndexFiles.retireSrcsPartitions(spark, dir, payload, srcs,
+    if (IndexFiles.retireSrcsPartitions(spark, dir, tables, srcs,
         requireSurvivor = requireSurvivor, strict = strict)) {
       rebuildIds(spark, dir)
       deletes.foreach { d =>
@@ -800,7 +858,7 @@ final case class IndexFamily(
   def retireWindow(spark: SparkSession, dir: String,
       keep: Int): Seq[String] = {
     require(keep >= 0, s"keep must be non-negative: $keep")
-    val doomed = IndexFiles.listSrcs(spark, dir, payload.head)
+    val doomed = IndexFiles.listSrcs(spark, dir, tables.head)
       .filterNot(_ == "base").dropRight(keep)
     if (doomed.nonEmpty) retireSrcs(spark, dir, doomed)
     doomed
@@ -889,20 +947,28 @@ final case class IndexFamily(
 
 object IndexFamily {
 
-  /** A family's tombstone model: the tombstone table, the compactor
-    * that purges it, the key a tombstone row carries, and — when the
-    * live identity rows are not the distinct key of the live table —
-    * their reader. */
+  /** Refuse an empty segment tag or the build's own "base": every
+    * append names its segment, and every sighted build its day, with a
+    * tag retirement can drop. */
+  def requireTag(tag: String): Unit =
+    require(tag.nonEmpty && tag != "base",
+      s"tag must be a non-empty tag other than 'base': '$tag'")
+
+  /** A family's tombstone model: the tombstone table, the key a
+    * tombstone row carries, the reader of the live identity rows when
+    * they are not the distinct key of the live table, and the family's
+    * own compactor where the generic [[IndexFamily.compact]] does not
+    * fit. */
   final case class Deletes(table: String,
-      compact: (SparkSession, String) => Unit,
       key: Seq[String] = Seq("id"),
-      live: Option[(SparkSession, String) => DataFrame] = None)
+      live: Option[(SparkSession, String) => DataFrame] = None,
+      compact: Option[(SparkSession, String) => Unit] = None)
 
   /** The `seen` ledger's key column and the noun its refusal names. */
   final case class Sighting(key: String, noun: String)
 
-  private def idDeletes(compact: (SparkSession, String) => Unit) =
-    Some(Deletes("deleted", compact))
+  private val idDeletes = Some(Deletes("deleted"))
+  private val bySrc = Seq("src")
 
   /** A Bloom sidecar rebuild at the design fpp stored in its own row —
     * a retire must not re-size the filter away from its build's fpp. */
@@ -910,54 +976,55 @@ object IndexFamily {
     (s: SparkSession, d: String) =>
       rebuild(s, d, Dedup.readBloom(s, d).getAs[Double]("fpp"))
 
-  val exact = IndexFamily("exact", Seq("fps"),
+  val exact = IndexFamily("exact", Seq("fps" -> Seq("src", "pfx")),
     // pair-keyed: a text re-admitted after its takedown gets a fresh
     // live row under a new keep_id that the old tombstone must not touch
-    deletes = Some(Deletes("deleted_fps", Dedup.compactExactIndex(_, _),
-      Seq("fp", "keep_id"),
-      Some((s, d) => Dedup.readFps(s, d).select("fp", "keep_id")))),
+    deletes = Some(Deletes("deleted_fps", Seq("fp", "keep_id"),
+      Some((s, d) => Dedup.readFps(s, d).select("fp", "keep_id")),
+      Some(Dedup.compactExactIndex(_, _)))),
     afterRetire = atStoredFpp(Dedup.rebuildExactSidecar(_, _, _)),
     sighting = Some(Sighting("fp", "fingerprint")))
-  val linedf = IndexFamily("linedf", Seq("lines"),
+  val linedf = IndexFamily("linedf", Seq("lines" -> bySrc),
     afterRetire = atStoredFpp(Dedup.rebuildLineDfSidecar(_, _, _)))
-  val containment = IndexFamily("containment", Seq("shingles", "sizes"),
-    idsFrom = Some("sizes"),
-    deletes = idDeletes(Dedup.compactContainmentIndex(_, _)),
+  val containment = IndexFamily("containment",
+    Seq("shingles" -> bySrc, "sizes" -> bySrc),
+    idsFrom = Some("sizes"), deletes = idDeletes,
     afterRetire = atStoredFpp(Dedup.rebuildContainmentSidecar(_, _, _)),
     sighting = Some(Sighting("id", "doc")))
-  val minhash = IndexFamily("minhash", Seq("shingles", "sigs"),
-    idsFrom = Some("shingles"),
-    deletes = idDeletes(Dedup.compactMinhashIndex(_, _)),
+  val minhash = IndexFamily("minhash",
+    Seq("shingles" -> bySrc, "sigs" -> bySrc),
+    idsFrom = Some("shingles"), deletes = idDeletes,
     sighting = Some(Sighting("id", "doc")))
   // ledger readers pass explicit schemas: an emptied ledger reads as
   // zero counts, the init state
-  val domainCap = IndexFamily("domain_cap", Seq("counts", "admitted"),
-    requireSurvivor = false)
-  val phash = IndexFamily("phash", Seq("bands"), idsFrom = Some("bands"),
-    deletes = idDeletes(Multimodal.compactPhashIndex(_, _)),
+  val domainCap = IndexFamily("domain_cap",
+    Seq("counts" -> bySrc, "admitted" -> bySrc), requireSurvivor = false)
+  val phash = IndexFamily("phash", Seq("bands" -> bySrc),
+    idsFrom = Some("bands"), deletes = idDeletes,
     sighting = Some(Sighting("id", "asset")))
-  val ivf = IndexFamily("ivf", Seq("cells"), idsFrom = Some("cells"),
-    deletes = idDeletes(Ann.compactIvfIndex(_, _)))
-  val ivfSq8 = IndexFamily("ivf_sq8", Seq("cells"), idsFrom = Some("cells"),
-    deletes = idDeletes(Ann.compactIvfSq8Index(_, _)))
+  val ivf = IndexFamily("ivf", Seq("cells" -> Seq("src", "cell")),
+    idsFrom = Some("cells"), deletes = idDeletes)
+  val ivfSq8 = IndexFamily("ivf_sq8", Seq("cells" -> Seq("src", "cell")),
+    idsFrom = Some("cells"), deletes = idDeletes)
   // codes are meaningless without the codebooks that produced them:
   // every mutation refuses while a retrain is pending
-  val ivfPq = IndexFamily("ivf_pq", Seq("codes"), idsFrom = Some("codes"),
-    deletes = idDeletes(Ann.compactIvfPqIndex(_, _)),
+  val ivfPq = IndexFamily("ivf_pq", Seq("codes" -> Seq("src", "cell")),
+    idsFrom = Some("codes"), deletes = idDeletes,
     afterHeal = (s, d, _) => Ann.requireNoPendingRetrain(s, d))
   // BM25's N/avgdl derive from doclens: re-derived whenever doclens moves
-  val sparse = IndexFamily("sparse", Seq("postings", "doclens"),
+  val sparse = IndexFamily("sparse",
+    Seq("postings" -> Seq("src", "tbucket"), "doclens" -> bySrc),
     idsFrom = Some("postings"),
-    deletes = idDeletes(Ann.compactSparseIndex(_, _)),
+    deletes = Some(Deletes("deleted",
+      compact = Some(Ann.compactSparseIndex(_, _)))),
     afterRetire = (s, d) =>
       if (Ann.hasBm25Sidecars(s, d)) Ann.refreshSparseStats(s, d),
     afterHeal = (s, d, rolled) => if (rolled) Ann.refreshSparseStats(s, d))
-  val binary = IndexFamily("binary", Seq("bits"), idsFrom = Some("bits"),
-    deletes = idDeletes(Ann.compactBinaryIndex(_, _)))
+  val binary = IndexFamily("binary", Seq("bits" -> bySrc),
+    idsFrom = Some("bits"), deletes = idDeletes)
   // unguarded appends keep no ids sidecar: live ids are the buckets' own
-  val lsh = IndexFamily("lsh", Seq("buckets"),
-    deletes = idDeletes(Ann.compactLshIndex(_, _)),
-    sighting = Some(Sighting("id", "vector")))
+  val lsh = IndexFamily("lsh", Seq("buckets" -> Seq("src", "tbl", "sig")),
+    deletes = idDeletes, sighting = Some(Sighting("id", "vector")))
 
   val all: Seq[IndexFamily] = Seq(exact, linedf, containment, minhash,
     domainCap, phash, ivf, ivfSq8, ivfPq, sparse, binary, lsh)

@@ -162,7 +162,7 @@ object Maintenance {
       val frac4 = BigDecimal(frac)
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       val due = frac4 > 0.0 && frac4 >= threshold
-      if (due) fam.deletes.get.compact(spark, dir)
+      if (due) fam.compact(spark, dir)
       (dir, family, frac4, due)
     }.toDF("dir", "family", "fraction", "compacted")
   }
@@ -194,7 +194,7 @@ object Maintenance {
       // decisions — a torn mid-append index must refuse loudly (the
       // search contract), not report half-landed segments as live
       IndexFiles.requireNoPendingAppend(spark, dir)
-      val srcs = IndexFiles.listSrcs(spark, dir, fam.payload.head)
+      val srcs = IndexFiles.listSrcs(spark, dir, fam.payload.head._1)
       // `oldest`/`newest` are SEGMENT-TAG order, not file age: 'base'
       // (the build segment) precedes every append by construction but
       // sorts AFTER the streaming drivers' b<batchId> tags, so it is

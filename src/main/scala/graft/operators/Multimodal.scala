@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.IndexFiles.WriteRouting
 
 /** Multimodal column handling for training-data pipelines: image/audio/
   * video payloads ride as opaque `binary` columns with a typed metadata
@@ -170,7 +169,7 @@ object Multimodal {
     * minhash/line-df segment layout). */
   private def bandSlice(banded: DataFrame,
       src: String): (String, DataFrame, Seq[String]) =
-    ("bands", banded.withColumn("src", lit(src)).routeForWrite("key"), Seq("src"))
+    ("bands", banded.withColumn("src", lit(src)).repartition(col("key")), Seq("src"))
 
   /** The stored (dim, maxHam, thresh), schema pinned (no inference job). */
   private def phashMeta(spark: SparkSession, dir: String): (Int, Int, Double) = {
@@ -216,27 +215,13 @@ object Multimodal {
   def appendToPhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String,
       featuresCol: String, src: String): Unit = {
-    require(src.nonEmpty && src != "base",
-      s"append src must be a non-empty tag other than 'base': '$src'")
-    IndexFamily.phash.heal(spark, dir)
-    // the sighted families' mirror guard: an unsighted append stores
-    // assets no sighting day contains — irretirable by the window
-    val seenP = new org.apache.hadoop.fs.Path(s"$dir/seen")
-    require(!seenP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(seenP),
-      s"$dir records sightings — append with appendToPhashIndexSighted " +
-        "(an unsighted append stores assets no sighting window could " +
-        "ever retire)")
+    IndexFamily.phash.beginAppend(spark, dir, src, sighted = false)
     val (dim, maxHam, thresh) = phashMeta(spark, dir)
     val (bands, width) = bandParams(dim, maxHam)
     val sig = signatures(newDf, idCol, featuresCol, dim, thresh).cache()
     val batchIds = sig.select("id").distinct()
-    val replayed = IndexFiles.ensureIds(spark, dir,
-        spark.read.parquet(s"$dir/bands").select("id").distinct())
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
-        "exists in the index — a replayed id would self-pair at hamming 0")
+    IndexFamily.phash.requireNew(spark, dir, batchIds,
+      "a replayed id would self-pair at hamming 0")
     IndexFiles.appendStaged(spark, dir,
       Seq(bandSlice(bandedSigs(sig, dim, bands, width), src)), Some(batchIds))
     sig.unpersist(); ()
@@ -255,12 +240,9 @@ object Multimodal {
   def buildPhashIndexSighted(df: DataFrame, idCol: String,
       featuresCol: String, dir: String, dim: Int, day: String,
       maxHam: Int = 2, thresh: Double = 0.5): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
+    IndexFamily.requireTag(day)
     buildPhashIndex(df, idCol, featuresCol, dir, dim, maxHam, thresh)
-    df.select(col(idCol).as("id")).distinct()
-      .withColumn("src", lit(day))
-      .write.partitionBy("src").mode("overwrite").parquet(s"$dir/seen")
+    IndexFamily.phash.writeSeen(df.select(col(idCol).as("id")), dir, day)
   }
 
   /** Admission append with the sighting touch — the minhash family's
@@ -274,10 +256,7 @@ object Multimodal {
   def appendToPhashIndexSighted(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDf: DataFrame, idCol: String, featuresCol: String,
       day: String): Unit = {
-    require(day.nonEmpty && day != "base",
-      s"day must be a non-empty tag other than 'base': '$day'")
-    IndexFamily.phash.requireSighted(spark, dir)
-    IndexFamily.phash.heal(spark, dir)
+    IndexFamily.phash.beginAppend(spark, dir, day, sighted = true)
     // inlined probe (the appendToMinhashIndexSighted rule): the batch's
     // signatures feed BOTH the verdict join and the admitted append —
     // one signature pass, filtered for the admitted subset
@@ -289,14 +268,9 @@ object Multimodal {
     // whose features drifted past maxHam would otherwise be "admitted"
     // AGAIN under its stored id — duplicate bands + ids rows, double
     // kills on takedown
-    val replayed = IndexFiles.ensureIds(spark, dir,
-        spark.read.parquet(s"$dir/bands").select("id").distinct())
-      .join(broadcast(batchAll), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
-        "exists in the index — a replayed id would duplicate its rows " +
-        "(re-encodes of a KNOWN asset arrive under fresh ids and reject " +
-        "as near-dups)")
+    IndexFamily.phash.requireNew(spark, dir, batchAll,
+      "a replayed id would duplicate its rows (re-encodes of a KNOWN " +
+        "asset arrive under fresh ids and reject as near-dups)")
     val nb = bandedSigs(sig, dim, bands, width)
     val stored = {
       import org.apache.spark.sql.types._
@@ -327,26 +301,14 @@ object Multimodal {
     // without per-check isEmpty planning rounds (r19)
     val batchIds = batchAll.join(dupIds, Seq("id"), "left_anti").persist()
     val batchIdsN = batchIds.count()
-    val seenRows = batchIds
-      .unionByName(pairs.select(col("id_old").as("id")))
-      .distinct().withColumn("src", lit(day))
-    val payloadSlices =
+    IndexFamily.phash.commitSighted(spark, dir, day,
       // every batch id has band rows (bandedSigs emits `bands` rows per
       // sig), so admittedBands nonempty ⟺ some batch id survived
-      if (batchIdsN == 0) Seq.empty
-      else Seq(bandSlice(admittedBands, day))
-    val seenSlice =
-      if (batchIdsN == 0 && pairsN == 0) Seq.empty
-      else Seq(("seen", seenRows, Seq("src")))
-    if ((payloadSlices ++ seenSlice).nonEmpty)
-      IndexFiles.appendStaged(spark, dir, payloadSlices ++ seenSlice,
-        if (payloadSlices.isEmpty) None else Some(batchIds))
+      if (batchIdsN == 0) Seq.empty else Seq(bandSlice(admittedBands, day)),
+      batchIds, batchIdsN > 0,
+      Some(pairs.select(col("id_old").as("id"))), pairsN > 0)
     sig.unpersist(); pairs.unpersist(); batchIds.unpersist(); ()
   }
-
-  def compactPhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    IndexFiles.compact(spark, dir, Map("bands" -> Seq("src")))
 
   /** Near-dup media pairs between a NEW batch and the stored history —
     * [[phashPairs]] with the join flipped batch-vs-index: the batch's

@@ -114,8 +114,7 @@ object StreamIngest {
     // repair (roll forward/back) BEFORE computing the witnesses, so the
     // journaled crash windows self-heal instead of tripping the
     // inconsistently-stored check below
-    graft.operators.IndexFiles.healAppend(spark, indexDir,
-      Seq("sigs", "shingles"))
+    graft.operators.IndexFamily.minhash.heal(spark, indexDir)
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import org.apache.spark.sql.functions.col
@@ -133,7 +132,7 @@ object StreamIngest {
     val inSigs = overlap(batchIds, spark.read.parquet(s"$indexDir/sigs"))
     val inShingles = overlap(batchIds, spark.read.parquet(s"$indexDir/shingles"))
     val inSidecar = overlap(batchIds,
-      graft.operators.Dedup.indexedIds(spark, indexDir))
+      graft.operators.IndexFamily.minhash.storedIds(spark, indexDir))
     // A marker alone is NOT proof of a replay: markers are keyed by
     // batchId and live in the index dir, so a checkpoint reset (batchIds
     // restart at 0 against the same index) re-presents a genuinely NEW
@@ -331,7 +330,7 @@ object StreamIngest {
       minDf: Int = 2, sep: String = "\n"): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    graft.operators.IndexFiles.healAppend(spark, indexDir, Seq("lines"))
+    graft.operators.IndexFamily.linedf.heal(spark, indexDir)
     val src = s"b$batchId"
     graft.operators.Dedup
       .lineDfAgainstIndex(spark, indexDir, batch, idCol, textCol, minDf,
@@ -381,8 +380,7 @@ object StreamIngest {
       tau: Double = 0.8): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    graft.operators.IndexFiles.healAppend(spark, indexDir,
-      Seq("shingles", "sizes"))
+    graft.operators.IndexFamily.containment.heal(spark, indexDir)
     val src = s"b$batchId"
     val verdicts = graft.operators.Dedup.dropContainedAgainstIndex(spark,
       indexDir, batch, idCol, textCol, tau, excludeSrc = Some(src))
@@ -441,8 +439,7 @@ object StreamIngest {
       qualityCol: String, outDir: String): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    graft.operators.IndexFiles.healAppend(spark, ledgerDir,
-      Seq("counts", "admitted"))
+    graft.operators.IndexFamily.domainCap.heal(spark, ledgerDir)
     val src = s"b$batchId"
     val verdicts = graft.operators.Dedup.capAgainstLedger(spark,
       ledgerDir, batch, idCol, urlCol, qualityCol,
@@ -487,7 +484,7 @@ object StreamIngest {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     // same pre-witness repair as [[applyDedupBatch]]
-    graft.operators.IndexFiles.healAppend(spark, indexDir, Seq("cells"))
+    graft.operators.IndexFamily.ivf.heal(spark, indexDir)
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import org.apache.spark.sql.functions.col
@@ -502,7 +499,7 @@ object StreamIngest {
       .select(col("id")).distinct().count()
     val inCells = overlap(batchIds, spark.read.parquet(s"$indexDir/cells"))
     val inSidecar = overlap(batchIds,
-      graft.operators.Ann.indexedIds(spark, indexDir))
+      graft.operators.IndexFamily.ivf.storedIds(spark, indexDir))
     // same stale-marker guard as [[applyDedupBatch]]: a checkpoint reset
     // recycles batchIds, so the marker is honored only when the payload
     // witness confirms the batch is actually stored
@@ -575,8 +572,8 @@ object StreamIngest {
     val inPostings = overlap(batchIds,
       spark.read.parquet(s"$indexDir/postings"))
     val inDoclens = overlap(batchIds, spark.read.parquet(s"$indexDir/doclens"))
-    val inSidecar = overlap(batchIds, graft.operators.Ann
-      .indexedIds(spark, indexDir, payload = "postings"))
+    val inSidecar = overlap(batchIds,
+      graft.operators.IndexFamily.sparse.storedIds(spark, indexDir))
     // same stale-marker guard as [[applyDedupBatch]]
     if (fs.exists(marker)) {
       if (inPostings == eligible && inDoclens == eligible
@@ -642,8 +639,8 @@ object StreamIngest {
         .norm2(col("v").cast("array<double>")) > 0)
       .select(col("id")).distinct().count()
     val inCodes = overlap(batchIds, spark.read.parquet(s"$indexDir/codes"))
-    val inSidecar = overlap(batchIds, graft.operators.Ann
-      .indexedIds(spark, indexDir, payload = "codes"))
+    val inSidecar = overlap(batchIds,
+      graft.operators.IndexFamily.ivfPq.storedIds(spark, indexDir))
     if (fs.exists(marker)) {
       if (inCodes == eligible && inSidecar == eligible) return
       throw new IllegalStateException(
@@ -702,8 +699,8 @@ object StreamIngest {
     val batchIds = batch.select(col("id")).distinct()
     val eligible = batchIds.count()
     val inBits = overlap(batchIds, spark.read.parquet(s"$indexDir/bits"))
-    val inSidecar = overlap(batchIds, graft.operators.Ann
-      .indexedIds(spark, indexDir, payload = "bits"))
+    val inSidecar = overlap(batchIds,
+      graft.operators.IndexFamily.binary.storedIds(spark, indexDir))
     // same stale-marker guard as [[applyDedupBatch]]: a checkpoint reset
     // recycles batchIds, so the marker is honored only when the payload
     // witness confirms the batch is actually stored
@@ -759,16 +756,15 @@ object StreamIngest {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     // same pre-witness repair as [[applyAnnBatch]]
-    graft.operators.IndexFiles.healAppend(spark, indexDir, Seq("bands"))
+    graft.operators.IndexFamily.phash.heal(spark, indexDir)
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     import org.apache.spark.sql.functions.col
     val batchIds = batch.select(col(idCol).as("id")).distinct()
     val eligible = batchIds.count()
-    val bands = spark.read.parquet(s"$indexDir/bands")
-    val inBands = overlap(batchIds, bands)
-    val inSidecar = overlap(batchIds, graft.operators.IndexFiles
-      .ensureIds(spark, indexDir, bands.select("id").distinct()))
+    val inBands = overlap(batchIds, spark.read.parquet(s"$indexDir/bands"))
+    val inSidecar = overlap(batchIds,
+      graft.operators.IndexFamily.phash.storedIds(spark, indexDir))
     // same stale-marker guard as [[applyDedupBatch]]: a checkpoint reset
     // recycles batchIds, so the marker is honored only when the payload
     // witness confirms the batch is actually stored

@@ -571,7 +571,7 @@ class AnnSpec extends SparkSpec {
     assert(after(33L) == Some(21L), s"got $after")
     // takedown-shaped retire; compaction purges with bit-equal verdicts
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isDefined)
-    Ann.compactLshIndex(spark, idx)
+    IndexFamily.lsh.compact(spark, idx)
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isEmpty)
     assert(verdicts() == after)
     // guards: unsighted append refused on a sighted index; the window
@@ -825,7 +825,7 @@ class AnnSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("already exists"), err.getMessage)
     // compaction: physically purged, search bit-equal, id re-appendable
-    Ann.compactIvfIndex(spark, dir)
+    IndexFamily.ivf.compact(spark, dir)
     assert(!new java.io.File(s"$dir/deleted").exists())
     assert(spark.read.parquet(s"$dir/cells").count() == 195)
     val compacted = Ann.searchIvfIndex(spark, dir, qs, k = 10, nprobe = 8)
@@ -835,7 +835,7 @@ class AnnSpec extends SparkSpec {
     Ann.appendToIvfIndex(spark, dir, corpus.filter(col("id") === 3L))
     assert(spark.read.parquet(s"$dir/cells").count() == 196)
     // compacting with no tombstones is a no-op
-    Ann.compactIvfIndex(spark, dir)
+    IndexFamily.ivf.compact(spark, dir)
     assert(spark.read.parquet(s"$dir/cells").count() == 196)
   }
 
@@ -849,7 +849,7 @@ class AnnSpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSet
     val tombstoned = pq()
     assert(!tombstoned.exists(r => r._2 <= 2L) && tombstoned.nonEmpty)
-    Ann.compactIvfPqIndex(spark, dir)
+    IndexFamily.ivfPq.compact(spark, dir)
     assert(spark.read.parquet(s"$dir/codes").count() == 198)
     assert(pq() == tombstoned, "IVF-PQ compaction changed search results")
     // sparse
@@ -893,7 +893,7 @@ class AnnSpec extends SparkSpec {
       .select("qid", "id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(tombstoned == survivors, "tombstoned LSH ranking != ranking of survivors")
-    Ann.compactLshIndex(spark, dir)
+    IndexFamily.lsh.compact(spark, dir)
     assert(spark.read.parquet(s"$dir/buckets").select("id").distinct().count() == 195)
     assert(res() == tombstoned, "LSH compaction changed search results")
     assert(!new java.io.File(s"$dir/deleted").exists())
@@ -1055,7 +1055,7 @@ class AnnSpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(tombstoned == survivors, "tombstoned ranking != survivors' ranking")
     // compaction purges physically, search bit-equal, ids re-appendable
-    Ann.compactIvfSq8Index(spark, dirApp)
+    IndexFamily.ivfSq8.compact(spark, dirApp)
     assert(!new java.io.File(s"$dirApp/deleted").exists())
     assert(spark.read.parquet(s"$dirApp/cells").count() == 195)
     assert(res(dirApp) == tombstoned, "compaction changed results")
@@ -1283,7 +1283,7 @@ class AnnSpec extends SparkSpec {
     val hits = Ann.searchIvfIndex(spark, dir, qsDrift, k = 10, nprobe = 8)
       .select("id").as[Long].collect().toSet
     assert(!hits.contains(151L), "tombstoned id resurfaced after retrain")
-    Ann.compactIvfIndex(spark, dir)
+    IndexFamily.ivf.compact(spark, dir)
     assert(spark.read.parquet(s"$dir/cells")
       .filter(col("id") === 151L).count() == 0)
   }
@@ -1554,7 +1554,7 @@ class AnnSpec extends SparkSpec {
     }
     assert(a1.getMessage.contains("interrupted retrain"), a1.getMessage)
     val c1 = intercept[IllegalArgumentException] {
-      Ann.compactIvfPqIndex(spark, dir)
+      IndexFamily.ivfPq.compact(spark, dir)
     }
     assert(c1.getMessage.contains("interrupted retrain"), c1.getMessage)
     // re-running the retrain rewrites all three tables and clears the
@@ -2031,7 +2031,7 @@ class AnnSpec extends SparkSpec {
       corpus.filter(!col("id").isin(dead: _*)), qs, k = 10, dim = dim))
     assert(asSet(Ann.searchBinaryIndex(spark, dir, qs, k = 10)) == survivors,
       "tombstoned ids still ranked")
-    Ann.compactBinaryIndex(spark, dir)
+    IndexFamily.binary.compact(spark, dir)
     assert(asSet(Ann.searchBinaryIndex(spark, dir, qs, k = 10)) == survivors,
       "compacted binary index diverged")
     assert(spark.read.parquet(s"$dir/bits")

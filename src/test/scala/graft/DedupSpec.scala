@@ -257,7 +257,7 @@ class DedupSpec extends SparkSpec {
       s"got ${seenIds("d1")}")
     assert(seenIds("d2") == Set(21L))
     // the rejected near-dup was NOT stored
-    assert(!Dedup.indexedIds(spark, idx).as[Long].collect().contains(11L))
+    assert(!IndexFamily.minhash.storedIds(spark, idx).as[Long].collect().contains(11L))
     // keep the last two days: d0 ages out; A survives (re-seen via the
     // d1 rejection), B is forgotten
     assert(IndexFamily.minhash.retireSeenWindow(spark, idx, keep = 2) == Seq("d0"))
@@ -274,7 +274,7 @@ class DedupSpec extends SparkSpec {
     // the retire is takedown-shaped (tombstones, not a rewrite); the
     // family's one compaction purges physically, verdicts bit-equal
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isDefined)
-    Dedup.compactMinhashIndex(spark, idx)
+    IndexFamily.minhash.compact(spark, idx)
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isEmpty)
     assert(verdicts() == after)
     // guards: unsighted append refused on a sighted index; the window
@@ -358,7 +358,7 @@ class DedupSpec extends SparkSpec {
     // takedown-shaped retire (tombstones, no rewrite); compaction
     // purges physically with bit-equal verdicts
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isDefined)
-    Dedup.compactContainmentIndex(spark, idx)
+    IndexFamily.containment.compact(spark, idx)
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isEmpty)
     assert(verdicts() == after)
     // guards: unsighted append refused on a sighted index; replayed id
@@ -774,7 +774,7 @@ class DedupSpec extends SparkSpec {
       Dedup.appendToMinhashIndex(spark, dir,
         Seq((2L, "whatever")).toDF("doc_id", "text"), "doc_id", "text", "s1")
     }
-    Dedup.compactMinhashIndex(spark, dir)
+    IndexFamily.minhash.compact(spark, dir)
     assert(pairs() == tombstoned, "compaction changed dedup pairs")
     assert(!new java.io.File(s"$dir/deleted").exists())
     Dedup.appendToMinhashIndex(spark, dir,
@@ -1354,7 +1354,7 @@ class DedupSpec extends SparkSpec {
     val afterDel = m(Dedup.dropContainedAgainstIndex(spark, dir, probe401,
       "doc_id", "text", tau = 0.8))
     assert(afterDel == Map(401L -> ((false, None))), s"got $afterDel")
-    Dedup.compactContainmentIndex(spark, dir)
+    IndexFamily.containment.compact(spark, dir)
     assert(spark.read.parquet(s"$dir/shingles")
       .filter(col("id") === 100L).count() == 0, "compaction left dead rows")
     assert(m(Dedup.dropContainedAgainstIndex(spark, dir, probe401,

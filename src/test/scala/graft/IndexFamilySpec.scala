@@ -110,4 +110,180 @@ class IndexFamilySpec extends SparkSpec {
         s"${fam.name}: the refused window wrote tombstones")
     }
   }
+
+  /** Distinct-token texts: no two docs share a shingle, so every
+    * sighted admission admits them all. */
+  private def novel(ids: Long*) = ids.map(i =>
+    (i, (0 until 30).map(j => s"w${i * 100 + j}").mkString(" ")))
+    .toDF("doc_id", "text")
+
+  test("nightlyCompact rolls a committed sighted batch's sightings forward with its payload") {
+    val fixtures = Seq(
+      ("minhash", Seq("shingles", "sigs"), (dir: String) =>
+        Dedup.buildMinhashIndexSighted(novel(1L, 2L, 3L), "doc_id", "text",
+          dir, day = "d1")),
+      ("containment", Seq("shingles", "sizes"), (dir: String) =>
+        Dedup.buildContainmentIndexSighted(novel(1L, 2L, 3L), "doc_id",
+          "text", dir, day = "d1")))
+    fixtures.foreach { case (family, tables, build) =>
+      val dir = tmp(s"sightcrash_$family") + "/idx"
+      build(dir)
+      // a d2 append of doc 21 that crashed after its journal commit and
+      // before any staged slice moved in: payload rows (doc 1's, re-keyed),
+      // its seen slice and the journal, hand-staged
+      tables.foreach { t =>
+        spark.read.parquet(s"$dir/$t")
+          .filter(org.apache.spark.sql.functions.col("id") === 1L)
+          .withColumn("id", org.apache.spark.sql.functions.lit(21L))
+          .withColumn("src", org.apache.spark.sql.functions.lit("d2"))
+          .write.partitionBy("src").parquet(s"$dir/$t/_append_tmp")
+      }
+      Seq((21L, "d2")).toDF("id", "src")
+        .write.partitionBy("src").parquet(s"$dir/seen/_append_tmp")
+      Seq(21L).toDF("id").write.parquet(s"$dir/_pending_append")
+      IndexFiles.writeTombstones(Seq(2L).toDF("id"), dir)
+      Maintenance.nightlyCompact(spark, Seq((dir, family, 0.0))).collect()
+      assert(IndexFiles.listSrcs(spark, dir, "seen") == Seq("d1", "d2"),
+        s"$family: the compaction dropped the committed batch's sighting day")
+      val d2 = spark.read.parquet(s"$dir/seen")
+        .filter(org.apache.spark.sql.functions.col("src") === "d2")
+        .select("id").as[Long].collect().toSet
+      assert(d2 == Set(21L), s"$family: d2 sighted $d2")
+    }
+  }
+
+  test("a sighted minhash append into an index without ids/ leaves ids complete") {
+    val dir = tmp("mhnoids") + "/idx"
+    Dedup.buildMinhashIndexSighted(novel(1L, 2L, 3L), "doc_id", "text", dir,
+      day = "d1")
+    val ids = new org.apache.hadoop.fs.Path(s"$dir/ids")
+    ids.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ids, true)
+    Dedup.appendToMinhashIndexSighted(spark, dir, novel(21L, 22L),
+      "doc_id", "text", day = "d2")
+    val got = spark.read.parquet(s"$dir/ids").as[Long].collect().toSet
+    assert(got == Set(1L, 2L, 3L, 21L, 22L), s"ids $got")
+  }
+
+  test("every append refuses an empty or 'base' tag before writing; unsighted appends into a sighted dir name the sighted append") {
+    val docs = novel(1L, 2L, 3L)
+    def vecs(lo: Long) = (lo until lo + 12L).map(i =>
+      (i, Seq.tabulate(4)(j => math.sin(i * 7.0 + j)))).toDF("id", "v")
+    def feats(ids: Long*) = Multimodal.decodeFeatures(
+      ids.map(i => (i, s"asset-$i".getBytes("UTF-8"), "image"))
+        .toDF("media_id", "payload", "kind"),
+      "media_id", "payload", dim = 16)
+    val postings = (1L to 6L).flatMap(i => Seq((i, i, 2.0), (i, i + 1, 1.0)))
+      .toDF("id", "term", "w")
+    // family -> append into dir under a tag
+    val append: Map[String, (String, String) => Unit] = Map(
+      "exact" -> ((d: String, t: String) =>
+        Dedup.appendToExactIndex(spark, d, novel(21L), "doc_id", "text", t)),
+      "linedf" -> ((d: String, t: String) =>
+        Dedup.appendToLineDfIndex(spark, d, novel(21L), "doc_id", "text", t)),
+      "containment" -> ((d: String, t: String) =>
+        Dedup.appendToContainmentIndex(spark, d, novel(21L), "doc_id", "text", t)),
+      "minhash" -> ((d: String, t: String) =>
+        Dedup.appendToMinhashIndex(spark, d, novel(21L), "doc_id", "text", t)),
+      "domain_cap" -> ((d: String, t: String) =>
+        Dedup.appendToDomainCapLedger(spark, d,
+          Seq(("21", "a.example", true)).toDF("id", "domain", "admitted"), t)),
+      "phash" -> ((d: String, t: String) => Multimodal.appendToPhashIndex(spark,
+        d, feats(21L), "media_id", "features", t)),
+      "ivf" -> ((d: String, t: String) =>
+        Ann.appendToIvfIndex(spark, d, vecs(21L), t)),
+      "ivf_sq8" -> ((d: String, t: String) =>
+        Ann.appendToIvfSq8Index(spark, d, vecs(21L), t)),
+      "ivf_pq" -> ((d: String, t: String) =>
+        Ann.appendToIvfPqIndex(spark, d, vecs(21L), t)),
+      "sparse" -> ((d: String, t: String) => Ann.appendToSparseIndex(spark, d,
+        Seq((21L, 1L, 1.0)).toDF("id", "term", "w"), t)),
+      "binary" -> ((d: String, t: String) =>
+        Ann.appendToBinaryIndex(spark, d, vecs(21L), t)),
+      "lsh" -> ((d: String, t: String) =>
+        Ann.appendToLshIndex(spark, d, vecs(21L), t)))
+    // unsighted family -> build into dir
+    val build: Map[String, String => Unit] = Map(
+      "linedf" -> (d => Dedup.buildLineDfIndex(docs, "doc_id", "text", d)),
+      "domain_cap" -> (d => Dedup.initDomainCapLedger(spark, d, n = 2)),
+      "ivf" -> (d => Ann.buildIvfIndex(vecs(1L), d, nlist = 2)),
+      "ivf_sq8" -> (d => Ann.buildIvfSq8Index(vecs(1L), d, nlist = 2)),
+      "ivf_pq" -> (d =>
+        Ann.buildIvfPqIndex(vecs(1L), d, nlist = 2, m = 2, ksub = 2)),
+      "sparse" -> (d => Ann.buildSparseIndex(postings, d, buckets = 4)),
+      "binary" -> (d => Ann.buildBinaryIndex(vecs(1L), d, dim = 4)))
+    // sighted family -> (sighted build under a day, sighted append, its name)
+    val sighted: Map[String, ((String, String) => Unit, (String, String) => Unit, String)] = Map(
+      "exact" -> ((d: String, day: String) =>
+          Dedup.buildExactIndexSighted(docs, "doc_id", "text", d, day),
+        (d: String, t: String) => Dedup.appendToExactIndexSighted(spark, d,
+          novel(21L), "doc_id", "text", t),
+        "appendToExactIndexSighted"),
+      "containment" -> ((d: String, day: String) =>
+          Dedup.buildContainmentIndexSighted(docs, "doc_id", "text", d, day),
+        (d: String, t: String) => Dedup.appendToContainmentIndexSighted(spark,
+          d, novel(21L), "doc_id", "text", t),
+        "appendToContainmentIndexSighted"),
+      "minhash" -> ((d: String, day: String) =>
+          Dedup.buildMinhashIndexSighted(docs, "doc_id", "text", d, day),
+        (d: String, t: String) => Dedup.appendToMinhashIndexSighted(spark, d,
+          novel(21L), "doc_id", "text", t),
+        "appendToMinhashIndexSighted"),
+      "phash" -> ((d: String, day: String) => Multimodal.buildPhashIndexSighted(
+          feats(1L, 2L), "media_id", "features", d, dim = 16, day = day),
+        (d: String, t: String) => Multimodal.appendToPhashIndexSighted(spark,
+          d, feats(21L), "media_id", "features", t),
+        "appendToPhashIndexSighted"),
+      "lsh" -> ((d: String, day: String) => Ann.buildLshIndexSighted(vecs(1L),
+          d, dim = 4, day = day, planes = 2),
+        (d: String, t: String) => Ann.appendToLshIndexSighted(spark, d,
+          vecs(21L), t, tau = 0.9),
+        "appendToLshIndexSighted"))
+    def files(dir: String): Set[(String, Long)] = {
+      val root = java.nio.file.Paths.get(dir)
+      val it = java.nio.file.Files.walk(root).iterator()
+      var out = Set.empty[(String, Long)]
+      while (it.hasNext) {
+        val p = it.next()
+        if (java.nio.file.Files.isRegularFile(p))
+          out += ((root.relativize(p).toString, java.nio.file.Files.size(p)))
+      }
+      out
+    }
+    def refusesBadTags(family: String, dir: String,
+        appendTagged: (String, String) => Unit): Unit = {
+      val before = files(dir)
+      Seq("", "base").foreach { tag =>
+        val err = intercept[IllegalArgumentException](appendTagged(dir, tag))
+        assert(err.getMessage.contains("other than 'base'"),
+          s"$family '$tag': ${err.getMessage}")
+      }
+      assert(files(dir) == before, s"$family: a refused append wrote")
+    }
+    assert(IndexFamily.all.map(_.name).toSet == append.keySet)
+    assert(IndexFamily.all.filterNot(_.sighted).map(_.name).toSet == build.keySet)
+    assert(IndexFamily.all.filter(_.sighted).map(_.name).toSet == sighted.keySet)
+    // a sighted family's unsighted tag refusals run against its sighted
+    // dir: the tag check comes first
+    IndexFamily.all.foreach { fam =>
+      val dir = tmp(s"tag_${fam.name}") + "/idx"
+      sighted.get(fam.name) match {
+        case Some((buildSighted, appendSighted, sightedName)) =>
+          Seq("", "base").foreach { day =>
+            intercept[IllegalArgumentException](buildSighted(dir, day))
+            assert(!new java.io.File(dir).exists,
+              s"${fam.name}: a refused sighted build wrote")
+          }
+          buildSighted(dir, "d1")
+          refusesBadTags(fam.name, dir, appendSighted)
+          val before = files(dir)
+          val err = intercept[IllegalArgumentException](
+            append(fam.name)(dir, "d2"))
+          assert(err.getMessage.contains(sightedName),
+            s"${fam.name}: ${err.getMessage}")
+          assert(files(dir) == before, s"${fam.name}: the refused append wrote")
+        case None => build(fam.name)(dir)
+      }
+      refusesBadTags(fam.name, dir, append(fam.name))
+    }
+  }
 }

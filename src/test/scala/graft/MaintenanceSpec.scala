@@ -359,7 +359,7 @@ class MaintenanceSpec extends SparkSpec {
     Ann.appendToIvfIndex(spark, s"$root/ivf", vecs.filter(col("id") <= 10)
       .select((col("id") + 100L).as("id"), col("v")), "d1")
     IndexFiles.writeTombstones(vecs.filter(col("id") <= 5).select("id"), s"$root/ivf")
-    Ann.compactIvfIndex(spark, s"$root/ivf")
+    IndexFamily.ivf.compact(spark, s"$root/ivf")
     assert(search() != before, "mutations must actually change the search")
     // a stale crash leftover from an earlier restore is discarded
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -549,7 +549,7 @@ class MaintenanceSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$root/bak__snap_old")))
     // restore heals the swap and restores from the recovered backup
     IndexFiles.writeTombstones(vecs.filter(col("id") <= 5).select("id"), s"$root/ivf")
-    Ann.compactIvfIndex(spark, s"$root/ivf")
+    IndexFamily.ivf.compact(spark, s"$root/ivf")
     assert(search() != before)
     Maintenance.restoreIndex(spark, s"$root/bak", s"$root/ivf")
     assert(search() == before,
@@ -608,7 +608,7 @@ class MaintenanceSpec extends SparkSpec {
     // mutate everything the restore must undo: index contents AND the
     // pointer that makes the store servable
     IndexFiles.writeTombstones(vecs.filter(col("id") <= 8).select("id"), s"$root/blue")
-    Ann.compactIvfIndex(spark, s"$root/blue")
+    IndexFamily.ivf.compact(spark, s"$root/blue")
     Dedup.deleteFromExactIndex(spark, s"$root/exact",
       docs.filter(col("doc_id") <= 5), "text")
     Aliases.alterAlias(spark, s"$root/registry", "prod", s"$root/green")

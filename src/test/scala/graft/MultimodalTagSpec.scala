@@ -170,7 +170,7 @@ class MultimodalTagSpec extends SparkSpec {
       Multimodal.appendToPhashIndex(spark, dir,
         day2.filter(col("media_id") === 202L), "media_id", "features", "d4")
     }
-    Multimodal.compactPhashIndex(spark, dir)
+    IndexFamily.phash.compact(spark, dir)
     assert(!probe(dir).exists(_._2 == 202L), "compaction resurrected the asset")
     Multimodal.appendToPhashIndex(spark, dir,
       day2.filter(col("media_id") === 202L), "media_id", "features", "d5")
@@ -308,7 +308,7 @@ class MultimodalTagSpec extends SparkSpec {
     assert(!after.exists(_._2 == 11L), s"rejected copy was stored: $after")
     // tombstone-shaped retire; compaction is verdict-invariant
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isDefined)
-    Multimodal.compactPhashIndex(spark, idx)
+    IndexFamily.phash.compact(spark, idx)
     assert(graft.operators.IndexFiles.tombstones(spark, idx).isEmpty)
     assert(verdicts() == after)
     // guards: unsighted append refused; window refused on an unsighted

@@ -611,7 +611,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("checkpoint reset"), ex.getMessage)
     // nothing was silently appended or dropped into the pairs ledger
-    assert(Dedup.indexedIds(spark, s"$dir/idx")
+    assert(IndexFamily.minhash.storedIds(spark, s"$dir/idx")
       .as[Long].collect().toSet == Set(1L))
     // same guard on the ANN side
     val dimA = 8
