@@ -573,13 +573,12 @@ private[graft] object IndexFiles {
     val fs = fsOf(spark, dir)
     val root = new Path(dir)
     require(fs.exists(root), s"index dir $dir does not exist")
+    val tombstoneTables = IndexFamily.all.flatMap(_.deletes).map(_.table).toSet
     def kindOf(name: String): String = name match {
-      case "ids"        => "sidecar"
-      case "bloom"      => "sidecar"
-      case "deleted"    => "tombstones"
-      case "meta" | "stats" | "centroids" | "codebook" | "codebooks"
-                        => "metadata"
-      case _            => "payload"
+      case "ids" | "bloom" => "sidecar"
+      case t if tombstoneTables(t) => "tombstones"
+      case "meta" | "stats" | "centroids" | "pq" | "train_stats" => "metadata"
+      case _ => "payload"
     }
     // payload tables may be partitioned (cells/cell=0/part-*.parquet),
     // so the data-file probe has to recurse, not just look one level in

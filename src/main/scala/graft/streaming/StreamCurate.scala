@@ -316,13 +316,8 @@ object StreamCurate {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDriftBatch(refDf, batch, vecCol, batchId, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    StreamIngest.startBatches(vecStream, checkpointDir, trigger)(
+      applyDriftBatch(refDf, _, vecCol, _, outDir))
 
   /** One micro-batch of [[driftByStream]]: the per-stratum drill-down
     * ([[graft.operators.Stats.embeddingDriftBy]]) applied to
@@ -360,13 +355,8 @@ object StreamCurate {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDriftByBatch(refDf, batch, vecCol, groupCol, batchId, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    StreamIngest.startBatches(vecStream, checkpointDir, trigger)(
+      applyDriftByBatch(refDf, _, vecCol, groupCol, _, outDir))
 
   /** One micro-batch of [[recallStream]]: search the persisted index
     * at its PRODUCTION operating point AND at the batch's PINNED
@@ -452,12 +442,9 @@ object StreamCurate {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamIngest.startBatches(queryStream, checkpointDir, trigger) {
+      (batch, batchId) =>
         applyRecallBatch(batch.sparkSession, dir, batch, k, nprobe,
           metric, batchId, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    }
 }

@@ -2,8 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
-import graft.operators.Ingest
+import org.apache.hadoop.fs.Path
+import graft.operators.{Ann, Dedup, IndexFamily, Ingest}
 
 /** Structured Streaming variant of the ingest pipeline
   * (reference: embed_to_milvus.py:52-141 — the batch loop becomes an
@@ -91,100 +93,137 @@ object StreamIngest {
       .distinct().count()
   }
 
-  /** One micro-batch of [[dedupIngestStream]], idempotent in batchId —
-    * public so the replay semantics are directly testable.
+  /** Run `apply` on every micro-batch of `stream`, exactly once per
+    * batchId through the checkpoint at `checkpointDir` — the one
+    * foreachBatch sink every driver here and in [[StreamCurate]]
+    * starts. */
+  private[streaming] def startBatches(stream: DataFrame,
+      checkpointDir: String, trigger: Trigger)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .foreachBatch(apply)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .start()
+
+  /** One micro-batch of an index-feeding stream, idempotent in batchId
+    * — the replay protocol the seven witnessed drivers share, read off
+    * the family's registry entry.
     *
-    * The replay check witnesses the PAYLOAD TABLES, not the raw batch:
-    * appendToMinhashIndex writes the same FILTERED id set (docs that
-    * produced shingles — short or fully-capped docs drop out) to sigs,
-    * shingles, and the ids sidecar in that order, and each parquet
-    * append is job-atomic under the commit protocol. So per batch the
-    * three tables' batch-overlap counts are equal iff the append
-    * completed; all-zero means it never started; anything else is a
-    * crash BETWEEN the table writes — the one window that genuinely
-    * needs repair. Comparing against a raw batch count instead would
-    * brick the stream on any batch containing a doc the filter
-    * legitimately drops. */
+    * Heal first: a previous micro-batch's append may have died
+    * mid-transaction, and the family heal rolls its journal forward or
+    * back, so a journaled crash window self-heals instead of tripping
+    * the witness. `beforeWitness` runs next (a derived-sidecar backfill
+    * the witness reads).
+    *
+    * The witnesses are the PAYLOAD TABLES ([[IndexFamily.payload]],
+    * plus [[IndexFamily.storedIds]] when the family keeps an ids
+    * sidecar), not the raw batch: an append stores one FILTERED id set
+    * in every table it writes, so each table's overlap with the batch
+    * is compared against `eligible` — the caller's count of what the
+    * append WOULD store. A raw batch count would brick the stream on
+    * any batch holding a doc the family's filter legitimately drops.
+    *  - every count 0: the append never started — run `append`;
+    *  - every count = eligible: the append completed and only the
+    *    marker was lost — run `ifStored` instead of appending;
+    *  - anything else: a crash between table writes that no journal
+    *    covers, or a re-delivered batch that mixes stored and new ids —
+    *    refuse rather than skip the new ids or re-append the stored ones.
+    * Then the marker `indexDir/applied/<batchId>` is written. Every
+    * `append` tags its segment `b<batchId>`, so a streamed batch
+    * retires in O(segment) through [[IndexFamily.retireSrcs]] like a
+    * batch-appended one.
+    *
+    * A marker alone is NOT proof of a replay: markers are keyed by
+    * batchId and live in the index dir, so a checkpoint reset (batchIds
+    * restart at 0 against the same index) re-presents a genuinely NEW
+    * batch under a marked id, and a retire can drop a marked batch's
+    * segment. A marker is honoured only when every count equals
+    * `eligible`; otherwise the batch fails loudly instead of being
+    * silently dropped. */
+  private def applyWitnessed(fam: IndexFamily, batch: DataFrame,
+      batchId: Long, indexDir: String, idCol: String = "id",
+      eligible: DataFrame => Long = _.count(),
+      beforeWitness: => Unit = (), ifStored: => Unit = ())(
+      append: => Unit): Unit = {
+    if (batch.isEmpty) return
+    val spark = batch.sparkSession
+    fam.heal(spark, indexDir)
+    beforeWitness
+    val marker = new Path(s"$indexDir/applied/$batchId")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batchIds = batch.select(col(idCol).as("id")).distinct()
+    val n = eligible(batchIds)
+    val witnesses = fam.payload.map { case (t, _) =>
+        t -> spark.read.parquet(s"$indexDir/$t") } ++
+      fam.idsFrom.map(_ => "ids" -> fam.storedIds(spark, indexDir))
+    val counts = witnesses.map { case (t, df) => t -> overlap(batchIds, df) }
+    val stored = counts.forall(_._2 == n)
+    def refuse(what: String, why: String) = new IllegalStateException(
+      s"${fam.name} batch $batchId $what (" +
+        counts.map { case (t, c) => s"$t=$c" }.mkString(" ") +
+        s" of $n eligible) — $why")
+    if (fs.exists(marker)) {
+      if (stored) return
+      throw refuse("carries a replay marker but is not stored",
+        "a checkpoint reset recycled the batchId against a live index; " +
+          s"wipe $indexDir/applied together with the checkpoint (or " +
+          "point the stream at a fresh index)")
+    }
+    if (counts.forall(_._2 == 0)) append
+    else if (stored) ifStored
+    else throw refuse("inconsistently stored",
+      "either a previous append crashed between table writes or a " +
+        "re-delivered batch mixes stored and new ids; repair before " +
+        "restarting")
+    fs.create(marker, true).close()
+  }
+
+  /** The eligible count of the IVF families: ids of nonzero-norm
+    * vectors, the filter their appends apply. */
+  private def nonZeroIds(batch: DataFrame): Long =
+    batch.filter(graft.functions.VectorFunctions
+        .norm2(col("v").cast("array<double>")) > 0)
+      .select("id").distinct().count()
+
+  /** One micro-batch of [[dedupIngestStream]] ([[applyWitnessed]] over
+    * the minhash family) — public so the replay semantics are directly
+    * testable. Eligible ids are the docs that survive shingling under
+    * the index's own parameters (short or fully-capped docs drop out).
+    * A fresh batch writes its pairs first (the probe requires the batch
+    * absent), then appends. A fully stored batch is a replay only if
+    * the pairs for THIS batchId exist: their absence means the docs
+    * were indexed under some other ledger (checkpoint reset,
+    * re-delivery), so it fails instead of silently dropping the pair
+    * output. (A stale pairs dir surviving a checkpoint reset under a
+    * colliding batchId can still defeat this — pair outputs should be
+    * wiped with the checkpoint; documented residual.) */
   def applyDedupBatch(batch: DataFrame, batchId: Long, indexDir: String,
       idCol: String, textCol: String, pairsDir: String,
       tau: Double): Unit = {
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
-    // a previous micro-batch's append may have died mid-transaction —
-    // repair (roll forward/back) BEFORE computing the witnesses, so the
-    // journaled crash windows self-heal instead of tripping the
-    // inconsistently-stored check below
-    graft.operators.IndexFamily.minhash.heal(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import org.apache.spark.sql.functions.col
-    val batchIds = batch.select(col(idCol).as("id")).distinct()
-    // what the append WOULD store: docs that survive shingling under
-    // the index's own parameters — O(batch) work, same pass the append
-    // itself runs. Comparing payload tables against this count makes a
-    // PARTIAL overlap (mixed re-delivery: some docs indexed, some new)
-    // fail loudly instead of masquerading as a completed replay.
-    val (w, _, _, maxDf) = graft.operators.Dedup.minhashMeta(spark, indexDir)
-    val eligible = graft.operators.Dedup
-      .shingleHashSet(batch.select(col(idCol).as(idCol), col(textCol)),
-        idCol, textCol, w, maxDf)
-      .select("id").distinct().count()
-    val inSigs = overlap(batchIds, spark.read.parquet(s"$indexDir/sigs"))
-    val inShingles = overlap(batchIds, spark.read.parquet(s"$indexDir/shingles"))
-    val inSidecar = overlap(batchIds,
-      graft.operators.IndexFamily.minhash.storedIds(spark, indexDir))
-    // A marker alone is NOT proof of a replay: markers are keyed by
-    // batchId and live in the index dir, so a checkpoint reset (batchIds
-    // restart at 0 against the same index) re-presents a genuinely NEW
-    // batch under a marked id. Honor the marker only when the payload
-    // witness confirms the batch's docs are actually stored; otherwise
-    // fail loudly instead of silently dropping the batch.
-    if (fs.exists(marker)) {
-      if (inSigs == eligible && inShingles == eligible
-          && inSidecar == eligible) return
-      throw new IllegalStateException(
-        s"batch $batchId carries a replay marker but its docs are not " +
-          s"stored (sigs=$inSigs shingles=$inShingles ids=$inSidecar of " +
-          s"$eligible eligible) — a checkpoint reset recycled the batchId " +
-          s"against a live index; wipe $indexDir/applied together with " +
-          "the checkpoint (or point the stream at a fresh index/pairs dir)")
-    }
-    if (inSigs == 0 && inShingles == 0 && inSidecar == 0) {
-      // fresh batch: pairs first (the guard requires the batch
-      // absent), then append, then the marker
-      val pairs = graft.operators.Dedup
-        .dedupAgainstIndex(spark, indexDir, batch, idCol, textCol, tau)
-      pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-      // per-trigger release of the probe's pinned internals (batch
-      // shingles + verify caches) — the applyContainmentBatch rule; a
-      // long-lived stream must not accumulate three pinned datasets
-      // per micro-batch
-      graft.operators.CacheLifecycle.release(pairs)
-      graft.operators.Dedup
-        .appendToMinhashIndex(spark, indexDir, batch, idCol, textCol,
-          s"b$batchId")
-    } else if (inSigs == eligible && inShingles == eligible
-        && inSidecar == eligible) {
-      // append completed; the marker crash-window is fine ONLY if the
-      // pairs for THIS batchId were written (they precede the append).
-      // Their absence means these docs were indexed under some OTHER
-      // ledger (checkpoint reset, re-delivery) — fail loudly instead
-      // of silently dropping the batch's pair output. (A stale pairs
-      // dir surviving a checkpoint reset under a colliding batchId can
-      // still defeat this — pair outputs should be wiped with the
-      // checkpoint; documented residual.)
-      val pairsPath = new org.apache.hadoop.fs.Path(s"$pairsDir/batch=$batchId")
-      require(pairsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(pairsPath),
+    val pairsPath = new Path(s"$pairsDir/batch=$batchId")
+    applyWitnessed(IndexFamily.minhash, batch, batchId, indexDir, idCol,
+      eligible = _ => {
+        val (w, _, _, maxDf) = Dedup.minhashMeta(spark, indexDir)
+        Dedup.shingleHashSet(batch.select(col(idCol).as(idCol), col(textCol)),
+            idCol, textCol, w, maxDf)
+          .select("id").distinct().count()
+      },
+      ifStored = require(pairsPath.getFileSystem(
+          spark.sparkContext.hadoopConfiguration).exists(pairsPath),
         s"batch $batchId ids already indexed but no pairs output at " +
-          s"$pairsPath — checkpoint/ledger mismatch, not a replay")
-    } else throw new IllegalStateException(
-      s"batch $batchId inconsistently stored (sigs=$inSigs " +
-        s"shingles=$inShingles ids=$inSidecar of $eligible eligible) — " +
-        "either a previous append crashed between table writes or a " +
-        "re-delivered batch mixes indexed and new docs; repair before " +
-        "restarting")
-    fs.create(marker, true).close()
+          s"$pairsPath — checkpoint/ledger mismatch, not a replay")) {
+      val pairs = Dedup.dedupAgainstIndex(spark, indexDir, batch, idCol,
+        textCol, tau)
+      pairs.write.mode("overwrite").parquet(pairsPath.toString)
+      // per-trigger release of the probe's pinned internals (batch
+      // shingles + verify caches) — a long-lived stream must not
+      // accumulate three pinned datasets per micro-batch
+      graft.operators.CacheLifecycle.release(pairs)
+      Dedup.appendToMinhashIndex(spark, indexDir, batch, idCol, textCol,
+        s"b$batchId")
+    }
   }
 
   /** Streaming near-dup dedup against a persisted minhash index — the
@@ -202,13 +241,8 @@ object StreamIngest {
       idCol: String, textCol: String, pairsDir: String,
       checkpointDir: String, tau: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDedupBatch(batch, batchId, indexDir, idCol, textCol, pairsDir, tau)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(docsStream, checkpointDir, trigger)(
+      applyDedupBatch(_, _, indexDir, idCol, textCol, pairsDir, tau))
 
   /** One micro-batch of [[admitIngestStream]] — append-then-verdict
     * over the exact-dedup history index, CONVERGENT under re-execution
@@ -255,13 +289,8 @@ object StreamIngest {
       idCol: String, textCol: String, admitDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyAdmitBatch(batch, batchId, indexDir, idCol, textCol, admitDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(docsStream, checkpointDir, trigger)(
+      applyAdmitBatch(_, _, indexDir, idCol, textCol, admitDir))
 
   /** One micro-batch of [[mineIngestStream]]: the arriving anchors get
     * their hard negatives from the persisted IVF index
@@ -300,14 +329,8 @@ object StreamIngest {
       outDir: String, checkpointDir: String, k: Int,
       dupThreshold: Double, window: Int, nprobe: Int = 4,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    anchorsStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMineBatch(batch, batchId, indexDir, k, dupThreshold,
-          window, nprobe, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(anchorsStream, checkpointDir, trigger)(
+      applyMineBatch(_, _, indexDir, k, dupThreshold, window, nprobe, outDir))
 
   /** One micro-batch of [[lineDfIngestStream]], idempotent in batchId
     * across every crash window WITHOUT markers: the batch's verdict is
@@ -352,14 +375,8 @@ object StreamIngest {
       idCol: String, textCol: String, outDir: String,
       checkpointDir: String, minDf: Int = 2, sep: String = "\n",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyLineDfBatch(batch, batchId, indexDir, idCol, textCol,
-          outDir, minDf, sep)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(docsStream, checkpointDir, trigger)(
+      applyLineDfBatch(_, _, indexDir, idCol, textCol, outDir, minDf, sep))
 
   /** One micro-batch of [[containmentIngestStream]], idempotent in
     * batchId without markers — [[applyLineDfBatch]]'s shape over the
@@ -412,14 +429,8 @@ object StreamIngest {
       idCol: String, textCol: String, outDir: String,
       checkpointDir: String, tau: Double = 0.8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyContainmentBatch(batch, batchId, indexDir, idCol, textCol,
-          outDir, tau)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(docsStream, checkpointDir, trigger)(
+      applyContainmentBatch(_, _, indexDir, idCol, textCol, outDir, tau))
 
   /** One micro-batch of [[domainCapIngestStream]], idempotent in
     * batchId without markers — [[applyLineDfBatch]]'s shape over the
@@ -463,69 +474,17 @@ object StreamIngest {
       idCol: String, urlCol: String, qualityCol: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDomainCapBatch(batch, batchId, ledgerDir, idCol, urlCol,
-          qualityCol, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(docsStream, checkpointDir, trigger)(
+      applyDomainCapBatch(_, _, ledgerDir, idCol, urlCol, qualityCol, outDir))
 
-  /** One micro-batch of [[annIngestStream]], idempotent in batchId —
-    * the [[applyDedupBatch]] witness pattern over
-    * [[graft.operators.Ann.appendToIvfIndex]]: cells and the ids
-    * sidecar receive the same FILTERED id set (zero-norm vectors drop
-    * out) in that order, so equal batch-overlap counts mean the append
-    * completed, all-zero means it never started, anything else is a
-    * mid-append crash. */
+  /** One micro-batch of [[annIngestStream]] — [[applyWitnessed]] over
+    * [[Ann.appendToIvfIndex]]; zero-norm vectors are not eligible. */
   def applyAnnBatch(batch: DataFrame, batchId: Long,
-      indexDir: String): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    // same pre-witness repair as [[applyDedupBatch]]
-    graft.operators.IndexFamily.ivf.heal(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import org.apache.spark.sql.functions.col
-    val batchIds = batch.select(col("id")).distinct()
-    // what the append WOULD store: nonzero-norm vectors (the same
-    // filter appendToIvfIndex applies) — so a mixed re-delivered batch
-    // (some docs indexed, some new) fails loudly below instead of
-    // silently skipping its new docs
-    val eligible = batch
-      .filter(graft.functions.VectorFunctions
-        .norm2(col("v").cast("array<double>")) > 0)
-      .select(col("id")).distinct().count()
-    val inCells = overlap(batchIds, spark.read.parquet(s"$indexDir/cells"))
-    val inSidecar = overlap(batchIds,
-      graft.operators.IndexFamily.ivf.storedIds(spark, indexDir))
-    // same stale-marker guard as [[applyDedupBatch]]: a checkpoint reset
-    // recycles batchIds, so the marker is honored only when the payload
-    // witness confirms the batch is actually stored
-    if (fs.exists(marker)) {
-      if (inCells == eligible && inSidecar == eligible) return
-      throw new IllegalStateException(
-        s"batch $batchId carries a replay marker but its vectors are not " +
-          s"stored (cells=$inCells ids=$inSidecar of $eligible eligible) — " +
-          s"a checkpoint reset recycled the batchId against a live index; " +
-          s"wipe $indexDir/applied together with the checkpoint")
+      indexDir: String): Unit =
+    applyWitnessed(IndexFamily.ivf, batch, batchId, indexDir,
+        eligible = _ => nonZeroIds(batch)) {
+      Ann.appendToIvfIndex(batch.sparkSession, indexDir, batch, s"b$batchId")
     }
-    if (inCells == 0 && inSidecar == 0)
-      // per-batch src segment, like [[applyPhashBatch]]: a streamed day
-      // retires in O(segment) through [[graft.operators.IndexFamily
-      // .retireSrcs]] exactly like a batch-appended one
-      graft.operators.Ann.appendToIvfIndex(spark, indexDir, batch,
-        s"b$batchId")
-    else if (inCells != eligible || inSidecar != eligible)
-      throw new IllegalStateException(
-        s"batch $batchId inconsistently stored (cells=$inCells " +
-          s"ids=$inSidecar of $eligible eligible) — either a previous " +
-          "append crashed between table writes or a re-delivered batch " +
-          "mixes indexed and new docs; repair before restarting")
-    // all eligible ids in both tables: append completed, marker was lost
-    fs.create(marker, true).close()
-  }
 
   /** Continuous ANN ingest — the reference's operating mode
     * (embed_to_milvus.py:147-183 keeps uploading batches into the
@@ -537,69 +496,23 @@ object StreamIngest {
   def annIngestStream(vecStream: DataFrame, indexDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyAnnBatch(batch, batchId, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(vecStream, checkpointDir, trigger)(
+      applyAnnBatch(_, _, indexDir))
 
-  /** One micro-batch of [[sparseIngestStream]], idempotent in batchId —
-    * the [[applyAnnBatch]] witness pattern over
-    * [[graft.operators.Ann.appendToSparseIndex]]: postings, doclens,
-    * and the ids sidecar receive the same id set in one staged
-    * transaction, so equal batch-overlap counts mean the append
-    * completed, all-zero means it never started, anything else is a
-    * mid-append crash. Every batch id is eligible (the sparse append
-    * filters nothing), so the witness compares against the raw
-    * distinct-id count. */
+  /** One micro-batch of [[sparseIngestStream]] — [[applyWitnessed]]
+    * over [[Ann.appendToSparseIndex]]; every batch id is eligible (the
+    * sparse append filters nothing). The one-off doclens backfill runs
+    * after the heal so the witness can read doclens on a pre-BM25
+    * index — this driver is a writer, so the mutation-path-only
+    * backfill rule holds. */
   def applySparseBatch(batch: DataFrame, batchId: Long,
-      indexDir: String): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    // same pre-witness repair as [[applyAnnBatch]] (heals the derived
-    // stats file too), plus the one-off doclens backfill so the
-    // witness below can read it on a pre-BM25 index — this driver is a
-    // writer, so the mutation-path-only backfill rule holds
-    graft.operators.IndexFamily.sparse.heal(spark, indexDir)
-    graft.operators.Ann.backfillBm25Sidecars(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import org.apache.spark.sql.functions.col
-    val batchIds = batch.select(col("id")).distinct()
-    val eligible = batchIds.count()
-    val inPostings = overlap(batchIds,
-      spark.read.parquet(s"$indexDir/postings"))
-    val inDoclens = overlap(batchIds, spark.read.parquet(s"$indexDir/doclens"))
-    val inSidecar = overlap(batchIds,
-      graft.operators.IndexFamily.sparse.storedIds(spark, indexDir))
-    // same stale-marker guard as [[applyDedupBatch]]
-    if (fs.exists(marker)) {
-      if (inPostings == eligible && inDoclens == eligible
-          && inSidecar == eligible) return
-      throw new IllegalStateException(
-        s"batch $batchId carries a replay marker but its postings are not " +
-          s"stored (postings=$inPostings doclens=$inDoclens ids=$inSidecar " +
-          s"of $eligible eligible) — a checkpoint reset recycled the " +
-          s"batchId against a live index; wipe $indexDir/applied together " +
-          "with the checkpoint")
-    }
-    if (inPostings == 0 && inDoclens == 0 && inSidecar == 0)
-      // per-batch src segment, like [[applyPhashBatch]] — streamed days
-      // retire through [[graft.operators.IndexFamily.retireSrcs]]
-      graft.operators.Ann.appendToSparseIndex(spark, indexDir, batch,
+      indexDir: String): Unit =
+    applyWitnessed(IndexFamily.sparse, batch, batchId, indexDir,
+        beforeWitness =
+          Ann.backfillBm25Sidecars(batch.sparkSession, indexDir)) {
+      Ann.appendToSparseIndex(batch.sparkSession, indexDir, batch,
         s"b$batchId")
-    else if (inPostings != eligible || inDoclens != eligible
-        || inSidecar != eligible)
-      throw new IllegalStateException(
-        s"batch $batchId inconsistently stored (postings=$inPostings " +
-          s"doclens=$inDoclens ids=$inSidecar of $eligible eligible) — " +
-          "either a previous append crashed between table writes or a " +
-          "re-delivered batch mixes indexed and new docs; repair before " +
-          "restarting")
-    fs.create(marker, true).close()
-  }
+    }
 
   /** Continuous sparse ingest — the streaming half of the persisted
     * sparse inverted index ([[graft.operators.Ann.buildSparseIndex]]):
@@ -611,56 +524,19 @@ object StreamIngest {
   def sparseIngestStream(postingsStream: DataFrame, indexDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    postingsStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySparseBatch(batch, batchId, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(postingsStream, checkpointDir, trigger)(
+      applySparseBatch(_, _, indexDir))
 
-  /** One micro-batch of [[ivfPqIngestStream]], idempotent in batchId —
-    * the [[applyAnnBatch]] witness pattern over
-    * [[graft.operators.Ann.appendToIvfPqIndex]]: codes and the ids
-    * sidecar receive the same FILTERED id set (zero-norm vectors drop
-    * out, mirroring the append's own filter) in one staged
-    * transaction. */
+  /** One micro-batch of [[ivfPqIngestStream]] — [[applyWitnessed]]
+    * over [[Ann.appendToIvfPqIndex]]; zero-norm vectors are not
+    * eligible, mirroring the append's own filter. */
   def applyIvfPqBatch(batch: DataFrame, batchId: Long,
-      indexDir: String): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    graft.operators.IndexFamily.ivfPq.heal(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import org.apache.spark.sql.functions.col
-    val batchIds = batch.select(col("id")).distinct()
-    val eligible = batch
-      .filter(graft.functions.VectorFunctions
-        .norm2(col("v").cast("array<double>")) > 0)
-      .select(col("id")).distinct().count()
-    val inCodes = overlap(batchIds, spark.read.parquet(s"$indexDir/codes"))
-    val inSidecar = overlap(batchIds,
-      graft.operators.IndexFamily.ivfPq.storedIds(spark, indexDir))
-    if (fs.exists(marker)) {
-      if (inCodes == eligible && inSidecar == eligible) return
-      throw new IllegalStateException(
-        s"batch $batchId carries a replay marker but its vectors are not " +
-          s"stored (codes=$inCodes ids=$inSidecar of $eligible eligible) — " +
-          s"a checkpoint reset recycled the batchId against a live index; " +
-          s"wipe $indexDir/applied together with the checkpoint")
-    }
-    if (inCodes == 0 && inSidecar == 0)
-      // per-batch src segment — retires via IndexFamily.ivfPq.retireSrcs
-      graft.operators.Ann.appendToIvfPqIndex(spark, indexDir, batch,
+      indexDir: String): Unit =
+    applyWitnessed(IndexFamily.ivfPq, batch, batchId, indexDir,
+        eligible = _ => nonZeroIds(batch)) {
+      Ann.appendToIvfPqIndex(batch.sparkSession, indexDir, batch,
         s"b$batchId")
-    else if (inCodes != eligible || inSidecar != eligible)
-      throw new IllegalStateException(
-        s"batch $batchId inconsistently stored (codes=$inCodes " +
-          s"ids=$inSidecar of $eligible eligible) — either a previous " +
-          "append crashed between table writes or a re-delivered batch " +
-          "mixes indexed and new docs; repair before restarting")
-    fs.create(marker, true).close()
-  }
+    }
 
   /** Continuous IVF-PQ ingest: micro-batches of (id, v) are assigned
     * and residual-encoded through the STORED codebooks and appended in
@@ -670,60 +546,18 @@ object StreamIngest {
   def ivfPqIngestStream(vecStream: DataFrame, indexDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIvfPqBatch(batch, batchId, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(vecStream, checkpointDir, trigger)(
+      applyIvfPqBatch(_, _, indexDir))
 
-  /** One micro-batch of [[binaryIngestStream]], idempotent in batchId —
-    * the [[applyAnnBatch]] witness pattern over
-    * [[graft.operators.Ann.appendToBinaryIndex]]: the bits table and
-    * the ids sidecar receive the same id set in one staged transaction,
-    * so equal batch-overlap counts mean the append completed, all-zero
-    * means it never started, anything else is a mid-append crash. Every
-    * batch id is eligible (binarizeSign packs any vector, zero-norm
-    * included), so the witness compares against the raw distinct-id
-    * count. */
+  /** One micro-batch of [[binaryIngestStream]] — [[applyWitnessed]]
+    * over [[Ann.appendToBinaryIndex]]; every batch id is eligible
+    * (binarizeSign packs any vector, zero-norm included). */
   def applyBinaryBatch(batch: DataFrame, batchId: Long,
-      indexDir: String): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    // same pre-witness repair as [[applyAnnBatch]]
-    graft.operators.IndexFamily.binary.heal(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import org.apache.spark.sql.functions.col
-    val batchIds = batch.select(col("id")).distinct()
-    val eligible = batchIds.count()
-    val inBits = overlap(batchIds, spark.read.parquet(s"$indexDir/bits"))
-    val inSidecar = overlap(batchIds,
-      graft.operators.IndexFamily.binary.storedIds(spark, indexDir))
-    // same stale-marker guard as [[applyDedupBatch]]: a checkpoint reset
-    // recycles batchIds, so the marker is honored only when the payload
-    // witness confirms the batch is actually stored
-    if (fs.exists(marker)) {
-      if (inBits == eligible && inSidecar == eligible) return
-      throw new IllegalStateException(
-        s"batch $batchId carries a replay marker but its vectors are not " +
-          s"stored (bits=$inBits ids=$inSidecar of $eligible eligible) — " +
-          s"a checkpoint reset recycled the batchId against a live index; " +
-          s"wipe $indexDir/applied together with the checkpoint")
-    }
-    if (inBits == 0 && inSidecar == 0)
-      // per-batch src segment — retires via IndexFamily.binary.retireSrcs
-      graft.operators.Ann.appendToBinaryIndex(spark, indexDir, batch,
+      indexDir: String): Unit =
+    applyWitnessed(IndexFamily.binary, batch, batchId, indexDir) {
+      Ann.appendToBinaryIndex(batch.sparkSession, indexDir, batch,
         s"b$batchId")
-    else if (inBits != eligible || inSidecar != eligible)
-      throw new IllegalStateException(
-        s"batch $batchId inconsistently stored (bits=$inBits " +
-          s"ids=$inSidecar of $eligible eligible) — either a previous " +
-          "append crashed between table writes or a re-delivered batch " +
-          "mixes indexed and new docs; repair before restarting")
-    fs.create(marker, true).close()
-  }
+    }
 
   /** Continuous binary ingest — the streaming half of the persisted
     * BIN_FLAT index ([[graft.operators.Ann.buildBinaryIndex]]): each
@@ -734,59 +568,18 @@ object StreamIngest {
   def binaryIngestStream(vecStream: DataFrame, indexDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBinaryBatch(batch, batchId, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(vecStream, checkpointDir, trigger)(
+      applyBinaryBatch(_, _, indexDir))
 
-  /** One micro-batch of [[phashIngestStream]], idempotent in batchId —
-    * the [[applyAnnBatch]] witness pattern over
-    * [[graft.operators.Multimodal.appendToPhashIndex]]: the bands
-    * table and the ids sidecar receive the same id set in one staged
-    * transaction, so equal batch-overlap counts mean the append
-    * completed, all-zero means it never started, anything else is a
-    * mid-append crash. Every batch id is eligible (phashBits signs any
-    * feature vector), so the witness compares against the raw
-    * distinct-id count. */
+  /** One micro-batch of [[phashIngestStream]] — [[applyWitnessed]]
+    * over [[graft.operators.Multimodal.appendToPhashIndex]]; every
+    * batch id is eligible (phashBits signs any feature vector). */
   def applyPhashBatch(batch: DataFrame, batchId: Long, indexDir: String,
-      idCol: String, featuresCol: String): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    // same pre-witness repair as [[applyAnnBatch]]
-    graft.operators.IndexFamily.phash.heal(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import org.apache.spark.sql.functions.col
-    val batchIds = batch.select(col(idCol).as("id")).distinct()
-    val eligible = batchIds.count()
-    val inBands = overlap(batchIds, spark.read.parquet(s"$indexDir/bands"))
-    val inSidecar = overlap(batchIds,
-      graft.operators.IndexFamily.phash.storedIds(spark, indexDir))
-    // same stale-marker guard as [[applyDedupBatch]]: a checkpoint reset
-    // recycles batchIds, so the marker is honored only when the payload
-    // witness confirms the batch is actually stored
-    if (fs.exists(marker)) {
-      if (inBands == eligible && inSidecar == eligible) return
-      throw new IllegalStateException(
-        s"batch $batchId carries a replay marker but its signatures are " +
-          s"not stored (bands=$inBands ids=$inSidecar of $eligible " +
-          s"eligible) — a checkpoint reset recycled the batchId against " +
-          s"a live index; wipe $indexDir/applied together with the checkpoint")
+      idCol: String, featuresCol: String): Unit =
+    applyWitnessed(IndexFamily.phash, batch, batchId, indexDir, idCol) {
+      graft.operators.Multimodal.appendToPhashIndex(batch.sparkSession,
+        indexDir, batch, idCol, featuresCol, s"b$batchId")
     }
-    if (inBands == 0 && inSidecar == 0)
-      graft.operators.Multimodal.appendToPhashIndex(spark, indexDir,
-        batch, idCol, featuresCol, s"b$batchId")
-    else if (inBands != eligible || inSidecar != eligible)
-      throw new IllegalStateException(
-        s"batch $batchId inconsistently stored (bands=$inBands " +
-          s"ids=$inSidecar of $eligible eligible) — either a previous " +
-          "append crashed between table writes or a re-delivered batch " +
-          "mixes indexed and new assets; repair before restarting")
-    fs.create(marker, true).close()
-  }
 
   /** Continuous media ingest into the persisted perceptual-hash index
     * ([[graft.operators.Multimodal.buildPhashIndex]]) — the daily
@@ -800,60 +593,22 @@ object StreamIngest {
       checkpointDir: String, idCol: String = "id",
       featuresCol: String = "features",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    mediaStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyPhashBatch(batch, batchId, indexDir, idCol, featuresCol)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(mediaStream, checkpointDir, trigger)(
+      applyPhashBatch(_, _, indexDir, idCol, featuresCol))
 
-  /** One micro-batch of [[lshIngestStream]], idempotent in batchId —
-    * the [[applyAnnBatch]] witness pattern over
-    * [[graft.operators.Ann.appendToLshIndex]]. LSH stores ONE payload
-    * table (buckets; no ids sidecar — appends are unguarded because
-    * lshRank collapses per-(qid,id)), and the append is staged/journaled
-    * like the siblings, so after the pre-witness heal the batch is
-    * either fully present or fully absent: the single-table overlap
-    * count is a complete witness. Every batch id is eligible
-    * (lshBuckets hashes any vector, zero-norm included), so the
-    * witness compares against the raw distinct-id count. */
+  /** One micro-batch of [[lshIngestStream]] — [[applyWitnessed]] over
+    * [[Ann.appendToLshIndex]]. LSH keeps no ids sidecar (appends are
+    * unguarded because lshRank collapses per-(qid,id)), so the buckets
+    * table alone witnesses the batch; its append is journaled like the
+    * siblings', so after the heal the batch is fully present or fully
+    * absent. Every batch id is eligible (lshBuckets hashes any vector,
+    * zero-norm included). */
   def applyLshBatch(batch: DataFrame, batchId: Long,
-      indexDir: String): Unit = {
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    // same pre-witness repair as [[applyAnnBatch]]: a journaled
-    // crash-window rolls forward/back before the witness reads
-    graft.operators.IndexFamily.lsh.heal(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/applied/$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    import org.apache.spark.sql.functions.col
-    val batchIds = batch.select(col("id")).distinct()
-    val eligible = batchIds.count()
-    val inBuckets = overlap(batchIds,
-      spark.read.parquet(s"$indexDir/buckets"))
-    // same stale-marker guard as [[applyDedupBatch]]: a checkpoint reset
-    // recycles batchIds, so the marker is honored only when the payload
-    // witness confirms the batch is actually stored
-    if (fs.exists(marker)) {
-      if (inBuckets == eligible) return
-      throw new IllegalStateException(
-        s"batch $batchId carries a replay marker but its vectors are not " +
-          s"stored (buckets=$inBuckets of $eligible eligible) — a " +
-          s"checkpoint reset recycled the batchId against a live index; " +
-          s"wipe $indexDir/applied together with the checkpoint")
-    }
-    if (inBuckets == 0)
-      // per-batch src segment — retires via IndexFamily.lsh.retireSrcs
-      graft.operators.Ann.appendToLshIndex(spark, indexDir, batch,
+      indexDir: String): Unit =
+    applyWitnessed(IndexFamily.lsh, batch, batchId, indexDir) {
+      Ann.appendToLshIndex(batch.sparkSession, indexDir, batch,
         s"b$batchId")
-    else if (inBuckets != eligible)
-      throw new IllegalStateException(
-        s"batch $batchId inconsistently stored (buckets=$inBuckets of " +
-          s"$eligible eligible) — a re-delivered batch mixes indexed and " +
-          "new docs; repair before restarting")
-    fs.create(marker, true).close()
-  }
+    }
 
   /** One micro-batch of [[cosineIngestStream]]: admission verdicts
     * against the accumulated LSH history
@@ -916,14 +671,8 @@ object StreamIngest {
       outDir: String, checkpointDir: String, idCol: String = "id",
       vecCol: String = "v", tau: Double = 0.9,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCosineDedupBatch(batch, batchId, indexDir, idCol, vecCol,
-          tau, outDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(vecStream, checkpointDir, trigger)(
+      applyCosineDedupBatch(_, _, indexDir, idCol, vecCol, tau, outDir))
 
   /** Continuous LSH ingest — the streaming half of the persisted LSH
     * index ([[graft.operators.Ann.buildLshIndex]]): each micro-batch of
@@ -934,13 +683,8 @@ object StreamIngest {
   def lshIngestStream(vecStream: DataFrame, indexDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyLshBatch(batch, batchId, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startBatches(vecStream, checkpointDir, trigger)(
+      applyLshBatch(_, _, indexDir))
 
   /** File-source → rotating parquet segments, exactly-once via the
     * checkpoint; AvailableNow drains what exists then stops (swap the

@@ -286,4 +286,23 @@ class IndexFamilySpec extends SparkSpec {
       refusesBadTags(fam.name, dir, append(fam.name))
     }
   }
+
+  test("describeIndex reports tombstone tables and IVF metadata by the registry's names") {
+    def kinds(dir: String) = IndexFiles.describeIndex(spark, dir)
+      .select("table", "kind").as[(String, String)].collect().toMap
+    val exact = tmp("descexact") + "/idx"
+    Dedup.buildExactIndex(novel(1L, 2L, 3L), "doc_id", "text", exact)
+    Dedup.deleteFromExactIndex(spark, exact, novel(2L), "text")
+    val ek = kinds(exact)
+    assert(ek.get("deleted_fps").contains("tombstones"), s"exact: $ek")
+    assert(ek.get("fps").contains("payload"), s"exact: $ek")
+    val pq = tmp("descpq") + "/idx"
+    Ann.buildIvfPqIndex((1L to 12L).map(i =>
+        (i, Seq.tabulate(4)(j => math.sin(i * 7.0 + j)))).toDF("id", "v"),
+      pq, nlist = 2, m = 2, ksub = 2)
+    val pk = kinds(pq)
+    Seq("pq", "train_stats", "centroids").foreach(t =>
+      assert(pk.get(t).contains("metadata"), s"ivf_pq $t: $pk"))
+    assert(pk.get("codes").contains("payload"), s"ivf_pq: $pk")
+  }
 }

@@ -644,6 +644,73 @@ class StreamingSpec extends SparkSpec {
     assert(exRet.getMessage.contains("checkpoint reset"), exRet.getMessage)
   }
 
+  test("every witnessed driver refuses a mixed re-delivery and leaves the index untouched") {
+    import graft.operators.{Ann, Dedup, Multimodal}
+    val dim = 8
+    def docs(ids: Seq[Long]) = ids.map(i =>
+      (i, (0 until 30).map(j => s"w${i * 100 + j}").mkString(" ")))
+      .toDF("doc_id", "text")
+    def vecs(ids: Seq[Long]) = ids.map(i =>
+      (i, Seq.tabulate(dim)(j => math.sin(i * 131 + j * 17)))).toDF("id", "v")
+    def post(ids: Seq[Long]) = ids.flatMap(i =>
+      Seq((i, i % 13, 2.0), (i, 13 + i % 7, 1.0))).toDF("id", "term", "w")
+    def feats(ids: Seq[Long]) = ids.map(i =>
+      (i, Seq.tabulate(16)(j => (math.sin(i * 131 + j * 17) + 1) / 2)))
+      .toDF("id", "features")
+    // family -> (build over ids, apply a batch of ids under a batchId)
+    type Build = (String, Seq[Long]) => Unit
+    type Apply = (String, Seq[Long], Long) => Unit
+    val drivers: Seq[(IndexFamily, Build, Apply)] = Seq(
+      (IndexFamily.minhash,
+        (d, ids) => Dedup.buildMinhashIndex(docs(ids), "doc_id", "text", d),
+        (d, ids, b) => StreamIngest.applyDedupBatch(docs(ids), b, d,
+          "doc_id", "text", s"$d-pairs", tau = 0.5)),
+      (IndexFamily.ivf,
+        (d, ids) => Ann.buildIvfIndex(vecs(ids), d, nlist = 2),
+        (d, ids, b) => StreamIngest.applyAnnBatch(vecs(ids), b, d)),
+      (IndexFamily.sparse,
+        (d, ids) => Ann.buildSparseIndex(post(ids), d, buckets = 4),
+        (d, ids, b) => StreamIngest.applySparseBatch(post(ids), b, d)),
+      (IndexFamily.ivfPq,
+        (d, ids) => Ann.buildIvfPqIndex(vecs(ids), d, nlist = 2, m = 2,
+          ksub = 2),
+        (d, ids, b) => StreamIngest.applyIvfPqBatch(vecs(ids), b, d)),
+      (IndexFamily.binary,
+        (d, ids) => Ann.buildBinaryIndex(vecs(ids), d, dim),
+        (d, ids, b) => StreamIngest.applyBinaryBatch(vecs(ids), b, d)),
+      (IndexFamily.phash,
+        (d, ids) => Multimodal.buildPhashIndex(feats(ids), "id", "features",
+          d, dim = 16),
+        (d, ids, b) => StreamIngest.applyPhashBatch(feats(ids), b, d, "id",
+          "features")),
+      (IndexFamily.lsh,
+        (d, ids) => Ann.buildLshIndex(vecs(ids), d, dim, planes = 4,
+          tables = 2),
+        (d, ids, b) => StreamIngest.applyLshBatch(vecs(ids), b, d)))
+    drivers.foreach { case (fam, build, apply) =>
+      val dir = java.nio.file.Files
+        .createTempDirectory(s"mixed_${fam.name}").toString + "/idx"
+      build(dir, 1L to 12L)
+      apply(dir, 21L to 24L, 0L)
+      def state = (
+        fam.payload.map { case (t, _) =>
+          t -> spark.read.parquet(s"$dir/$t").count() },
+        fam.idsFrom.fold(spark.read.parquet(s"$dir/${fam.payload.head._1}")
+            .select("id").distinct())(_ => fam.storedIds(spark, dir))
+          .as[Long].collect().toSet,
+        new java.io.File(s"$dir/applied").list().toSet)
+      val before = state
+      assert(before._2 == (1L to 12L).toSet ++ (21L to 24L),
+        s"${fam.name}: batch 0 stored ${before._2}")
+      // batch 1 re-delivers stored id 21 next to new ids 31 and 32
+      val err = intercept[IllegalStateException](
+        apply(dir, Seq(21L, 31L, 32L), 1L))
+      assert(err.getMessage.contains("inconsistently stored"),
+        s"${fam.name}: ${err.getMessage}")
+      assert(state == before, s"${fam.name}: the refused batch wrote")
+    }
+  }
+
   test("mineIngestStream: streamed anchors equal the batch mining; replay is idempotent") {
     import graft.operators.Ann
     implicit val sqlCtx = spark.sqlContext
