@@ -474,13 +474,9 @@ object Ann {
       .select(pmod(col("term"), lit(buckets)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val raw = spark.read.parquet(s"$dir/postings")
-    val bIsInt =
-      raw.schema("tbucket").dataType == org.apache.spark.sql.types.IntegerType
-    val typed: Seq[Any] = if (bIsInt) wanted else wanted.map(_.toLong)
-    val pruned = (if (wanted.isEmpty) raw.filter(lit(false))
-                  else raw.filter(col("tbucket").isin(typed: _*)))
-      .drop("tbucket", "src")
-    IndexFiles.dropTombstones(spark, dir, pruned)
+    IndexFiles.dropTombstones(spark, dir,
+      raw.filter(IndexFiles.partitionIn(raw, "tbucket", wanted.map(_.toLong)))
+        .drop("tbucket", "src"))
   }
 
   /** BM25-scored search over a persisted sparse index — the scoring
@@ -997,18 +993,11 @@ object Ann {
         .as(Seq("tbl", "sig")))
       .distinct().collect().map(r => (r.getInt(0), r.getLong(1)))
     val bySig = wanted.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    // `sig` is a PARTITION column on read, and Spark's partition-type
-    // inference narrows it to INT when every directory value fits — an
-    // isin against Long literals would then compare through a cast on
-    // the attribute and defeat the static pruning this method exists
-    // for. Type the literals to the inferred type, prune, THEN cast
-    // back to the long the bucket join expects.
+    // prune on the partition-typed `sig`, THEN cast back to the long the
+    // bucket join expects
     val raw = spark.read.parquet(s"$dir/buckets")
-    val sigIsInt =
-      raw.schema("sig").dataType == org.apache.spark.sql.types.IntegerType
     val cond = bySig.map { case (t, sigs) =>
-      val typed: Seq[Any] = if (sigIsInt) sigs.map(_.toInt) else sigs
-      col("tbl") === t && col("sig").isin(typed: _*)
+      col("tbl") === t && IndexFiles.partitionIn(raw, "sig", sigs)
     }.reduceOption(_ || _).getOrElse(lit(false))
     val cb = IndexFiles.dropTombstones(spark, dir,
       raw.filter(cond).withColumn("sig", col("sig").cast("long")))
@@ -1099,12 +1088,6 @@ object Ann {
         s"batch vector dimension $got != index dimension $dim")
     }
 
-  /** Train the IVF structure: Right((cells, centroids)) — the corpus
-    * with its cell assignment, and the nlist-row codebook. Left(the
-    * cast + zero-norm-filtered corpus) when it is no bigger than the
-    * cell count (IVF gains nothing; k-means can't seed nlist distinct
-    * centers) — callers scan that exactly instead of re-deriving the
-    * filter. */
   /** `trainCap <= 0` means auto: 256·nlist training vectors — the faiss
     * guideline (30-256 points per centroid). Estimating 16 centroids
     * from 4k points costs milliseconds where a full-corpus fit costs a
@@ -1183,50 +1166,133 @@ object Ann {
       struct(V.dot(v, typedlit(c.toSeq)).as("cs"), lit(i).as("cell"))
     }: _*)).getField("cell")
 
+  /** Train the IVF structure: Right((cells, centroids)) — the corpus
+    * with its cell assignment, and the nlist-row codebook. Left(the
+    * cast + zero-norm-filtered corpus) when it is no bigger than the
+    * cell count (IVF gains nothing; k-means can't seed nlist distinct
+    * centers) — callers scan that exactly instead of re-deriving the
+    * filter. */
   private[operators] def ivfFit(corpus: DataFrame, nlist: Int, seed: Long,
       trainCap: Long): Either[DataFrame, (DataFrame, DataFrame)] = {
-    // zero-norm vectors (failed/padded embeds — a reality at corpus
-    // scale) are undefined under cosine and can't rank anyway — drop
-    val spreadCorpus = Dedup.spread(corpus)
-      .withColumn("v", col("v").cast("array<double>"))
-      .filter(V.norm2(col("v")) > 0)
+    val spreadCorpus = nonZeroVectors(Dedup.spread(corpus)).select("id", "v")
     // At corpus scale the codebook is NEVER fit on every vector — that's
     // an O(iterations · corpus) clustering job for centroids a sample
     // estimates just as well (faiss trains IVF on ~(30-256)·nlist
-    // points). Deterministic hash-ordered top-cap sample: a per-partition
-    // heap + single driver merge (TakeOrderedAndProject), one scan, no
-    // shuffle, no separate count() pass — then train locally.
-    val cap = effectiveCap(trainCap, nlist)
-    // Guard the driver in BYTES, not rows: a 10M-row cap that is harmless
-    // at 16-d is ~80 GiB at 1024-d. Probing one row for the dimension is a
-    // limit(1) scan — milliseconds against the collect it protects.
-    val firstRow = spreadCorpus.select(col("id"), col("v")).take(1)
-    if (firstRow.isEmpty) return Left(spreadCorpus.select("id", "v"))
-    val dim = firstRow.head.getSeq[Double](1).length
-    val sampleBytes = cap * dim.toLong * 8L
-    require(sampleBytes <= TrainSampleByteBudget,
-      s"trainCap $cap at dim $dim would collect $sampleBytes bytes to the " +
-        s"driver (budget $TrainSampleByteBudget) — lower trainCap")
-    val sample = spreadCorpus
-      .select(col("id"), col("v"))
-      .orderBy(xxhash64(col("id").cast("string")), col("id"))
-      .limit(cap.toInt)
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
+    // points). The dimension comes off a limit(1) probe, so the sample
+    // is byte-budgeted before it is collected.
+    val firstRow = spreadCorpus.select(col("v")).take(1)
+    if (firstRow.isEmpty) return Left(spreadCorpus)
+    val sample = hashSample(spreadCorpus, "v", effectiveCap(trainCap, nlist),
+      firstRow.head.getSeq[Double](0).length)
     // sample size = min(n, cap) and cap > nlist, so a sample this small
     // means the corpus itself is no bigger than the cell count — scan it
     // exactly (also covers empty input; IVF gains nothing, k-means can't fit)
-    if (sample.length <= nlist) return Left(spreadCorpus.select("id", "v"))
+    if (sample.length <= nlist) return Left(spreadCorpus)
     val cb = sphericalKMeans(sample, nlist, seed)
-    val cells = spreadCorpus
-      .select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
-    // centroid table is nlist rows — driver-side, broadcast to probe
-    val centroids = {
-      val s = corpus.sparkSession
-      import s.implicits._
-      cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cv")
-    }
-    Right((cells, centroids))
+    Right((spreadCorpus.select(col("id"), col("v"),
+      cellOf(col("v"), cb).as("cell")), centroidsFrame(corpus.sparkSession, cb)))
+  }
+
+  /** The cast + nonzero-norm filter every IVF-family corpus and batch
+    * passes: zero-norm vectors (failed/padded embeds — a reality at
+    * corpus scale) are undefined under cosine and can't rank anyway. */
+  private[graft] def nonZeroVectors(df: DataFrame): DataFrame =
+    df.withColumn("v", col("v").cast("array<double>"))
+      .filter(V.norm2(col("v")) > 0)
+
+  /** The nlist-row (cell, cv) codebook table — driver-side, broadcast
+    * to probe. */
+  private def centroidsFrame(spark: org.apache.spark.sql.SparkSession,
+      cb: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cv")
+  }
+
+  /** A (cell, cv) codebook table back as cell-ordered centroid arrays —
+    * the literals [[cellOf]] assigns through. */
+  private def codebook(centroids: DataFrame): Array[Array[Double]] =
+    centroids.orderBy("cell").collect()
+      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
+
+  /** The first step of every IVF-family build: clear stale tombstones,
+    * then fit the coarse quantizer — refusing a corpus no bigger than
+    * the cell count. */
+  private def fitForBuild(corpus: DataFrame, dir: String, nlist: Int,
+      seed: Long, trainCap: Long): (DataFrame, DataFrame) = {
+    IndexFiles.clearTombstones(corpus.sparkSession, dir)
+    ivfFit(corpus, nlist, seed, trainCap).getOrElse(
+      throw new IllegalArgumentException(
+        s"corpus must exceed nlist=$nlist vectors to index"))
+  }
+
+  /** Write an IVF-family build's `base` segment: the encoded (id, …,
+    * cell) `payload` into the family's payload table, partitioned by
+    * (src, cell) — one task per cell before the partitioned write (guide
+    * §6; unrouted, every task writes a sliver into every cell dir) —
+    * then the centroids, then the ids sidecar read back off the written
+    * table (column-pruned, no re-assignment). */
+  private def writeIvfBase(fam: IndexFamily, dir: String, payload: DataFrame,
+      centroids: DataFrame): Unit = {
+    val table = fam.payload.head._1
+    payload.withColumn("src", lit("base"))
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("src", "cell")
+      .parquet(s"$dir/$table")
+    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    IndexFiles.writeIds(
+      payload.sparkSession.read.parquet(s"$dir/$table").select("id"), dir)
+  }
+
+  /** The one append body of the three IVF families ([[appendToIvfIndex]]
+    * states the contract): gate and heal, assign the batch's nonzero-norm
+    * vectors through the STORED coarse codebook, refuse replayed ids,
+    * then stage the `encode`d rows into the family's payload table under
+    * (src, cell). `encode` maps the assigned (id, v, cell) batch, given
+    * the stored centroids table, to the family's (id, …, cell) rows. */
+  private def appendIvfVia(fam: IndexFamily,
+      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame,
+      src: String)(encode: (DataFrame, DataFrame) => DataFrame): Unit = {
+    fam.beginAppend(spark, dir, src, sighted = false)
+    val centroids = spark.read.parquet(s"$dir/centroids")
+    val cb = codebook(centroids)
+    require(cb.nonEmpty, s"$dir/centroids is empty — not a built ${fam.name} index")
+    requireBatchDim(batch, "v", cb(0).length)
+    val b = nonZeroVectors(Dedup.spread(batch))
+    val batchIds = b.select("id").distinct()
+    fam.requireNew(spark, dir, batchIds, DuplicateHits)
+    val (table, partCols) = fam.payload.head
+    val cells = b.select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
+    IndexFiles.appendStaged(spark, dir, Seq((table,
+      encode(cells, centroids).withColumn("src", lit(src)).repartition(col("cell")),
+      partCols)), Some(batchIds))
+  }
+
+  /** The front half of every IVF-family search: probe the `nprobe`
+    * nearest cells ONCE — the collected (qid, qv, cell) rows,
+    * nprobe·|queries| by construction, give both the pruning literals
+    * and the rank join's probe side (as a local relation), instead of
+    * running the probe plan a second time inside the rank — and read
+    * the family's `table` statically pruned to the probed cells
+    * ([[IndexFiles.partitionIn]]: at the file index, not a hope that
+    * dynamic partition pruning fires on the probe join, which it
+    * declines without a selective build-side filter), `cell` cast to
+    * int, tombstoned ids dropped (bit-equal to searching the compacted
+    * index). Returns (probes, centroids, pruned rows). */
+  private def probeIvf(spark: org.apache.spark.sql.SparkSession, dir: String,
+      table: String, queries: DataFrame,
+      nprobe: Int): (DataFrame, DataFrame, DataFrame) = {
+    IndexFiles.requireLiveTable(spark, dir, table)
+    IndexFiles.requireLiveTable(spark, dir, "centroids")
+    val centroids = spark.read.parquet(s"$dir/centroids")
+    val pc = probeCells(centroids, queries, nprobe)
+    val probeRows = pc.collect()
+    val probes = spark.createDataFrame(
+      java.util.Arrays.asList(probeRows: _*), pc.schema)
+    val raw = spark.read.parquet(s"$dir/$table")
+    val pruned = raw.filter(IndexFiles.partitionIn(raw, "cell",
+        probeRows.map(_.getAs[Int]("cell").toLong).distinct.toSeq))
+      .withColumn("cell", col("cell").cast("int"))
+    (probes, centroids, IndexFiles.dropTombstones(spark, dir, pruned))
   }
 
   /** (qid, qv, cell): each query paired with its `nprobe` nearest
@@ -1291,22 +1357,9 @@ object Ann {
     * holds the nlist-row codebook. */
   def buildIvfIndex(corpus: DataFrame, dir: String, nlist: Int = 16,
       seed: Long = 42L, trainCap: Long = -1L): Unit = {
-    IndexFiles.clearTombstones(corpus.sparkSession, dir)
-    val (cells, centroids) = ivfFit(corpus, nlist, seed, trainCap)
-      .getOrElse(throw new IllegalArgumentException(
-        s"corpus must exceed nlist=$nlist vectors to index"))
-    cells.withColumn("src", lit("base"))
-      // one task per cell before the partitioned write (guide §6) —
-      // unrouted, every task writes a sliver into every cell dir
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("src", "cell")
-      .parquet(s"$dir/cells")
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    // compact id sidecar for the append-time replayed-id guard: read the
-    // ids back off the just-written cells (column-pruned, no re-assignment)
-    val spark = corpus.sparkSession
-    IndexFiles.writeIds(spark.read.parquet(s"$dir/cells").select("id"), dir)
-    writeTrainStats(spark, dir)
+    val (cells, centroids) = fitForBuild(corpus, dir, nlist, seed, trainCap)
+    writeIvfBase(IndexFamily.ivf, dir, cells, centroids)
+    writeTrainStats(corpus.sparkSession, dir)
   }
 
   /** Record the distribution the codebook was just fitted on — one row
@@ -1359,24 +1412,8 @@ object Ann {
     * existing callers keep working, and that segment retires as a
     * unit (or never, matching the pre-segmented behavior). */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      batch: DataFrame, src: String = "ingest"): Unit = {
-    IndexFamily.ivf.beginAppend(spark, dir, src, sighted = false)
-    val cb = spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
-    require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF index")
-    requireBatchDim(batch, "v", cb(0).length)
-    val b = Dedup.spread(batch)
-      .withColumn("v", col("v").cast("array<double>"))
-      .filter(V.norm2(col("v")) > 0)
-    val batchIds = b.select("id").distinct()
-    IndexFamily.ivf.requireNew(spark, dir, batchIds, DuplicateHits)
-    IndexFiles.appendStaged(spark, dir, Seq(
-      ("cells", b.select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
-        .withColumn("src", lit(src))
-        .repartition(col("cell")),
-        Seq("src", "cell"))),
-      Some(batchIds))
-  }
+      batch: DataFrame, src: String = "ingest"): Unit =
+    appendIvfVia(IndexFamily.ivf, spark, dir, batch, src)((cells, _) => cells)
 
   /** Replace-or-insert into a persisted IVF index — the index-level
     * form of the reference's delete-then-insert re-ingest flow
@@ -1481,11 +1518,8 @@ object Ann {
       stored.select(col("id"), col("v"), col("src"),
         cellOf(col("v"), cb).as("cell")),
       Seq("src", "cell"))
-    val s = spark
-    import s.implicits._
     IndexFiles.replaceTable(spark, dir, "centroids",
-      cb.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "cv"), Nil)
+      centroidsFrame(spark, cb), Nil)
     writeTrainStats(spark, dir)
   }
 
@@ -1509,22 +1543,14 @@ object Ann {
     * and [[retrainIvfIndex]] that). */
   def buildIvfSq8Index(corpus: DataFrame, dir: String, nlist: Int = 16,
       seed: Long = 42L, trainCap: Long = -1L): Unit = {
-    IndexFiles.clearTombstones(corpus.sparkSession, dir)
-    val (cells, centroids) = ivfFit(corpus, nlist, seed, trainCap)
-      .getOrElse(throw new IllegalArgumentException(
-        s"corpus must exceed nlist=$nlist vectors to index"))
-    cells.select(col("id"), V.quantizeSq8(col("v")).as("cz"), col("cell"))
-      .withColumn("src", lit("base"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("src", "cell")
-      .parquet(s"$dir/cells")
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    val spark = corpus.sparkSession
-    IndexFiles.writeIds(spark.read.parquet(s"$dir/cells").select("id"), dir)
+    val (cells, centroids) = fitForBuild(corpus, dir, nlist, seed, trainCap)
+    writeIvfBase(IndexFamily.ivfSq8, dir,
+      cells.select(col("id"), V.quantizeSq8(col("v")).as("cz"), col("cell")),
+      centroids)
     // the cells store codes — record the fitted distribution from the
     // raw fit frame (rebuild IS this family's retrain, so build-time
     // stats are always the serving codebook's)
-    writeTrainStatsOf(spark, dir, cells)
+    writeTrainStatsOf(corpus.sparkSession, dir, cells)
   }
 
   /** Append to a persisted IVF_SQ8 index through the STORED codebook —
@@ -1534,24 +1560,9 @@ object Ann {
     * (per-row scales, so append-then-search is bit-equal to
     * rebuild-then-search — spec-pinned). */
   def appendToIvfSq8Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    IndexFamily.ivfSq8.beginAppend(spark, dir, src, sighted = false)
-    val cb = spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
-    require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF_SQ8 index")
-    requireBatchDim(batch, "v", cb(0).length)
-    val b = Dedup.spread(batch)
-      .withColumn("v", col("v").cast("array<double>"))
-      .filter(V.norm2(col("v")) > 0)
-    val batchIds = b.select("id").distinct()
-    IndexFamily.ivfSq8.requireNew(spark, dir, batchIds, DuplicateHits)
-    IndexFiles.appendStaged(spark, dir, Seq(
-      ("cells", b.select(col("id"), V.quantizeSq8(col("v")).as("cz"),
-        cellOf(col("v"), cb).as("cell")).withColumn("src", lit(src))
-        .repartition(col("cell")),
-        Seq("src", "cell"))),
-      Some(batchIds))
-  }
+      dir: String, batch: DataFrame, src: String = "ingest"): Unit =
+    appendIvfVia(IndexFamily.ivfSq8, spark, dir, batch, src)((cells, _) =>
+      cells.select(col("id"), V.quantizeSq8(col("v")).as("cz"), col("cell")))
 
   /** Search a persisted IVF_SQ8 index: probe the nprobe nearest cells
     * (same static literal partition pruning as [[searchIvfIndex]] —
@@ -1566,25 +1577,7 @@ object Ann {
       dir: String, queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     IndexFiles.requireNoPendingAppend(spark, dir)
-    IndexFiles.requireLiveTable(spark, dir, "cells")
-    IndexFiles.requireLiveTable(spark, dir, "centroids")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val pc = probeCells(centroids, queries, nprobe)
-    val probeRows = pc.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), pc.schema)
-    val probed = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    // type the pruning literals off the actual partition-column schema
-    // (the searchLshIndex lesson — a mismatch inserts a cast that
-    // defeats static pruning)
-    val raw = spark.read.parquet(s"$dir/cells")
-    val cellIsInt =
-      raw.schema("cell").dataType == org.apache.spark.sql.types.IntegerType
-    val typed: Seq[Any] = if (cellIsInt) probed else probed.map(_.toLong)
-    val pruned = (if (probed.isEmpty) raw.filter(lit(false))
-                  else raw.filter(col("cell").isin(typed: _*)))
-      .withColumn("cell", col("cell").cast("int"))
-    val live = IndexFiles.dropTombstones(spark, dir, pruned)
+    val (probes, _, live) = probeIvf(spark, dir, "cells", queries, nprobe)
     val qz = probes.select(col("qid"), col("cell"),
       V.quantizeSq8(col("qv")).as("qz"))
     val scored = live.as("c").join(broadcast(qz.as("p")), "cell")
@@ -1660,9 +1653,7 @@ object Ann {
     IndexFiles.requireLiveTable(spark, dir, "codes")
     IndexFiles.requireLiveTable(spark, dir, "centroids")
     IndexFiles.requireLiveTable(spark, dir, "pq")
-    val c = Dedup.spread(corpus)
-      .withColumn("v", col("v").cast("array<double>"))
-      .filter(V.norm2(col("v")) > 0)
+    val c = nonZeroVectors(Dedup.spread(corpus))
     val indexed = IndexFamily.ivfPq.storedIds(spark, dir)
     val corpusIds = c.select("id").distinct()
     val missing = indexed.join(broadcast(corpusIds), Seq("id"), "left_anti")
@@ -1691,9 +1682,8 @@ object Ann {
     val cbs = trainPqResidual(pqResiduals(liveCells, centroids), dim, m, ksub,
       seed, trainCap).getOrElse(throw new IllegalArgumentException(
         s"index must exceed ksub=$ksub live vectors to retrain"))
-    val cbArr = centroids.orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
-    val allCells = c.select(col("id"), col("v"), cellOf(col("v"), cbArr).as("cell"))
+    val allCells = c.select(col("id"), col("v"),
+      cellOf(col("v"), codebook(centroids)).as("cell"))
     // each re-encoded row keeps its stored src: a retrain re-fits
     // codebooks but must not merge retirement segments (replaceTable
     // stages the new files while the old ones are still readable, so
@@ -1709,12 +1699,7 @@ object Ann {
         .join(srcOf, "id"),
       Seq("src", "cell"))
     IndexFiles.replaceTable(spark, dir, "centroids", centroids, Nil)
-    val s = spark
-    import s.implicits._
-    IndexFiles.replaceTable(spark, dir, "pq",
-      cbs.zipWithIndex.flatMap { case (cbk, j) =>
-        cbk.zipWithIndex.map { case (cv, ci) => (j, ci, cv.toSeq) }
-      }.toSeq.toDF("sub", "code", "vec"), Nil)
+    IndexFiles.replaceTable(spark, dir, "pq", pqFrame(spark, cbs), Nil)
     // PQ codebook drift is the silent kind (codes decode through the
     // trained codebooks) — record the freshly fitted distribution so
     // [[retrainAdvisorIvfPq]] measures against THIS generation
@@ -1739,16 +1724,6 @@ object Ann {
     if (hadTombstones && hasDoclens) refreshSparseStats(spark, dir)
   }
 
-  /** Search a persisted IVF index. Same results as [[ivfTopK]] with the
-    * build's parameters; only the probed cells' partitions are read.
-    * Like [[searchLshIndex]], the probed cell ids are collected
-    * driver-side (nprobe·|queries| ints by construction) and applied as
-    * typed literal partition filters — STATIC pruning at the file
-    * index, not a hope that dynamic partition pruning fires on the
-    * probe join. A bare broadcast join would scan every cell whenever
-    * DPP declines (it needs a selective build-side filter), which at
-    * 100 TB is the difference between reading nprobe/nlist and reading
-    * everything. */
   /** [[searchIvfIndex]] restricted to an allowed-id set — the Milvus
     * search-with-expr composite over an INDEXED collection: the scalar
     * predicate runs where the scalar fields live (the caller's
@@ -1764,38 +1739,18 @@ object Ann {
     searchIvfIndex(spark, dir, queries, k, nprobe, metric,
       allowedIds = Some(allowed))
 
+  /** Search a persisted IVF index. Same results as [[ivfTopK]] with the
+    * build's parameters; only the probed cells' partitions are read
+    * ([[probeIvf]]) — a bare broadcast join would scan every cell
+    * whenever dynamic partition pruning declines, which at 100 TB is
+    * the difference between reading nprobe/nlist and reading
+    * everything. */
   def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nprobe: Int = 4,
       metric: String = "cosine",
       allowedIds: Option[DataFrame] = None): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    IndexFiles.requireLiveTable(spark, dir, "cells")
-    IndexFiles.requireLiveTable(spark, dir, "centroids")
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    // Compute the probes ONCE: collect the (qid, qv, cell) rows —
-    // nprobe·|queries| by construction — and derive BOTH the pruning
-    // literals and the rank join's probe side from that one result (as
-    // a local relation), instead of running the probe plan a second
-    // time inside the rank.
-    val pc = probeCells(centroids, queries, nprobe)
-    val probeRows = pc.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), pc.schema)
-    val probed = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    // `cell` is a partition column on read; inference yields INT for
-    // these directory values, but type the literals off the actual
-    // schema (the searchLshIndex lesson: a literal/attribute type
-    // mismatch inserts a cast that silently defeats the pruning).
-    val raw = spark.read.parquet(s"$dir/cells")
-    val cellIsInt =
-      raw.schema("cell").dataType == org.apache.spark.sql.types.IntegerType
-    val typed: Seq[Any] = if (cellIsInt) probed else probed.map(_.toLong)
-    val pruned = (if (probed.isEmpty) raw.filter(lit(false))
-                  else raw.filter(col("cell").isin(typed: _*)))
-      .withColumn("cell", col("cell").cast("int"))
-    // tombstoned ids ([[IndexFiles.writeTombstones]]) never reach the
-    // ranking — bit-equal to searching the physically compacted index
-    val live = IndexFiles.dropTombstones(spark, dir, pruned)
+    val (probes, _, live) = probeIvf(spark, dir, "cells", queries, nprobe)
     // allowed-id restriction ([[searchIvfIndexFiltered]]) applies before
     // the rank for the same reason the tombstone filter does
     val scoped = allowedIds.fold(live)(a =>
@@ -2126,30 +2081,29 @@ object Ann {
       m: Int = 8, ksub: Int = 16, seed: Long = 42L,
       trainCap: Long = -1L): Unit = {
     require(ksub >= 2 && ksub <= 256, s"ksub must be in [2,256], got $ksub")
-    IndexFiles.clearTombstones(corpus.sparkSession, dir)
-    val (cells, centroids) = ivfFit(corpus, nlist, seed, trainCap)
-      .getOrElse(throw new IllegalArgumentException(
-        s"corpus must exceed nlist=$nlist vectors to index"))
+    val (cells, centroids) = fitForBuild(corpus, dir, nlist, seed, trainCap)
     val dim = centroids.head().getSeq[Double](1).length
     require(dim % m == 0, s"dim $dim not divisible into m=$m subspaces")
     val res = pqResiduals(cells, centroids)
     val cbs = trainPqResidual(res, dim, m, ksub, seed, trainCap)
       .getOrElse(throw new IllegalArgumentException(
         s"corpus must exceed ksub=$ksub vectors to index"))
-    res.select(col("id"), col("cell"), pqCodes(col("res"), cbs).as("codes"))
-      .withColumn("src", lit("base"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("src", "cell")
-      .parquet(s"$dir/codes")
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    writeIvfBase(IndexFamily.ivfPq, dir,
+      res.select(col("id"), col("cell"), pqCodes(col("res"), cbs).as("codes")),
+      centroids)
     val s = corpus.sparkSession
-    import s.implicits._
+    pqFrame(s, cbs).write.mode("overwrite").parquet(s"$dir/pq")
+    writeTrainStatsOf(s, dir, cells)
+  }
+
+  /** The m×ksub subspace codebooks as the (sub, code, vec) `dir/pq`
+    * table. */
+  private def pqFrame(spark: org.apache.spark.sql.SparkSession,
+      cbs: Array[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
     cbs.zipWithIndex.flatMap { case (cb, j) =>
       cb.zipWithIndex.map { case (c, ci) => (j, ci, c.toSeq) }
     }.toSeq.toDF("sub", "code", "vec")
-      .write.mode("overwrite").parquet(s"$dir/pq")
-    IndexFiles.writeIds(s.read.parquet(s"$dir/codes").select("id"), dir)
-    writeTrainStatsOf(s, dir, cells)
   }
 
   /** The m×ksub subspace codebooks back off `dir/pq` — m·ksub rows,
@@ -2178,26 +2132,10 @@ object Ann {
       queries: DataFrame, k: Int, nprobe: Int = 4): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
     requireNoPendingRetrain(spark, dir)
-    Seq("codes", "centroids", "pq")
-      .foreach(IndexFiles.requireLiveTable(spark, dir, _))
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val cbs = readPqCodebooks(spark, dir)
-    val pc = probeCells(centroids, queries, nprobe)
-    val probeRows = pc.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), pc.schema)
-    val probed = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    // type the literals off the read schema (the searchLshIndex lesson:
-    // a literal/attribute type mismatch casts away the static pruning)
-    val raw = spark.read.parquet(s"$dir/codes")
-    val cellIsInt =
-      raw.schema("cell").dataType == org.apache.spark.sql.types.IntegerType
-    val typed: Seq[Any] = if (cellIsInt) probed else probed.map(_.toLong)
-    val codes = (if (probed.isEmpty) raw.filter(lit(false))
-                 else raw.filter(col("cell").isin(typed: _*)))
-      .withColumn("cell", col("cell").cast("int"))
-    adcRank(IndexFiles.dropTombstones(spark, dir, codes),
-      ivfPqLuts(probes, centroids, cbs), k)
+    val (probes, centroids, codes) =
+      probeIvf(spark, dir, "codes", queries, nprobe)
+    IndexFiles.requireLiveTable(spark, dir, "pq")
+    adcRank(codes, ivfPqLuts(probes, centroids, readPqCodebooks(spark, dir)), k)
   }
 
   /** Append a batch to a persisted IVF-PQ index WITHOUT re-training:
@@ -2211,29 +2149,12 @@ object Ann {
     * compact `dir/ids` sidecar, crash-safe via
     * [[IndexFiles.appendStaged]]. */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
-    // the family heal refuses while a retrain is pending
-    IndexFamily.ivfPq.beginAppend(spark, dir, src, sighted = false)
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val cb = centroids.orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
-    require(cb.nonEmpty, s"$dir/centroids is empty — not a built IVF-PQ index")
-    requireBatchDim(batch, "v", cb(0).length)
-    val cbs = readPqCodebooks(spark, dir)
-    val b = Dedup.spread(batch)
-      .withColumn("v", col("v").cast("array<double>"))
-      .filter(V.norm2(col("v")) > 0)
-    val batchIds = b.select("id").distinct()
-    IndexFamily.ivfPq.requireNew(spark, dir, batchIds, DuplicateHits)
-    val cells = b.select(col("id"), col("v"), cellOf(col("v"), cb).as("cell"))
-    IndexFiles.appendStaged(spark, dir, Seq(
-      ("codes", pqResiduals(cells, centroids)
-        .select(col("id"), col("cell"), pqCodes(col("res"), cbs).as("codes"))
-        .withColumn("src", lit(src))
-        .repartition(col("cell")),
-        Seq("src", "cell"))),
-      Some(batchIds))
-  }
+      dir: String, batch: DataFrame, src: String = "ingest"): Unit =
+    // the family heal refuses while a retrain is pending, so the
+    // subspace codebooks are read only after it
+    appendIvfVia(IndexFamily.ivfPq, spark, dir, batch, src)((cells, centroids) =>
+      pqResiduals(cells, centroids).select(col("id"), col("cell"),
+        pqCodes(col("res"), readPqCodebooks(spark, dir)).as("codes")))
 
   // ---- index evaluation & contrastive mining -----------------------------
 

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.IntegerType
 
 /** Compact `dir/ids` sidecar shared by the persisted IVF and minhash
   * indexes: one row per indexed doc id, written at build and extended
@@ -451,6 +453,23 @@ private[graft] object IndexFiles {
       payload.join(sizeCappedBroadcast(spark, s"$dir/deleted", d),
         Seq("id"), "left_anti")).getOrElse(payload)
 
+  /** `c IN values` over `raw`'s partition column `c`, the literals typed
+    * to `raw`'s own type for it — the static partition prune of every
+    * literal-pruned index scan. Spark's partition-type inference narrows
+    * `c` to INT when every directory value fits; a literal of another
+    * type makes the analyzer compare through a cast on the attribute,
+    * and the file index can prune on that only if the optimizer
+    * unwraps the cast again (Spark 4 does for integral IN lists; the
+    * rule is version-bound). Typed literals reach the file index as a
+    * bare attribute comparison on any version. No values: `lit(false)`
+    * (an empty `isin` is not a prune). */
+  private[graft] def partitionIn(raw: DataFrame, c: String,
+      values: Seq[Long]): Column =
+    if (values.isEmpty) lit(false)
+    else if (raw.schema(c).dataType == IntegerType)
+      col(c).isin(values.map(_.toInt): _*)
+    else col(c).isin(values: _*)
+
   /** Swap a freshly staged table into place without a data-loss
     * window: the live table is renamed ASIDE first, the staged copy
     * renamed in, then the old copy deleted. A crash between the two
@@ -574,9 +593,11 @@ private[graft] object IndexFiles {
     val root = new Path(dir)
     require(fs.exists(root), s"index dir $dir does not exist")
     val tombstoneTables = IndexFamily.all.flatMap(_.deletes).map(_.table).toSet
+    val ledgers = IndexFamily.all.flatMap(_.ledger).toSet
     def kindOf(name: String): String = name match {
       case "ids" | "bloom" => "sidecar"
       case t if tombstoneTables(t) => "tombstones"
+      case t if ledgers(t) => "sightings"
       case "meta" | "stats" | "centroids" | "pq" | "train_stats" => "metadata"
       case _ => "payload"
     }
@@ -665,9 +686,12 @@ final case class IndexFamily(
     afterRetire: (SparkSession, String) => Unit = (_, _) => (),
     afterHeal: (SparkSession, String, Boolean) => Unit = (_, _, _) => (),
     sighting: Option[IndexFamily.Sighting] = None) {
-  import org.apache.spark.sql.functions.{broadcast, col, lit}
+  import org.apache.spark.sql.functions.broadcast
 
   def sighted: Boolean = sighting.isDefined
+
+  /** The sightings ledger table, when this family keeps one. */
+  def ledger: Option[String] = sighting.map(_ => "seen")
 
   private def tables: Seq[String] = payload.map(_._1)
 

@@ -82,15 +82,22 @@ object StreamIngest {
     certainlyNovel.unionByName(confirmedNovel).drop("__fp")
   }
 
-  /** How many of `batchIds` appear in `table`'s id column — semi-join
-    * BEFORE the distinct, so the count aggregates O(batch) surviving
-    * rows instead of shuffling the full stored id column per
-    * micro-batch. */
-  private def overlap(batchIds: DataFrame, table: DataFrame): Long = {
-    import org.apache.spark.sql.functions.broadcast
-    table.select("id")
-      .join(broadcast(batchIds), Seq("id"), "left_semi")
-      .distinct().count()
+  /** How many of `batchIds` appear in each named table's id column, in
+    * ONE action: every table is semi-joined to the batch BEFORE the
+    * union (O(batch) surviving rows, never the full stored id column),
+    * tagged with its name, and counted per tag. A table no batch id
+    * reaches is absent from the aggregate and counts 0. */
+  private def overlaps(batchIds: DataFrame,
+      tables: Seq[(String, DataFrame)]): Seq[(String, Long)] = {
+    import org.apache.spark.sql.functions.{broadcast, countDistinct, lit}
+    val found = tables.map { case (t, df) =>
+      df.select("id")
+        .join(broadcast(batchIds), Seq("id"), "left_semi")
+        .select(lit(t).as("t"), col("id"))
+    }.reduce(_ union _)
+      .groupBy("t").agg(countDistinct("id")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    tables.map { case (t, _) => t -> found.getOrElse(t, 0L) }
   }
 
   /** Run `apply` on every micro-batch of `stream`, exactly once per
@@ -157,7 +164,7 @@ object StreamIngest {
     val witnesses = fam.payload.map { case (t, _) =>
         t -> spark.read.parquet(s"$indexDir/$t") } ++
       fam.idsFrom.map(_ => "ids" -> fam.storedIds(spark, indexDir))
-    val counts = witnesses.map { case (t, df) => t -> overlap(batchIds, df) }
+    val counts = overlaps(batchIds, witnesses)
     val stored = counts.forall(_._2 == n)
     def refuse(what: String, why: String) = new IllegalStateException(
       s"${fam.name} batch $batchId $what (" +
@@ -182,9 +189,7 @@ object StreamIngest {
   /** The eligible count of the IVF families: ids of nonzero-norm
     * vectors, the filter their appends apply. */
   private def nonZeroIds(batch: DataFrame): Long =
-    batch.filter(graft.functions.VectorFunctions
-        .norm2(col("v").cast("array<double>")) > 0)
-      .select("id").distinct().count()
+    Ann.nonZeroVectors(batch).select("id").distinct().count()
 
   /** One micro-batch of [[dedupIngestStream]] ([[applyWitnessed]] over
     * the minhash family) — public so the replay semantics are directly

@@ -494,6 +494,9 @@ class AnnSpec extends SparkSpec {
     // empty query set -> empty result, not a failure
     val noQs = Seq.empty[(Long, Seq[Double])].toDF("qid", "qv")
     assert(Ann.searchLshIndex(spark, dir, noQs, k = 5).count() == 0)
+    // one query reads one bucket per table: static pruning on `sig`
+    assertPruned(Ann.searchLshIndex(spark, dir, qs.filter(col("qid") === 1L), k = 5),
+      dataCol = "v", partCol = "sig", maxParts = 2)
   }
 
   test("buildIvfIndex + searchIvfIndex: persisted search matches direct ivfTopK") {
@@ -511,6 +514,9 @@ class AnnSpec extends SparkSpec {
     val cellDirs = new java.io.File(s"$dir/cells/src=base").listFiles()
       .filter(_.getName.startsWith("cell=")).map(_.getName)
     assert(cellDirs.length == 8, s"got ${cellDirs.toSeq}")
+    // empty query set -> empty result, not a failure
+    val noQs = Seq.empty[(Long, Seq[Double])].toDF("qid", "qv")
+    assert(Ann.searchIvfIndex(spark, dir, noQs, k = 5).count() == 0)
   }
 
   test("appendToLshIndex: append-then-search is bit-equal to rebuild-then-search") {
@@ -1018,6 +1024,9 @@ class AnnSpec extends SparkSpec {
     val cellSchema = spark.read.parquet(s"$dir/cells").schema
     assert(cellSchema.fieldNames.toSet == Set("id", "cz", "src", "cell"),
       s"unexpected cell columns: ${cellSchema.fieldNames.toSeq}")
+    // empty query set -> empty result, not a failure
+    val noQs = Seq.empty[(Long, Seq[Double])].toDF("qid", "qv")
+    assert(Ann.searchIvfSq8Index(spark, dir, noQs, k = 5).count() == 0)
   }
 
   test("IVF_SQ8 append=rebuild bit-equal; replay throws; delete/compact/upsert lifecycle") {

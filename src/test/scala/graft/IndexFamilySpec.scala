@@ -304,5 +304,12 @@ class IndexFamilySpec extends SparkSpec {
     Seq("pq", "train_stats", "centroids").foreach(t =>
       assert(pk.get(t).contains("metadata"), s"ivf_pq $t: $pk"))
     assert(pk.get("codes").contains("payload"), s"ivf_pq: $pk")
+    val mh = tmp("descmh") + "/idx"
+    Dedup.buildMinhashIndexSighted(novel(1L, 2L, 3L), "doc_id", "text", mh,
+      day = "d1")
+    val mk = kinds(mh)
+    assert(mk.get("seen").contains("sightings"), s"minhash: $mk")
+    Seq("shingles", "sigs").foreach(t =>
+      assert(mk.get(t).contains("payload"), s"minhash $t: $mk"))
   }
 }
