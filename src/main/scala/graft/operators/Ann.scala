@@ -1027,8 +1027,8 @@ object Ann {
   /** Admission append with the sighting touch — the cosine form of
     * [[graft.operators.Dedup.appendToMinhashIndexSighted]]: each batch
     * vector probes the live history at k=1 through the statically
-    * pruned bucket scan ([[searchLshIndex]] — the
-    * cosineDedupAgainstIndex verdict verbatim), vectors whose best
+    * pruned bucket scan ([[lshDupPairs]] — the
+    * cosineDedupAgainstIndex verdict), vectors whose best
     * stored neighbor scores >= tau are REJECTED (their `dup_of`
     * clocks reset), the rest extend `buckets` under this day's
     * segment, and the day's `seen` slice records admitted ids plus
@@ -1046,31 +1046,24 @@ object Ann {
     val (dim, planes, tables) =
       (m.getAs[Int]("dim"), m.getAs[Int]("planes"), m.getAs[Int]("tables"))
     requireBatchDim(batch, "v", dim)
-    val hits = searchLshIndex(spark, dir,
-        batch.select(col("id").as("qid"), col("v").as("qv")), k = 1)
-      .filter(col("score") >= tau)
-      .select(col("qid").as("id"), col("id").as("dup_of"))
-      // localCheckpoint + persist, not bare persist: the hit plan scans
-      // $dir/buckets, and this append's staged writes refreshByPath($dir)
-      // between slices — a bare persist was invalidated and each later
-      // slice re-ran the whole bucket probe (the r20 containment-append
-      // finding); the persist restores planner statistics
-      .localCheckpoint().persist()
-    val hitsN = hits.count()
-    val admitted = batch.join(hits.select("id"), Seq("id"), "left_anti")
-      .persist()
-    // counts on the persisted frames gate the slices — isEmpty probes
-    // would each pay a driver planning round over the composed plan (r19)
-    val admittedN = admitted.count()
-    IndexFamily.lsh.commitSighted(spark, dir, day,
-      if (admittedN == 0) Seq.empty
-      else Seq(("buckets", lshBuckets(admitted, dim, planes, tables)
+    IndexFamily.lsh.admitSighted(spark, dir, day, batch,
+        lshDupPairs(spark, dir,
+          batch.select(col("id").as("qid"), col("v").as("qv")), tau)) { adm =>
+      Seq(("buckets", lshBuckets(adm, dim, planes, tables)
         .withColumn("src", lit(day))
-        .repartition(col("tbl"), col("sig")), Seq("src", "tbl", "sig"))),
-      admitted.select("id").distinct(), admittedN > 0,
-      Some(hits.select(col("dup_of").as("id"))), hitsN > 0)
-    hits.unpersist(); admitted.unpersist(); ()
+        .repartition(col("tbl"), col("sig")), Seq("src", "tbl", "sig")))
+    }
   }
+
+  /** The cosine admission verdict: each query's best stored neighbor
+    * at k=1 through the statically pruned bucket scan
+    * ([[searchLshIndex]]), kept when it scores >= tau. Returns
+    * (id_new = qid, id_old = the stored id, score). */
+  private[graft] def lshDupPairs(spark: org.apache.spark.sql.SparkSession,
+      dir: String, queries: DataFrame, tau: Double): DataFrame =
+    searchLshIndex(spark, dir, queries, k = 1)
+      .filter(col("score") >= tau)
+      .select(col("qid").as("id_new"), col("id").as("id_old"), col("score"))
 
   /** Fail fast when an appended batch's vectors don't match the stored
     * index's dimension — a mismatch would SILENTLY corrupt the index

@@ -811,28 +811,35 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       tau: Double, excludeSrc: Option[String]): (DataFrame, Seq[DataFrame]) = {
-    val (d, _, best, _, pins) =
+    import org.apache.spark.sql.expressions.Window
+    val (d, shB, dropsB, histDrops, pins) =
       containmentVerdictCore(spark, dir, batch, idCol, textCol, tau,
         excludeSrc, readBloom(spark, dir))
+    // the winning container: largest, ties min id
+    val best = dropsB.unionByName(histDrops)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("id_a").orderBy(col("sz_b").desc, col("id_b").asc)))
+      .filter(col("rn") === 1)
+      .select(col("id_a").as("id"), col("id_b").as("container_id"))
     (d.select(col(idCol).as("id")).join(best, Seq("id"), "left")
       .select(col("id"), col("container_id").isNotNull.as("is_contained"),
         col("container_id")),
-      pins)
+      shB +: pins)
   }
 
   /** The shared verdict plan behind [[dropContainedAgainstIndex]] and
     * the sighted admission append: (batch frame, its cached shingle
-    * set, best-container decision rows (id, container_id), the RAW
+    * set, the within-batch drop pairs (id_a, id_b, sz_b), the RAW
     * batch-vs-HISTORY drop pairs (id_a, id_b, sz_b) — every stored
     * container a rejected doc tau-matched, what the sighting touch
-    * records — and the cache pins). `bloom`: the sidecar row, read once. */
+    * records — and the cache pins other than the shingle set). `bloom`:
+    * the sidecar row, read once. */
   private def containmentVerdictCore(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
-      tau: Double, excludeSrc: Option[String], bloom: org.apache.spark.sql.Row,
-      pinDecision: Boolean = false): (DataFrame, DataFrame, DataFrame,
+      tau: Double, excludeSrc: Option[String],
+      bloom: org.apache.spark.sql.Row): (DataFrame, DataFrame, DataFrame,
         DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.sql.expressions.Window
     require(tau > 0 && tau <= 1, s"containment tau must be in (0,1]: $tau")
     IndexFiles.requireNoPendingAppend(spark, dir)
     val (w, maxDf) = containmentMeta(spark, dir)
@@ -906,32 +913,12 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
     // same −ε + 4dp round discipline as verifyContainment — the oracle
     // shares the rounded comparison
-    val histDropsPlan = cand.join(inter, Seq("id_a", "id_b"))
+    val histDrops = cand.join(inter, Seq("id_a", "id_b"))
       .withColumn("raw", col("inter").cast("double") / col("sz_a"))
       .filter(col("raw") >= tau - 1e-4)
       .withColumn("c", round(col("raw"), 4)).filter(col("c") >= tau)
       .select("id_a", "id_b", "sz_b")
-    // pinDecision (the APPEND path): eagerly localCheckpoint the
-    // batch-vs-history drop pairs — a takedown-sized frame — so every
-    // downstream consumer (best, the seen slice, the journaled writes)
-    // reads an RDD with NO $dir scan in its lineage. The append
-    // mutates $dir mid-flight (bloom replaceTable, staged payload
-    // writes), and each mutation's refreshByPath invalidates every
-    // cached plan that scans $dir — measured (r20, event-logged): the
-    // two staged writes each re-ran the ENTIRE verdict (119 s + 151 s
-    // task CPU vs the one real 123 s verdict at sf0.1) because their
-    // persisted inputs kept being invalidated. Checkpointing the one
-    // $dir-dependent decision frame makes everything derived from it
-    // ($dir-free batch shingles aside) immune. The probe path (no
-    // writes) keeps the single lazy plan.
-    val histDrops =
-      if (pinDecision) histDropsPlan.localCheckpoint() else histDropsPlan
-    val best = dropsB.unionByName(histDrops)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("id_a").orderBy(col("sz_b").desc, col("id_b").asc)))
-      .filter(col("rn") === 1)
-      .select(col("id_a").as("id"), col("id_b").as("container_id"))
-    (d, shB, best, histDrops, Seq(shB, cand) ++ pinsB)
+    (d, shB, dropsB, histDrops, cand +: pinsB)
   }
 
   // ---- sighting-window containment dedup ---------------------------------
@@ -940,9 +927,10 @@ object Dedup {
     * Bloom sidecar (current row `meta`) at the stored sizing — the
     * append-time delta merge, shared by the plain and sighted appends
     * (crash ordering: callers run this BEFORE the payload lands; extra
-    * bits are harmless, the reverse could wrongly prune a shingle). */
+    * bits are harmless, the reverse could wrongly prune a shingle).
+    * Returns the number of distinct batch shingles merged. */
   private def mergeContainmentBloom(spark: org.apache.spark.sql.SparkSession,
-      dir: String, meta: org.apache.spark.sql.Row, batchSh: DataFrame): Unit = {
+      dir: String, meta: org.apache.spark.sql.Row, batchSh: DataFrame): Long = {
     val (bytes, items, bits) = (meta.getAs[Array[Byte]]("bloom"),
       meta.getAs[Long]("n_items"), meta.getAs[Long]("num_bits"))
     // ONE action computes the emptiness check and the delta sketch —
@@ -951,7 +939,8 @@ object Dedup {
     // driver plan round at bench scale)
     val row = batchSh.agg(count(lit(1)).as("n"),
       SK.bloomAgg(col("sh"), items, bits).as("bloom")).head()
-    if (row.getAs[Long]("n") > 0) {
+    val n = row.getAs[Long]("n")
+    if (n > 0) {
       val delta = row.getAs[Array[Byte]]("bloom")
       val merged = bloomOf(bytes)
       merged.mergeInPlace(bloomOf(delta))
@@ -961,6 +950,7 @@ object Dedup {
           .toDF("bloom", "n_items", "fpp", "num_bits"),
         Seq.empty)
     }
+    n
   }
 
   /** [[buildContainmentIndex]] plus a SIGHTINGS ledger — the
@@ -1006,52 +996,34 @@ object Dedup {
     IndexFamily.containment.requireNew(spark, dir,
       spread(batch).select(col(idCol).as("id")).distinct(),
       "replayed ids would corrupt the intersection counts")
-    // pinDecision: the verdict's batch-vs-history drop pairs come back
-    // eagerly localCheckpoint'ed — the expensive frame here (history-
-    // candidate join + exact intersection verify) has THREE readers in
-    // this append (`best` via its union, the seen slice, the journaled
-    // write), and this append's own sidecar/staged writes refreshByPath
-    // $dir between them, which invalidates every cached plan scanning
-    // $dir. The checkpoint pins the pairs as an RDD no refresh touches
-    // (r20 — each staged write was re-running the whole verdict).
     val bloom = readBloom(spark, dir)
-    val (d, shB, best, histDrops, pins) =
+    val (d, shB, dropsB, histDrops, pins) =
       containmentVerdictCore(spark, dir, batch, idCol, textCol, tau, None,
-        bloom, pinDecision = true)
-    val dupIds = best.select("id").persist()
-    dupIds.count()
-    val admittedIds = d.select(col(idCol).as("id")).distinct()
-      .join(dupIds, Seq("id"), "left_anti").persist()
-    val admittedSh = shB.join(dupIds, Seq("id"), "left_anti")
-      .withColumn("src", lit(day)).persist()
-    val sizes = admittedSh.groupBy("id").agg(count(lit(1)).as("sz"))
-      .withColumn("src", lit(day))
-    // the emptiness probes below run on counts of the PERSISTED frames
-    // (one materialization each), not isEmpty anti-join probes — every
-    // extra action pays a full driver planning round over this append's
-    // composed plan (r19); histDrops is already cache-materialized by
-    // dupIds.count() above, so its count is a cache read
-    val admIdsN = admittedIds.count()
-    val histDropsN = histDrops.count()
-    // bloom delta BEFORE the payload commit (the appendToContainment-
-    // Index crash ordering); its aggregate doubles as admittedSh's
-    // one-pass emptiness check
-    val admShN = admittedSh.count()
-    mergeContainmentBloom(spark, dir, bloom, admittedSh.select("sh").distinct())
-    // zero-SHINGLE admitted docs still enter the ids sidecar (the
-    // buildContainmentIndex rule): the journal is admittedIds, not the
-    // payload's ids
-    IndexFamily.containment.commitSighted(spark, dir, day,
-      if (admShN == 0) Seq.empty
-      else Seq(
-        ("shingles", admittedSh.repartition(col("sh")), Seq("src")),
-        ("sizes", sizes, Seq("src"))),
-      admittedIds, admIdsN > 0,
-      Some(histDrops.select(col("id_b").as("id"))), histDropsN > 0)
-    pins.foreach(_.unpersist())
-    // histDrops is checkpoint-backed (no cache entry to drop); its RDD
-    // blocks are reclaimed by the ContextCleaner once unreferenced
-    dupIds.unpersist(); admittedIds.unpersist(); admittedSh.unpersist(); ()
+        bloom)
+    // a doc dropped inside the batch touches no stored container
+    val pairs = dropsB.select(col("id_a").as("id_new"),
+        lit(null).cast(histDrops.schema("id_b").dataType).as("id_old"))
+      .unionByName(histDrops.select(col("id_a").as("id_new"),
+        col("id_b").as("id_old")))
+    IndexFamily.containment.admitSighted(spark, dir, day,
+        d.select(col(idCol).as("id")).distinct(),
+        CacheLifecycle.handOff(pairs, pins)) { adm =>
+      val admittedSh = shB.join(adm, Seq("id"), "left_semi")
+        .withColumn("src", lit(day)).persist()
+      // bloom delta BEFORE the payload commit (the appendToContainment-
+      // Index crash ordering); its count gates the payload: zero-SHINGLE
+      // admitted docs still enter the ids sidecar and the seen slice
+      // (the buildContainmentIndex rule), through the admitted ids
+      if (mergeContainmentBloom(spark, dir, bloom,
+          admittedSh.select("sh").distinct()) == 0) {
+        admittedSh.unpersist(); Seq.empty
+      } else Seq(
+        ("shingles", CacheLifecycle.handOff(admittedSh.repartition(col("sh")),
+          Seq(admittedSh)), Seq("src")),
+        ("sizes", admittedSh.groupBy("id").agg(count(lit(1)).as("sz"))
+          .withColumn("src", lit(day)), Seq("src")))
+    }
+    shB.unpersist(); ()
   }
 
   /** [[IndexFamily.retireSeenWindow]] for the containment family,
@@ -1892,9 +1864,10 @@ object Dedup {
       indexDir: String, clusterMap: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, tau: Double = 0.5): DataFrame = {
     // consumed twice below (semi filter + label join) — materialize the
-    // whole probe pipeline once
-    val pairs = dedupAgainstIndex(spark, indexDir, batch, idCol, textCol, tau)
-      .select(col("id_new"), col("id_old")).localCheckpoint()
+    // whole probe pipeline once, then release the probe's caches
+    val probe = dedupAgainstIndex(spark, indexDir, batch, idCol, textCol, tau)
+    val pairs = probe.select(col("id_new"), col("id_old")).localCheckpoint()
+    CacheLifecycle.release(probe)
     val cmSlice = clusterMap
       .select(col("id").as("id_old"), col("cluster_id"))
       .join(broadcast(pairs.select("id_old").distinct()),
@@ -1948,8 +1921,9 @@ object Dedup {
   def reclusterBridged(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, clusterMap: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, tau: Double = 0.5): DataFrame = {
-    val pairs = dedupAgainstIndex(spark, indexDir, batch, idCol, textCol, tau)
-      .select(col("id_new"), col("id_old")).localCheckpoint()
+    val probe = dedupAgainstIndex(spark, indexDir, batch, idCol, textCol, tau)
+    val pairs = probe.select(col("id_new"), col("id_old")).localCheckpoint()
+    CacheLifecycle.release(probe)
     val cm = clusterMap.select(col("id"), col("cluster_id"))
     val cmSlice = cm.select(col("id").as("id_old"), col("cluster_id"))
       .join(broadcast(pairs.select("id_old").distinct()),
@@ -2377,61 +2351,24 @@ object Dedup {
       dir: String, newDf: DataFrame, idCol: String, textCol: String,
       day: String, tau: Double = 0.5): Unit = {
     IndexFamily.minhash.beginAppend(spark, dir, day, sighted = true)
-    // inlined [[dedupAgainstIndex]] rather than called: the batch's
-    // shingle sets and band signatures feed BOTH the verdict probe and
-    // the admitted append — computing them once and FILTERING for the
-    // admitted subset saves a full shingle+minhash chain per day
-    // (measured ~35% of the sighted append at bench scale)
+    // the batch's shingle sets and band signatures feed BOTH the verdict
+    // and the admitted append — computed once, filtered to the admitted
+    // subset (a second shingle+minhash chain was ~35% of the sighted
+    // append at bench scale)
     val (w, numHashes, bands, maxDf) = minhashMeta(spark, dir)
     val newSh = shingleHashSet(newDf, idCol, textCol, w, maxDf).persist()
-    import org.apache.spark.sql.types._
-    val oldSh = IndexFiles.dropTombstones(spark, dir,
-      IndexFiles.readOrEmpty(spark, s"$dir/shingles", StructType(Seq(
-        StructField("id", newDf.schema(idCol).dataType),
-        StructField("h", LongType)))))
-    IndexFamily.minhash.requireNew(spark, dir, newSh.select("id").distinct(),
-      JaccardReplay)
+    val batchIds = newSh.select("id").distinct()
+    IndexFamily.minhash.requireNew(spark, dir, batchIds, JaccardReplay)
     val newSig = bandSignatures(minhashes(newSh, numHashes),
       bands, numHashes / bands).persist()
-    val oldSig = IndexFiles.dropTombstones(spark, dir,
-      IndexFiles.readOrEmpty(spark, s"$dir/sigs", StructType(Seq(
-        StructField("id", newDf.schema(idCol).dataType),
-        StructField("band", IntegerType), StructField("sig", StringType)))))
-    val cand = oldSig.as("o").join(broadcast(newSig.as("n")),
-        col("n.band") === col("o.band") && col("n.sig") === col("o.sig"))
-      .select(col("n.id").as("id_a"), col("o.id").as("id_b"))
-      .distinct()
-    val (verified, pins) = verifyJaccard(cand, newSh.union(oldSh), "h", tau)
-    // one materialization: dup ids, touched ids, and the seen slice
-    // all read this small (pairs-at-tau) frame. localCheckpoint (not
-    // just persist): the frame's lineage scans $dir, and this append's
-    // staged writes refreshByPath($dir) between slices — a bare persist
-    // kept being invalidated and every later slice re-ran the whole
-    // band-join + Jaccard verify (the r20 containment-append finding).
-    // The persist on top restores planner statistics (a LogicalRDD
-    // reports no size, which would demote the downstream anti-joins
-    // from broadcast).
-    val pairs = verified.select(col("id_a").as("id_new"),
-      col("id_b").as("id_old")).localCheckpoint().persist()
-    val pairsN = pairs.count()
-    pins.foreach(_.unpersist())
-    val dupIds = pairs.select(col("id_new").as("id"))
-    val admittedSh = newSh.join(dupIds, Seq("id"), "left_anti")
-    val admittedSig = newSig.join(dupIds, Seq("id"), "left_anti")
-    // persisted + counted ONCE: batchIds gates the payload slices, the
-    // seen union, and the journal guard — isEmpty probes would each
-    // pay a driver planning round over the composed plan (r19)
-    val batchIds = admittedSh.select("id").distinct().persist()
-    val batchIdsN = batchIds.count()
-    IndexFamily.minhash.commitSighted(spark, dir, day,
-      // admittedSh nonempty ⟺ some admitted id survives (batchIds is
-      // its own id projection)
-      if (batchIdsN == 0) Seq.empty
-      else minhashSlices(admittedSig, admittedSh, day),
-      batchIds, batchIdsN > 0,
-      Some(pairs.select(col("id_old").as("id"))), pairsN > 0)
-    newSh.unpersist(); newSig.unpersist(); pairs.unpersist()
-    batchIds.unpersist(); ()
+    val (pairs, pins) = minhashPairs(spark, dir, newSh, newSig,
+      newDf.schema(idCol).dataType, tau)
+    IndexFamily.minhash.admitSighted(spark, dir, day, batchIds,
+        CacheLifecycle.handOff(pairs, pins)) { adm =>
+      minhashSlices(newSig.join(adm, Seq("id"), "left_semi"),
+        newSh.join(adm, Seq("id"), "left_semi"), day)
+    }
+    newSh.unpersist(); newSig.unpersist(); ()
   }
 
   /** [[IndexFamily.retireSeenWindow]] for the minhash family, kept by
@@ -2462,9 +2399,8 @@ object Dedup {
       dir: String, batch: DataFrame, idCol: String, vecCol: String,
       tau: Double): DataFrame = {
     val queries = batch.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val hits = graft.operators.Ann.searchLshIndex(spark, dir, queries, k = 1)
-      .filter(col("score") >= tau)
-      .select(col("qid").as("id"), col("id").as("dup_of"),
+    val hits = Ann.lshDupPairs(spark, dir, queries, tau)
+      .select(col("id_new").as("id"), col("id_old").as("dup_of"),
         col("score").as("cos"))
     batch.select(col(idCol).as("id"))
       .join(hits, Seq("id"), "left_outer")
@@ -2495,39 +2431,44 @@ object Dedup {
     IndexFiles.requireNoPendingAppend(spark, dir)
     val (w, numHashes, bands, maxDf) = minhashMeta(spark, dir)
     val newSh = shingleHashSet(newDf, idCol, textCol, w, maxDf).cache()
-    // an all-short-doc build writes src-partitioned tables with
-    // ZERO partition directories — [[IndexFiles.readOrEmpty]]
-    // synthesizes the empty payloads with the batch's id type (probe
-    // returns empty). The src partition column projects away:
-    // the verify union pairs these rows with the batch's bare (id, h)
+    IndexFamily.refuseStored(IndexFamily.minhash.storedIds(spark, dir),
+      newSh.select("id").distinct(), JaccardReplay)
+    val (pairs, pins) = minhashPairs(spark, dir, newSh,
+      bandSignatures(minhashes(newSh, numHashes), bands, numHashes / bands),
+      newDf.schema(idCol).dataType, tau)
+    CacheLifecycle.handOff(pairs, Seq(newSh) ++ pins)
+  }
+
+  /** The minhash verdict against the stored history: batch band
+    * signatures `newSig` broadcast against the stored ones, candidates
+    * verified on exact Jaccard over `newSh` ∪ the stored shingle sets.
+    * Returns (id_new, id_old, jaccard) and the verify's pins.
+    * Tombstoned docs ([[IndexFiles.writeTombstones]]) neither candidate
+    * nor verify — bit-equal to the physically compacted index. */
+  private def minhashPairs(spark: org.apache.spark.sql.SparkSession,
+      dir: String, newSh: DataFrame, newSig: DataFrame,
+      idType: org.apache.spark.sql.types.DataType,
+      tau: Double): (DataFrame, Seq[DataFrame]) = {
     import org.apache.spark.sql.types._
-    val oldSh = IndexFiles.dropTombstones(spark, dir,
-      IndexFiles.readOrEmpty(spark, s"$dir/shingles", StructType(Seq(
-        StructField("id", newDf.schema(idCol).dataType),
-        StructField("h", LongType)))))
-    val replayed = newSh.select("id").distinct()
-      .join(IndexFamily.minhash.storedIds(spark, dir), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already exists " +
-        s"in the index — $JaccardReplay")
-    val newSig = bandSignatures(minhashes(newSh, numHashes), bands, numHashes / bands)
-    // tombstoned docs ([[IndexFiles.writeTombstones]]) neither candidate
-    // nor verify — bit-equal to the physically compacted index
-    val oldSig = IndexFiles.dropTombstones(spark, dir,
-      IndexFiles.readOrEmpty(spark, s"$dir/sigs", StructType(Seq(
-        StructField("id", newDf.schema(idCol).dataType),
-        StructField("band", IntegerType), StructField("sig", StringType)))))
-    val cand = oldSig.as("o").join(broadcast(newSig.as("n")),
+    // an all-short-doc build writes src-partitioned tables with ZERO
+    // partition directories — [[IndexFiles.readOrEmpty]] synthesizes
+    // the empty payloads with the batch's id type (no pairs). The src
+    // partition column projects away: the verify union pairs the stored
+    // rows with the batch's bare (id, h)
+    def stored(table: String, cols: StructField*) =
+      IndexFiles.dropTombstones(spark, dir, IndexFiles.readOrEmpty(spark,
+        s"$dir/$table", StructType(StructField("id", idType) +: cols)))
+    val cand = stored("sigs", StructField("band", IntegerType),
+        StructField("sig", StringType)).as("o")
+      .join(broadcast(newSig.as("n")),
         col("n.band") === col("o.band") && col("n.sig") === col("o.sig"))
       .select(col("n.id").as("id_a"), col("o.id").as("id_b"))
       .distinct()
-    // verify against the union of both shingle stores: id_a resolves in
-    // the new batch, id_b in the index
-    val (pairs, pins) = verifyJaccard(cand, newSh.union(oldSh), "h", tau)
-    CacheLifecycle.handOff(
-      pairs.withColumnRenamed("id_a", "id_new")
-        .withColumnRenamed("id_b", "id_old"),
-      Seq(newSh) ++ pins)
+    // id_a resolves in the new batch, id_b in the index
+    val (pairs, pins) = verifyJaccard(cand,
+      newSh.union(stored("shingles", StructField("h", LongType))), "h", tau)
+    (pairs.withColumnRenamed("id_a", "id_new").withColumnRenamed("id_b", "id_old"),
+      pins)
   }
 
   // ---- exact-dedup history index (Bloom-pruned admission) ---------------

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types.IntegerType
 
 /** Compact `dir/ids` sidecar shared by the persisted IVF and minhash
@@ -686,8 +686,6 @@ final case class IndexFamily(
     afterRetire: (SparkSession, String) => Unit = (_, _) => (),
     afterHeal: (SparkSession, String, Boolean) => Unit = (_, _, _) => (),
     sighting: Option[IndexFamily.Sighting] = None) {
-  import org.apache.spark.sql.functions.broadcast
-
   def sighted: Boolean = sighting.isDefined
 
   /** The sightings ledger table, when this family keeps one. */
@@ -751,13 +749,9 @@ final case class IndexFamily(
     * so the journal's sidecar extension leaves it complete. Runs after
     * [[beginAppend]], before the batch lands. */
   def requireNew(spark: SparkSession, dir: String, batchIds: DataFrame,
-      why: String): Unit = {
-    val replayed = IndexFiles.ensureIds(spark, dir, idsOf(spark, dir))
-      .join(broadcast(batchIds), "id").limit(1).collect()
-    require(replayed.isEmpty,
-      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
-        s"exists in the index — $why")
-  }
+      why: String): Unit =
+    IndexFamily.refuseStored(IndexFiles.ensureIds(spark, dir, idsOf(spark, dir)),
+      batchIds, why)
 
   /** A sighted build's `seen` ledger: the distinct `keys`, all sighted
     * on the build `day` (which ages out of the window like any other). */
@@ -785,6 +779,40 @@ final case class IndexFamily(
     if ((slices ++ seen).nonEmpty)
       IndexFiles.appendStaged(spark, dir, slices ++ seen,
         if (admittedAny && idsFrom.isDefined) Some(admitted) else None)
+  }
+
+  /** The admission tail of the verdict-probing sighted appends.
+    * `pairs` are the verdict's (id_new, id_old) — each rejected batch
+    * id with the stored id it matched, id_old null for a rejection
+    * inside the batch; pins it hands off ([[CacheLifecycle]]) are
+    * released once it is checkpointed. The rows of `batch` (keyed by
+    * `id`) it did not reject are admitted; `slices` builds the payload
+    * from them, only when there are any, and the pins its frames hand
+    * off are released after the one [[commitSighted]] that lands the
+    * payload, the admitted ids and the touched stored ids. */
+  def admitSighted(spark: SparkSession, dir: String, day: String,
+      batch: DataFrame, pairs: DataFrame)(
+      slices: DataFrame => Seq[(String, DataFrame, Seq[String])]): Unit = {
+    // localCheckpoint + persist, not bare persist: the verdict scans
+    // $dir, and the staged writes refreshByPath($dir) between slices —
+    // a bare persist was invalidated and every later slice re-ran the
+    // whole verdict (r20, event-logged: 119 s + 151 s of task CPU for
+    // one 123 s verdict at sf0.1); the persist restores the planner
+    // statistics a checkpointed RDD lacks, so the anti-join broadcasts
+    val p = pairs.select("id_new", "id_old").localCheckpoint().persist()
+    CacheLifecycle.release(pairs)
+    val touched = p.filter(col("id_old").isNotNull).select(col("id_old").as("id"))
+    // counts of persisted frames, not isEmpty probes: each extra action
+    // pays a driver planning round over the composed plan (r19)
+    val touchedN = touched.count()
+    val admitted = batch.join(p.select(col("id_new").as("id")), Seq("id"),
+      "left_anti").persist()
+    val admittedN = admitted.count()
+    val payload = if (admittedN == 0) Seq.empty else slices(admitted)
+    commitSighted(spark, dir, day, payload, admitted.select("id"),
+      admittedN > 0, Some(touched), touchedN > 0)
+    payload.foreach(s => CacheLifecycle.release(s._2))
+    p.unpersist(); admitted.unpersist(); ()
   }
 
   /** Physically purge tombstones: the family's own compactor when its
@@ -976,6 +1004,17 @@ object IndexFamily {
   def requireTag(tag: String): Unit =
     require(tag.nonEmpty && tag != "base",
       s"tag must be a non-empty tag other than 'base': '$tag'")
+
+  /** The replayed-id guard over a given stored id set: fail when any of
+    * `batchIds` is in `stored`; `why` names what the replay would
+    * corrupt. Read-only — [[IndexFamily.requireNew]] is the append form
+    * that backfills a missing sidecar first. */
+  def refuseStored(stored: DataFrame, batchIds: DataFrame, why: String): Unit = {
+    val replayed = stored.join(broadcast(batchIds), "id").limit(1).collect()
+    require(replayed.isEmpty,
+      s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
+        s"exists in the index — $why")
+  }
 
   /** A family's tombstone model: the tombstone table, the key a
     * tombstone row carries, the reader of the live identity rows when

@@ -257,57 +257,25 @@ object Multimodal {
       dir: String, newDf: DataFrame, idCol: String, featuresCol: String,
       day: String): Unit = {
     IndexFamily.phash.beginAppend(spark, dir, day, sighted = true)
-    // inlined probe (the appendToMinhashIndexSighted rule): the batch's
-    // signatures feed BOTH the verdict join and the admitted append —
-    // one signature pass, filtered for the admitted subset
+    // the batch's signatures feed BOTH the verdict join and the admitted
+    // append — one signature pass, filtered to the admitted subset
     val (dim, maxHam, thresh) = phashMeta(spark, dir)
     val (bands, width) = bandParams(dim, maxHam)
     val sig = signatures(newDf, idCol, featuresCol, dim, thresh).cache()
-    val batchAll = sig.select("id").distinct()
+    val batchIds = sig.select("id").distinct()
     // replayed-id guard (the unsighted append's contract): an asset
     // whose features drifted past maxHam would otherwise be "admitted"
     // AGAIN under its stored id — duplicate bands + ids rows, double
     // kills on takedown
-    IndexFamily.phash.requireNew(spark, dir, batchAll,
+    IndexFamily.phash.requireNew(spark, dir, batchIds,
       "a replayed id would duplicate its rows (re-encodes of a KNOWN " +
         "asset arrive under fresh ids and reject as near-dups)")
     val nb = bandedSigs(sig, dim, bands, width)
-    val stored = {
-      import org.apache.spark.sql.types._
-      IndexFiles.readOrEmpty(spark, s"$dir/bands", StructType(Seq(
-        StructField("id", newDf.schema(idCol).dataType),
-        StructField("sig", LongType),
-        StructField("band", IntegerType),
-        StructField("key", LongType))))
+    IndexFamily.phash.admitSighted(spark, dir, day, batchIds,
+        phashPairsAgainst(spark, dir, nb, newDf.schema(idCol).dataType, maxHam)) {
+      adm => Seq(bandSlice(nb.join(adm, Seq("id"), "left_semi"), day))
     }
-    val pairs = broadcast(nb).as("n")
-      .join(IndexFiles.dropTombstones(spark, dir, stored).as("o"),
-        col("n.band") === col("o.band") && col("n.key") === col("o.key"))
-      .select(col("n.id").as("id_new"), col("o.id").as("id_old"),
-        bit_count(col("n.sig").bitwiseXOR(col("o.sig"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHam)
-      // localCheckpoint + persist, not bare persist: the pair plan
-      // scans $dir/bands, and this append's staged writes
-      // refreshByPath($dir) between slices — a bare persist was
-      // invalidated and each later slice re-ran the whole band join
-      // (the r20 containment-append finding); the persist restores
-      // planner statistics over the checkpointed RDD
-      .select(col("id_new"), col("id_old")).localCheckpoint().persist()
-    val pairsN = pairs.count()
-    val dupIds = pairs.select(col("id_new").as("id"))
-    val admittedBands = nb.join(dupIds, Seq("id"), "left_anti")
-    // persisted + counted once — gates the slices and the journal guard
-    // without per-check isEmpty planning rounds (r19)
-    val batchIds = batchAll.join(dupIds, Seq("id"), "left_anti").persist()
-    val batchIdsN = batchIds.count()
-    IndexFamily.phash.commitSighted(spark, dir, day,
-      // every batch id has band rows (bandedSigs emits `bands` rows per
-      // sig), so admittedBands nonempty ⟺ some batch id survived
-      if (batchIdsN == 0) Seq.empty else Seq(bandSlice(admittedBands, day)),
-      batchIds, batchIdsN > 0,
-      Some(pairs.select(col("id_old").as("id"))), pairsN > 0)
-    sig.unpersist(); pairs.unpersist(); batchIds.unpersist(); ()
+    sig.unpersist(); ()
   }
 
   /** Near-dup media pairs between a NEW batch and the stored history —
@@ -324,22 +292,25 @@ object Multimodal {
     IndexFiles.requireNoPendingAppend(spark, dir)
     val (dim, maxHam, thresh) = phashMeta(spark, dir)
     val (bands, width) = bandParams(dim, maxHam)
-    val nb = bandedSigs(
-      signatures(batch, idCol, featuresCol, dim, thresh), dim, bands, width)
+    phashPairsAgainst(spark, dir, bandedSigs(
+        signatures(batch, idCol, featuresCol, dim, thresh), dim, bands, width),
+      batch.schema(idCol).dataType, maxHam)
+  }
+
+  /** The phash verdict against the stored history: the batch's banded
+    * rows `nb` BROADCAST against the stored band table, candidates
+    * verified on hamming <= maxHam. Returns (id_new, id_old, hamming).
+    * Tombstoned assets neither candidate nor verify — bit-equal to the
+    * compacted index; partition cols projected away at the scan. */
+  private def phashPairsAgainst(spark: SparkSession, dir: String,
+      nb: DataFrame, idType: DataType, maxHam: Int): DataFrame = {
     // an empty-corpus build writes a src-partitioned table with
     // ZERO partition directories — [[IndexFiles.readOrEmpty]]
     // synthesizes the empty payload with the batch's own id type so
     // the probe returns empty instead of crashing
-    val stored = {
-      import org.apache.spark.sql.types._
-      IndexFiles.readOrEmpty(spark, s"$dir/bands", StructType(Seq(
-        StructField("id", batch.schema(idCol).dataType),
-        StructField("sig", LongType),
-        StructField("band", IntegerType),
-        StructField("key", LongType))))
-    }
-    // tombstoned assets neither candidate nor verify — bit-equal to
-    // the compacted index; partition cols projected away at the scan
+    val stored = IndexFiles.readOrEmpty(spark, s"$dir/bands", StructType(Seq(
+      StructField("id", idType), StructField("sig", LongType),
+      StructField("band", IntegerType), StructField("key", LongType))))
     broadcast(nb).as("n")
       .join(IndexFiles.dropTombstones(spark, dir, stored).as("o"),
         col("n.band") === col("o.band") && col("n.key") === col("o.key"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.DynamicPruning
 import org.apache.spark.sql.functions._
 import graft.operators.{Ann, IndexFamily, IndexFiles}
 
@@ -957,14 +958,24 @@ class AnnSpec extends SparkSpec {
   }
 
   /** Assert the executed plan's scan of `dataCol` carries a static
-    * `partCol` partition filter and read at most `maxParts` partitions. */
+    * `partCol` partition filter and read at most `maxParts` partitions.
+    * `out` is planned with dynamic partition pruning off: a run-time
+    * prune (and its filter) would otherwise stand in for a lost static
+    * one — the join's inferred isnotnull(`partCol`) is static too, so
+    * the filter check alone cannot tell. */
   private def assertPruned(out: org.apache.spark.sql.DataFrame,
       dataCol: String, partCol: String, maxParts: Int): Unit = {
-    out.collect()
+    val dpp = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    val before = spark.conf.getOption(dpp)
+    spark.conf.set(dpp, "false")
+    try out.collect()
+    finally before.fold(spark.conf.unset(dpp))(spark.conf.set(dpp, _))
     val scans = allScans(out.queryExecution.executedPlan)
       .filter(_.output.exists(_.name == dataCol)) // the data scan, not metadata
     assert(scans.nonEmpty, "data FileSourceScan not found in executed plan")
-    assert(scans.exists(_.partitionFilters.exists(_.references.exists(_.name == partCol))),
+    assert(scans.exists(_.partitionFilters.exists(f =>
+        f.references.exists(_.name == partCol) &&
+          f.find(_.isInstanceOf[DynamicPruning]).isEmpty)),
       s"no static partition filter on $partCol in the data scan")
     val partsRead = scans.map(_.metrics("numPartitions").value).max
     assert(partsRead <= maxParts,

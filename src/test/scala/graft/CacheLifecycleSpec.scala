@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Curate, Dedup, Stats}
+import graft.operators.{Ann, Curate, Dedup, Multimodal, Stats}
 
 /** The cache-release contract ([[graft.operators.CacheLifecycle]]):
   * operators whose plans pin internal frames register them against the
@@ -91,6 +91,71 @@ class CacheLifecycleSpec extends SparkSpec {
     assertReleased("dedupAgainstIndex") {
       Dedup.dedupAgainstIndex(spark, mhDir,
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
+    }
+  }
+
+  test("the cluster assigners and the sighted appends leave no cache entry behind") {
+    def leavesNoEntry(name: String)(op: => Unit): Unit = {
+      spark.catalog.clearCache()
+      op
+      assert(org.apache.spark.sql.graft.CacheEntries.isEmpty(spark),
+        s"$name left an entry in the session's cache manager")
+    }
+    def tmp(prefix: String) =
+      java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+    val tA = "alpha pattern repeated words here again and again today"
+    val tB = "totally different beta content with other vocabulary items"
+    val history = Seq((1L, tA), (2L, tB)).toDF("doc_id", "text")
+    val batch = Seq((10L, tA), (11L, "wholly novel content unlike any " +
+      "stored document at all")).toDF("doc_id", "text")
+    val mh = tmp("clasgn")
+    Dedup.buildMinhashIndex(history, "doc_id", "text", mh)
+    val clusterMap = Seq((1L, 1L), (2L, 2L)).toDF("id", "cluster_id")
+    // the result reads the checkpointed pairs, not the probe's caches
+    leavesNoEntry("assignToClusters") {
+      Dedup.assignToClusters(spark, mh, clusterMap, batch, "doc_id", "text")
+        .count()
+    }
+    leavesNoEntry("reclusterBridged") {
+      Dedup.reclusterBridged(spark, mh, clusterMap, batch, "doc_id", "text")
+        .count()
+    }
+    def vec(axis: Int) = Seq.tabulate(8)(j => if (j == axis) 1.0 else 0.0)
+    def feats(rows: (Long, String)*) = Multimodal.decodeFeatures(
+      rows.map { case (i, fam) => (i, fam.getBytes("UTF-8"), "image") }
+        .toDF("media_id", "payload", "kind"),
+      "media_id", "payload", dim = 16)
+    // per sighted family: build on d1, then one append with a duplicate
+    // and a novel row
+    val sighted: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("exact",
+        Dedup.buildExactIndexSighted(history, "doc_id", "text", _, "d1"),
+        Dedup.appendToExactIndexSighted(spark, _, batch, "doc_id", "text",
+          "d2")),
+      ("minhash",
+        Dedup.buildMinhashIndexSighted(history, "doc_id", "text", _, "d1"),
+        Dedup.appendToMinhashIndexSighted(spark, _, batch, "doc_id", "text",
+          "d2")),
+      ("containment",
+        Dedup.buildContainmentIndexSighted(history, "doc_id", "text", _, "d1"),
+        Dedup.appendToContainmentIndexSighted(spark, _, batch, "doc_id",
+          "text", "d2")),
+      ("phash",
+        Multimodal.buildPhashIndexSighted(feats((1L, "fam-A"), (2L, "fam-B")),
+          "media_id", "features", _, dim = 16, day = "d1"),
+        Multimodal.appendToPhashIndexSighted(spark, _,
+          feats((10L, "fam-A"), (11L, "fam-D")), "media_id", "features",
+          "d2")),
+      ("lsh",
+        Ann.buildLshIndexSighted(Seq((1L, vec(0)), (2L, vec(1))).toDF("id", "v"),
+          _, dim = 8, day = "d1", planes = 4, tables = 2),
+        Ann.appendToLshIndexSighted(spark, _,
+          Seq((10L, vec(0)), (11L, vec(3))).toDF("id", "v"), "d2",
+          tau = 0.9)))
+    sighted.foreach { case (name, build, append) =>
+      val dir = tmp(s"clsighted_$name")
+      build(dir)
+      leavesNoEntry(s"the sighted $name append")(append(dir))
     }
   }
 }

@@ -111,6 +111,98 @@ class IndexFamilySpec extends SparkSpec {
     }
   }
 
+  test("each sighted append stores what its family's probe admits and sights what it matched") {
+    import org.apache.spark.sql.functions.col
+    val A = "alpha container document with a long and distinctive body " +
+      "of text that keeps flowing across many eight gram shingles here"
+    val B = "beta container about something entirely different from " +
+      "every other stored text in this corpus with its own words"
+    val C = "gamma novel arrival whose words match nothing stored so far " +
+      "and which runs long enough to contain a shorter copy of itself"
+    def texts(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def vec(axis: Int) = Seq.tabulate(8)(j => if (j == axis) 1.0 else 0.0)
+    def feats(rows: (Long, String)*) = Multimodal.decodeFeatures(
+      rows.map { case (i, fam) => (i, fam.getBytes("UTF-8"), "image") }
+        .toDF("media_id", "payload", "kind"),
+      "media_id", "payload", dim = 16)
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col(c)).distinct().as[Long].collect().toSet
+    val history = texts((1L, A), (2L, B))
+    // 11 copies stored doc 1, 12 is novel; for containment 13 is
+    // contained in 12, a rejection inside the batch
+    val batch = texts((11L, A), (12L, C),
+      (13L, C.split(" ").take(16).mkString(" ")))
+    val fBatch = feats((11L, "fam-A"), (12L, "fam-D"))
+    val vBatch = Seq((11L, vec(0)), (12L, vec(3))).toDF("id", "v")
+    // per family: build sighted on d1, the batch's ids, the probe's
+    // (rejected ids, stored ids matched), and the sighted append on d2
+    val cases: Seq[(String, String => Unit, Set[Long],
+        String => (Set[Long], Set[Long]), String => Unit)] = Seq(
+      ("minhash",
+        Dedup.buildMinhashIndexSighted(history, "doc_id", "text", _, "d1"),
+        Set(11L, 12L, 13L),
+        { dir =>
+          val p = Dedup.dedupAgainstIndex(spark, dir, batch, "doc_id", "text")
+          (ids(p, "id_new"), ids(p, "id_old"))
+        },
+        Dedup.appendToMinhashIndexSighted(spark, _, batch, "doc_id", "text",
+          "d2")),
+      ("containment",
+        Dedup.buildContainmentIndexSighted(history, "doc_id", "text", _, "d1"),
+        Set(11L, 12L, 13L),
+        { dir =>
+          val v = Dedup.dropContainedAgainstIndex(spark, dir, batch, "doc_id",
+            "text").filter(col("is_contained"))
+          (ids(v, "id"), ids(v, "container_id") -- Set(11L, 12L, 13L))
+        },
+        Dedup.appendToContainmentIndexSighted(spark, _, batch, "doc_id",
+          "text", "d2")),
+      ("phash",
+        Multimodal.buildPhashIndexSighted(feats((1L, "fam-A"), (2L, "fam-B")),
+          "media_id", "features", _, dim = 16, day = "d1"),
+        Set(11L, 12L),
+        { dir =>
+          val p = Multimodal.dedupPhashAgainstIndex(spark, dir, fBatch,
+            "media_id", "features")
+          (ids(p, "id_new"), ids(p, "id_old"))
+        },
+        Multimodal.appendToPhashIndexSighted(spark, _, fBatch, "media_id",
+          "features", "d2")),
+      ("lsh",
+        Ann.buildLshIndexSighted(Seq((1L, vec(0)), (2L, vec(1))).toDF("id", "v"),
+          _, dim = 8, day = "d1", planes = 4, tables = 2),
+        Set(11L, 12L),
+        { dir =>
+          val v = Dedup.cosineDedupAgainstIndex(spark, dir, vBatch, "id", "v",
+            tau = 0.9).filter(col("is_dup"))
+          (ids(v, "id"), ids(v, "dup_of"))
+        },
+        Ann.appendToLshIndexSighted(spark, _, vBatch, "d2", tau = 0.9)))
+    assert(cases.map(_._1).toSet ==
+      IndexFamily.all.filter(_.sighted).map(_.name).toSet - "exact")
+    cases.foreach { case (name, build, batchIds, probe, append) =>
+      val probed = tmp(s"agree_$name") + "/idx"
+      build(probed)
+      val appended = tmp(s"agree_${name}_copy") + "/idx"
+      org.apache.commons.io.FileUtils.copyDirectory(
+        new java.io.File(probed), new java.io.File(appended))
+      val (rejected, matched) = probe(probed)
+      assert(rejected.nonEmpty && matched.nonEmpty,
+        s"$name: the fixture rejects nothing against history")
+      append(appended)
+      val table = IndexFamily.all.find(_.name == name).get.payload.head._1
+      val stored = ids(spark.read.parquet(s"$appended/$table"), "id")
+      assert(batchIds -- stored == rejected,
+        s"$name: the append left out ${batchIds -- stored}, the probe " +
+          s"rejected $rejected")
+      val seen = ids(spark.read.parquet(s"$appended/seen")
+        .filter(col("src") === "d2"), "id")
+      assert(seen == (batchIds -- rejected) ++ matched,
+        s"$name: d2 sighted $seen, admitted ${batchIds -- rejected}, " +
+          s"the probe matched $matched")
+    }
+  }
+
   /** Distinct-token texts: no two docs share a shingle, so every
     * sighted admission admits them all. */
   private def novel(ids: Long*) = ids.map(i =>
