@@ -2471,28 +2471,14 @@ object SparkEntry {
     * tasks, so a sequence of small-stage builds stops paying its
     * scheduling valleys serially. Scale-safe by construction: each
     * thunk is a whole index build on its OWN directory (no shared
-    * mutable state), job descriptions are thread-local, and the pool
-    * is bounded by the thunk count (≤ a handful). Failures propagate
-    * loudly after all thunks settle — same end state as the old
-    * sequential loop (every build either completed or its memo entry
-    * was cleared), with the FIRST failure rethrown. */
+    * mutable state), job descriptions are thread-local, and there is
+    * one thread per thunk (≤ a handful). Failures propagate loudly
+    * after all thunks settle ([[graft.operators.IndexFiles.settleAll]])
+    * — same end state as the old sequential loop (every build either
+    * completed or its memo entry was cleared), with the FIRST failure
+    * rethrown. */
   private def runBuilds(thunks: Seq[() => Any]): Unit = {
-    if (thunks.size <= 1) { thunks.foreach(_.apply()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-    try {
-      val futs = thunks.map(t => pool.submit(new java.util.concurrent.Callable[Any] {
-        override def call(): Any = t()
-      }))
-      var firstFailure: Option[Throwable] = None
-      futs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure.isEmpty) firstFailure = Some(e.getCause)
-        }
-      }
-      firstFailure.foreach(throw _)
-    } finally pool.shutdown()
+    graft.operators.IndexFiles.settleAll(thunks); ()
   }
 
   /** Force every memoized build that MULTIPLE registered queries share

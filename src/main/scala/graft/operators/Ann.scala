@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{VectorFunctions => V}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -359,7 +360,7 @@ object Ann {
       .parquet(s"$dir/postings")
     Seq(buckets).toDF("buckets").write.mode("overwrite").parquet(s"$dir/meta")
     IndexFiles.writeIds(
-      s.read.parquet(s"$dir/postings").select("id").distinct(), dir)
+      IndexFiles.read(s, s"$dir/postings").select("id").distinct(), dir)
     // BM25 sidecars: per-doc lengths + (n, avgdl), so a BM25-scored
     // search never has to re-aggregate the full postings (Milvus's
     // sparse index family IS BM25-scored — the weight-sum search alone
@@ -375,7 +376,7 @@ object Ann {
     // a doc's postings live in exactly one segment (ids are disjoint
     // across appends), so doclens inherits postings' src partitioning
     // and retires with it
-    spark.read.parquet(s"$dir/postings")
+    IndexFiles.read(spark, s"$dir/postings")
       .groupBy("id", "src").agg(sum(col("w")).as("dl"))
       .write.mode("overwrite").partitionBy("src").parquet(s"$dir/doclens")
     refreshSparseStats(spark, dir)
@@ -386,7 +387,7 @@ object Ann {
   private[operators] def refreshSparseStats(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    spark.read.parquet(s"$dir/doclens")
+    IndexFiles.read(spark, s"$dir/doclens")
       .agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
       .write.mode("overwrite").parquet(s"$dir/stats")
     IndexFiles.refresh(spark, dir)
@@ -430,7 +431,7 @@ object Ann {
     // NOW — the append below may legitimately throw (e.g. a replayed
     // id) and must not leave stats stale behind healed data
     IndexFamily.sparse.beginAppend(spark, dir, src, sighted = false)
-    val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
+    val buckets = IndexFiles.sidecarRow(spark, s"$dir/meta", SparseMetaSchema).getInt(0)
     val batchIds = batch.select("id").distinct()
     IndexFamily.sparse.requireNew(spark, dir, batchIds,
       "replayed ids would double-count in scores")
@@ -469,11 +470,11 @@ object Ann {
   private def prunedSparsePostings(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryTerms: DataFrame): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val buckets = spark.read.parquet(s"$dir/meta").head().getInt(0)
+    val buckets = IndexFiles.sidecarRow(spark, s"$dir/meta", SparseMetaSchema).getInt(0)
     val wanted = queryTerms
       .select(pmod(col("term"), lit(buckets)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val raw = spark.read.parquet(s"$dir/postings")
+    val raw = IndexFiles.read(spark, s"$dir/postings")
     IndexFiles.dropTombstones(spark, dir,
       raw.filter(IndexFiles.partitionIn(raw, "tbucket", wanted.map(_.toLong)))
         .drop("tbucket", "src"))
@@ -504,11 +505,11 @@ object Ann {
     val p = prunedSparsePostings(spark, dir, queryTerms)
       .withColumnRenamed("w", "tf")
     val dl = IndexFiles.dropTombstones(spark, dir,
-      spark.read.parquet(s"$dir/doclens").drop("src"))
+      IndexFiles.read(spark, s"$dir/doclens").drop("src"))
     val stats =
       if (IndexFiles.tombstones(spark, dir).isDefined)
         dl.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
-      else spark.read.parquet(s"$dir/stats")
+      else IndexFiles.read(spark, s"$dir/stats")
     bm25Rank(p, queryTerms, dl, stats, k, k1, b)
   }
 
@@ -568,7 +569,7 @@ object Ann {
       .write.mode("overwrite").partitionBy("src").parquet(s"$dir/bits")
     Seq(dim).toDF("dim").write.mode("overwrite").parquet(s"$dir/meta")
     IndexFiles.writeIds(
-      s.read.parquet(s"$dir/bits").select("id").distinct(), dir)
+      IndexFiles.read(s, s"$dir/bits").select("id").distinct(), dir)
   }
 
   /** Search a persisted BIN_FLAT index; bit-equal to [[binaryTopK]]
@@ -578,10 +579,10 @@ object Ann {
   def searchBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, k: Int): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val dim = spark.read.parquet(s"$dir/meta").head().getInt(0)
+    val dim = IndexFiles.sidecarRow(spark, s"$dir/meta", BinaryMetaSchema).getInt(0)
     requireBatchDim(queries, "qv", dim)
     hammingRank(
-      IndexFiles.dropTombstones(spark, dir, spark.read.parquet(s"$dir/bits")),
+      IndexFiles.dropTombstones(spark, dir, IndexFiles.read(spark, s"$dir/bits")),
       queries, k, dim)
   }
 
@@ -593,7 +594,7 @@ object Ann {
   def appendToBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, src: String = "ingest"): Unit = {
     IndexFamily.binary.beginAppend(spark, dir, src, sighted = false)
-    val dim = spark.read.parquet(s"$dir/meta").head().getInt(0)
+    val dim = IndexFiles.sidecarRow(spark, s"$dir/meta", BinaryMetaSchema).getInt(0)
     requireBatchDim(batch, "v", dim)
     val batchIds = batch.select("id").distinct()
     IndexFamily.binary.requireNew(spark, dir, batchIds, DuplicateHits)
@@ -603,6 +604,12 @@ object Ann {
         .withColumn("src", lit(src)), Seq("src"))),
       Some(batchIds))
   }
+
+  /** Pinned `meta` sidecar schemas ([[IndexFiles.sidecarRow]]: read on
+    * the driver, no Spark job). */
+  private val SparseMetaSchema = StructType.fromDDL("buckets INT")
+  private val BinaryMetaSchema = StructType.fromDDL("dim INT")
+  private val LshMetaSchema = StructType.fromDDL("dim INT, planes INT, tables INT")
 
   private val DuplicateHits = "replayed ids would duplicate search hits"
 
@@ -963,7 +970,7 @@ object Ann {
     // crash-safe with a marker-only journal (no ids sidecar to extend):
     // a job failure anywhere leaves a state the next append repairs
     IndexFamily.lsh.beginAppend(spark, dir, src, sighted = false)
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = IndexFiles.sidecarRow(spark, s"$dir/meta", LshMetaSchema)
     val (dim, planes, tables) =
       (m.getAs[Int]("dim"), m.getAs[Int]("planes"), m.getAs[Int]("tables"))
     requireBatchDim(batch, "v", dim)
@@ -985,7 +992,7 @@ object Ann {
   def searchLshIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, metric: String = "cosine"): DataFrame = {
     IndexFiles.requireNoPendingAppend(spark, dir)
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = IndexFiles.sidecarRow(spark, s"$dir/meta", LshMetaSchema)
     val (dim, planes, tables) =
       (m.getAs[Int]("dim"), m.getAs[Int]("planes"), m.getAs[Int]("tables"))
     val wanted = queries
@@ -995,7 +1002,7 @@ object Ann {
     val bySig = wanted.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     // prune on the partition-typed `sig`, THEN cast back to the long the
     // bucket join expects
-    val raw = spark.read.parquet(s"$dir/buckets")
+    val raw = IndexFiles.read(spark, s"$dir/buckets")
     val cond = bySig.map { case (t, sigs) =>
       col("tbl") === t && IndexFiles.partitionIn(raw, "sig", sigs)
     }.reduceOption(_ || _).getOrElse(lit(false))
@@ -1042,7 +1049,7 @@ object Ann {
   def appendToLshIndexSighted(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, day: String, tau: Double): Unit = {
     IndexFamily.lsh.beginAppend(spark, dir, day, sighted = true)
-    val m = spark.read.parquet(s"$dir/meta").head()
+    val m = IndexFiles.sidecarRow(spark, s"$dir/meta", LshMetaSchema)
     val (dim, planes, tables) =
       (m.getAs[Int]("dim"), m.getAs[Int]("planes"), m.getAs[Int]("tables"))
     requireBatchDim(batch, "v", dim)
@@ -1202,9 +1209,10 @@ object Ann {
   }
 
   /** A (cell, cv) codebook table back as cell-ordered centroid arrays —
-    * the literals [[cellOf]] assigns through. */
+    * the literals [[cellOf]] assigns through. Sorted on the driver: an
+    * `orderBy` adds a range-sampling job and a shuffle for nlist rows. */
   private def codebook(centroids: DataFrame): Array[Array[Double]] =
-    centroids.orderBy("cell").collect()
+    centroids.select("cell", "cv").collect().sortBy(_.getInt(0))
       .map(_.getAs[scala.collection.Seq[Double]]("cv").toArray)
 
   /** The first step of every IVF-family build: clear stale tombstones,
@@ -1233,7 +1241,7 @@ object Ann {
       .parquet(s"$dir/$table")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     IndexFiles.writeIds(
-      payload.sparkSession.read.parquet(s"$dir/$table").select("id"), dir)
+      IndexFiles.read(payload.sparkSession, s"$dir/$table").select("id"), dir)
   }
 
   /** The one append body of the three IVF families ([[appendToIvfIndex]]
@@ -1246,7 +1254,7 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame,
       src: String)(encode: (DataFrame, DataFrame) => DataFrame): Unit = {
     fam.beginAppend(spark, dir, src, sighted = false)
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = IndexFiles.read(spark, s"$dir/centroids")
     val cb = codebook(centroids)
     require(cb.nonEmpty, s"$dir/centroids is empty — not a built ${fam.name} index")
     requireBatchDim(batch, "v", cb(0).length)
@@ -1276,12 +1284,12 @@ object Ann {
       nprobe: Int): (DataFrame, DataFrame, DataFrame) = {
     IndexFiles.requireLiveTable(spark, dir, table)
     IndexFiles.requireLiveTable(spark, dir, "centroids")
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = IndexFiles.read(spark, s"$dir/centroids")
     val pc = probeCells(centroids, queries, nprobe)
     val probeRows = pc.collect()
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), pc.schema)
-    val raw = spark.read.parquet(s"$dir/$table")
+    val raw = IndexFiles.read(spark, s"$dir/$table")
     val pruned = raw.filter(IndexFiles.partitionIn(raw, "cell",
         probeRows.map(_.getAs[Int]("cell").toLong).distinct.toSeq))
       .withColumn("cell", col("cell").cast("int"))
@@ -1365,7 +1373,7 @@ object Ann {
       dir: String): Unit =
     writeTrainStatsOf(spark, dir,
       IndexFiles.dropTombstones(spark, dir,
-        spark.read.parquet(s"$dir/cells").select(col("id"), col("v"))))
+        IndexFiles.read(spark, s"$dir/cells").select(col("id"), col("v"))))
 
   /** [[writeTrainStats]] from an explicit (…, v) frame — the form the
     * CODE indexes use: IVF_SQ8 and IVF_PQ store cz/codes, not raw
@@ -1489,11 +1497,11 @@ object Ann {
     IndexFiles.requireLiveTable(spark, dir, "centroids")
     // keep each row's src: a retrain re-assigns cells but must not
     // merge retirement segments (the window keeps aging correctly)
-    val stored = spark.read.parquet(s"$dir/cells")
+    val stored = IndexFiles.read(spark, s"$dir/cells")
       .select(col("id"), col("v"), col("src"))
     val k =
       if (nlist > 0) nlist
-      else spark.read.parquet(s"$dir/centroids").count().toInt
+      else IndexFiles.read(spark, s"$dir/centroids").count().toInt
     require(k >= 1, s"nlist must be >= 1, got $k")
     val live = IndexFiles.dropTombstones(spark, dir, stored)
     val firstRow = live.select(col("v")).take(1)
@@ -1663,7 +1671,7 @@ object Ann {
     val (m, ksub) = (oldPq.length, oldPq(0).length)
     val k =
       if (nlist > 0) nlist
-      else spark.read.parquet(s"$dir/centroids").count().toInt
+      else IndexFiles.read(spark, s"$dir/centroids").count().toInt
     // train on the live rows only; re-encode everything (tombstones
     // keep hiding their rows until compaction)
     val liveC = IndexFiles.dropTombstones(spark, dir, c)
@@ -1681,7 +1689,7 @@ object Ann {
     // codebooks but must not merge retirement segments (replaceTable
     // stages the new files while the old ones are still readable, so
     // this self-join is consistent)
-    val srcOf = spark.read.parquet(s"$dir/codes").select(col("id"), col("src"))
+    val srcOf = IndexFiles.read(spark, s"$dir/codes").select(col("id"), col("src"))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(s"$dir/$RetrainMarker")
@@ -1776,7 +1784,7 @@ object Ann {
     IndexFiles.requireNoPendingAppend(spark, dir)
     IndexFiles.requireLiveTable(spark, dir, "cells")
     val live = IndexFiles.dropTombstones(spark, dir,
-      spark.read.parquet(s"$dir/cells")
+      IndexFiles.read(spark, s"$dir/cells")
         .select(col("id"), col("cell").cast("int").as("cell")))
     val w = Window.partitionBy("cell").orderBy(
       graft.functions.HashFunctions.hash32(seed, col("id").cast("string")).asc,
@@ -2103,7 +2111,7 @@ object Ann {
     * driver-side by construction. */
   private def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
       dir: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$dir/pq")
+    val rows = IndexFiles.read(spark, s"$dir/pq")
       .select(col("sub"), col("code"), col("vec")).collect()
     require(rows.nonEmpty, s"$dir/pq is empty — not a built IVF-PQ index")
     val m = rows.map(_.getInt(0)).max + 1
@@ -2244,7 +2252,7 @@ object Ann {
     import spark.implicits._
     require(!queries.isEmpty,
       "cannot tune nprobe on zero queries — recall is undefined")
-    val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+    val nlist = IndexFiles.read(spark, s"$dir/centroids").count().toInt
     val exact = searchIvfIndex(spark, dir, queries, k, nprobe = nlist,
       metric)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Boolean)]
@@ -2429,7 +2437,7 @@ object Ann {
         .exists(statsPath),
       s"$dir has no train_stats record (built before training-stats " +
         s"recording) — $statsHint")
-    val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+    val nlist = IndexFiles.read(spark, s"$dir/centroids").count().toInt
     // `reference` lets a scheduled driver advising the same index
     // against a stable query set pay the full probe once per retrain
     // generation, not once per cron tick — any (qid, id, rank) frame
@@ -2441,7 +2449,7 @@ object Ann {
     // assemble the drift one-row frame in embeddingDriftSummary's shape
     // from the recorded training stats (old side, literals) and ONE
     // stats pass over the fresh batch (new side)
-    val st = spark.read.parquet(s"$dir/train_stats").head()
+    val st = IndexFiles.read(spark, s"$dir/train_stats").head()
     val (nOld, cOld) = (st.getAs[Long]("n"),
       st.getAs[scala.collection.Seq[Double]]("centroid").toArray)
     val normOld =

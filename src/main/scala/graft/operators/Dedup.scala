@@ -234,7 +234,7 @@ object Dedup {
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       src: String, sep: String = "\n"): Unit = {
     IndexFamily.linedf.beginAppend(spark, dir, src, sighted = false)
-    val replayed = !spark.read.parquet(s"$dir/lines")
+    val replayed = !IndexFiles.read(spark, s"$dir/lines")
       .filter(col("src") === src).isEmpty
     if (replayed) return
     val meta = readBloom(spark, dir)
@@ -270,7 +270,7 @@ object Dedup {
   def rebuildLineDfSidecar(spark: org.apache.spark.sql.SparkSession,
       dir: String, fpp: Double = 0.01): Unit = {
     IndexFamily.linedf.heal(spark, dir)
-    val hs = spark.read.parquet(s"$dir/lines").select("h").distinct()
+    val hs = IndexFiles.read(spark, s"$dir/lines").select("h").distinct()
     val n = hs.count()
     require(n > 0, "rebuildLineDfSidecar: stored lines table is empty")
     val bits = bloomBits(spark, n, fpp)
@@ -308,7 +308,7 @@ object Dedup {
       .groupBy("h").agg(count(lit(1)).as("bdf"))
     val cand = batchDf
       .filter(SK.mightContain(lit(bytes), col("h"))).select("h")
-    val hist = spark.read.parquet(s"$dir/lines")
+    val hist = IndexFiles.read(spark, s"$dir/lines")
     val histScan = excludeSrc match {
       case Some(s0) => hist.filter(col("src") =!= s0)
       case None => hist
@@ -734,7 +734,7 @@ object Dedup {
     IndexFamily.containment.beginAppend(spark, dir, src, sighted = false)
     val (w, maxDf) = containmentMeta(spark, dir)
     val stored = IndexFiles.ensureIds(spark, dir,
-      spark.read.parquet(s"$dir/shingles").select("id").distinct())
+      IndexFiles.read(spark, s"$dir/shingles").select("id").distinct())
     val fresh = spread(batch).select(col(idCol).as("id"), col(textCol).as("text"))
       .join(stored, Seq("id"), "left_anti").persist()
     if (fresh.isEmpty) { fresh.unpersist(); return }
@@ -758,7 +758,7 @@ object Dedup {
   def rebuildContainmentSidecar(spark: org.apache.spark.sql.SparkSession,
       dir: String, fpp: Double = 0.01): Unit = {
     IndexFamily.containment.heal(spark, dir)
-    val hs = spark.read.parquet(s"$dir/shingles").select("sh").distinct()
+    val hs = IndexFiles.read(spark, s"$dir/shingles").select("sh").distinct()
     val n = hs.count()
     require(n > 0, "rebuildContainmentSidecar: stored shingle table is empty")
     val bits = bloomBits(spark, n, fpp)
@@ -877,11 +877,11 @@ object Dedup {
     // tombstoned docs ([[IndexFiles.writeTombstones]]) neither
     // candidate nor verify — bit-equal to the physically compacted index
     val histAll = IndexFiles.dropTombstones(spark, dir,
-      spark.read.parquet(s"$dir/shingles"))
+      IndexFiles.read(spark, s"$dir/shingles"))
     val hist = excludeSrc.map(s0 => histAll.filter(col("src") =!= s0))
       .getOrElse(histAll)
     val sizesAll = IndexFiles.dropTombstones(spark, dir,
-      spark.read.parquet(s"$dir/sizes"))
+      IndexFiles.read(spark, s"$dir/sizes"))
     val histSizes = excludeSrc.map(s0 => sizesAll.filter(col("src") =!= s0))
       .getOrElse(sizesAll)
     // sz_b >= sz_a is the arrival tie rule AND subsumes the provable
@@ -2118,7 +2118,7 @@ object Dedup {
   /** The ledger's pinned cap. */
   private def domainCapN(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int =
-    spark.read.parquet(s"$dir/meta").head().getAs[Int]("n")
+    IndexFiles.sidecarRow(spark, s"$dir/meta", DomainCapMetaSchema).getAs[Int]("n")
 
   /** The counts table read under its FIXED schema — a fresh ledger's
     * partitioned dir holds no data files yet (nothing to infer from),
@@ -2473,12 +2473,13 @@ object Dedup {
 
   // ---- exact-dedup history index (Bloom-pruned admission) ---------------
 
-  /** Pinned sidecar schemas ([[IndexFiles.sidecarRow]]: no inference job). */
+  /** Pinned sidecar schemas ([[IndexFiles.sidecarRow]]: read on the driver, no job). */
   private val BloomSchema =
     StructType.fromDDL("bloom BINARY, n_items BIGINT, fpp DOUBLE, num_bits BIGINT")
   private val ContainmentMetaSchema = StructType.fromDDL("w INT, max_df INT")
   private val MinhashMetaSchema =
     StructType.fromDDL("w INT, num_hashes INT, bands INT, max_df INT")
+  private val DomainCapMetaSchema = StructType.fromDDL("n INT")
   private[graft] def readBloom(spark: org.apache.spark.sql.SparkSession, dir: String) =
     IndexFiles.sidecarRow(spark, s"$dir/bloom", BloomSchema)
 

@@ -1,9 +1,15 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.{broadcast, col, lit}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types._
 
 /** Compact `dir/ids` sidecar shared by the persisted IVF and minhash
   * indexes: one row per indexed doc id, written at build and extended
@@ -109,9 +115,8 @@ private[graft] object IndexFiles {
       val hasIds = fs.listStatus(journal).exists(f =>
         f.isFile && isDataFile(f.getPath.getName))
       if (hasIds && exists(spark, dir)) {
-        spark.read.parquet(journal.toString)
-          .join(org.apache.spark.sql.functions
-            .broadcast(spark.read.parquet(s"$dir/ids")), Seq("id"), "left_anti")
+        read(spark, journal.toString)
+          .join(broadcast(read(spark, s"$dir/ids")), Seq("id"), "left_anti")
           .write.mode("append").parquet(s"$dir/ids")
       }
       require(fs.delete(journal, true), s"delete journal $journal failed")
@@ -128,7 +133,10 @@ private[graft] object IndexFiles {
   }
 
   /** Crash-safe batch append: write every table's batch slice to its
-    * in-table staging dir, commit the batch by renaming the id journal
+    * in-table staging dir and the id journal to its tmp dir, all
+    * concurrently ([[settleAll]]: every write settles before the first
+    * failure is rethrown, so a following heal never races a writer),
+    * commit the batch by renaming the id journal
     * into place (atomic — the one instant the append becomes
     * roll-forward), move the staged files in, extend the ids sidecar by
     * renaming the journal's id files into `ids/` (no Spark job), drop
@@ -147,16 +155,14 @@ private[graft] object IndexFiles {
     val journal = new Path(s"$dir/$JournalName")
     require(!fs.exists(journal),
       s"append journal $journal already exists — run healAppend first")
-    tables.foreach { case (t, df, partCols) =>
+    val tmp = new Path(s"$dir/$JournalTmp")
+    settleAll(tables.map { case (t, df, partCols) => () =>
       val w = df.write.mode("overwrite")
       (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
         .parquet(staging(dir, t).toString)
-    }
-    val tmp = new Path(s"$dir/$JournalTmp")
-    batchIds match {
-      case Some(ids) => ids.write.mode("overwrite").parquet(tmp.toString)
-      case None => fs.mkdirs(tmp)
-    }
+    } ++ batchIds.map(ids => () =>
+      ids.write.mode("overwrite").parquet(tmp.toString)))
+    if (batchIds.isEmpty) fs.mkdirs(tmp)
     require(fs.rename(tmp, journal), s"commit journal $journal failed")
     tables.foreach { case (t, _, _) => moveIn(fs, staging(dir, t), new Path(s"$dir/$t")) }
     // an LSH commit marker holds no files: nothing moves, it is dropped
@@ -171,11 +177,112 @@ private[graft] object IndexFiles {
     if (batchIds.isDefined) refresh(spark, s"$dir/ids")
   }
 
-  /** The one row of a fixed-schema sidecar (`meta`, `bloom`), read
-    * with its schema pinned — inferring it costs a footer-read job. */
-  def sidecarRow(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.Row =
-    spark.read.schema(schema).parquet(path).head()
+  /** Run `thunks` concurrently, wait until every one has settled, then
+    * rethrow the first failure in `thunks` order — nothing is still
+    * running when this returns or throws. The threads start from the
+    * calling thread, so they inherit its Spark local properties (the
+    * job group that cancellation and job tallies key on). A lone thunk
+    * runs inline. */
+  private[graft] def settleAll[A](thunks: Seq[() => A]): Seq[A] =
+    if (thunks.size <= 1) thunks.map(_.apply())
+    else {
+      val out = new Array[Either[Throwable, A]](thunks.size)
+      val threads = thunks.zipWithIndex.map { case (t, i) =>
+        val th = new Thread(() =>
+          out(i) = try Right(t()) catch { case e: Throwable => Left(e) })
+        th.setDaemon(true)
+        th.start()
+        th
+      }
+      // an interrupt of the caller (a stopping stream) must not let it
+      // leave while a writer still runs: wait on, then re-raise the flag
+      var interrupted = false
+      threads.foreach { th =>
+        while (th.isAlive)
+          try th.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread.interrupt()
+      out.toSeq.map(_.fold(e => throw e, identity))
+    }
+
+  /** Spark's footer key for the schema its writer stored. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The data files under `p` (recursing into partition dirs, skipping
+    * `_`/`.` names), lazily, in full-path order — the file order
+    * Spark's own schema inference takes its first footer from; none
+    * when `p` is absent. */
+  private def dataFiles(fs: FileSystem, p: Path): Iterator[Path] =
+    if (!fs.exists(p)) Iterator.empty
+    else fs.listStatus(p).filter(st => isDataFile(st.getPath.getName))
+      .sortBy(st => st.getPath.getName + (if (st.isDirectory) "/" else ""))
+      .iterator.flatMap(st =>
+        if (st.isDirectory) dataFiles(fs, st.getPath) else Iterator(st.getPath))
+
+  /** The schema Spark's writer stored in `path`'s first data file, read
+    * on the driver; None without a data file or a stored schema. */
+  private def storedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(fsOf(spark, path), new Path(path)).nextOption().flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      finally reader.close()
+    }.map(DataType.fromJson).collect { case s: StructType => s }
+  }
+
+  /** Open an index table without a Spark job: under the schema stored in
+    * its first data file's footer (a bare `spark.read.parquet` infers
+    * it with a footer-read job). Partition columns are still discovered
+    * from the paths. Without a data file or a stored schema this is the
+    * bare read — its refusals ([[readOrEmpty]]'s UNABLE_TO_INFER_SCHEMA,
+    * a missing path) included. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    storedSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
+  /** The one row of a fixed-schema sidecar (`meta`, `bloom`) under its
+    * pinned schema, read on the driver — as a Spark read it costs a
+    * one-row job. Falls back to that read (and its refusals: a missing
+    * path, an empty sidecar) whenever the stored columns do not match
+    * the pinned types one to one. */
+  def sidecarRow(spark: SparkSession, path: String, schema: StructType): Row =
+    driverRow(spark, path, schema).getOrElse(spark.read.schema(schema).parquet(path).head())
+
+  private def driverRow(spark: SparkSession, path: String,
+      schema: StructType): Option[Row] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def physical(t: DataType): Option[PrimitiveTypeName] = t match {
+      case IntegerType => Some(PrimitiveTypeName.INT32)
+      case LongType => Some(PrimitiveTypeName.INT64)
+      case DoubleType => Some(PrimitiveTypeName.DOUBLE)
+      case BinaryType | StringType => Some(PrimitiveTypeName.BINARY)
+      case _ => None
+    }
+    def value(g: Group, f: StructField): Any =
+      if (g.getFieldRepetitionCount(f.name) == 0) null
+      else f.dataType match {
+        case IntegerType => g.getInteger(f.name, 0)
+        case LongType => g.getLong(f.name, 0)
+        case DoubleType => g.getDouble(f.name, 0)
+        case BinaryType => g.getBinary(f.name, 0).getBytes
+        case StringType => g.getString(f.name, 0)
+      }
+    // the first row in file order, or None (→ the Spark read) on any
+    // column the pinned schema does not name with its own physical type
+    val rows = dataFiles(fsOf(spark, path), new Path(path)).map { f =>
+      val reader = ParquetReader.builder(new GroupReadSupport(), f).withConf(conf).build()
+      try Option(reader.read()).map { g =>
+        val t = g.getType
+        if (!schema.forall(sf => t.containsField(sf.name) &&
+            t.getType(sf.name).isPrimitive &&
+            physical(sf.dataType).contains(
+              t.getType(sf.name).asPrimitiveType.getPrimitiveTypeName))) None
+        else Some(new GenericRowWithSchema(schema.map(value(g, _)).toArray, schema): Row)
+      }
+      finally reader.close()
+    }
+    rows.collectFirst { case Some(r) => r }.flatten
+  }
 
   /** Write one [[appendStaged]]-shaped slice as the whole table (builds). */
   def writeTable(dir: String, slice: (String, DataFrame, Seq[String])): Unit =
@@ -301,8 +408,8 @@ private[graft] object IndexFiles {
     * a schema from; the caller supplies the batch-derived id type).
     * Partition columns are projected away either way. */
   def readOrEmpty(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    try spark.read.parquet(path).select(
+      schema: StructType): DataFrame =
+    try read(spark, path).select(
       schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
     catch {
       case e: org.apache.spark.sql.AnalysisException
@@ -367,7 +474,7 @@ private[graft] object IndexFiles {
     * that will extend the sidecar afterwards. */
   def storedIds(spark: SparkSession, dir: String,
       fallback: => DataFrame): DataFrame =
-    if (exists(spark, dir)) spark.read.parquet(s"$dir/ids") else fallback
+    if (exists(spark, dir)) read(spark, s"$dir/ids") else fallback
 
   /** Like [[storedIds]], but backfills a missing sidecar from the
     * fallback first, so [[appendStaged]]'s journal-driven sidecar
@@ -377,7 +484,7 @@ private[graft] object IndexFiles {
   def ensureIds(spark: SparkSession, dir: String,
       fallback: => DataFrame): DataFrame = {
     if (!exists(spark, dir)) writeIds(fallback, dir)
-    spark.read.parquet(s"$dir/ids")
+    read(spark, s"$dir/ids")
   }
 
   /** Invalidate (and rebuild) any cached plan reading under `dir`.
@@ -418,7 +525,7 @@ private[graft] object IndexFiles {
       table: String = "deleted"): Option[DataFrame] = {
     val p = new Path(s"$dir/$table")
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      Some(spark.read.parquet(s"$dir/$table"))
+      Some(read(spark, s"$dir/$table"))
     else None
   }
 
@@ -548,16 +655,16 @@ private[graft] object IndexFiles {
       val fs = fsOf(spark, dir)
       payloads.keys.foreach(requireLiveTable(spark, dir, _))
       payloads.foreach { case (name, partCols) =>
-        val kept = spark.read.parquet(s"$dir/$name")
-          .join(org.apache.spark.sql.functions.broadcast(dead),
+        val kept = read(spark, s"$dir/$name")
+          .join(broadcast(dead),
             Seq("id"), "left_anti")
         replaceTable(spark, dir, name, kept, partCols)
       }
       // indexes without an append guard (LSH) keep no sidecar — don't
       // invent one here that later appends would silently let go stale
       if (exists(spark, dir)) {
-        val keptIds = spark.read.parquet(s"$dir/ids")
-          .join(org.apache.spark.sql.functions.broadcast(dead),
+        val keptIds = read(spark, s"$dir/ids")
+          .join(broadcast(dead),
             Seq("id"), "left_anti")
         writeIds(keptIds, s"$dir/ids_staging")
         swapIn(fs, new Path(s"$dir/ids_staging/ids"), new Path(s"$dir/ids"))
@@ -615,7 +722,7 @@ private[graft] object IndexFiles {
       .filter(hasParquet)
     val rows = tables.map { p =>
       val sum = fs.getContentSummary(p)
-      val df = spark.read.parquet(p.toString)
+      val df = read(spark, p.toString)
       // Bloom sidecar health: one-row read of the serialized sketch
       val (fill, fppEst): (Option[Double], Option[Double]) =
         if (p.getName == "bloom" && df.columns.contains("bloom")) {
@@ -631,7 +738,7 @@ private[graft] object IndexFiles {
       if (!fs.exists(journal)) Nil
       else {
         val sum = fs.getContentSummary(journal)
-        val n = try spark.read.parquet(journal.toString).count()
+        val n = try read(spark, journal.toString).count()
           catch { case _: Exception => 0L } // empty commit marker (LSH)
         Seq(("_pending_append", sum.getFileCount, sum.getLength, n,
           "journal", None: Option[Double], None: Option[Double]))
@@ -735,7 +842,7 @@ final case class IndexFamily(
   private def idsOf(spark: SparkSession, dir: String): DataFrame = {
     val t = idsFrom.getOrElse(throw new IllegalArgumentException(
       s"family $name keeps no ids sidecar"))
-    spark.read.parquet(s"$dir/$t").select("id").distinct()
+    IndexFiles.read(spark, s"$dir/$t").select("id").distinct()
   }
 
   /** The stored id set, tombstoned ids included: the sidecar, or the
@@ -804,10 +911,10 @@ final case class IndexFamily(
     val touched = p.filter(col("id_old").isNotNull).select(col("id_old").as("id"))
     // counts of persisted frames, not isEmpty probes: each extra action
     // pays a driver planning round over the composed plan (r19)
-    val touchedN = touched.count()
     val admitted = batch.join(p.select(col("id_new").as("id")), Seq("id"),
       "left_anti").persist()
-    val admittedN = admitted.count()
+    val Seq(touchedN, admittedN) =
+      IndexFiles.settleAll(Seq(() => touched.count(), () => admitted.count()))
     val payload = if (admittedN == 0) Seq.empty else slices(admitted)
     commitSighted(spark, dir, day, payload, admitted.select("id"),
       admittedN > 0, Some(touched), touchedN > 0)
@@ -844,7 +951,7 @@ final case class IndexFamily(
   def liveKeys(spark: SparkSession, dir: String): DataFrame = {
     val d = delModel
     d.live.map(_(spark, dir)).getOrElse(IndexFiles.storedIds(spark, dir,
-      spark.read.parquet(s"$dir/${tables.head}")
+      IndexFiles.read(spark, s"$dir/${tables.head}")
         .select(d.key.map(col): _*).distinct()))
   }
 
@@ -953,7 +1060,7 @@ final case class IndexFamily(
     val days = IndexFiles.listSrcs(spark, dir, "seen")
     val doomed = days.dropRight(keep)
     if (doomed.nonEmpty) {
-      val seen = spark.read.parquet(s"$dir/seen")
+      val seen = IndexFiles.read(spark, s"$dir/seen")
       def keysOf(tags: Seq[String]) =
         seen.filter(col("src").isin(tags: _*)).select(s.key).distinct()
       val forgotten = keysOf(doomed)
@@ -1010,7 +1117,10 @@ object IndexFamily {
     * corrupt. Read-only — [[IndexFamily.requireNew]] is the append form
     * that backfills a missing sidecar first. */
   def refuseStored(stored: DataFrame, batchIds: DataFrame, why: String): Unit = {
-    val replayed = stored.join(broadcast(batchIds), "id").limit(1).collect()
+    // at most one row per partition in ONE job: a limit(1) take scans
+    // one partition first, then relaunches over the rest when it is empty
+    val hits = stored.join(broadcast(batchIds), "id").select("id")
+    val replayed = hits.mapPartitions(_.take(1))(Encoders.row(hits.schema)).collect()
     require(replayed.isEmpty,
       s"batch id ${replayed.headOption.map(_.get(0)).orNull} already " +
         s"exists in the index — $why")

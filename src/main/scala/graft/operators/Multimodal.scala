@@ -171,7 +171,7 @@ object Multimodal {
       src: String): (String, DataFrame, Seq[String]) =
     ("bands", banded.withColumn("src", lit(src)).repartition(col("key")), Seq("src"))
 
-  /** The stored (dim, maxHam, thresh), schema pinned (no inference job). */
+  /** The stored (dim, maxHam, thresh), schema pinned and read on the driver. */
   private def phashMeta(spark: SparkSession, dir: String): (Int, Int, Double) = {
     val m = IndexFiles.sidecarRow(spark, s"$dir/meta",
       StructType.fromDDL("dim INT, max_ham INT, thresh DOUBLE"))

@@ -391,19 +391,19 @@ object StreamCurate {
       if (!pinned.isEmpty) {
         val (approx, exact) =
           if (has("codes")) {
-            val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+            val nlist = IndexFiles.read(spark, s"$dir/centroids").count().toInt
             val ex = Ann.searchIvfPqIndex(spark, dir, pinned, k,
               nprobe = nlist).persist()
             (if (nprobe >= nlist) ex
              else Ann.searchIvfPqIndex(spark, dir, pinned, k, nprobe), ex)
           } else if (has("buckets")) {
             val stored = IndexFiles.dropTombstones(spark, dir,
-              spark.read.parquet(s"$dir/buckets")
+              IndexFiles.read(spark, s"$dir/buckets")
                 .select("id", "v").dropDuplicates("id"))
             val ex = Ann.bruteForceTopK(stored, pinned, k, metric).persist()
             (Ann.searchLshIndex(spark, dir, pinned, k, metric), ex)
           } else {
-            val nlist = spark.read.parquet(s"$dir/centroids").count().toInt
+            val nlist = IndexFiles.read(spark, s"$dir/centroids").count().toInt
             val ex = Ann.searchIvfIndex(spark, dir, pinned, k,
               nprobe = nlist, metric = metric).persist()
             (if (nprobe >= nlist) ex

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
-import graft.operators.{Ann, Dedup, IndexFamily, Ingest}
+import graft.operators.{Ann, Dedup, IndexFamily, IndexFiles, Ingest}
 
 /** Structured Streaming variant of the ingest pipeline
   * (reference: embed_to_milvus.py:52-141 — the batch loop becomes an
@@ -162,7 +162,7 @@ object StreamIngest {
     val batchIds = batch.select(col(idCol).as("id")).distinct()
     val n = eligible(batchIds)
     val witnesses = fam.payload.map { case (t, _) =>
-        t -> spark.read.parquet(s"$indexDir/$t") } ++
+        t -> IndexFiles.read(spark, s"$indexDir/$t") } ++
       fam.idsFrom.map(_ => "ids" -> fam.storedIds(spark, indexDir))
     val counts = overlaps(batchIds, witnesses)
     val stored = counts.forall(_._2 == n)
